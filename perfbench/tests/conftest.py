@@ -1,0 +1,9 @@
+"""Make the benchmark modules and the package importable from the tests."""
+
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+for path in (os.path.dirname(HERE), os.path.dirname(os.path.dirname(HERE))):
+    if path not in sys.path:
+        sys.path.insert(0, path)
