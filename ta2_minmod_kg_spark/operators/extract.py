@@ -570,10 +570,21 @@ def extract_triples(ingest: DataFrame, include_extra: bool = False) -> DataFrame
         )
     else:
         schema = TRIPLE
-    from pyspark.sql.pandas.types import to_arrow_schema
+    import pyarrow as pa
 
+    # the Arrow twin of ``schema``, spelled out (nullability included) rather
+    # than derived through pyspark's internal type converters
+    arrow_schema = pa.schema(
+        [
+            pa.field("subj", pa.string(), nullable=False),
+            pa.field("pred", pa.string(), nullable=False),
+            pa.field("obj", pa.string(), nullable=False),
+            pa.field("site_id", pa.string()),
+        ]
+        + ([pa.field("bucket", pa.int32())] if carry else [])
+    )
     return ingest.select(*cols).mapInArrow(
-        _triples_batch(include_extra, carry, to_arrow_schema(schema)),
+        _triples_batch(include_extra, carry, arrow_schema),
         schema=schema,
     )
 

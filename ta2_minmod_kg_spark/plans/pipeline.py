@@ -424,7 +424,9 @@ class KGPipeline:
 
         entity_t = self._run_stage(
             "entity_triples",
-            lambda: entity_triples_op(vocab),
+            # a few hundred rows from 12 union branches: one file, not one
+            # per branch partition
+            lambda: entity_triples_op(vocab).coalesce(1),
             vocab_fp,
             bucket_col=None,
         )

@@ -174,7 +174,9 @@ def lod_closure(triples: DataFrame, subj: str, max_iters: int = 64) -> DataFrame
         .select("subj", "obj")
         .persist()
     )
-    reached = spark.createDataFrame([(subj,)], "subj string")
+    # a JVM-side one-row seed: a list-literal createDataFrame would be a
+    # Python RDD that every iteration's anti-join re-reads in Python tasks
+    reached = spark.range(1).select(F.lit(subj).alias("subj"))
     frontier = reached
     cached = []  # every intermediate persist, released before returning
     for _ in range(max_iters):

@@ -255,21 +255,30 @@ def vocab_dataframes(spark: SparkSession) -> dict[str, DataFrame]:
     """Vocabulary DataFrames (broadcast-sized dims), built with explicit
     schemas so they work identically in any session (Arrow on or off).
 
-    Rows go straight from Python dicts to tuples in schema order — NOT via
+    Each table goes to ``createDataFrame`` as a ``pyarrow.Table`` with the
+    Spark schema.  Below ``spark.sql.execution.arrow.localRelationThreshold``
+    Spark turns an Arrow table into a JVM ``LocalRelation`` whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says: collects run no
+    Spark job and scans are a ``LocalTableScan`` with no Python worker.  A
+    list of tuples would instead become a Python RDD, which every action on
+    every stage that joins a vocabulary re-reads in Python tasks.
+
+    Columns are built straight from the row dicts, NOT via
     ``pd.DataFrame``, which coerces ``None`` in float columns to ``NaN``.
-    Spark treats NaN as non-NULL (``isNotNull()`` is true, ``NaN >= 0`` is
-    true), so a pandas round-trip would leak ``"NaN"^^xsd:decimal`` score
-    triples for null-score data sources; the reference's
-    ``score: Optional[float]`` (models/kg/data_source.py:22) emits nothing.
+    Arrow keeps ``None`` as a null.  Spark treats NaN as non-NULL
+    (``isNotNull()`` is true, ``NaN >= 0`` is true), so a pandas round-trip
+    would leak ``"NaN"^^xsd:decimal`` score triples for null-score data
+    sources; the reference's ``score: Optional[float]``
+    (models/kg/data_source.py:22) emits nothing.
     """
+    import pyarrow as pa
     from pyspark.sql.types import StructType
 
     out: dict[str, DataFrame] = {}
     for name, rows in synthetic_vocab().items():
         schema = StructType.fromDDL(VOCAB_SCHEMAS[name])
-        cols = [f.name for f in schema.fields]
-        data = [tuple(r.get(c) for c in cols) for r in rows]
-        out[name] = spark.createDataFrame(data, schema=schema)
+        table = pa.table({f.name: [r.get(f.name) for r in rows] for f in schema.fields})
+        out[name] = spark.createDataFrame(table, schema=schema)
     return out
 
 

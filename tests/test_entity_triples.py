@@ -169,7 +169,8 @@ def test_null_and_nan_score_emit_no_score_triple(spark):
 def test_vocab_dataframes_absent_floats_are_null_not_nan(spark):
     """The vocab boundary must produce NULL, never NaN, for absent floats
     in EVERY float column of every table (pd.DataFrame would coerce
-    None→NaN; we build from tuples with explicit schemas)."""
+    None→NaN; the tables are pyarrow.Tables built column by column from
+    the row dicts, where None stays an Arrow null)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import DoubleType, FloatType
 

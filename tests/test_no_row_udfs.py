@@ -15,6 +15,10 @@ FORBIDDEN = [
     re.compile(r"(?<!pandas_)\budf\s*\("),  # F.udf( / @udf(
     re.compile(r"spark\.udf\.register"),
     re.compile(r"\.rdd\b"),  # any RDD drop-down (flatMap/map live there)
+    # Python-RDD-backed frames: every action re-reads them in Python tasks;
+    # small constant tables go through a pyarrow.Table (a JVM LocalRelation)
+    re.compile(r"\.parallelize\("),
+    re.compile(r"createDataFrame\(\s*\["),
 ]
 
 
