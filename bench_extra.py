@@ -107,8 +107,7 @@ def stage_kg(n_sites: int) -> None:
     mark("gen+count", ingest.count)
 
     vdfs = mark("vocab", lambda: vocab_mod.vocab_dataframes(spark))
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
-    sites = extract.normalize_sites(parsed, vdfs).persist()
+    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs).persist()
     mark("normalize+count", sites.count)
 
     edges = synthetic.synthesize_system_edges(spark, n_sites, partitions=n_parts)
@@ -120,8 +119,7 @@ def stage_kg(n_sites: int) -> None:
     mark("membership_count", membership.count)
 
     swd = sites.drop("dedup_site_id").join(membership, "site_id").persist()
-    inv = extract.explode_inventories(sites, vdfs)
-    gt = grade_tonnage.grade_tonnage_view(inv)
+    gt = grade_tonnage.grade_tonnage_view(sites, vdfs)
     mega = synthetic.giant_size(n_sites)
     merged = dedup.merge_dedup_sites(swd, big_group_threshold=mega)
     from concurrent.futures import ThreadPoolExecutor

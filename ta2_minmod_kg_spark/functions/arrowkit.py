@@ -34,9 +34,13 @@ boundaries.
 from __future__ import annotations
 
 import gc
-from typing import Callable, Iterator
+from typing import Callable, Iterator, Union
 
 import pandas as pd
+import pyarrow as pa
+
+# a pandas frame under mapInPandas, a record batch under mapInArrow
+Batch = Union[pd.DataFrame, pa.RecordBatch]
 
 # Past ~2k rows the GC knee is measurable on nested-dict kernels
 # (75 -> 250 us/row between 2.2k and 4.5k, see module docstring).
@@ -44,22 +48,32 @@ DEFAULT_CHUNK_ROWS = 2048
 
 
 def chunked_kernel(
-    per_chunk: Callable[[pd.DataFrame], pd.DataFrame | None],
+    per_chunk: Callable[[Batch], Batch | None],
     max_rows: int = DEFAULT_CHUNK_ROWS,
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    """Wrap a per-chunk function into a ``mapInPandas`` generator.
+) -> Callable[[Iterator[Batch]], Iterator[Batch]]:
+    """Wrap a per-chunk function into a ``mapInPandas`` / ``mapInArrow``
+    generator.
 
-    ``per_chunk(pdf)`` receives a DataFrame slice of at most ``max_rows``
-    rows (positionally indexed like the parent batch — use ``.iloc`` /
-    column ``zip`` iteration, not ``.loc``) and returns the output frame
-    for that slice (or None/empty to emit nothing).
+    ``per_chunk(batch)`` receives a slice of at most ``max_rows`` rows —
+    a ``pandas.DataFrame`` (positionally indexed like the parent batch —
+    use ``.iloc`` / column ``zip`` iteration, not ``.loc``) or a zero-copy
+    ``pyarrow.RecordBatch`` view — and returns the output batch of the
+    same kind for that slice (or None/empty to emit nothing).  Both kinds
+    support ``len(batch)`` and positional ``batch[a:b]`` slicing.
+
+    For kernels whose output is flat columns of python scalars, returning
+    a record batch built directly with ``pa.array`` (under ``mapInArrow``)
+    halves the output conversion versus the pandas-frame construction +
+    per-column ``Array.from_pandas`` (measured on the triple fan-out:
+    58.6 → 29.9 µs per input row) — the batch is the wire format (guide
+    §4.2).
     """
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
+    def gen(batches: Iterator[Batch]) -> Iterator[Batch]:
+        for batch in batches:
+            n = len(batch)
             for start in range(0, n, max_rows):
-                chunk = pdf.iloc[start : start + max_rows] if n > max_rows else pdf
+                chunk = batch[start : start + max_rows] if n > max_rows else batch
                 was_enabled = gc.isenabled()
                 gc.disable()
                 try:
@@ -68,41 +82,6 @@ def chunked_kernel(
                     if was_enabled:
                         gc.enable()
                 if out is not None and len(out):
-                    yield out
-
-    return gen
-
-
-def chunked_arrow_kernel(
-    per_chunk,
-    max_rows: int = DEFAULT_CHUNK_ROWS,
-):
-    """``chunked_kernel`` for ``mapInArrow``: same bounded chunks + paused
-    cyclic GC, but the slices are zero-copy ``pyarrow.RecordBatch`` views
-    and ``per_chunk`` returns a ``RecordBatch`` (or None/empty).
-
-    For kernels whose output is flat columns of python scalars, building
-    the record batch directly with ``pa.array`` halves the output
-    conversion versus the mapInPandas path's pandas-frame construction +
-    per-column ``Array.from_pandas`` (measured on the triple fan-out:
-    58.6 → 29.9 µs per input row of pure conversion) — the batch is the
-    wire format, so there is nothing pandas adds but overhead (guide
-    §4.2).
-    """
-
-    def gen(batches):
-        for rb in batches:
-            n = rb.num_rows
-            for start in range(0, n, max_rows):
-                chunk = rb.slice(start, max_rows) if n > max_rows else rb
-                was_enabled = gc.isenabled()
-                gc.disable()
-                try:
-                    out = per_chunk(chunk)
-                finally:
-                    if was_enabled:
-                        gc.enable()
-                if out is not None and out.num_rows:
                     yield out
 
     return gen

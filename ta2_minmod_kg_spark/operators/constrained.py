@@ -22,14 +22,16 @@ oracle-tested by EXECUTING the reference's own
 ``get_dataclass_deserializer(MineralSite)`` via tests/refshim.py and
 asserting accept/reject equality (tests/test_constrained.py).
 
-Execution: one Arrow-batched kernel (``site_error_udf``) over the raw
-``content`` column — the same shape as the normalize kernel; payloads
-never per-row through Python UDF machinery.  Short-circuits on the first
-error like the reference's raise.  The kernel also owns the STRUCTURAL
-rules (parseable document, identity fields, exactly one site-level
-reference) so ``split_violations`` needs no ``from_json`` field access —
-each access would be its own full-document lex (Catalyst prunes the
-parse schema per ``GetStructField``; CSE never merges them).
+Execution: ``site_record_error(path, content)`` is the whole
+record-validity rule — the filename charset and STRUCTURAL rules
+(parseable document, identity fields, exactly one site-level reference)
+and then this tree, short-circuiting on the first error like the
+reference's raise.  ``split_violations`` runs it through one
+Arrow-batched UDF (``site_error_udf``), and the normalize and triple
+kernels call it inside their own single parse, so a record is valid in
+every output or in none.  No ``from_json`` field access is needed — each
+access would be its own full-document lex (Catalyst prunes the parse
+schema per ``GetStructField``; CSE never merges them).
 """
 
 from __future__ import annotations
@@ -37,6 +39,7 @@ from __future__ import annotations
 import functools
 import json
 import math
+import re
 from typing import Any, Optional
 from urllib.parse import urlparse
 
@@ -315,8 +318,7 @@ def constrained_type_error(d: Any) -> Optional[str]:
     Mirrors ``get_dataclass_deserializer(minmodkg.models.kg.mineral_site.
     MineralSite)`` + the ``modified_at``-presence check
     (validators.py:336-339); the site-level reference-count rule
-    (== 1, validators.py:52-54) stays in ``split_violations``'s JVM
-    predicates.
+    (== 1, validators.py:52-54) is checked by ``site_record_error``.
     """
     if not isinstance(d, dict):
         return "$"
@@ -367,25 +369,37 @@ def constrained_type_error(d: Any) -> Optional[str]:
     return None
 
 
-def structural_then_constrained_parsed(c) -> tuple[Optional[str], Optional[dict]]:
-    """split_violations semantics in ONE parse: the structural rules
-    (parseable document, identity fields present, exactly one site-level
-    reference — validators.py:44-54) checked FIRST and labelled
-    'structural', then the constrained-type tree.  Behavior-identical to
-    the former JVM ``from_json`` predicate chain, which lexed the full
-    document once PER FIELD ACCESS (4-5 parses/row in the measured plan
-    — Catalyst prunes ``from_json`` schemas per ``GetStructField``, so
-    common-subexpression elimination never merges them).
+_FILENAME_RE = re.compile(r"[a-zA-Z0-9_\-,./]+")
 
-    Returns ``(error, parsed_dict)`` so callers that go on to CONSUME a
-    valid document (the fused validate+normalize kernel,
-    operators/extract.py r06) reuse this parse instead of running
-    ``json.loads`` a second time; ``parsed_dict`` is None whenever the
-    document is not a parseable dict."""
-    if c is None:
+
+def path_ok(path: Optional[str]) -> bool:
+    """The filename charset rule on the ingest ``path``; a NULL path is
+    accepted.  ``fullmatch``, not an anchored ``match``: both Java's and
+    Python's ``$`` also match before a trailing line terminator, which
+    would let ``"a.json\\n"`` (or, in Java, ``"a.json\\r"``) through."""
+    return path is None or _FILENAME_RE.fullmatch(path) is not None
+
+
+def site_record_error(
+    path: Optional[str], content: Optional[str]
+) -> tuple[Optional[str], Optional[dict]]:
+    """The record-validity rule, the one definition every consumer shares
+    (``split_violations``, the normalize kernel, the triple fan-out).
+
+    Checked in order, first failure wins: the ``path`` charset rule and
+    the structural rules (parseable document, identity fields present,
+    exactly one site-level reference — validators.py:44-54), both
+    labelled 'structural'; then the constrained-type tree, labelled with
+    the failing field path.
+
+    Returns ``(reason, parsed_dict)``: ``reason`` is None for a valid
+    record, and callers that go on to consume it reuse ``parsed_dict``
+    instead of running ``json.loads`` a second time.  ``parsed_dict`` is
+    None whenever the document was not parsed into a dict."""
+    if not path_ok(path) or content is None:
         return "structural", None
     try:
-        d = json.loads(c)
+        d = json.loads(content)
     except Exception:
         return "structural", None
     if not isinstance(d, dict):
@@ -405,13 +419,10 @@ def structural_then_constrained_parsed(c) -> tuple[Optional[str], Optional[dict]
         return "$", d  # quarantine contract: reject the ONE record, not the job
 
 
-def _structural_then_constrained(c) -> Optional[str]:
-    return structural_then_constrained_parsed(c)[0]
-
-
 @pandas_udf(StringType())
-def site_error_udf(content: pd.Series) -> pd.Series:
-    """Structural + constrained validation, single ``json.loads`` per row."""
+def site_error_udf(path: pd.Series, content: pd.Series) -> pd.Series:
+    """``site_record_error``'s reason per row, one ``json.loads`` each."""
     return pd.Series(
-        [_structural_then_constrained(c) for c in content], dtype="object"
+        [site_record_error(p, c)[0] for p, c in zip(path, content)],
+        dtype="object",
     )

@@ -5,17 +5,17 @@ Front door: the ingest table ``(repo, path, commit, lang, content)``.
 - ``with_lineage``      — per-row ``sha256(content)`` (JVM ``sha2``), the
                           invariant carried through every downstream table.
 - ``parse_sites``       — ``from_json`` with the declared schema (JVM parse,
-                          no inference); structural violations split off.
+                          no inference).
+- ``split_violations``  — the ok / violations split by the record-validity
+                          rule (``constrained.site_record_error``).
 - ``normalize_sites``   — the relational site row (ref
-                          `kgrel/mineral_site.py:198-244`): broadcast joins
-                          for source score, JVM column exprs for the
-                          location view ids, one Arrow-vectorized UDF for
-                          site-id minting and WKT centroids.
-- ``extract_triples``   — ``mapInPandas`` fan-out of each record into its
-                          (subj, pred, obj) rows.
-- ``explode_inventories`` — per-inventory rows feeding the grade-tonnage
-                          aggregate (broadcast join for material-form
-                          conversion).
+                          `kgrel/mineral_site.py:198-244`) of every valid
+                          record, validated and normalized in one
+                          ``mapInPandas`` parse.
+- ``extract_triples``   — ``mapInArrow`` fan-out of each valid record into
+                          its (subj, pred, obj) rows.
+- ``explode_inventories`` — per-inventory rows, the input of the
+                          explode→groupBy grade-tonnage parity reference.
 
 Scale notes: the only shuffle in this module is the optional repartition at
 write; parsing/minting/fan-out are map-side.  Filters/projections stay on
@@ -24,20 +24,18 @@ columns so the parquet scan prunes (``PushedFilters`` visible in explain).
 
 from __future__ import annotations
 
-import json
 import math
 import re
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 from ..functions.arrowkit import chunked_kernel
 from ..functions.ids import MR_NS, get_username, make_site_id
 from ..functions.rdf import site_to_triples
 from ..schemas import INGEST, RAW_SITE, TRIPLE
+from .constrained import path_ok, site_error_udf, site_record_error
 
 # ---------------------------------------------------------------------------
 
@@ -61,85 +59,31 @@ def parse_sites(ingest: DataFrame) -> DataFrame:
     )
 
 
-def split_violations(
-    parsed: DataFrame, constrained: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    """P5/P6 validation.
+def split_violations(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """P5/P6 validation: ``(ok, violations)``.
 
-    Structural rules as JVM column predicates: required idents present,
-    exactly one site-level reference (ref validators.py:44-54), filename
-    charset rule on ``path``.  With ``constrained=True`` (the default and
-    the reference-parity behavior) the raw JSON additionally passes the
-    reference's constrained-type tree (CleanedNotEmptyStr,
-    confidence ∈ [0,1], URL-valid IRIs, numeric measures —
-    operators/constrained.py, oracle-tested against the reference's
-    executed deserializer).  The bad side carries a ``violation_reason``
-    column: the failing field path, or 'structural'.
+    Every row is tagged with ``constrained.site_record_error(path,
+    content)`` — the filename charset rule, the structural rules
+    (required idents, exactly one site-level reference — ref
+    validators.py:44-54) and the reference's constrained-type tree
+    (CleanedNotEmptyStr, confidence ∈ [0,1], URL-valid IRIs, numeric
+    measures — oracle-tested against the reference's executed
+    deserializer) — in one Arrow UDF parse.  The bad side carries a
+    ``violation_reason`` column: the failing field path, or 'structural'.
+    No ``site.*`` access, so Catalyst prunes ``from_json`` out of the plan.
     """
-    from .constrained import site_error_udf
-
-    path_ok = F.col("path").rlike(r"^[a-zA-Z0-9_\-,./]+$")
-    if not constrained:
-        # structural-only mode keeps the JVM predicate chain (it needs the
-        # parsed ``site`` struct; used by tests and ad-hoc callers only)
-        struct_ok = (
-            F.col("site.source_id").isNotNull()
-            & F.col("site.record_id").isNotNull()
-            & F.col("site.created_by").isNotNull()
-            & (F.size(F.coalesce(F.col("site.reference"), F.array())) == 1)
-            & path_ok
-        )
-        return (
-            parsed.filter(struct_ok),
-            parsed.filter(~struct_ok).withColumn(
-                "violation_reason", F.lit("structural")
-            ),
-        )
-    # Default path: structural + constrained rules fused into ONE Arrow
-    # kernel parse (operators/constrained.py _structural_then_constrained).
-    # No ``site.*`` access ⇒ Catalyst prunes ``from_json`` out of the plan
-    # entirely — the former predicate chain lexed the full document 4-5
-    # times per row (one pruned ``from_json`` per field access, verified
-    # with .explain), pure JVM cost this removes from the hot path.
     tagged = parsed.withColumn(
-        "violation_reason",
-        F.when(~path_ok, F.lit("structural")).otherwise(
-            site_error_udf(F.col("content"))
+        "violation_reason", site_error_udf(F.col("path"), F.col("content"))
+    )
+    return (
+        tagged.filter(F.col("violation_reason").isNull()).drop(
+            "violation_reason"
         ),
+        tagged.filter(F.col("violation_reason").isNotNull()),
     )
-    ok_df = tagged.filter(F.col("violation_reason").isNull()).drop(
-        "violation_reason"
-    )
-    # r06: mark the ok side so normalize_sites can FUSE validation into
-    # its own kernel — without the marker the sites plan runs two python
-    # passes over every document (site_error_udf parse + normalize
-    # parse); with it, one pass parses once and both validates and
-    # normalizes (identical output rows — the same error function gates
-    # them; asserted in tests/test_extract.py).  The attribute rides the
-    # DataFrame *object*, so it only fires when the literal ok side of
-    # this call is handed to normalize_sites (the pipeline/bench shape).
-    ok_df._prevalidated_source = parsed  # type: ignore[attr-defined]
-    return ok_df, tagged.filter(F.col("violation_reason").isNotNull())
 
 
 # -- Arrow-vectorized kernels -------------------------------------------------
-
-
-from pyspark.sql.types import (  # noqa: E402  (DataType objects: no active-session DDL parse at import)
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-
-@pandas_udf(StringType())
-def site_id_udf(created_by: pd.Series, source_id: pd.Series, record_id: pd.Series) -> pd.Series:
-    out = [
-        make_site_id(get_username(cb), sid, str(rid))
-        for cb, sid, rid in zip(created_by, source_id, record_id)
-    ]
-    return pd.Series(out, dtype="object")
 
 
 _POINT_RE = re.compile(
@@ -210,66 +154,31 @@ def _wkt_centroid(wkt: str | None, crs_name: str | None) -> tuple[float | None, 
     return None, None
 
 
-@pandas_udf(
-    StructType(
-        [StructField("lat", DoubleType()), StructField("lon", DoubleType())]
-    )
-)
-def centroid_udf(wkt: pd.Series, crs_name: pd.Series) -> pd.DataFrame:
-    lats, lons = [], []
-    for w, c in zip(wkt, crs_name):
-        lat, lon = _wkt_centroid(w, c)
-        lats.append(lat)
-        lons.append(lon)
-    return pd.DataFrame({"lat": lats, "lon": lons})
-
-
-# ---------------------------------------------------------------------------
-
-
-def _norm_ids(entities_col: str):
-    """array<candidate_entity> → array<internal id> of linked entities
-    (ref location.py:151-161) — pure column expr, JVM-side."""
-    return F.transform(
-        F.filter(
-            F.coalesce(F.col(entities_col), F.array()),
-            lambda x: x["normalized_uri"].isNotNull(),
-        ),
-        lambda x: F.replace(x["normalized_uri"], F.lit(MR_NS), F.lit("")),
-    )
-
-
 from ..schemas import SITE_REL  # noqa: E402
 
 SITE_REL_COLS = [f.name for f in SITE_REL.fields]
 
 
-def _normalize_batch_fn(
-    crs_names: dict, source_scores: dict, validate: bool = False
-):
-    """Single-parse normalization kernel (P2+P3 in one Arrow pass).
+def _normalize_batch_fn(crs_names: dict, source_scores: dict):
+    """Single-parse validate+normalize kernel (P2+P3 in one Arrow pass).
 
-    One ``json.loads`` per row builds every SITE_REL column.  The
-    column-expression formulation pays N partial JSON parses per row
-    (Catalyst inlines ``from_json`` into each projected field — 9 parses in
-    the measured plan, ~2 ms/row); this kernel is one parse (~0.2 ms/row).
+    One ``json.loads`` per row (inside ``site_record_error``) both
+    validates the record and builds every SITE_REL column: invalid rows
+    are skipped (they belong to ``split_violations``' violations side),
+    valid rows are normalized from the already-parsed dict.  A
+    column-expression formulation would pay N partial JSON parses per row
+    (Catalyst inlines ``from_json`` into each projected field — 9 parses
+    in the measured plan, ~2 ms/row); this kernel is one parse.
     The crs-name and source-score vocab lookups ride along as tiny
     closure dicts — the reference's own broadcast-dict pattern
     (`services/kgrel_entity.py:57-75`).
 
-    ``validate=True`` (r06) FUSES split_violations' structural +
-    constrained check into the same parse: invalid rows are skipped (they
-    belong to the violations side-table), valid rows are normalized from
-    the already-parsed dict — one python pass and one ``json.loads``
-    where the unfused plan pays two of each.  Output columns are built as
-    per-column lists (dict-of-lists → pandas), not a list of per-row
-    dicts — the row-dict construction plus pandas' per-record inference
-    was ~40% of the kernel's CPU at 2k-row chunks.
+    Output columns are built as per-column lists (dict-of-lists →
+    pandas), not a list of per-row dicts — the row-dict construction plus
+    pandas' per-record inference was ~40% of the kernel's CPU at 2k-row
+    chunks.
     """
     from datetime import datetime
-
-    if validate:
-        from .constrained import structural_then_constrained_parsed
 
     def parse_ns(s: str) -> int:
         if s.endswith("Z"):
@@ -319,14 +228,9 @@ def _normalize_batch_fn(
         for repo, path, sha, content in zip(
             pdf["repo"], pdf["path"], pdf["content_sha256"], pdf["content"]
         ):
-            if validate:
-                if path is not None and not _PATH_OK_RE.match(str(path)):
-                    continue
-                err, site = structural_then_constrained_parsed(content)
-                if err is not None:
-                    continue
-            else:
-                site = json.loads(content)
+            err, site = site_record_error(path, content)
+            if err is not None:
+                continue
             username = get_username(site["created_by"])
             site_id = make_site_id(
                 username, site["source_id"], str(site["record_id"])
@@ -374,16 +278,16 @@ def _normalize_batch_fn(
 
 
 def normalize_sites(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame:
-    """P2+P3: the relational site row (SITE_REL schema) in ONE Arrow pass.
+    """P2+P3: the relational site row (SITE_REL schema) of every valid
+    record in ``parsed`` (the ``parse_sites`` frame, unsplit), in ONE
+    Arrow pass.
 
-    The crs and data-source vocabularies collapse to driver dicts (they
-    are broadcast-dim sized by definition) and ship in the task closure.
-
-    When ``parsed`` is the ok side of ``split_violations`` (it carries the
-    ``_prevalidated_source`` marker), the kernel runs over the UNFILTERED
-    source and performs the validation itself — same rows out, one python
-    pass and one parse instead of two (guide §4: cross the boundary once,
-    do everything per batch).
+    Validation runs inside the same parse (``_normalize_batch_fn``), so
+    the output holds exactly the rows ``split_violations`` keeps — one
+    python pass and one ``json.loads`` per document (guide §4: cross the
+    boundary once, do everything per batch).  The crs and data-source
+    vocabularies collapse to driver dicts (they are broadcast-dim sized
+    by definition) and ship in the task closure.
     """
     crs_names = {
         MR_NS + r["minmod_id"]: r["name"] for r in vocab["crs"].collect()
@@ -392,103 +296,18 @@ def normalize_sites(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame
         r["uri"]: (float(r["score"]) if r["score"] is not None else None)
         for r in vocab["data_source"].collect()
     }
-    src = getattr(parsed, "_prevalidated_source", None)
-    validate = src is not None
-    base = src if validate else parsed
-    if "content_sha256" not in base.columns:
-        base = with_lineage(base)
-    return base.select("repo", "path", "content_sha256", "content").mapInPandas(
-        _normalize_batch_fn(crs_names, source_scores, validate=validate),
-        schema=SITE_REL,
-    )
-
-
-def normalize_sites_colexpr(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame:
-    """Column-expression formulation kept for reference/AB tests.
-
-    Broadcast joins: data_source → source_score, crs → crs name.
-    One Arrow UDF for site-id minting, one for centroids; everything else
-    whole-stage-codegen column exprs.  NOTE: Catalyst inlines the
-    ``from_json`` into every projected field — use ``normalize_sites``.
-    """
-    src_scores = F.broadcast(
-        vocab["data_source"].select(
-            F.col("uri").alias("source_id"), F.col("score").alias("source_score")
-        )
-    )
-    crs_names = F.broadcast(
-        vocab["crs"].select(
-            F.concat(F.lit(MR_NS), F.col("minmod_id")).alias("crs_uri"),
-            F.col("name").alias("crs_name"),
-        )
-    )
-
-    df = (
-        parsed.select(
-            "repo",
-            "path",
-            "content_sha256",
-            F.col("site.*"),
-        )
-        .withColumn(
-            "site_id", site_id_udf(F.col("created_by"), F.col("source_id"), F.col("record_id"))
-        )
-        .withColumn(
-            "modified_at_ns",
-            (F.unix_micros(F.to_timestamp(F.col("modified_at")))) * F.lit(1000),
-        )
-    )
-
-    df = df.join(src_scores, "source_id", "left")
-    df = df.join(
-        crs_names,
-        F.col("location_info.crs.normalized_uri") == crs_names["crs_uri"],
-        "left",
-    )
-
-    centroid = centroid_udf(F.col("location_info.location"), F.col("crs_name"))
-    df = df.withColumn("centroid", centroid)
-
-    return df.select(
-        "site_id",
-        F.lit(None).cast("string").alias("dedup_site_id"),
-        "source_id",
-        "source_score",
-        F.col("record_id").cast("string").alias("record_id"),
-        "name",
-        "aliases",
-        F.col("site_rank").alias("rank"),
-        F.col("site_type").alias("type"),
-        F.col("location_info.location").alias("location_wkt"),
-        F.col("location_info.crs").alias("location_crs"),
-        F.col("centroid.lat").alias("lat"),
-        F.col("centroid.lon").alias("lon"),
-        _norm_ids("location_info.country").alias("country"),
-        _norm_ids("location_info.state_or_province").alias("state_or_province"),
-        F.col("deposit_type_candidate").alias("deposit_type_candidates"),
-        F.col("mineral_inventory").alias("inventories"),
-        "reference",
-        "mineral_form",
-        "geology_info",
-        "discovered_year",
-        "created_by",
-        F.col("modified_at_ns").alias("modified_at"),
-        "content_sha256",
-        "repo",
-        "path",
+    return parsed.select("repo", "path", "content_sha256", "content").mapInPandas(
+        _normalize_batch_fn(crs_names, source_scores), schema=SITE_REL
     )
 
 
 # -- triple fan-out -----------------------------------------------------------
 
 
-_PATH_OK_RE = re.compile(r"^[a-zA-Z0-9_\-,./]+$")
-
-
 def _site_structurally_valid(site, path: str | None) -> bool:
-    """Python mirror of ``split_violations``' predicates — records routed to
-    the violations table must produce NO triples (and must never crash the
-    fan-out kernel at scale)."""
+    """The structural half of ``constrained.site_record_error`` over an
+    already-parsed record (no constrained-type walk) — the input filter of
+    the pure-python oracles in plans/kg_oracles.py."""
     if not isinstance(site, dict):
         return False
     if site.get("source_id") is None or site.get("record_id") is None:
@@ -497,9 +316,7 @@ def _site_structurally_valid(site, path: str | None) -> bool:
         return False
     if len(site.get("reference") or []) != 1:
         return False
-    if path is not None and not _PATH_OK_RE.match(path):
-        return False
-    return True
+    return path_ok(path)
 
 
 def _triples_batch(include_extra: bool, carry_bucket: bool, out_schema):
@@ -511,10 +328,11 @@ def _triples_batch(include_extra: bool, carry_bucket: bool, out_schema):
     conversion overhead on ~130 emitted strings per input row (measured
     58.6 → 29.9 µs/input row, guide §4.2: the batch IS the wire format).
     Values and row order are identical; only the conversion layer moved.
+
+    Records ``site_record_error`` rejects — the rows ``split_violations``
+    routes to the violations table — emit no triples.
     """
     import pyarrow as pa
-
-    from ..functions.arrowkit import chunked_arrow_kernel
 
     def per_chunk(rb) -> "pa.RecordBatch | None":
         subjs, preds, objs, sids, buckets = [], [], [], [], []
@@ -522,13 +340,10 @@ def _triples_batch(include_extra: bool, carry_bucket: bool, out_schema):
         bucket_col = rb.column("bucket").to_pylist() if carry_bucket else None
         path_col = rb.column("path").to_pylist() if "path" in names else None
         for i, content in enumerate(rb.column("content").to_pylist()):
-            try:
-                site = json.loads(content)
-            except (ValueError, TypeError):
-                continue  # malformed document → violations table, no triples
-            if not _site_structurally_valid(
-                site, str(path_col[i]) if path_col is not None else None
-            ):
+            err, site = site_record_error(
+                path_col[i] if path_col is not None else None, content
+            )
+            if err is not None:
                 continue
             site_id, triples = site_to_triples(site, include_extra=include_extra)
             for s, p, o in triples:
@@ -547,7 +362,7 @@ def _triples_batch(include_extra: bool, carry_bucket: bool, out_schema):
     # ~127 triples per site: 512 input rows ≈ 65k output strings per
     # chunk keeps the alive set (and Arrow batch) bounded — see
     # functions/arrowkit.py
-    return chunked_arrow_kernel(per_chunk, max_rows=512)
+    return chunked_kernel(per_chunk, max_rows=512)
 
 
 def extract_triples(ingest: DataFrame, include_extra: bool = False) -> DataFrame:
@@ -563,7 +378,7 @@ def extract_triples(ingest: DataFrame, include_extra: bool = False) -> DataFrame
     if "path" in ingest.columns:
         cols.append("path")  # enables the filename-charset validity rule
     if carry:
-        from pyspark.sql.types import IntegerType, StructType
+        from pyspark.sql.types import IntegerType, StructField, StructType
 
         schema = StructType(
             TRIPLE.fields + [StructField("bucket", IntegerType())]
@@ -595,7 +410,9 @@ def extract_triples(ingest: DataFrame, include_extra: bool = False) -> DataFrame
 def explode_inventories(sites_rel: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame:
     """A2 prep: one row per (site, inventory) with commodity normalized and
     the validity flag for the grade-tonnage model
-    (ref kgrel/mineral_site.py:71-116).
+    (ref kgrel/mineral_site.py:71-116).  The input of
+    ``grade_tonnage.grade_tonnage_view_exploded``, the parity reference
+    for the in-row ``grade_tonnage_view``.
 
     Commodity id + material-form conversion resolve via broadcast joins —
     never dict lookups in Python.
@@ -643,7 +460,7 @@ def explode_inventories(sites_rel: DataFrame, vocab: dict[str, DataFrame]) -> Da
         )
         .join(form_conv, "form_uri", "left")
     )
-    out = inv.select(
+    return inv.select(
         "site_id",
         "inv_pos",
         "commodity",
@@ -657,20 +474,3 @@ def explode_inventories(sites_rel: DataFrame, vocab: dict[str, DataFrame]) -> Da
         "grade_unit",
         "valid_gt",
     )
-    # r06: mark the exploded view with its source so grade_tonnage_view
-    # can skip the explode→groupBy round trip — all inventories of a site
-    # already live in ONE sites_rel row, so regrouping them by
-    # (site_id, commodity) shuffles data that never needed to move
-    # (optimization-guide §8: the engine knows the grouping the optimizer
-    # cannot see).  The form-conversion vocabulary collapses to a closure
-    # dict exactly like normalize_sites' crs/source-score dicts.
-    out._exploded_from = (  # type: ignore[attr-defined]
-        sites_rel,
-        {
-            MR_NS + r["minmod_id"]: (
-                float(r["conversion"]) if r["conversion"] is not None else None
-            )
-            for r in vocab["commodity_form"].collect()
-        },
-    )
-    return out

@@ -25,13 +25,11 @@ Clean-room reimplementation of
 `/root/reference/minmodkg/grade_tonnage_model.py:225-459` (semantics only;
 the inner algebra is a per-group closure that no SQL aggregate expresses).
 
-Spark execution: the pipeline explodes inventories into one row per
-``(site_id, commodity, inventory)`` and runs this model via
-``groupBy(site_id, commodity).applyInPandas`` — Arrow-vectorized, one
-shuffle, partial data never leaves the executor.  Groups are tiny (a site
-reports a handful of inventories per commodity) so there is no skew risk on
-this key even at 10^12 input rows; the heavy key for skew is the *dedup
-group*, handled in operators/dedup.py.
+Spark execution: ``grade_tonnage_view(sites_rel, vocab)`` runs this model
+in one ``mapInPandas`` pass over sites_rel with no shuffle — every
+inventory of a site sits in that site's one row, so the per-``(site_id,
+commodity)`` grouping is done in the row.  The heavy key for skew is the
+*dedup group*, handled in operators/dedup.py.
 """
 
 from __future__ import annotations
@@ -41,6 +39,7 @@ from typing import Iterable, Optional
 
 import pandas as pd
 
+from ..functions.arrowkit import chunked_kernel
 from ..functions.units import (
     UNIT_MT,
     UNIT_PERCENT,
@@ -280,23 +279,6 @@ GT_VIEW_SCHEMA = (
     "tonnage double, grade double, date string"
 )
 
-# input columns expected by gt_apply_in_pandas (one row per inventory)
-GT_INPUT_COLS = [
-    "site_id",
-    "inv_pos",
-    "commodity",
-    "date",
-    "zone",
-    "category",
-    "material_form_conversion",
-    "ore_value",
-    "ore_unit",
-    "grade_value",
-    "grade_unit",
-    "valid_gt",
-]
-
-
 def _gt_output_row(site_id, commodity, invs: list[dict]) -> dict:
     """One (site, commodity) → one view row.  Invalid-only commodities
     still emit an all-null row (ref kgrel/mineral_site.py:140-150)."""
@@ -341,15 +323,8 @@ def _gt_output_row(site_id, commodity, invs: list[dict]) -> dict:
 
 
 def _gt_batch_fn(batches):
-    """mapInPandas kernel over pre-grouped rows (one row = one group).
-
-    Groups here are tiny (a handful of inventories), so per-group
-    ``applyInPandas`` would pay a pandas-DataFrame construction per group —
-    ~20 ms × millions of groups.  Grouping JVM-side with ``collect_list``
-    and draining whole Arrow batches through one Python call is ~50×
-    faster and shuffles the same bytes.
-    """
-    from ..functions.arrowkit import chunked_kernel
+    """mapInPandas kernel over pre-grouped rows (one row = one group) —
+    the kernel of the ``grade_tonnage_view_exploded`` parity reference."""
 
     def per_chunk(pdf):
         cols: dict[str, list] = {c: [] for c in _GT_OUT_COLS}
@@ -384,8 +359,8 @@ def _gt_fused_batch_fn(form_conv: dict):
     array, so the per-(site, commodity) grouping the model needs is free:
     bucket within the row (dict preserves doc order — the model's
     later-wins tie-break is order-sensitive), restate explode_inventories'
-    field semantics, run the model.  Byte-equivalent to the
-    explode→groupBy path (tests/test_grade_tonnage.py parity test)."""
+    field semantics, run the model.  Byte-equivalent to
+    ``grade_tonnage_view_exploded`` (tests/test_grade_tonnage.py)."""
 
     def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
         cols: dict[str, list] = {c: [] for c in _GT_OUT_COLS}
@@ -447,30 +422,40 @@ def _gt_fused_batch_fn(form_conv: dict):
                     cols[c].append(row[c])
         return pd.DataFrame(cols, columns=_GT_OUT_COLS)
 
-    from ..functions.arrowkit import chunked_kernel
-
     return chunked_kernel(per_chunk)
 
 
-def grade_tonnage_view(inv_rows):
-    """Build the MineralInventoryView from exploded inventory rows.
+def grade_tonnage_view(sites_rel, vocab):
+    """The MineralInventoryView of ``sites_rel``: one row per (site,
+    commodity) with a normalized commodity; invalid-only commodities yield
+    null views.
 
-    ``inv_rows``: DataFrame with GT_INPUT_COLS (one row per inventory whose
+    Zero-shuffle: ``_gt_fused_batch_fn`` reads each site's inventories in
+    place, so no explode→groupBy(site, commodity) round trip regroups
+    inventories that already sit together in one row (guide §2.4, remove
+    shuffles outright).  The material-form conversion vocabulary collapses
+    to a closure dict, like normalize_sites' crs/source-score dicts.
+    """
+    form_conv = {
+        MR + r["minmod_id"]: (
+            float(r["conversion"]) if r["conversion"] is not None else None
+        )
+        for r in vocab["commodity_form"].collect()
+    }
+    return sites_rel.select("site_id", "inventories").mapInPandas(
+        _gt_fused_batch_fn(form_conv), schema=GT_VIEW_SCHEMA
+    )
+
+
+def grade_tonnage_view_exploded(inv_rows):
+    """Parity reference for ``grade_tonnage_view`` over
+    ``extract.explode_inventories`` rows (one row per inventory whose
     commodity is normalized; ``valid_gt`` marks rows with complete
-    ore/grade/category data — invalid-only commodities yield null views).
+    ore/grade/category data).  No production caller: the tests pin the
+    in-row kernel against it.
 
-    When ``inv_rows`` is the direct output of
-    ``extract.explode_inventories`` (it carries the ``_exploded_from``
-    marker), the view is computed with a ZERO-shuffle fused kernel over
-    the sites table instead: the explode→groupBy(site, commodity) round
-    trip regroups inventories that already sit together in one sites_rel
-    row, so the shuffle (and the collect_list of nested structs riding
-    it) is pure waste — guide §2.4, remove shuffles outright.
-
-    Fallback path (pre-exploded rows from storage, tests): one shuffle on
-    (site_id, commodity) via a JVM ``collect_list`` aggregate (map-side
-    partials), then an Arrow batch kernel.
-
+    One shuffle on (site_id, commodity) via a JVM ``collect_list``
+    aggregate (map-side partials), then an Arrow batch kernel.
     ``collect_list`` element order is NOT guaranteed after a shuffle, but
     the model's best-estimate tie-break is order-sensitive (later-wins on
     exact contained-metal ties, matching the reference's cmp_to_key quirk) —
@@ -478,13 +463,6 @@ def grade_tonnage_view(inv_rows):
     back into the reference's document order before the kernel runs.
     """
     from pyspark.sql import functions as F
-
-    src = getattr(inv_rows, "_exploded_from", None)
-    if src is not None:
-        sites_rel, form_conv = src
-        return sites_rel.select("site_id", "inventories").mapInPandas(
-            _gt_fused_batch_fn(form_conv), schema=GT_VIEW_SCHEMA
-        )
 
     grouped = inv_rows.groupBy("site_id", "commodity").agg(
         F.array_sort(

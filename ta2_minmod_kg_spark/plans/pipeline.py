@@ -39,7 +39,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-CODE_VERSION = "v3"  # r3: projected-CRS corpus slices + window-free mega merge
+# v4: one record-validity rule — adversarial paths and constrained rejects
+# change sites_rel/triples, so a resumed workdir must not reuse v3 outputs
+CODE_VERSION = "v4"
 N_BUCKETS_DEFAULT = 256
 
 
@@ -336,7 +338,7 @@ class KGPipeline:
                 ),
                 "vocab_violations",
             )
-            sites = extract.normalize_sites(ok, vocab)
+            sites = extract.normalize_sites(parsed, vocab)
             return sites.join(
                 src.select("repo", "path", "bucket"), ["repo", "path"], "left"
             )
@@ -351,9 +353,7 @@ class KGPipeline:
 
         inv_views = self._run_stage(
             "inv_views",
-            lambda: grade_tonnage.grade_tonnage_view(
-                extract.explode_inventories(sites, vocab)
-            ),
+            lambda: grade_tonnage.grade_tonnage_view(sites, vocab),
             ingest_fp,
             bucket_col=None,
         )

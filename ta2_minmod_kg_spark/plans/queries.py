@@ -1088,8 +1088,7 @@ def _kg_outputs(spark):
 
     ingest = synthetic.synthesize_ingest(spark, _KG_N, partitions=8)
     vdfs = vocab_mod.vocab_dataframes(spark)
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
-    sites = extract.normalize_sites(parsed, vdfs).persist()
+    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs).persist()
     edges = synthetic.synthesize_system_edges(spark, _KG_N, partitions=8)
     curated = synthetic.curated_edges_df(spark, _KG_N)
     membership = canonicalize.build_membership(sites, edges, curated).persist()
@@ -1165,12 +1164,11 @@ def kg_grade_tonnage(spark, sf_dir):
     kg_grade_tonnage_oracle_sql); built in a try/except — if the
     reference checkout is unavailable the entry degrades to rows-only.
     """
-    from ..operators import extract, grade_tonnage
+    from ..operators import grade_tonnage
     from ..sources import vocab as vocab_mod
 
     _, vdfs, sites, _ = _kg_outputs(spark)
-    inv = extract.explode_inventories(sites, vdfs)
-    base = grade_tonnage.grade_tonnage_view(inv)
+    base = grade_tonnage.grade_tonnage_view(sites, vdfs)
     # invariants on the UNROUNDED view: one row per (site, commodity);
     # grade = 100 × metal / tonnage (relative tolerance, fp division)
     chk = base.agg(
@@ -1577,14 +1575,14 @@ def kg_cdr_export(spark, sf_dir):
     format_dedup_site) over a pure-python restatement of the corpus
     traversal and the G1-G5 membership program, inlined as VALUES.
     """
-    from ..operators import dedup, extract, grade_tonnage
+    from ..operators import dedup, grade_tonnage
     from ..plans.export import cdr_export_json_rows
     from ..sources.vocab import synthetic_vocab
 
     _, vdfs, sites, membership = _kg_outputs(spark)
     swd = sites.drop("dedup_site_id").join(membership, "site_id")
     dedup_attrs = dedup.merge_dedup_sites(swd)
-    gt = grade_tonnage.grade_tonnage_view(extract.explode_inventories(sites, vdfs))
+    gt = grade_tonnage.grade_tonnage_view(sites, vdfs)
     dedup_invs = dedup.select_dedup_inventories(swd, gt)
 
     v = synthetic_vocab()

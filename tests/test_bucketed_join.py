@@ -13,8 +13,9 @@ from ta2_minmod_kg_spark.sources.sinks import write_bucketed
 
 def test_bucketed_join_is_shuffle_free(spark):
     ingest = synthetic.synthesize_ingest(spark, 120, partitions=4)
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
-    sites = extract.normalize_sites(parsed, vocab.vocab_dataframes(spark))
+    sites = extract.normalize_sites(
+        extract.parse_sites(ingest), vocab.vocab_dataframes(spark)
+    )
     membership = canonicalize.build_membership(sites, None, None)
 
     spark.sql("DROP TABLE IF EXISTS sites_b")

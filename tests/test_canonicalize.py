@@ -183,8 +183,9 @@ def test_build_membership_end_to_end(spark, threshold):
 
     N = 160
     ingest = synthetic.synthesize_ingest(spark, N, partitions=4)
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
-    sites = extract.normalize_sites(parsed, vocab.vocab_dataframes(spark))
+    sites = extract.normalize_sites(
+        extract.parse_sites(ingest), vocab.vocab_dataframes(spark)
+    )
     system_edges = synthetic.synthesize_system_edges(spark, N, partitions=4)
     curated = spark.createDataFrame(
         pd.DataFrame(synthetic.synthesize_curated_edges(N))

@@ -1,70 +1,22 @@
 """Equivalence: the mega-group SQL merge path vs the Arrow kernel path.
 
-merge_dedup_sites_wide is the skew fallback (pure column expressions with
-map-side partial aggregation) — it must agree with the kernel on every
-field it covers, including on the planted giant cluster.
+_merge_big_groups_sql is the skew path (pure column expressions with
+map-side partial aggregation) — it must be byte-identical to the kernel,
+including on the planted giant cluster, and the dispatch must route that
+cluster to it.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import functions as F
-
 from ta2_minmod_kg_spark.operators import canonicalize, dedup, extract
 from ta2_minmod_kg_spark.sources import synthetic, vocab
-
-N = 220
-
-
-def test_wide_merge_matches_kernel(spark):
-    ingest = synthetic.synthesize_ingest(spark, N, partitions=4)
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
-    sites = extract.normalize_sites(parsed, vocab.vocab_dataframes(spark))
-    edges = synthetic.synthesize_system_edges(spark, N, partitions=4)
-    membership = canonicalize.build_membership(sites, edges, None)
-    swd = sites.drop("dedup_site_id").join(membership, "site_id").persist()
-
-    kernel = dedup.merge_dedup_sites(swd).toPandas().set_index("dedup_site_id")
-    wide = (
-        dedup.merge_dedup_sites_wide(swd).toPandas().set_index("dedup_site_id")
-    )
-    assert sorted(kernel.index) == sorted(wide.index)
-    # giant cluster present (the skew case the wide path exists for)
-    assert int(wide["n_sites"].max()) >= synthetic.giant_size(N)
-
-    for gid in kernel.index:
-        k, w = kernel.loc[gid], wide.loc[gid]
-        for field in ("name", "type", "rank", "discovered_year"):
-            kv = k[field]
-            wv = w[field]
-            if kv is None:
-                assert wv is None, (gid, field, wv)
-            else:
-                assert wv is not None and dict(wv) == dict(kv), (gid, field)
-        # coordinates
-        if k["coordinates"] is None:
-            assert w["coordinates"] is None
-        else:
-            assert dict(w["coordinates"]) == dict(k["coordinates"]), gid
-        # list attrs: kernel defaults empty-with-refid; wide yields null when
-        # no non-empty value exists — compare the value payloads
-        for field in ("country", "state_or_province", "mineral_form"):
-            kv = dict(k[field])
-            if len(kv["value"]) == 0:
-                assert w[field] is None or len(w[field]["value"]) == 0
-            else:
-                assert list(w[field]["value"]) == list(kv["value"]), (gid, field)
-                assert w[field]["refid"] == kv["refid"], (gid, field)
-        assert w["modified_at"] == k["modified_at"], gid
-        assert w["top1_deposit_type"] == k["top1_deposit_type"], gid
-        assert int(w["n_sites"]) == len(k["ranked_sites"]), gid
-    swd.unpersist()
 
 
 def _swd(spark, n):
     ingest = synthetic.synthesize_ingest(spark, n, partitions=4)
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
-    sites = extract.normalize_sites(parsed, vocab.vocab_dataframes(spark))
+    sites = extract.normalize_sites(
+        extract.parse_sites(ingest), vocab.vocab_dataframes(spark)
+    )
     edges = synthetic.synthesize_system_edges(spark, n, partitions=4)
     membership = canonicalize.build_membership(sites, edges, None)
     return sites.drop("dedup_site_id").join(membership, "site_id").persist()

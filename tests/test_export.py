@@ -63,22 +63,16 @@ def exported(spark):
         for i, r in enumerate(recs)
     ]
     ingest = spark.createDataFrame(pd.DataFrame(rows))
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
     vdfs = vocab.vocab_dataframes(spark)
-    sites = extract.normalize_sites(parsed, vdfs).persist()
+    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs).persist()
     membership = canonicalize.build_membership(sites, None, None)
     swd = sites.drop("dedup_site_id").join(membership, "site_id").persist()
     out = {
         "sites_rel": swd,
         "dedup_sites": dedup.merge_dedup_sites(swd),
-        "inv_views": grade_tonnage.grade_tonnage_view(
-            extract.explode_inventories(sites, vdfs)
-        ),
+        "inv_views": grade_tonnage.grade_tonnage_view(sites, vdfs),
         "dedup_inventories": dedup.select_dedup_inventories(
-            swd,
-            grade_tonnage.grade_tonnage_view(
-                extract.explode_inventories(sites, vdfs)
-            ),
+            swd, grade_tonnage.grade_tonnage_view(sites, vdfs)
         ),
     }
     doc = dedup_sites_json(out)
@@ -199,12 +193,11 @@ def test_write_read_dedup_sites_json_both_layouts(exported, tmp_path, spark):
     from ta2_minmod_kg_spark.sources import synthetic, vocab
 
     ingest = synthetic.synthesize_ingest(spark, 30, partitions=2)
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
     vdfs = vocab.vocab_dataframes(spark)
-    sites = extract.normalize_sites(parsed, vdfs).persist()
+    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs).persist()
     membership = canonicalize.build_membership(sites, None, None)
     swd = sites.drop("dedup_site_id").join(membership, "site_id").persist()
-    gt = grade_tonnage.grade_tonnage_view(extract.explode_inventories(sites, vdfs))
+    gt = grade_tonnage.grade_tonnage_view(sites, vdfs)
     out = {
         "sites_rel": swd,
         "dedup_sites": dedup.merge_dedup_sites(swd),

@@ -51,7 +51,7 @@ def test_ingest_pipeline(spark):
     assert ok.count() == rows
 
     vdfs = vocab.vocab_dataframes(spark)
-    sites = extract.normalize_sites(ok, vdfs)
+    sites = extract.normalize_sites(parsed, vdfs)
     pdf = sites.toPandas()
     assert len(pdf) == rows
     assert pdf["site_id"].str.startswith("site__").all()
@@ -82,8 +82,9 @@ def test_extract_triples_arrow_kernel_exact(spark):
     """r06 O8: extract_triples moved from mapInPandas to an Arrow-native
     mapInArrow kernel.  Assert EXACT multiset equality with the per-row
     single-node emitter over the full corpus — plus the bucket-carrying
-    variant and quarantine behavior (malformed JSON / bad path charset
-    emit nothing, valid rows are unaffected)."""
+    variant and quarantine behavior (malformed JSON, a bad path charset
+    and a constrained-type reject emit nothing, valid rows are
+    unaffected)."""
     from collections import Counter
 
     ingest = synthetic.synthesize_ingest(spark, N, partitions=4)
@@ -109,25 +110,38 @@ def test_extract_triples_arrow_kernel_exact(spark):
     assert set(tb.columns) == {"subj", "pred", "obj", "site_id", "bucket"}
     assert tb["bucket"].notna().all()
 
-    # quarantine: malformed JSON and a bad path charset emit no triples
+    # quarantine: malformed JSON, a bad path charset and a constrained
+    # reject (confidence out of [0, 1] — split_violations routes it to the
+    # violations table) emit no triples
+    bad_conf = next(
+        d
+        for d in map(json.loads, raw["content"])
+        if (d.get("location_info") or {}).get("crs")
+    )
+    bad_conf["record_id"] = "badconf"
+    bad_conf["location_info"]["crs"]["confidence"] = 7.5
     poisoned = ingest.unionByName(
         spark.createDataFrame(
             [
                 ("repo", "ok/name.json", "c", "en", "{not json"),
                 ("repo", "bad name!.json", "c", "en", raw["content"].iloc[0]),
+                ("repo", "u/badconf.json", "c", "en", json.dumps(bad_conf)),
             ],
             ingest.schema,
         )
     )
+    _, vio = extract.split_violations(extract.parse_sites(poisoned))
+    assert "location_info.crs.confidence" in {
+        r["violation_reason"] for r in vio.collect()
+    }
     tq = extract.extract_triples(poisoned).toPandas()
     assert Counter(map(tuple, tq[["subj", "pred", "obj", "site_id"]].values)) == expected
 
 
 def test_explode_inventories(spark):
     ingest = synthetic.synthesize_ingest(spark, N, partitions=4)
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
     vdfs = vocab.vocab_dataframes(spark)
-    sites = extract.normalize_sites(parsed, vdfs)
+    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs)
     inv = extract.explode_inventories(sites, vdfs).toPandas()
     assert len(inv) > 0
     assert inv["commodity"].str.startswith("Q").all()
@@ -137,14 +151,25 @@ def test_explode_inventories(spark):
 
 
 def test_fused_normalize_matches_unfused(spark):
-    """r06: normalize_sites fuses split_violations' validation into its own
-    kernel when handed the marked ok side (one parse/pass instead of two).
-    The fused output must equal the unfused kernel run on the filtered ok
-    rows — including on a corpus WITH violations (bad path charset, broken
-    JSON, constrained-type rejects)."""
+    """normalize_sites validates inside its own single parse.  Its output
+    must equal the normalized rows of exactly the records split_violations
+    keeps — on a corpus WITH violations (bad path charset, broken JSON,
+    constrained-type rejects, and paths ending in a line terminator that
+    Java's ``$`` and Python's ``re.match`` ``$`` both let through) — so
+    every input row lands in exactly one of the normalize output and the
+    violations side."""
     ingest = synthetic.synthesize_ingest(spark, 60, partitions=4)
     # plant violations: a bad path, a broken document, a bad confidence
     good = ingest.limit(1).collect()[0]
+    # each adversarial path gets a distinct record, so a row that lands on
+    # neither side (or both) is visible by its site id
+    doc = json.loads(good["content"])
+
+    def variant(i):
+        d = dict(doc, record_id=f"adversarial-{i}")
+        return json.dumps(d)
+
+    odd_paths = ["u/cr.json\r", "u/nl.json\n", "u/nel.json\u0085", "u/ls.json\u2028"]
     bad_rows = [
         (good["repo"], "bad path with spaces!", "c0", "json", good["content"]),
         (good["repo"], "u/broken.json", "c1", "json", "{not json"),
@@ -155,6 +180,9 @@ def test_fused_normalize_matches_unfused(spark):
             "json",
             good["content"].replace('"confidence": 0.99', '"confidence": 7.5'),
         ),
+    ] + [
+        (good["repo"], p, f"p{i}", "json", variant(i))
+        for i, p in enumerate(odd_paths)
     ]
     dirty = ingest.unionAll(
         spark.createDataFrame(bad_rows, schema=ingest.schema)
@@ -162,18 +190,27 @@ def test_fused_normalize_matches_unfused(spark):
     vdfs = vocab.vocab_dataframes(spark)
     parsed = extract.parse_sites(dirty)
     ok, bad = extract.split_violations(parsed)
-    assert hasattr(ok, "_prevalidated_source")
-    assert bad.count() >= 2  # path + broken JSON rejected at minimum
+    bad_paths = {r["path"] for r in bad.select("path").collect()}
+    assert set(odd_paths) <= bad_paths
+    assert {"bad path with spaces!", "u/broken.json", "u/badconf.json"} <= bad_paths
 
-    fused = extract.normalize_sites(ok, vdfs).toPandas()
-    # unfused: strip the marker so normalize runs on the filtered rows
-    ok_plain = ok.select(*ok.columns)
-    assert not hasattr(ok_plain, "_prevalidated_source")
-    unfused = extract.normalize_sites(ok_plain, vdfs).toPandas()
+    fused = extract.normalize_sites(parsed, vdfs).toPandas()
+    # reference: the same kernel over the rows split_violations kept
+    filtered = extract.normalize_sites(ok, vdfs).toPandas()
 
     fused = fused.sort_values("site_id").reset_index(drop=True)
-    unfused = unfused.sort_values("site_id").reset_index(drop=True)
+    filtered = filtered.sort_values("site_id").reset_index(drop=True)
     import pandas as pd
 
-    pd.testing.assert_frame_equal(fused, unfused)
+    pd.testing.assert_frame_equal(fused, filtered)
+    # every input row in exactly one of: normalize output, violations
+    n_in = dirty.count()
     assert len(fused) == ok.count()
+    assert len(fused) + bad.count() == n_in
+    kept = set(zip(fused["path"], fused["content_sha256"]))
+    rejected = {
+        (r["path"], r["content_sha256"])
+        for r in bad.select("path", "content_sha256").collect()
+    }
+    assert not kept & rejected
+    assert len(kept | rejected) == n_in

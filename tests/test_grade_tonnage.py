@@ -186,7 +186,7 @@ def test_view_doc_order_tiebreak(spark):
 
     from ta2_minmod_kg_spark.operators.grade_tonnage import (
         MR,
-        grade_tonnage_view,
+        grade_tonnage_view_exploded,
     )
 
     def row(pos, ore, grade):
@@ -211,35 +211,34 @@ def test_view_doc_order_tiebreak(spark):
         rows = [row(0, 20.0, 0.5), row(1, 10.0, 1.0)]
         pdf = pd.DataFrame([rows[i] for i in order])
         df = spark.createDataFrame(pdf).repartition(4)
-        out = grade_tonnage_view(df).toPandas()
+        out = grade_tonnage_view_exploded(df).toPandas()
         assert len(out) == 1
         assert out["tonnage"].iloc[0] == 10.0
         assert out["contained_metal"].iloc[0] == 0.1
 
 
 def test_fused_gt_view_matches_exploded_path(spark):
-    """r06: grade_tonnage_view computes zero-shuffle from sites_rel when
-    handed the marked explode_inventories output.  The fused kernel must
-    be value-identical (incl. NULL rows for invalid-only commodities) to
-    the explode→groupBy path on the full synthetic corpus."""
+    """grade_tonnage_view computes zero-shuffle from sites_rel.  The in-row
+    kernel must be value-identical (incl. NULL rows for invalid-only
+    commodities) to the explode→groupBy parity reference on the full
+    synthetic corpus."""
     import pandas as pd
 
     from ta2_minmod_kg_spark.operators import extract
-    from ta2_minmod_kg_spark.operators.grade_tonnage import grade_tonnage_view
+    from ta2_minmod_kg_spark.operators.grade_tonnage import (
+        grade_tonnage_view,
+        grade_tonnage_view_exploded,
+    )
     from ta2_minmod_kg_spark.sources import synthetic, vocab
 
     ingest = synthetic.synthesize_ingest(spark, 400, partitions=8)
     vdfs = vocab.vocab_dataframes(spark)
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
-    sites = extract.normalize_sites(parsed, vdfs).persist()
+    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs).persist()
 
-    inv = extract.explode_inventories(sites, vdfs)
-    assert hasattr(inv, "_exploded_from")
-    fused = grade_tonnage_view(inv).toPandas()
-
-    inv_plain = inv.select(*inv.columns)  # strips the marker
-    assert not hasattr(inv_plain, "_exploded_from")
-    unfused = grade_tonnage_view(inv_plain).toPandas()
+    fused = grade_tonnage_view(sites, vdfs).toPandas()
+    unfused = grade_tonnage_view_exploded(
+        extract.explode_inventories(sites, vdfs)
+    ).toPandas()
 
     key = ["site_id", "commodity"]
     fused = fused.sort_values(key).reset_index(drop=True)

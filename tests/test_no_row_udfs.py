@@ -1,7 +1,12 @@
-"""CI guard: no per-row Python UDFs anywhere (BASELINE.json input_hint).
+"""CI guard: no per-row Python UDFs and no object-attribute side channels.
 
 Only Arrow-vectorized forms are allowed: pandas_udf / applyInPandas /
-mapInPandas.  This greps the package source for the per-row constructs.
+mapInPandas / mapInArrow.  This greps the package source for the per-row
+constructs, and for private attributes set on or read from another object
+(``df._marker = ...`` / ``getattr(df, "_marker")``): an operator whose
+behavior depends on such a marker has a fast path that a plain
+``select`` silently turns off.  Operators take what they need as
+arguments instead.
 """
 
 from __future__ import annotations
@@ -19,6 +24,10 @@ FORBIDDEN = [
     # small constant tables go through a pyarrow.Table (a JVM LocalRelation)
     re.compile(r"\.parallelize\("),
     re.compile(r"createDataFrame\(\s*\["),
+    # object-attribute side channels (a private attribute pinned to, or
+    # read off, an object the code does not own)
+    re.compile(r'getattr\([^)]*,\s*"_'),
+    re.compile(r"^\s*(?!self\b)\w+\._\w+\s*=", re.M),
 ]
 
 

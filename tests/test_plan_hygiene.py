@@ -38,3 +38,26 @@ def test_no_cartesian_or_row_python(spark, name):
 def test_filters_reach_the_scan(spark, name, token):
     plan = _plan(QUERIES[name](spark, SF))
     assert token in plan, plan[:4000]
+
+
+def test_sites_rel_and_gt_view_plan_shape(spark, tmp_path):
+    """The fused kernels are the only path, so pin their plans: validate +
+    normalize is ONE Python pass (one MapInPandas, no separate validation
+    UDF), and the GT view regroups nothing (no Exchange)."""
+    from ta2_minmod_kg_spark.operators import extract, grade_tonnage
+    from ta2_minmod_kg_spark.sources import synthetic, vocab
+
+    # read back from parquet, as the pipeline does: the synthetic
+    # generator is itself a mapInPandas
+    synthetic.synthesize_ingest(spark, 20, partitions=2).write.parquet(
+        str(tmp_path / "ingest")
+    )
+    ingest = extract.read_ingest(spark, str(tmp_path / "ingest"))
+    vdfs = vocab.vocab_dataframes(spark)
+    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs)
+    plan = _plan(sites)
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
+
+    gt_plan = _plan(grade_tonnage.grade_tonnage_view(sites, vdfs))
+    assert "Exchange" not in gt_plan, gt_plan

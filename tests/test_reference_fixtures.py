@@ -78,15 +78,14 @@ def test_engine_end_to_end_on_fixtures(spark):
     n = ingest.count() - 2
 
     vdfs = vocab.vocab_dataframes(spark)
-    sites = extract.normalize_sites(ok, vdfs).persist()
+    sites = extract.normalize_sites(parsed, vdfs).persist()
     pdf = sites.toPandas()
     assert len(pdf) == n
     assert pdf["site_id"].str.startswith("site__").all()
     assert (pdf["modified_at"] > 1_500_000_000 * 10**9).all()  # ns since epoch
 
     # real fixture records carry real commodity/category URIs → GT views
-    inv = extract.explode_inventories(sites, vdfs)
-    gt = grade_tonnage.grade_tonnage_view(inv).toPandas()
+    gt = grade_tonnage.grade_tonnage_view(sites, vdfs).toPandas()
     assert len(gt) > 0
     with_gt = gt[gt["contained_metal"].notna()]
     assert (with_gt["contained_metal"] >= 0).all()

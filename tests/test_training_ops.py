@@ -172,8 +172,7 @@ def test_streaming_incremental_update(spark, tmp_path):
     N = 60
     ingest = synthetic.synthesize_ingest(spark, N, partitions=2)
     vdfs = vocab.vocab_dataframes(spark)
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
-    sites = extract.normalize_sites(parsed, vdfs)
+    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs)
     membership = canonicalize.build_membership(sites, None, None)
     swd = sites.drop("dedup_site_id").join(membership, "site_id")
 
@@ -197,8 +196,7 @@ def test_streaming_incremental_update(spark, tmp_path):
         )
     )
     new_ingest = ev.events_to_ingest(events)
-    new_parsed, _ = extract.split_violations(extract.parse_sites(new_ingest))
-    new_sites = extract.normalize_sites(new_parsed, vdfs)
+    new_sites = extract.normalize_sites(extract.parse_sites(new_ingest), vdfs)
     updated = ev.upsert_sites(sites, new_sites)
     assert updated.count() == sites.count()  # update, not insert
 

@@ -82,9 +82,8 @@ def test_linking_from_ttl_equals_csv(spark, entity_ttl):
     from ta2_minmod_kg_spark.sources import synthetic, vocab
 
     ingest = synthetic.synthesize_ingest(spark, 120, partitions=4)
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
     vdfs = vocab.vocab_dataframes(spark)
-    sites = extract.normalize_sites(parsed, vdfs).persist()
+    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs).persist()
     mentions = unlinked_mentions(sites, "deposit_type").persist()
 
     csv_docs = vocab_docs(
