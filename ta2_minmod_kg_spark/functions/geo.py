@@ -288,7 +288,7 @@ def is_supported_crs(crs: Optional[str]) -> bool:
 
 
 def supported_crs_names() -> list[str]:
-    """Static enumeration for DataFrame-side membership filters."""
+    """Static enumeration: the vocab check's supported-CRS set."""
     names = {"EPSG:4326", "EPSG:4267", "EPSG:3857", "EPSG:2993", "EPSG:2994"}
     names |= {f"EPSG:{32600 + z}" for z in range(1, 61)}
     names |= {f"EPSG:{32700 + z}" for z in range(1, 61)}

@@ -8,10 +8,11 @@ Front door: the ingest table ``(repo, path, commit, lang, content)``.
                           no inference).
 - ``split_violations``  — the ok / violations split by the record-validity
                           rule (``constrained.site_record_error``).
-- ``normalize_sites``   — the relational site row (ref
-                          `kgrel/mineral_site.py:198-244`) of every valid
-                          record, validated and normalized in one
-                          ``mapInPandas`` parse.
+- ``site_rows``         — the ``sites_rel`` kernel: every document
+                          validated, normalized into its relational site
+                          row (ref `kgrel/mineral_site.py:198-244`) and
+                          vocabulary-checked in one ``mapInPandas`` parse.
+- ``normalize_sites``   — the valid rows of ``site_rows``, as SITE_REL.
 - ``extract_triples``   — ``mapInArrow`` fan-out of each valid record into
                           its (subj, pred, obj) rows.
 - ``explode_inventories`` — per-inventory rows, the input of the
@@ -30,12 +31,20 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from ..functions.arrowkit import chunked_kernel
 from ..functions.ids import MR_NS, get_username, make_site_id
 from ..functions.rdf import site_to_triples
-from ..schemas import INGEST, RAW_SITE, TRIPLE
+from ..schemas import INGEST, RAW_SITE, SITE_REL, TRIPLE
 from .constrained import path_ok, site_error_udf, site_record_error
+from .validation import allowed_uri_sets, record_vocab_violations
 
 # ---------------------------------------------------------------------------
 
@@ -98,18 +107,6 @@ except Exception:
     _HAVE_SHAPELY = False
 
 
-_WGS84_R = 6378137.0  # spherical web-mercator radius (EPSG:3857)
-
-
-def _merc_inverse(x: float, y: float) -> tuple[float, float]:
-    """EPSG:3857 → EPSG:4326, pure math (spherical mercator inverse —
-    the same transform pyproj applies for 3857; ref misc/geo.py:67-96
-    routes through pyproj.Transformer)."""
-    lon = math.degrees(x / _WGS84_R)
-    lat = math.degrees(math.atan(math.sinh(y / _WGS84_R)))
-    return lat, lon
-
-
 def _wkt_centroid(wkt: str | None, crs_name: str | None) -> tuple[float | None, float | None]:
     """Centroid in EPSG:4326 (ref kgrel/custom_types/location.py:115-150).
 
@@ -119,8 +116,7 @@ def _wkt_centroid(wkt: str | None, crs_name: str | None) -> tuple[float | None, 
     Lambert 2994) plus all WGS84 UTM zones.  Richer geometries use
     shapely when available.  An unsupported CRS → (None, None) here, AND
     the record is surfaced in the vocab_violations table by
-    operators/validation.py:location_crs_violations — never a silent
-    drop.
+    ``validation.record_vocab_violations`` — never a silent drop.
     """
     from ..functions import geo as _geo
 
@@ -154,23 +150,75 @@ def _wkt_centroid(wkt: str | None, crs_name: str | None) -> tuple[float | None, 
     return None, None
 
 
-from ..schemas import SITE_REL  # noqa: E402
-
 SITE_REL_COLS = [f.name for f in SITE_REL.fields]
 
 
-def _normalize_batch_fn(crs_names: dict, source_scores: dict):
-    """Single-parse validate+normalize kernel (P2+P3 in one Arrow pass).
+# the ingest columns every ``site_rows`` row carries through unchanged
+SITE_ROW_KEYS = ["repo", "path", "commit", "content_sha256"]
+_SITE_VALUE_COLS = [c for c in SITE_REL_COLS if c not in SITE_ROW_KEYS]
 
-    One ``json.loads`` per row (inside ``site_record_error``) both
-    validates the record and builds every SITE_REL column: invalid rows
-    are skipped (they belong to ``split_violations``' violations side),
-    valid rows are normalized from the already-parsed dict.  A
+_VOCAB_VIOLATIONS = ArrayType(
+    StructType([StructField("field", StringType()), StructField("uri", StringType())])
+)
+
+
+def _site_rows_schema(carry_bucket: bool) -> StructType:
+    rel = {f.name: f.dataType for f in SITE_REL.fields}
+    return StructType(
+        [StructField(c, StringType()) for c in SITE_ROW_KEYS]
+        + ([StructField("bucket", IntegerType())] if carry_bucket else [])
+        + [StructField("violation_reason", StringType())]
+        + [StructField(c, rel[c]) for c in _SITE_VALUE_COLS]
+        + [StructField("vocab_violations", _VOCAB_VIOLATIONS)]
+    )
+
+
+def _coerce_numbers(site: dict) -> None:
+    """In place: the nested numeric leaves the constrained tree accepts as
+    strings (float-parseable measure values and bounding-box coordinates,
+    int strings / integral floats for pages) become the numbers the
+    reference's deserializer makes of them (deserializer.py:59-70,
+    92-100).  Both kernels apply it to a valid record: Arrow does not
+    convert a str inside a struct, and the reference-URI encoding formats
+    pages and boxes as numbers, so without it such a record would fail
+    the whole task.  (A top-level ``discovered_year`` string is cast by
+    the Arrow conversion itself.)"""
+
+    def refs(rs):
+        for r in rs:
+            for pi in r.get("page_info") or ():
+                if type(pi["page"]) is not int:
+                    pi["page"] = int(pi["page"])
+                bb = pi.get("bounding_box")
+                if bb is not None:
+                    for k in ("x_min", "x_max", "y_min", "y_max"):
+                        if isinstance(bb[k], str):
+                            bb[k] = float(bb[k])
+
+    refs(site["reference"])
+    for inv in site.get("mineral_inventory") or ():
+        for k in ("grade", "cutoff_grade", "ore"):
+            m = inv.get(k)
+            if m is not None and isinstance(m.get("value"), str):
+                m["value"] = float(m["value"])
+        refs((inv["reference"],))
+
+
+def _site_rows_fn(
+    crs_names: dict, source_scores: dict, allowed: dict, carry_bucket: bool
+):
+    """The ``sites_rel`` kernel: validate, normalize and vocab-check each
+    document from ONE ``json.loads`` (inside ``site_record_error``).
+
+    Every input row gives exactly one output row: the key columns carried
+    through, ``violation_reason`` (None when valid), the SITE_REL columns
+    (null on rejects) and ``vocab_violations`` (the
+    ``validation.record_vocab_violations`` rows of a valid record).  A
     column-expression formulation would pay N partial JSON parses per row
     (Catalyst inlines ``from_json`` into each projected field — 9 parses
-    in the measured plan, ~2 ms/row); this kernel is one parse.
-    The crs-name and source-score vocab lookups ride along as tiny
-    closure dicts — the reference's own broadcast-dict pattern
+    in the measured plan, ~2 ms/row); this kernel is one parse.  The
+    crs-name, source-score and vocabulary-membership lookups ride along
+    as tiny closure dicts — the reference's own broadcast-dict pattern
     (`services/kgrel_entity.py:57-75`).
 
     Output columns are built as per-column lists (dict-of-lists →
@@ -179,6 +227,9 @@ def _normalize_batch_fn(crs_names: dict, source_scores: dict):
     chunks.
     """
     from datetime import datetime
+
+    keys = SITE_ROW_KEYS + (["bucket"] if carry_bucket else [])
+    out_cols = [f.name for f in _site_rows_schema(carry_bucket).fields]
 
     def parse_ns(s: str) -> int:
         if s.endswith("Z"):
@@ -196,7 +247,7 @@ def _normalize_batch_fn(crs_names: dict, source_scores: dict):
         ]
 
     def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols: dict[str, list] = {c: [] for c in SITE_REL_COLS}
+        cols: dict[str, list] = {c: [] for c in _SITE_VALUE_COLS}
         ap_site_id = cols["site_id"].append
         ap_dedup = cols["dedup_site_id"].append
         ap_source_id = cols["source_id"].append
@@ -222,15 +273,18 @@ def _normalize_batch_fn(crs_names: dict, source_scores: dict):
         ap_discovered = cols["discovered_year"].append
         ap_created_by = cols["created_by"].append
         ap_modified = cols["modified_at"].append
-        ap_sha = cols["content_sha256"].append
-        ap_repo = cols["repo"].append
-        ap_path = cols["path"].append
-        for repo, path, sha, content in zip(
-            pdf["repo"], pdf["path"], pdf["content_sha256"], pdf["content"]
-        ):
+        reject_aps = [c.append for c in cols.values()]
+        reasons: list = []
+        vocab_vio: list = []
+        for path, content in zip(pdf["path"], pdf["content"]):
             err, site = site_record_error(path, content)
+            reasons.append(err)
             if err is not None:
+                for ap in reject_aps:
+                    ap(None)
+                vocab_vio.append(None)
                 continue
+            _coerce_numbers(site)
             username = get_username(site["created_by"])
             site_id = make_site_id(
                 username, site["source_id"], str(site["record_id"])
@@ -266,10 +320,13 @@ def _normalize_batch_fn(crs_names: dict, source_scores: dict):
             ap_discovered(site.get("discovered_year"))
             ap_created_by(site["created_by"])
             ap_modified(parse_ns(site["modified_at"]))
-            ap_sha(sha)
-            ap_repo(repo)
-            ap_path(path)
-        return pd.DataFrame(cols, columns=SITE_REL_COLS)
+            vocab_vio.append(record_vocab_violations(site, allowed, crs_names))
+        # one output row per input row: the keys pass straight through
+        out = {k: pdf[k].to_numpy() for k in keys}
+        out["violation_reason"] = reasons
+        out.update(cols)
+        out["vocab_violations"] = vocab_vio
+        return pd.DataFrame(out, columns=out_cols)
 
     # bounded chunks + paused cyclic GC: whole-batch dict construction is
     # superlinear in task size (functions/arrowkit.py docstring has the
@@ -277,17 +334,20 @@ def _normalize_batch_fn(crs_names: dict, source_scores: dict):
     return chunked_kernel(per_chunk)
 
 
-def normalize_sites(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame:
-    """P2+P3: the relational site row (SITE_REL schema) of every valid
-    record in ``parsed`` (the ``parse_sites`` frame, unsplit), in ONE
-    Arrow pass.
+def site_rows(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame:
+    """P2+P3+P5-P7 in ONE Arrow pass: one row per document of ``parsed``
+    (a ``with_lineage`` / ``parse_sites`` frame) with its keys (``repo,
+    path, commit, content_sha256`` and ``bucket`` when present),
+    ``violation_reason``, the SITE_REL columns (null on rejects) and
+    ``vocab_violations array<struct<field, uri>>``.
 
-    Validation runs inside the same parse (``_normalize_batch_fn``), so
-    the output holds exactly the rows ``split_violations`` keeps — one
-    python pass and one ``json.loads`` per document (guide §4: cross the
-    boundary once, do everything per batch).  The crs and data-source
-    vocabularies collapse to driver dicts (they are broadcast-dim sized
-    by definition) and ship in the task closure.
+    One python pass and one ``json.loads`` per document (guide §4: cross
+    the boundary once, do everything per batch); no ``content`` column
+    leaves the kernel.  The crs, data-source and membership vocabularies
+    collapse to driver dicts (they are broadcast-dim sized by definition)
+    and ship in the task closure.  The pipeline persists this frame once
+    and splits it into ``violations``, ``vocab_violations`` and
+    ``sites_rel`` (plans/pipeline.py ``split_site_rows``).
     """
     crs_names = {
         MR_NS + r["minmod_id"]: r["name"] for r in vocab["crs"].collect()
@@ -296,8 +356,21 @@ def normalize_sites(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame
         r["uri"]: (float(r["score"]) if r["score"] is not None else None)
         for r in vocab["data_source"].collect()
     }
-    return parsed.select("repo", "path", "content_sha256", "content").mapInPandas(
-        _normalize_batch_fn(crs_names, source_scores), schema=SITE_REL
+    carry = "bucket" in parsed.columns
+    keys = SITE_ROW_KEYS + (["bucket"] if carry else [])
+    return parsed.select(*keys, "content").mapInPandas(
+        _site_rows_fn(crs_names, source_scores, allowed_uri_sets(vocab), carry),
+        schema=_site_rows_schema(carry),
+    )
+
+
+def normalize_sites(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame:
+    """P2+P3: the relational site row (SITE_REL schema) of every valid
+    record in ``parsed`` — the valid rows of ``site_rows``, projected."""
+    return (
+        site_rows(parsed, vocab)
+        .filter(F.col("violation_reason").isNull())
+        .select(*SITE_REL_COLS)
     )
 
 
@@ -345,6 +418,7 @@ def _triples_batch(include_extra: bool, carry_bucket: bool, out_schema):
             )
             if err is not None:
                 continue
+            _coerce_numbers(site)
             site_id, triples = site_to_triples(site, include_extra=include_extra)
             for s, p, o in triples:
                 subjs.append(s)
@@ -378,8 +452,6 @@ def extract_triples(ingest: DataFrame, include_extra: bool = False) -> DataFrame
     if "path" in ingest.columns:
         cols.append("path")  # enables the filename-charset validity rule
     if carry:
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
         schema = StructType(
             TRIPLE.fields + [StructField("bucket", IntegerType())]
         )

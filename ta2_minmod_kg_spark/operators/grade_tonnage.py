@@ -434,7 +434,7 @@ def grade_tonnage_view(sites_rel, vocab):
     place, so no explode→groupBy(site, commodity) round trip regroups
     inventories that already sit together in one row (guide §2.4, remove
     shuffles outright).  The material-form conversion vocabulary collapses
-    to a closure dict, like normalize_sites' crs/source-score dicts.
+    to a closure dict, like site_rows' crs/source-score dicts.
     """
     form_conv = {
         MR + r["minmod_id"]: (

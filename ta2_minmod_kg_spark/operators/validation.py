@@ -3,21 +3,24 @@
 The reference checks every CandidateEntity ``normalized_uri`` against its
 vocabulary's URI set and raises on the first violation
 (`minmodkg/validators.py:354-419` + ``ValidatorHelper.optional_uri``).
-At pipeline scale a raise is the wrong shape — this operator returns a
-**violations DataFrame** ``(repo, path, field, uri)`` so bad records are
-quarantined and reported per-partition instead of killing the job.
+At pipeline scale a raise is the wrong shape — bad records are
+quarantined and reported as ``(field, uri)`` rows instead of killing the
+job.
 
-Plan shape: one pass over the parsed sites explodes every candidate field
-into ``(field, uri)`` mention rows (map-side only), then a single
-broadcast LEFT ANTI join against the union of the nine vocab URI sets.
-No shuffle of the fact table; the dim side is the broadcast-sized
-vocabulary.
+Execution: the vocabularies are broadcast-dim sized, so they collapse to
+driver-side ``field -> frozenset(uri)`` dicts (``allowed_uri_sets``) that
+ship in the task closure, and ``record_vocab_violations`` walks one
+already-parsed record with set lookups.  The walk runs inside the
+``sites_rel`` kernel (``extract.site_rows``), on the same ``json.loads``
+that validates and normalizes the record — no ``from_json`` lex, no
+anti-join.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from ..functions.geo import supported_crs_names
 
 MR_NS = "https://minmod.isi.edu/resource/"
 
@@ -35,141 +38,75 @@ _FIELD_VOCAB = [
     ("mineral_inventory.material_form", "commodity_form", "minmod_id"),
 ]
 
+# every CRS the inline reprojection handles (functions/geo.py) — the
+# reference's crs.csv vocabulary is a strict subset
+SUPPORTED_CRS = frozenset(supported_crs_names())
 
-def _mention(field: str, uri_col) -> "F.Column":
-    return F.struct(F.lit(field).alias("field"), uri_col.alias("uri"))
-
-
-def candidate_mentions(parsed: DataFrame) -> DataFrame:
-    """(repo, path, field, uri) for every non-null normalized_uri in the
-    record — single projection + explode, no shuffle."""
-    site = F.col("site")
-
-    def arr_uris(field, col):
-        return F.transform(
-            F.coalesce(col, F.array()), lambda c: _mention(field, c["normalized_uri"])
-        )
-
-    mentions = F.concat(
-        arr_uris("location_info.country", site["location_info"]["country"]),
-        arr_uris(
-            "location_info.state_or_province",
-            site["location_info"]["state_or_province"],
-        ),
-        F.array(
-            _mention(
-                "location_info.crs",
-                site["location_info"]["crs"]["normalized_uri"],
-            )
-        ),
-        arr_uris("deposit_type_candidate", site["deposit_type_candidate"]),
-        F.flatten(
-            F.transform(
-                F.coalesce(site["mineral_inventory"], F.array()),
-                lambda inv: F.concat(
-                    F.array(
-                        _mention(
-                            "mineral_inventory.commodity",
-                            inv["commodity"]["normalized_uri"],
-                        ),
-                        _mention(
-                            "mineral_inventory.grade",
-                            inv["grade"]["unit"]["normalized_uri"],
-                        ),
-                        _mention(
-                            "mineral_inventory.cutoff_grade",
-                            inv["cutoff_grade"]["unit"]["normalized_uri"],
-                        ),
-                        _mention(
-                            "mineral_inventory.ore",
-                            inv["ore"]["unit"]["normalized_uri"],
-                        ),
-                        _mention(
-                            "mineral_inventory.material_form",
-                            inv["material_form"]["normalized_uri"],
-                        ),
-                    ),
-                    F.transform(
-                        F.coalesce(inv["category"], F.array()),
-                        lambda c: _mention(
-                            "mineral_inventory.category", c["normalized_uri"]
-                        ),
-                    ),
-                ),
-            )
-        ),
-    )
-    keys = ["repo", "path"] + (["bucket"] if "bucket" in parsed.columns else [])
-    return (
-        parsed.select(*keys, F.explode(mentions).alias("m"))
-        .filter(F.col("m.uri").isNotNull())
-        .select(*keys, F.col("m.field").alias("field"), F.col("m.uri").alias("uri"))
-    )
+CRS_UNSUPPORTED = "location_info.crs.unsupported"
 
 
-def allowed_uris(vocab: dict[str, DataFrame]) -> DataFrame:
-    """(field, uri) dim of every URI each field may reference."""
-    parts = []
+def allowed_uri_sets(vocab: dict[str, DataFrame]) -> dict[str, frozenset]:
+    """field → every URI that field may reference, collected to the
+    driver (each vocabulary table is a few dozen rows)."""
+    ids: dict[tuple[str, str], frozenset] = {}
+    out = {}
     for field, table, id_col in _FIELD_VOCAB:
-        parts.append(
-            vocab[table].select(
-                F.lit(field).alias("field"),
-                F.concat(F.lit(MR_NS), F.col(id_col)).alias("uri"),
+        if (table, id_col) not in ids:
+            ids[table, id_col] = frozenset(
+                MR_NS + r[0]
+                for r in vocab[table].select(id_col).collect()
+                if r[0] is not None
             )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
+        out[field] = ids[table, id_col]
     return out
 
 
-from ..functions.geo import supported_crs_names
+def record_vocab_violations(
+    site: dict, allowed: dict[str, frozenset], crs_names: dict
+) -> list[dict]:
+    """The ``{field, uri}`` violation rows of one valid record.
 
-# every CRS the inline reprojection handles (functions/geo.py) — the
-# reference's crs.csv vocabulary is a strict subset
-SUPPORTED_CRS = tuple(supported_crs_names())
+    P7: every non-null ``normalized_uri`` outside its field's vocabulary,
+    one row per mention (a URI repeated in a record is reported each
+    time).  P3 guard: a record with a location whose CRS the engine
+    cannot reproject also gets a ``location_info.crs.unsupported`` row —
+    NOT a silent (lat, lon) = (null, null); the reference raises in
+    misc/geo.py:84-96 where we quarantine instead.
 
+    ``site`` has passed ``constrained.site_record_error``, so every
+    candidate entity is a dict and every list field a list."""
+    out: list[dict] = []
 
-def location_crs_violations(
-    parsed: DataFrame, vocab: dict[str, DataFrame]
-) -> DataFrame:
-    """P3 guard: a record with a location whose CRS the engine cannot
-    reproject is a violation row (field='location_info.crs.unsupported'),
-    NOT a silent (lat, lon) = (null, null) — the reference raises in
-    misc/geo.py:84-96 where we quarantine instead."""
-    site = F.col("site")
-    keys = ["repo", "path"] + (["bucket"] if "bucket" in parsed.columns else [])
-    crs_dim = F.broadcast(
-        vocab["crs"].select(
-            F.concat(F.lit(MR_NS), F.col("minmod_id")).alias("crs_uri"),
-            F.col("name").alias("crs_name"),
-        )
-    )
-    located = parsed.filter(site["location_info"]["location"].isNotNull()).select(
-        *keys, site["location_info"]["crs"]["normalized_uri"].alias("crs_uri")
-    )
-    return (
-        located.filter(F.col("crs_uri").isNotNull())
-        .join(crs_dim, "crs_uri", "left")
-        .filter(
-            F.col("crs_name").isNull() | ~F.col("crs_name").isin(*SUPPORTED_CRS)
-        )
-        .select(
-            *keys,
-            F.lit("location_info.crs.unsupported").alias("field"),
-            F.col("crs_uri").alias("uri"),
-        )
-    )
+    def check(field: str, entity) -> None:
+        if entity is not None:
+            uri = entity.get("normalized_uri")
+            if uri is not None and uri not in allowed[field]:
+                out.append({"field": field, "uri": uri})
 
+    loc = site.get("location_info") or {}
+    for e in loc.get("country") or ():
+        check("location_info.country", e)
+    for e in loc.get("state_or_province") or ():
+        check("location_info.state_or_province", e)
+    crs = loc.get("crs")
+    check("location_info.crs", crs)
+    for e in site.get("deposit_type_candidate") or ():
+        check("deposit_type_candidate", e)
+    for inv in site.get("mineral_inventory") or ():
+        check("mineral_inventory.commodity", inv.get("commodity"))
+        for k in ("grade", "cutoff_grade", "ore"):
+            m = inv.get(k)
+            if m is not None:
+                check("mineral_inventory." + k, m.get("unit"))
+        check("mineral_inventory.material_form", inv.get("material_form"))
+        for c in inv.get("category") or ():
+            check("mineral_inventory.category", c)
 
-def vocab_membership_violations(
-    parsed: DataFrame, vocab: dict[str, DataFrame]
-) -> DataFrame:
-    """P7: every normalized_uri outside its vocabulary → one violation row
-    (repo, path, field, uri).  Broadcast anti-join; fact side stays
-    map-only."""
-    mentions = candidate_mentions(parsed)
-    keys = ["repo", "path"] + (["bucket"] if "bucket" in mentions.columns else [])
-    return mentions.join(
-        F.broadcast(allowed_uris(vocab)), ["field", "uri"], "left_anti"
-    ).select(*keys, "field", "uri")
+    crs_uri = crs.get("normalized_uri") if crs is not None else None
+    if (
+        loc.get("location") is not None
+        and crs_uri is not None
+        and crs_names.get(crs_uri) not in SUPPORTED_CRS
+    ):
+        out.append({"field": CRS_UNSUPPORTED, "uri": crs_uri})
+    return out

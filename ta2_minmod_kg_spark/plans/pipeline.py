@@ -39,9 +39,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# v4: one record-validity rule — adversarial paths and constrained rejects
-# change sites_rel/triples, so a resumed workdir must not reuse v3 outputs
-CODE_VERSION = "v4"
+# v5: sites_rel carries bucket from its own ingest row — a path ingested
+# at two commits no longer multiplies through a (repo, path) re-join, so a
+# resumed workdir must not reuse v4 outputs
+CODE_VERSION = "v5"
 N_BUCKETS_DEFAULT = 256
 
 
@@ -78,6 +79,36 @@ def bucket_hashes(df: DataFrame, bucket_col: str = "bucket") -> DataFrame:
     )
 
 
+def split_site_rows(rows: DataFrame) -> dict[str, DataFrame]:
+    """The ``sites_rel`` stage's three tables as filters and projections
+    of one ``extract.site_rows`` frame (with ``bucket``):
+
+    - ``violations``: the rejected documents and their reason;
+    - ``vocab_violations``: one ``(field, uri)`` row per out-of-vocabulary
+      mention or unsupported CRS of a valid record;
+    - ``sites_rel``: the valid rows, ``repo, path, <rest of SITE_REL>,
+      bucket`` — the column order the per-bucket lineage hashes see.
+    """
+    from ..operators.extract import SITE_REL_COLS
+
+    bad = F.col("violation_reason").isNotNull()
+    ok = rows.filter(~bad)
+    return {
+        "violations": rows.filter(bad).select(
+            "repo", "path", "commit", "content_sha256", "violation_reason", "bucket"
+        ),
+        "vocab_violations": ok.select(
+            "repo", "path", "bucket", F.explode("vocab_violations").alias("v")
+        ).select("repo", "path", "bucket", "v.field", "v.uri"),
+        "sites_rel": ok.select(
+            "repo",
+            "path",
+            *[c for c in SITE_REL_COLS if c not in ("repo", "path")],
+            "bucket",
+        ),
+    }
+
+
 @dataclass
 class Lineage:
     workdir: str
@@ -99,6 +130,42 @@ class Lineage:
             + self.config
         )
         return hashlib.sha256(payload.encode()).hexdigest()
+
+    def vocab_fingerprint(self, vocab: dict[str, DataFrame]) -> str:
+        """sha256 over (name, whole-table fingerprint) of every vocabulary
+        table, in name order — the same per-table hash as
+        ``bucket_hashes`` over a single bucket, computed for all tables in
+        ONE query; a table with no rows contributes ``fingerprint([])``."""
+        import hashlib
+        from functools import reduce
+
+        names = sorted(vocab)
+        hashed = reduce(
+            DataFrame.unionAll,
+            [
+                vocab[n].select(
+                    F.lit(n).alias("name"),
+                    F.xxhash64(*[F.col(c) for c in vocab[n].columns]).alias("h"),
+                )
+                for n in names
+            ],
+        )
+        content = {
+            r["name"]: r["content_hash"]
+            for r in hashed.groupBy("name")
+            .agg(
+                F.sum(F.col("h").cast("decimal(38,0)"))
+                .cast("string")
+                .alias("content_hash")
+            )
+            .collect()
+        }
+        vh = hashlib.sha256(self.config.encode())
+        for n in names:
+            pb = [{"bucket": 0, "content_hash": content[n]}] if n in content else []
+            vh.update(n.encode())
+            vh.update(self.fingerprint(pb).encode())
+        return vh.hexdigest()
 
     def is_done(self, stage: str, input_fingerprint: str | None) -> bool:
         p = self._meta_path(stage)
@@ -290,19 +357,20 @@ class KGPipeline:
         changed = self.lineage.changed_buckets("ingest", ingest_pb)
         self.lineage.record("ingest", ingest_pb, 0.0, None)
 
+        cached: list[DataFrame] = []
+
         def build_sites(buckets=None):
             src = (
                 ingest.filter(F.col("bucket").isin(buckets))
                 if buckets is not None
                 else ingest
             )
-            from ..operators.validation import (
-                location_crs_violations,
-                vocab_membership_violations,
-            )
+            # one kernel pass per document, materialized once; the three
+            # tables are filters and projections of the cached rows
+            rows = extract.site_rows(extract.with_lineage(src), vocab).persist()
+            cached.append(rows)
+            tables = split_site_rows(rows)
 
-            parsed = extract.parse_sites(src)
-            ok, bad = extract.split_violations(parsed)
             # violations are bucket-partitioned like every other per-record
             # output: an incremental run rewrites only the dirty buckets'
             # violation partitions instead of clobbering the whole table
@@ -319,37 +387,23 @@ class KGPipeline:
                         .parquet(p)
                     )
 
-            write_side(
-                bad.select(
-                    "repo",
-                    "path",
-                    "commit",
-                    "content_sha256",
-                    "violation_reason",
-                    "bucket",
-                ),
-                "violations",
-            )
-            # P7: out-of-vocabulary normalized_uri rows (validators.py:354-419)
-            # + P3: locations with a CRS the engine cannot reproject
-            write_side(
-                vocab_membership_violations(ok, vocab).unionAll(
-                    location_crs_violations(ok, vocab)
-                ),
-                "vocab_violations",
-            )
-            sites = extract.normalize_sites(parsed, vocab)
-            return sites.join(
-                src.select("repo", "path", "bucket"), ["repo", "path"], "left"
-            )
+            write_side(tables["violations"], "violations")
+            # P7 out-of-vocabulary URIs (validators.py:354-419) + P3
+            # locations with a CRS the engine cannot reproject
+            write_side(tables["vocab_violations"], "vocab_violations")
+            return tables["sites_rel"]
 
-        sites = self._run_stage(
-            "sites_rel",
-            build_sites,
-            ingest_fp,
-            partition_by="bucket",
-            changed_buckets=changed,
-        )
+        try:
+            sites = self._run_stage(
+                "sites_rel",
+                build_sites,
+                ingest_fp,
+                partition_by="bucket",
+                changed_buckets=changed,
+            )
+        finally:
+            for df in cached:
+                df.unpersist()
 
         inv_views = self._run_stage(
             "inv_views",
@@ -406,19 +460,7 @@ class KGPipeline:
 
         # entity-vocabulary triples (ref etl/kgrel_entity.py:105-126) —
         # fingerprinted on the vocab tables' content, not the ingest
-        import hashlib
-
-        vh = hashlib.sha256(self.lineage.config.encode())
-        for name in sorted(vocab):
-            pb_v = [
-                r.asDict()
-                for r in bucket_hashes(
-                    vocab[name].withColumn("bucket", F.lit(0))
-                ).collect()
-            ]
-            vh.update(name.encode())
-            vh.update(self.lineage.fingerprint(pb_v).encode())
-        vocab_fp = vh.hexdigest()
+        vocab_fp = self.lineage.vocab_fingerprint(vocab)
 
         from ..operators.entity_triples import entity_triples as entity_triples_op
 

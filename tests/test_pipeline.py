@@ -307,3 +307,55 @@ def test_zz6_config_change_with_content_change_full_rebuild(spark, tmp_path):
     pipe3 = KGPipeline(spark, wd, n_buckets=8, include_extra_triples=True)
     pipe3.run(ingest2, vdfs)
     assert pipe3.metrics["triples"]["skipped"] is True
+
+
+def test_duplicate_paths_one_sites_rel_row_per_valid_ingest_row(spark, tmp_path):
+    """A path ingested at two commits is two documents: sites_rel holds one
+    row per valid ingest row, each in its own row's bucket — not the
+    cross product of a (repo, path) re-join."""
+    rec = synthetic.make_record(19, 80)
+    other = dict(rec, name="Other Name")  # same identity, new content
+    rows = [
+        ("r", "data/p0.json", "c1", "json", json.dumps(rec)),
+        ("r", "data/p0.json", "c2", "json", json.dumps(other)),
+        ("r", "data/p1.json", "c1", "json", json.dumps(synthetic.make_record(20, 80))),
+        ("r", "data/p2.json", "c1", "json", json.dumps(synthetic.make_record(21, 80))),
+    ]
+    ingest = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    wd = str(tmp_path / "wd_dup")
+    KGPipeline(spark, wd, n_buckets=4).run(ingest, vocab.vocab_dataframes(spark))
+    import hashlib
+
+    sites = spark.read.parquet(os.path.join(wd, "sites_rel")).collect()
+    assert sorted((r["path"], r["content_sha256"]) for r in sites) == sorted(
+        (r[1], hashlib.sha256(r[4].encode()).hexdigest()) for r in rows
+    )
+    want_bucket = {
+        r["path"]: r["bucket"]
+        for r in with_bucket(ingest, 4).select("path", "bucket").collect()
+    }
+    assert all(r["bucket"] == want_bucket[r["path"]] for r in sites)
+
+
+def test_vocab_fingerprint_matches_per_table_formula(spark):
+    """The one-query vocabulary fingerprint equals the per-table
+    ``bucket_hashes`` formula, an empty table included."""
+    import hashlib
+
+    from ta2_minmod_kg_spark.plans.pipeline import Lineage, bucket_hashes
+
+    vdfs = dict(vocab.vocab_dataframes(spark))
+    vdfs["zz_empty"] = vdfs["crs"].filter(F.lit(False))
+    lineage = Lineage("/nonexistent", config="n_buckets=8;include_extra=False")
+
+    vh = hashlib.sha256(lineage.config.encode())
+    for name in sorted(vdfs):
+        pb = [
+            r.asDict()
+            for r in bucket_hashes(vdfs[name].withColumn("bucket", F.lit(0))).collect()
+        ]
+        vh.update(name.encode())
+        vh.update(lineage.fingerprint(pb).encode())
+    assert lineage.vocab_fingerprint(vdfs) == vh.hexdigest()

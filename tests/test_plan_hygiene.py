@@ -61,3 +61,92 @@ def test_sites_rel_and_gt_view_plan_shape(spark, tmp_path):
 
     gt_plan = _plan(grade_tonnage.grade_tonnage_view(sites, vdfs))
     assert "Exchange" not in gt_plan, gt_plan
+
+
+_PYTHON_NODES = ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython")
+
+
+def test_sites_rel_stage_parses_once_and_splits_the_cache(spark, tmp_path):
+    """The sites_rel stage's persisted frame is one kernel pass straight
+    off the ingest scan — one MapInPandas, no from_json lex, one FileScan,
+    no re-join — and its three write plans only filter and project the
+    cached rows (no Python node above the InMemoryRelation)."""
+    from ta2_minmod_kg_spark.operators import extract
+    from ta2_minmod_kg_spark.plans.pipeline import split_site_rows, with_bucket
+    from ta2_minmod_kg_spark.sources import synthetic, vocab
+
+    synthetic.synthesize_ingest(spark, 20, partitions=2).write.parquet(
+        str(tmp_path / "ingest")
+    )
+    ingest = with_bucket(extract.read_ingest(spark, str(tmp_path / "ingest")), 8)
+    rows = extract.site_rows(
+        extract.with_lineage(ingest), vocab.vocab_dataframes(spark)
+    ).persist()
+    try:
+        plan = _plan(rows)
+        assert plan.count("MapInPandas") == 1, plan
+        assert "from_json" not in plan, plan
+        assert plan.count("FileScan") == 1, plan
+        assert "Join" not in plan, plan
+        for name, df in split_site_rows(rows).items():
+            wplan = _plan(df)
+            assert "InMemoryRelation" in wplan, (name, wplan)
+            own = wplan.split("InMemoryRelation")[0]
+            assert not any(n in own for n in _PYTHON_NODES), (name, wplan)
+    finally:
+        rows.unpersist()
+
+
+def test_pipeline_leaves_no_cached_frames(spark, tmp_path):
+    """KGPipeline.run releases what it persists, on the full and on the
+    incremental path: no persistent RDD it created outlives it (compared
+    with the ones earlier tests in this session left).
+
+    A persisted frame stays registered until it is unpersisted.  A
+    ``localCheckpoint`` nothing references any more (the membership
+    stage's edge checkpoint) is dropped by Spark's ContextCleaner once
+    the JVM has collected it, so the check collects garbage and gives
+    the cleaner time before it reads the registry."""
+    import gc
+    import time
+
+    from pyspark.sql import functions as F
+
+    from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
+    from ta2_minmod_kg_spark.sources import synthetic, vocab
+
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def leaked() -> dict:
+        deadline = time.time() + 30
+        while True:
+            gc.collect()
+            spark._jvm.System.gc()
+            time.sleep(0.5)
+            rdds = spark.sparkContext._jsc.getPersistentRDDs()
+            left = {
+                k: rdds.get(k).toDebugString()
+                for k in rdds.keySet()
+                if k not in before
+            }
+            if not left or time.time() > deadline:
+                return left
+
+    wd = str(tmp_path / "wd")
+    vdfs = vocab.vocab_dataframes(spark)
+    ingest = synthetic.synthesize_ingest(spark, 30, partitions=2)
+    KGPipeline(spark, wd, n_buckets=4).run(ingest, vdfs)
+    assert leaked() == {}
+
+    target = ingest.select("path").first()["path"]
+    edited = ingest.withColumn(
+        "content",
+        F.when(
+            F.col("path") == target,
+            F.regexp_replace("content", r'"name": "[^"]*"', '"name": "EDITED"'),
+        ).otherwise(F.col("content")),
+    )
+    pipe = KGPipeline(spark, wd, n_buckets=4)
+    pipe.run(edited, vdfs)
+    assert pipe.metrics["sites_rel"]["incremental_buckets"] is not None
+    assert leaked() == {}
