@@ -9,8 +9,13 @@ on a multi-executor cluster):
 
     python -m zipfile -c /tmp/ta2_minmod_kg_spark.zip ta2_minmod_kg_spark
     spark-submit --master local[32] \\
+        --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \\
         --py-files /tmp/ta2_minmod_kg_spark.zip \\
         run_pipeline.py --n-sites 100000 --workdir /tmp/kg
+
+The ``--conf`` line keeps the driver JVM C1-only, as ``session.get_spark``
+does: spark-submit starts that JVM before ``get_spark`` runs, so the
+builder's setting comes too late there.
 
 On a real cluster, swap ``--master`` for the cluster manager URL; the
 pipeline itself is agnostic (it takes the session from

@@ -26,11 +26,16 @@ the package on ``--py-files``):
 
     python -m zipfile -c /tmp/pkg.zip ta2_minmod_kg_spark
     spark-submit --master local[32] --py-files /tmp/pkg.zip \
+        --conf spark.driver.defaultJavaOptions=-XX:TieredStopAtLevel=1 \
         run_pipeline.py --n-sites 100000 --workdir /tmp/kg
+
+(spark-submit launches the driver JVM before ``get_spark`` runs, so the
+C1-only flag ``get_spark`` sets must be passed on the command line.)
 """
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import time
@@ -44,6 +49,17 @@ from pyspark.sql import functions as F
 # resumed workdir must not reuse v4 outputs
 CODE_VERSION = "v5"
 N_BUCKETS_DEFAULT = 256
+
+
+def _jvm_jit_gc_ms(spark: SparkSession) -> tuple[int, int]:
+    """The driver JVM's cumulative (JIT compilation, GC) milliseconds, from
+    its ``CompilationMXBean`` and summed ``GarbageCollectorMXBean`` times.
+    In local mode that JVM also runs the tasks, so a stage's deltas cover
+    its executor work too."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    jit = mf.getCompilationMXBean().getTotalCompilationTime()
+    gc = sum(b.getCollectionTime() for b in mf.getGarbageCollectorMXBeans())
+    return jit, gc
 
 
 def _clear_partitions(
@@ -168,10 +184,9 @@ class Lineage:
         return vh.hexdigest()
 
     def is_done(self, stage: str, input_fingerprint: str | None) -> bool:
-        p = self._meta_path(stage)
-        if not os.path.exists(p):
+        meta = self.read_meta(stage)
+        if meta is None:
             return False
-        meta = json.load(open(p))
         if meta.get("code_version") != CODE_VERSION:
             return False
         if input_fingerprint is not None and meta.get("input_fingerprint") != input_fingerprint:
@@ -202,7 +217,10 @@ class Lineage:
 
     def read_meta(self, stage: str) -> dict | None:
         p = self._meta_path(stage)
-        return json.load(open(p)) if os.path.exists(p) else None
+        if not os.path.exists(p):
+            return None
+        with open(p) as f:
+            return json.load(f)
 
     def changed_buckets(self, stage: str, per_bucket: list[dict]) -> list[int]:
         """Buckets whose content hash differs from the recorded lineage —
@@ -290,13 +308,13 @@ class KGPipeline:
             and os.path.exists(os.path.join(out_path, "_SUCCESS"))
             and 0 < len(changed_buckets)
         )
+        takes_buckets = len(inspect.signature(build).parameters) > 0
         t0 = time.time()
+        jit0, gc0 = _jvm_jit_gc_ms(self.spark)
         if incremental:
-            import inspect
-
             df = (
                 build(changed_buckets)
-                if len(inspect.signature(build).parameters) > 0
+                if takes_buckets
                 else build().filter(F.col("bucket").isin(changed_buckets))
             )
             # dynamic overwrite only touches partitions the new DataFrame
@@ -311,13 +329,7 @@ class KGPipeline:
                 .parquet(out_path)
             )
         else:
-            import inspect
-
-            df = (
-                build(None)
-                if len(inspect.signature(build).parameters) > 0
-                else build()
-            )
+            df = build(None) if takes_buckets else build()
             writer = df.write.mode("overwrite")
             if partition_by:
                 writer = writer.partitionBy(partition_by)
@@ -330,12 +342,15 @@ class KGPipeline:
             pb_df = out.withColumn("bucket", F.lit(0))
             pb = [r.asDict() for r in bucket_hashes(pb_df).collect()]
         wall_ms = (time.time() - t0) * 1000
+        jit1, gc1 = _jvm_jit_gc_ms(self.spark)
         self.lineage.record(stage, pb, wall_ms, input_fingerprint)
         self.metrics[stage] = {
             "skipped": False,
             "incremental_buckets": len(changed_buckets) if incremental else None,
             "n_rows": sum(r["n_rows"] for r in pb),
             "wall_ms": wall_ms,
+            "jit_ms": jit1 - jit0,
+            "gc_ms": gc1 - gc0,
         }
         return out
 

@@ -16,6 +16,17 @@ from ta2_minmod_kg_spark.sources import synthetic, vocab
 N = 100
 
 
+def _assert_jvm_times(metrics: dict) -> None:
+    """Every stage that ran carries the driver JVM's JIT and GC time over
+    it; a skipped stage carries neither."""
+    for stage, m in metrics.items():
+        for key in ("jit_ms", "gc_ms"):
+            if m["skipped"]:
+                assert key not in m, (stage, key, m)
+            else:
+                assert type(m[key]) is int and m[key] >= 0, (stage, key, m)
+
+
 @pytest.fixture(scope="module")
 def pipeline_out(spark, tmp_path_factory):
     wd = str(tmp_path_factory.mktemp("kgwd"))
@@ -42,7 +53,11 @@ def test_outputs_and_lineage(pipeline_out):
     assert meta["n_buckets"] >= 1
     assert all("content_hash" in r and "n_rows" in r for r in meta["per_bucket"])
     assert meta["wall_ms"] > 0
-    assert os.path.exists(os.path.join(wd, "metrics.json"))
+    with open(os.path.join(wd, "metrics.json")) as f:
+        metrics = json.load(f)
+    assert set(metrics) == set(out)
+    assert not any(m["skipped"] for m in metrics.values()), metrics
+    _assert_jvm_times(metrics)
 
 
 def test_sha256_invariant(pipeline_out, spark):
@@ -61,6 +76,7 @@ def test_resume_skips_completed_stages(pipeline_out, spark):
     pipe2 = KGPipeline(spark, wd, n_buckets=8)
     out2 = pipe2.run(ingest, vdfs, edges, curated)
     assert all(m["skipped"] for m in pipe2.metrics.values()), pipe2.metrics
+    _assert_jvm_times(pipe2.metrics)
     assert out2["triples"].count() > 0
 
 
@@ -172,6 +188,7 @@ def test_zz2_incremental_changed_bucket_recompute(pipeline_out, spark, tmp_path)
     m = pipe.metrics["sites_rel"]
     assert m["skipped"] is False and m["incremental_buckets"] == 1, m
     assert pipe.metrics["triples"]["incremental_buckets"] == 1
+    _assert_jvm_times(pipe.metrics)
     # total row counts preserved; edit visible in the output table
     assert out["sites_rel"].count() == ingest.count()
     names = out["sites_rel"].filter(F.col("path") == target).select("name").collect()

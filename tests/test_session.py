@@ -1,0 +1,46 @@
+"""Session policy: the driver JVM compiles with C1 only, and a caller's own
+driver JVM options apply beside that flag rather than replacing it."""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# runs in a fresh interpreter: JVM options only apply to the JVM a builder
+# launches, and the test session's JVM is already up
+PROBE = """
+import json
+from ta2_minmod_kg_spark.session import get_spark
+
+spark = get_spark(
+    app_name="session-probe",
+    master="local[1]",
+    extra_conf={"spark.driver.extraJavaOptions": "-Dkg.probe=1"},
+)
+rt = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+print(json.dumps(list(rt.getInputArguments())))
+spark.stop()
+"""
+
+
+def test_driver_jvm_is_c1_only_and_keeps_caller_options():
+    env = dict(os.environ, SPARK_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, env.get("PYTHONPATH")) if p
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", PROBE],
+        cwd=ROOT,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    args = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert "-XX:TieredStopAtLevel=1" in args, args
+    assert "-Dkg.probe=1" in args, args
