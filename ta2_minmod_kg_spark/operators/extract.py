@@ -18,9 +18,12 @@ Front door: the ingest table ``(repo, path, commit, lang, content)``.
 - ``explode_inventories`` — per-inventory rows, the input of the
                           explode→groupBy grade-tonnage parity reference.
 
-Scale notes: the only shuffle in this module is the optional repartition at
-write; parsing/minting/fan-out are map-side.  Filters/projections stay on
-columns so the parquet scan prunes (``PushedFilters`` visible in explain).
+Scale notes: this module shuffles nothing; parsing/minting/fan-out are
+map-side, and each kernel's output stays partitioned like its input.  The
+pipeline clusters a kernel's input by ``bucket`` before calling it
+(``plans/pipeline.py`` ``cluster_by_bucket``), so its partitioned writes
+leave one file per bucket.  Filters/projections stay on columns so the
+parquet scan prunes (``PushedFilters`` visible in explain).
 """
 
 from __future__ import annotations

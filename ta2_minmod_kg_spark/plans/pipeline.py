@@ -10,6 +10,11 @@ content-hash memo (`etl/mineral_site.py:400-408`):
 
 - every row carries ``bucket = pmod(xxhash64(repo, path), n_buckets)`` —
   the unit of incremental recompute and the output partition key;
+- the per-document kernels (``sites_rel``, ``triples``) read their input
+  hash-clustered on ``bucket`` (``cluster_by_bucket``), so each bucket's
+  rows meet in one task and every bucket-partitioned table (``sites_rel``,
+  ``violations``, ``vocab_violations``, ``triples``) holds one file per
+  bucket, not one per (task, bucket);
 - after each stage we record one lineage row **per bucket**:
   (stage, bucket, content_hash, n_rows, wall_ms, code_version, run_id) —
   the per-partition lineage + metrics the north rule requires;
@@ -84,6 +89,20 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64("repo", "path"), F.lit(n_buckets)).cast("int")
     )
+
+
+def cluster_by_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
+    """Hash-repartition ``df`` on ``bucket`` so every bucket's rows reach
+    exactly one task: a partitioned write after it then leaves one file
+    per bucket.  Called on a kernel's input, it moves the documents, not
+    the kernel's many times larger output.
+
+    The partition count is explicit, ``min(n_buckets,
+    defaultParallelism)``: a by-column ``repartition("bucket")`` is one
+    AQE may coalesce (at 1000 sites into a single partition, running the
+    Python kernel on one core), a by-number one it never does."""
+    n = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
+    return df.repartition(n, "bucket")
 
 
 def bucket_hashes(df: DataFrame, bucket_col: str = "bucket") -> DataFrame:
@@ -351,6 +370,8 @@ class KGPipeline:
             "wall_ms": wall_ms,
             "jit_ms": jit1 - jit0,
             "gc_ms": gc1 - gc0,
+            # the layout on disk, from the driver's file listing (no job)
+            "n_files": len(out.inputFiles()),
         }
         return out
 
@@ -381,8 +402,11 @@ class KGPipeline:
                 else ingest
             )
             # one kernel pass per document, materialized once; the three
-            # tables are filters and projections of the cached rows
-            rows = extract.site_rows(extract.with_lineage(src), vocab).persist()
+            # tables are filters and projections of the cached rows, so
+            # they inherit its one-task-per-bucket clustering
+            rows = extract.site_rows(
+                extract.with_lineage(cluster_by_bucket(src, self.n_buckets)), vocab
+            ).persist()
             cached.append(rows)
             tables = split_site_rows(rows)
 
@@ -459,11 +483,12 @@ class KGPipeline:
             )
             # triples are bucketed like their ingest rows, so a dirty
             # ingest bucket maps 1:1 to a dirty triples partition
-            t = extract.extract_triples(
-                src.select("repo", "path", "bucket", "content"),
+            return extract.extract_triples(
+                cluster_by_bucket(
+                    src.select("repo", "path", "bucket", "content"), self.n_buckets
+                ),
                 include_extra=self.include_extra,
             )
-            return t
 
         triples = self._run_stage(
             "triples",

@@ -6,9 +6,11 @@ Local tests run on ``local[N]`` but every config choice is made for a
 - AQE on (runtime coalescing + skew-join splitting) — the same-as/dedup
   group keys and mega-repo partitions are skewed by construction.
 - Arrow enabled for all pandas UDF exchange.
-- shuffle partitions default to cores in local mode; on a cluster this is
-  overridden to ~2-3x total cores (or left to AQE's coalescing from a high
-  initial number).
+- shuffle partitions default to ``SPARK_GRAFT_CPUS`` when it is set, and
+  otherwise to the built session's ``defaultParallelism`` (N for a
+  ``local[N]`` master), not a fixed count; on a cluster pass
+  ``shuffle_partitions`` (~2-3x total cores) or leave it to AQE's
+  coalescing from a high initial number.
 - the driver JVM compiles with C1 only (``-XX:TieredStopAtLevel=1``).  A
   build here is a 30-60 s run, and HotSpot's C2 spends it optimizing
   Spark's own machinery (Janino, Catalyst, Parquet, py4j) for a payback
@@ -30,7 +32,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1"
 
 
@@ -43,11 +44,10 @@ def get_spark(
     master = master or os.environ.get(
         "SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     )
-    nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    nshuffle = shuffle_partitions or os.environ.get("SPARK_GRAFT_CPUS")
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(nshuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -60,6 +60,14 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    if nshuffle:
+        b = b.config("spark.sql.shuffle.partitions", str(nshuffle))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    return b.getOrCreate()
+    spark = b.getOrCreate()
+    if not nshuffle and "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(spark.sparkContext.defaultParallelism),
+        )
+    return spark

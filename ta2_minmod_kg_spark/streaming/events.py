@@ -6,8 +6,10 @@ that incrementally patch the KG (`services/sync/kgsync_listener.py:20-118`).
 The Spark-native analog:
 
 - the event log is an append-only table (EVENT_LOG schema);
-- ``apply_events`` consumes a micro-batch of events and produces the new
-  sites table + the set of **touched dedup groups**;
+- a micro-batch of events is applied by one chain: ``events_to_ingest``
+  turns site events into ingest rows (normalized like any ingest, by
+  ``extract.normalize_sites``), ``upsert_sites`` merges them into the
+  sites table, and ``touched_groups`` finds the **touched dedup groups**;
 - ``recompute_touched_groups`` re-runs the A3/A5 merge for touched groups
   only (semi-join pushdown — the 100 TB property: an update to one site
   re-aggregates one group, not the corpus);
@@ -108,10 +110,11 @@ def stream_events(
 ):
     """Structured Streaming consumption of the event log directory.
 
-    ``on_batch(batch_df, batch_id)`` receives each micro-batch (use
-    ``apply_events``-style logic inside).  Checkpointing makes the consumer
-    resume-exactly-once across restarts — the streaming analog of the
-    reference's ``kg_synced`` flags.
+    ``on_batch(batch_df, batch_id)`` receives each micro-batch (run the
+    ``events_to_ingest`` → ``upsert_sites`` → ``touched_groups`` →
+    ``recompute_touched_groups`` → ``triple_diff`` chain inside).
+    Checkpointing makes the consumer resume-exactly-once across restarts —
+    the streaming analog of the reference's ``kg_synced`` flags.
     """
     from ..schemas import EVENT_LOG
 

@@ -376,3 +376,72 @@ def test_vocab_fingerprint_matches_per_table_formula(spark):
         vh.update(name.encode())
         vh.update(lineage.fingerprint(pb).encode())
     assert lineage.vocab_fingerprint(vdfs) == vh.hexdigest()
+
+
+BUCKETED_TABLES = ("sites_rel", "violations", "vocab_violations", "triples")
+
+
+def _files_per_bucket(wd: str, table: str) -> dict[str, int]:
+    root = os.path.join(wd, table)
+    return {
+        d: sum(f.startswith("part-") for f in os.listdir(os.path.join(root, d)))
+        for d in os.listdir(root)
+        if d.startswith("bucket=")
+    }
+
+
+def test_one_file_per_bucket_full_and_incremental(spark, tmp_path):
+    """Every bucket-partitioned table holds at most one data file per
+    bucket, after a full build and after a one-row-edit incremental
+    rebuild, however the ingest is partitioned; ``metrics.json`` records
+    the file count of each stage that ran."""
+    from ta2_minmod_kg_spark.functions.ids import MR_NS
+
+    n_buckets = 4
+    rows = []
+    for i in range(40):
+        rec = synthetic.make_record(i, 40)
+        if i % 4 == 0 and rec.get("mineral_inventory"):
+            # out of vocabulary: a vocab_violations row
+            rec["mineral_inventory"][0]["commodity"]["normalized_uri"] = (
+                MR_NS + "Q99999"
+            )
+        rows.append(("r", f"data/s{i}.json", "c1", "json", json.dumps(rec)))
+    # malformed documents: violations rows
+    rows += [("r", f"data/bad_{i}.json", "c1", "json", '{"foo": 1}') for i in range(12)]
+    # round-robin: every task holds rows of every bucket
+    ingest = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    ).repartition(3)
+    vdfs = vocab.vocab_dataframes(spark)
+    wd = str(tmp_path / "wd_layout")
+
+    def check(pipe, expect_incremental):
+        for table in BUCKETED_TABLES:
+            per_bucket = _files_per_bucket(wd, table)
+            assert per_bucket, (table, "no buckets written")
+            assert max(per_bucket.values()) == 1, (table, per_bucket)
+        with open(os.path.join(wd, "metrics.json")) as f:
+            metrics = json.load(f)
+        for stage in ("sites_rel", "triples"):
+            m = metrics[stage]
+            assert m["incremental_buckets"] == expect_incremental, (stage, m)
+            assert 0 < m["n_files"] <= n_buckets, (stage, m)
+        assert all(
+            type(m["n_files"]) is int for m in metrics.values() if not m["skipped"]
+        ), metrics
+
+    pipe = KGPipeline(spark, wd, n_buckets=n_buckets)
+    pipe.run(ingest, vdfs)
+    check(pipe, None)
+
+    edited = ingest.withColumn(
+        "content",
+        F.when(
+            F.col("path") == "data/s1.json",
+            F.regexp_replace("content", r'"name": "[^"]*"', '"name": "EDITED"'),
+        ).otherwise(F.col("content")),
+    )
+    pipe = KGPipeline(spark, wd, n_buckets=n_buckets)
+    pipe.run(edited, vdfs)
+    check(pipe, 1)

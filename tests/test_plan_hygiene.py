@@ -150,3 +150,71 @@ def test_pipeline_leaves_no_cached_frames(spark, tmp_path):
     pipe.run(edited, vdfs)
     assert pipe.metrics["sites_rel"]["incremental_buckets"] is not None
     assert leaked() == {}
+
+
+def test_kernels_read_input_clustered_by_bucket(spark, tmp_path, monkeypatch):
+    """The pipeline feeds both per-document kernels (``site_rows`` for
+    sites_rel, ``extract_triples`` for triples) through ONE hash exchange
+    on ``bucket`` into ``min(n_buckets, defaultParallelism)`` partitions,
+    and the kernel's stage runs that many tasks.  A by-column
+    ``repartition("bucket")`` fails both checks: its plan takes the
+    session's shuffle partition count, and AQE coalesces it to fewer
+    tasks."""
+    import re
+
+    from ta2_minmod_kg_spark.operators import extract
+    from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
+    from ta2_minmod_kg_spark.sources import synthetic, vocab
+
+    n_buckets = 3
+    want = min(n_buckets, spark.sparkContext.defaultParallelism)
+    # the check can only tell the two repartitions apart when the counts differ
+    assert want != int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    kernel_out = {}
+    for name in ("site_rows", "extract_triples"):
+        real = getattr(extract, name)
+
+        def capture(*args, _real=real, _name=name, **kwargs):
+            kernel_out[_name] = _real(*args, **kwargs)
+            return kernel_out[_name]
+
+        monkeypatch.setattr(extract, name, capture)
+
+    synthetic.synthesize_ingest(spark, 40, partitions=2).write.parquet(
+        str(tmp_path / "ingest")
+    )
+    ingest = extract.read_ingest(spark, str(tmp_path / "ingest"))
+    KGPipeline(spark, str(tmp_path / "wd"), n_buckets=n_buckets).run(
+        ingest, vocab.vocab_dataframes(spark)
+    )
+    assert set(kernel_out) == {"site_rows", "extract_triples"}
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for name, df in kernel_out.items():
+        plan = _plan(df)
+        exchanges = re.findall(r"Exchange (\w+\(.*?\)), (\w+)", plan)
+        assert len(exchanges) == 1, (name, plan)
+        partitioning, origin = exchanges[0]
+        assert origin == "REPARTITION_BY_NUM", (name, plan)
+        assert re.fullmatch(
+            rf"hashpartitioning\(bucket#\d+, {want}\)", partitioning
+        ), (name, plan)
+        kernel = "MapInPandas" if name == "site_rows" else "MapInArrow"
+        assert plan.index(kernel) < plan.index("Exchange"), (name, plan)
+
+        group = f"kernel-tasks-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            df.write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        stages = [
+            s
+            for j in tracker.getJobIdsForGroup(group)
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        # the last stage runs the kernel over the exchange's output
+        info = tracker.getStageInfo(max(stages))
+        assert info.numTasks == want, (name, info)

@@ -1,5 +1,6 @@
 """Session policy: the driver JVM compiles with C1 only, and a caller's own
-driver JVM options apply beside that flag rather than replacing it."""
+driver JVM options apply beside that flag rather than replacing it; shuffle
+partitions default to the session's parallelism."""
 
 from __future__ import annotations
 
@@ -27,13 +28,26 @@ spark.stop()
 """
 
 
-def test_driver_jvm_is_c1_only_and_keeps_caller_options():
+SHUFFLE_PROBE = """
+import json
+from ta2_minmod_kg_spark.session import get_spark
+
+spark = get_spark(app_name="session-probe", master="local[2]")
+print(json.dumps(spark.conf.get("spark.sql.shuffle.partitions")))
+spark.stop()
+"""
+
+
+def _probe(code: str):
+    """Run ``code`` in a fresh interpreter, with ``SPARK_GRAFT_CPUS``
+    unset, and return the JSON value its last stdout line holds."""
     env = dict(os.environ, SPARK_DRIVER_MEM="1g")
     env["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, env.get("PYTHONPATH")) if p
     )
+    env.pop("SPARK_GRAFT_CPUS", None)
     proc = subprocess.run(
-        [sys.executable, "-c", PROBE],
+        [sys.executable, "-c", code],
         cwd=ROOT,
         env=env,
         capture_output=True,
@@ -41,6 +55,16 @@ def test_driver_jvm_is_c1_only_and_keeps_caller_options():
         timeout=120,
     )
     assert proc.returncode == 0, proc.stderr[-4000:]
-    args = json.loads(proc.stdout.strip().splitlines()[-1])
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def test_driver_jvm_is_c1_only_and_keeps_caller_options():
+    args = _probe(PROBE)
     assert "-XX:TieredStopAtLevel=1" in args, args
     assert "-Dkg.probe=1" in args, args
+
+
+def test_shuffle_partitions_default_to_session_parallelism():
+    """With neither ``shuffle_partitions`` nor ``SPARK_GRAFT_CPUS`` given,
+    a ``local[2]`` session shuffles into 2 partitions, not a fixed 32."""
+    assert _probe(SHUFFLE_PROBE) == "2"
