@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``entry``      — flagship: the KG construction slice (synthetic ingest →
-                 normalize → canonicalize → dedup merge) summarized against
-                 the sf0.001 documents table.
+``entry``      — flagship: the KG build's dedup sites (one
+                 ``KGPipeline.run`` over the synthetic corpus) summarized
+                 against the sf0.001 documents table.
 ``queries``    — one entry per implemented operator (SURVEY.md §2 +
                  training-data ops); see ta2_minmod_kg_spark/plans/queries.py.
 ``oracle_sql`` — DuckDB-equivalent SQL for every SQL-expressible query.

@@ -3,13 +3,14 @@
 Runs:
 1. headline queries from ``__spark_entry__.queries()`` at
    ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1);
-2. the KG construction pipeline (synthetic corpus) end-to-end, reporting
-   triples/sec;
+2. the KG build: ``KGPipeline.run`` over a synthetic corpus written to
+   parquet before the clock starts, reporting its wall, triples/sec and
+   the pipeline's per-stage metrics;
 3. the two-parallelism scaling probes required by BASELINE.md: the same
-   KG job, same input, at N and 4N cores (default local[2] vs local[8];
-   override with BENCH_SCALING_N/BENCH_SCALING_4N);
-   efficiency = (thr_4N / thr_N) / 4 on steady-state triples/sec, median
-   over clean-lo x clean-hi cross-pairs.
+   kg phase, same input size, at N and 4N cores, derived from the box
+   (a quarter of its CPUs vs all of them);
+   efficiency = (thr_4N / thr_N) / (4N / N) on the ``triples`` stage's
+   triples/sec, median over clean-lo x clean-hi cross-pairs.
 
 Timeout-proofing (VERDICT r04 #1 — BENCH_r04.json was rc 124 with
 NOTHING recorded because everything printed only at the very end):
@@ -52,15 +53,9 @@ KG_N_SITES = int(os.environ.get("BENCH_KG_SITES", "60000"))
 # efficiency near 0.6; at 150k it falls under 10% and the ratio reflects
 # the operators.
 SCALING_N_SITES = int(os.environ.get("BENCH_SCALING_SITES", "150000"))
-# N → 4N cores for the scaling-efficiency criterion.  2→8 measures
-# executor scaling honestly on this box; 8→32 saturates the single node's
-# DRAM bandwidth on the Arrow string path (per-core throughput halves) —
-# a machine ceiling a real 4x-executor cluster doesn't share.  See
-# BENCH_NOTES.md.
-SCALING_CORES = (
-    int(os.environ.get("BENCH_SCALING_N", "2")),
-    int(os.environ.get("BENCH_SCALING_4N", "8")),
-)
+# N → 4N cores for the scaling-efficiency criterion, from the box: a
+# quarter of its CPUs against all of them (1 → 4 on a 4-CPU box)
+SCALING_CORES = (max(1, TOTAL_CPUS // 4), TOTAL_CPUS)
 # total wall budget for the whole bench run; the driver killed round 4's
 # ~80-minute run, so everything after the queries phase fits itself to
 # what remains of this (r5: 2400 -> 2100 — the round-5 full run took
@@ -94,166 +89,57 @@ BENCH_QUERIES = [
 
 
 def _kg_parts(n_sites: int) -> int:
-    """Split count for the synthetic kg job: grows with data (like real
-    128 MB file splits — a bigger table means MORE splits, never bigger
-    ones), independent of core count.  Rows per task bounded at ~2.2k:
-    single-JVM local mode degrades superlinearly on long ArrowEvalPython
-    tasks (571k-row normalize: 17-18 s at 2.2k rows/task vs 66-141 s at
-    4.5k across repeated runs), a regime a real multi-executor cluster
-    (<=8 concurrent tasks per JVM) does not enter.  Floor 128 keeps the
-    sf0.1 headline's historical split count."""
+    """Split count for synthesizing the kg corpus (the number of parquet
+    files the kg phase writes): grows with data (like real 128 MB file
+    splits — a bigger table means MORE splits, never bigger ones),
+    independent of core count, at most ~2.2k rows per split.  Floor 128
+    keeps the sf0.1 headline's historical split count."""
     return max(128, -(-n_sites // 2230))
 
 
-def _new_spark(master: str, shuffle_partitions: int | None = None):
-    from ta2_minmod_kg_spark.session import get_spark
-
-    cores = master.split("[")[1].rstrip("]")
-    n = 32 if cores == "*" else int(cores)
-    return get_spark(
-        app_name=f"bench-{master}",
-        master=master,
-        shuffle_partitions=shuffle_partitions if shuffle_partitions else n,
-    )
-
-
-def _kg_job(
-    spark,
-    n_sites: int,
-    steady: bool = False,
-    dispatch: bool = True,
-    distributed_cc: bool = False,
-) -> dict:
-    """The measured KG slice: synth → parse → normalize → CC → dedup merge →
-    triples.  Returns counts + wall."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ta2_minmod_kg_spark.operators import canonicalize, dedup, extract, grade_tonnage
+def kg_job(spark, n_sites: int, workdir: str) -> dict:
+    """The measured KG build: ``KGPipeline.run`` (default bucket count)
+    into ``<workdir>/kg``, over the synthesized ingest and system edges
+    read back from parquet under ``workdir``.  Synthesis and its write
+    happen before the clock starts; ``wall_sec`` is the run's wall, and
+    ``stages`` the pipeline's own per-stage metrics."""
+    from ta2_minmod_kg_spark.operators.extract import read_ingest
+    from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
     from ta2_minmod_kg_spark.sources import synthetic, vocab as vocab_mod
 
-    # steady-state: pay the one-time python-worker fork + module import +
-    # shuffle-system init BEFORE the clock starts (a real cluster pays this
-    # once per executor lifetime, not once per job)
-    spark.range(0, 1000, 1, 8).mapInPandas(
-        lambda it: it, schema="id long"
-    ).groupBy((F.col("id") % 8).alias("k")).count().count()
-
-    t0 = time.time()
     n_parts = _kg_parts(n_sites)
-    ingest = synthetic.synthesize_ingest(spark, n_sites, partitions=n_parts)
-    ingest = ingest.persist()
+    ingest_path = os.path.join(workdir, "ingest")
+    edges_path = os.path.join(workdir, "edges")
+    synthetic.synthesize_ingest(spark, n_sites, partitions=n_parts).write.parquet(
+        ingest_path
+    )
+    synthetic.synthesize_system_edges(
+        spark, n_sites, partitions=n_parts
+    ).write.parquet(edges_path)
+    ingest = read_ingest(spark, ingest_path)
     n_rows = ingest.count()
-    t_gen = time.time()
-
     vdfs = vocab_mod.vocab_dataframes(spark)
-    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs).persist()
-    n_sites_out = sites.count()
-    t_sites = time.time()
-
-    edges = synthetic.synthesize_system_edges(spark, n_sites, partitions=n_parts)
+    edges = spark.read.parquet(edges_path)
     curated = synthetic.curated_edges_df(spark, n_sites)
-    # distributed_cc=True would force the star-round CC path (driver
-    # threshold 0); measured: at probe scale (60k) the per-round barriers
-    # dominate and the path ANTI-scales (cc 50 s @2 cores → 79 s @8), so
-    # probes keep the same hybrid the engine really runs at this size —
-    # its driver union-find tail is honest Amdahl, included in the ratio
-    membership = canonicalize.build_membership(
-        sites,
-        edges,
-        curated,
-        driver_finish_threshold=0 if distributed_cc else 2_000_000,
-    ).persist()
-    membership.count()
-    t_cc = time.time()
 
-    # persisted: the mega-group dispatch scans this 4x (group-size count,
-    # small/big split, SQL-path aggregate + candidate explode) — in the
-    # checkpointed pipeline the equivalent table is materialized parquet
-    # between stages, so caching it here is the honest analog, not a cheat
-    swd = sites.drop("dedup_site_id").join(membership, "site_id").persist()
-    gt = grade_tonnage.grade_tonnage_view(sites, vdfs)
-    # mega-group dispatch (VERDICT r02 #5): threshold at the planted giant
-    # cluster's size so _merge_big_groups_sql really executes in the
-    # driver-visible KG phase (the default 50k threshold never fires at
-    # bench scale); byte-equivalence vs the kernel path is asserted below.
-    # The SCALING probes run dispatch=False: the SQL path's extra mini
-    # stages are pure fixed scheduler cost at probe scale, which would
-    # measure scheduler latency, not operator scaling.
-    if dispatch:
-        mega_threshold = synthetic.giant_size(n_sites)
-    else:
-        mega_threshold = dedup.BIG_GROUP_THRESHOLD
-    merged = dedup.merge_dedup_sites(swd, big_group_threshold=mega_threshold)
-    if steady:
-        # scaling probes: run the two aggregates SEQUENTIALLY — the
-        # concurrent overlap doubles live python workers per core, and the
-        # resulting oversubscription scales with core count, distorting
-        # the efficiency ratio (measured: dedup+GT anti-scaled under it)
-        n_dedup, n_gt = merged.count(), gt.count()
-    else:
-        # the two aggregates are independent — submit from two threads so
-        # the scheduler fills otherwise-idle cores (a real cluster
-        # overlaps stages of independent outputs the same way)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(2) as pool:
-            f_dedup = pool.submit(merged.count)
-            f_gt = pool.submit(gt.count)
-            n_dedup, n_gt = f_dedup.result(), f_gt.result()
-    n_groups = n_dedup  # merge emits exactly one row per dedup group
-    t_dedup = time.time()
-
-    if steady:
-        # steady-state measurement: first execution pays one-time python
-        # worker fork + module import + JIT; measure the second
-        extract.extract_triples(ingest).count()
-    t_warm = time.time()
-    triples = extract.extract_triples(ingest)
-    n_triples = triples.count()
-    t_triples = time.time()
-
-    if dispatch:
-        # untimed cross-check (after t_triples, excluded from wall): the
-        # kernel-only merge must produce the same group count as the
-        # dispatched run that routed the giant cluster to the SQL path
-        n_dedup_kernel = dedup.merge_dedup_sites(
-            swd, big_group_threshold=10**9
-        ).count()
-        assert n_dedup_kernel == n_dedup, (
-            f"mega-group dispatch changed output: {n_dedup} vs {n_dedup_kernel}"
-        )
-        print(
-            f"[kg] mega-group dispatch fired: threshold={mega_threshold} "
-            f"(giant cluster routed to SQL path); kernel-only parity OK",
-            file=sys.stderr,
-        )
-
-    ingest.unpersist()
-    sites.unpersist()
-    membership.unpersist()
-    swd.unpersist()
-
-    # measurement apparatus (the steady-mode warm extraction pass) is not
-    # pipeline work — exclude it from the reported wall
-    wall = (t_triples - t0) - (t_warm - t_dedup)
+    pipe = KGPipeline(spark, os.path.join(workdir, "kg"))
+    t0 = time.time()
+    pipe.run(ingest, vdfs, edges, curated)
+    wall = time.time() - t0
+    stages = pipe.metrics
+    n_triples = stages["triples"]["n_rows"]
     return {
         "n_ingest_rows": n_rows,
-        "n_sites": n_sites_out,
-        "mega_dispatch_threshold": mega_threshold if dispatch else None,
-        "mega_dispatch_kernel_parity": dispatch,
-        "n_groups": n_groups,
-        "n_dedup": n_dedup,
-        "n_gt_views": n_gt,
+        "n_sites": stages["sites_rel"]["n_rows"],
+        "n_dedup": stages["dedup_sites"]["n_rows"],
+        "n_gt_views": stages["inv_views"]["n_rows"],
         "n_triples": n_triples,
-        "sec_generate": round(t_gen - t0, 3),
-        "sec_normalize": round(t_sites - t_gen, 3),
-        "sec_cc": round(t_cc - t_sites, 3),
-        "sec_dedup_gt": round(t_dedup - t_cc, 3),
-        "sec_triples": round(t_triples - t_warm, 3),
         "wall_sec": round(wall, 3),
-        "triples_per_sec": round(n_triples / (t_triples - t_warm), 1),
+        "triples_per_sec": round(
+            n_triples / (stages["triples"]["wall_ms"] / 1000), 1
+        ),
         "pipeline_rows_per_sec": round(n_rows / wall, 1),
+        "stages": stages,
     }
 
 
@@ -264,8 +150,9 @@ def queries_phase() -> None:
     query so the parent can checkpoint incrementally — a timeout mid-phase
     keeps every finished number."""
     import __spark_entry__ as entrymod
+    from ta2_minmod_kg_spark.session import get_spark
 
-    spark = _new_spark(f"local[{CPUS}]")
+    spark = get_spark(app_name="bench-queries", master=f"local[{CPUS}]")
     qmap = entrymod.queries()
     results = {}
     for name in BENCH_QUERIES:
@@ -286,27 +173,27 @@ def queries_phase() -> None:
     print("PHASE_JSON " + json.dumps(results), flush=True)
 
 
-def kg_phase(cores: int, n_sites: int, steady: bool) -> None:
-    # scaling probes (steady=True) skip the mega dispatch: its extra mini
-    # stages are fixed scheduler cost that would pollute the efficiency
-    # ratio; the measured KG phase (steady=False) always dispatches
-    """Subprocess: the KG job in a fresh JVM.
+def kg_phase(cores: int, n_sites: int) -> None:
+    """Subprocess: one ``kg_job`` at ``local[cores]`` in a fresh JVM, into
+    a temporary workdir removed afterwards.
 
     Every measured phase gets its own process: a SparkSession that has run
     other work (or merely lingers after .stop(); the py4j JVM lives until
     the Python process exits) degrades subsequent in-process measurements
     3-5x — measured on this box.
     """
-    # shuffle partitions stay cores-proportional (the historical probe
-    # protocol): data-scaled shuffle partitioning was MEASURED WORSE here
-    # — the iterative CC doubles its wall at 513 partitions (per-round
-    # scheduling fixed cost x rounds) and dedup_gt doesn't improve, so
-    # only the SCAN splits scale with data (_kg_parts).
-    s = _new_spark(f"local[{cores}]")
-    r = _kg_job(
-        s, n_sites, steady=steady, dispatch=not steady, distributed_cc=False
-    )
-    s.stop()
+    import shutil
+    import tempfile
+
+    from ta2_minmod_kg_spark.session import get_spark
+
+    spark = get_spark(app_name=f"bench-kg-{cores}", master=f"local[{cores}]")
+    workdir = tempfile.mkdtemp(prefix="bench_kg_")
+    try:
+        r = kg_job(spark, n_sites, workdir)
+    finally:
+        shutil.rmtree(workdir, ignore_errors=True)
+    spark.stop()
     print("PHASE_JSON " + json.dumps(r), flush=True)
 
 
@@ -505,11 +392,8 @@ def main():
     if len(sys.argv) >= 2 and sys.argv[1] == "--queries-phase":
         queries_phase()
         return
-    if len(sys.argv) >= 4 and sys.argv[1] == "--scaling-probe":
-        kg_phase(int(sys.argv[2]), int(sys.argv[3]), steady=True)
-        return
     if len(sys.argv) >= 4 and sys.argv[1] == "--kg-phase":
-        kg_phase(int(sys.argv[2]), int(sys.argv[3]), steady=False)
+        kg_phase(int(sys.argv[2]), int(sys.argv[3]))
         return
 
     sf = SF_DIR.rstrip("/").split("sf")[-1]
@@ -596,9 +480,7 @@ def main():
         last_side = side
         cores = n_lo if side == "lo" else n_hi
         gate = _calm_wait(min(90.0, max(0.0, time_left() - est[side])))
-        t = _run_probe(
-            ["--scaling-probe", str(cores), str(SCALING_N_SITES)], cores
-        )
+        t = _run_probe(["--kg-phase", str(cores), str(SCALING_N_SITES)], cores)
         t["calm_gate"] = gate
         est[side] = 0.5 * est[side] + 0.5 * (t["wall_sec"] + 30.0)
         (lo_probes if side == "lo" else hi_probes).append(t)

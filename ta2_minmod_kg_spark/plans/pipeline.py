@@ -40,7 +40,6 @@ C1-only flag ``get_spark`` sets must be passed on the command line.)
 
 from __future__ import annotations
 
-import inspect
 import json
 import os
 import time
@@ -105,10 +104,10 @@ def cluster_by_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.repartition(n, "bucket")
 
 
-def bucket_hashes(df: DataFrame, bucket_col: str = "bucket") -> DataFrame:
+def bucket_hashes(df: DataFrame) -> DataFrame:
     """Order-insensitive per-bucket content hash: sum of row hashes."""
-    row_hash = F.xxhash64(*[F.col(c) for c in df.columns if c != bucket_col])
-    return df.groupBy(bucket_col).agg(
+    row_hash = F.xxhash64(*[F.col(c) for c in df.columns if c != "bucket"])
+    return df.groupBy("bucket").agg(
         F.sum(row_hash.cast("decimal(38,0)")).cast("string").alias("content_hash"),
         F.count(F.lit(1)).alias("n_rows"),
     )
@@ -293,14 +292,18 @@ class KGPipeline:
         stage: str,
         build,
         input_fingerprint: str | None,
-        bucket_col: str | None = "bucket",
-        partition_by: str | None = None,
+        partitioned: bool = False,
         changed_buckets: list[int] | None = None,
     ) -> DataFrame:
         """Run, skip, or *incrementally* recompute a stage.
 
+        A ``partitioned`` stage's ``build(buckets)`` takes the bucket work
+        list (``None`` = all), its output is written ``partitionBy
+        ("bucket")`` and its lineage is hashed per bucket; any other
+        stage's ``build()`` takes no argument and is hashed as one table.
+
         Incremental path (the Spark analog of the reference's per-file
-        sqlite memo): when the stage is bucket-partitioned, a previous run
+        sqlite memo): when the stage is partitioned, a previous run
         exists, and the caller passes the ``changed_buckets`` diff of the
         ingest lineage, only those buckets are rebuilt — ``build(buckets)``
         receives the work list and the writer dynamically overwrites just
@@ -314,7 +317,7 @@ class KGPipeline:
 
         old_meta = self.lineage.read_meta(stage)
         incremental = (
-            partition_by == "bucket"
+            partitioned
             and changed_buckets is not None
             and old_meta is not None
             and old_meta.get("code_version") == CODE_VERSION
@@ -327,15 +330,10 @@ class KGPipeline:
             and os.path.exists(os.path.join(out_path, "_SUCCESS"))
             and 0 < len(changed_buckets)
         )
-        takes_buckets = len(inspect.signature(build).parameters) > 0
         t0 = time.time()
         jit0, gc0 = _jvm_jit_gc_ms(self.spark)
         if incremental:
-            df = (
-                build(changed_buckets)
-                if takes_buckets
-                else build().filter(F.col("bucket").isin(changed_buckets))
-            )
+            df = build(changed_buckets)
             # dynamic overwrite only touches partitions the new DataFrame
             # emits — a changed bucket that now produces ZERO rows (all its
             # files deleted) would keep its stale partition. Clear every
@@ -347,19 +345,16 @@ class KGPipeline:
                 .partitionBy("bucket")
                 .parquet(out_path)
             )
+        elif partitioned:
+            build(None).write.mode("overwrite").partitionBy("bucket").parquet(
+                out_path
+            )
         else:
-            df = build(None) if takes_buckets else build()
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(partition_by)
-            writer.parquet(out_path)
+            build().write.mode("overwrite").parquet(out_path)
         out = self.spark.read.parquet(out_path)
-        if bucket_col and bucket_col in out.columns:
-            pb = [r.asDict() for r in bucket_hashes(out, bucket_col).collect()]
-        else:
-            # single logical partition: whole-table hash
-            pb_df = out.withColumn("bucket", F.lit(0))
-            pb = [r.asDict() for r in bucket_hashes(pb_df).collect()]
+        # an unpartitioned stage is one logical bucket: a whole-table hash
+        hashed = out if partitioned else out.withColumn("bucket", F.lit(0))
+        pb = [r.asDict() for r in bucket_hashes(hashed).collect()]
         wall_ms = (time.time() - t0) * 1000
         jit1, gc1 = _jvm_jit_gc_ms(self.spark)
         self.lineage.record(stage, pb, wall_ms, input_fingerprint)
@@ -437,7 +432,7 @@ class KGPipeline:
                 "sites_rel",
                 build_sites,
                 ingest_fp,
-                partition_by="bucket",
+                partitioned=True,
                 changed_buckets=changed,
             )
         finally:
@@ -448,14 +443,12 @@ class KGPipeline:
             "inv_views",
             lambda: grade_tonnage.grade_tonnage_view(sites, vocab),
             ingest_fp,
-            bucket_col=None,
         )
 
         membership = self._run_stage(
             "membership",
             lambda: canonicalize.build_membership(sites, system_edges, curated_edges),
             ingest_fp,
-            bucket_col=None,
         )
 
         sites_with_dedup = sites.drop("dedup_site_id").join(
@@ -466,13 +459,11 @@ class KGPipeline:
             "dedup_sites",
             lambda: dedup.merge_dedup_sites(sites_with_dedup),
             ingest_fp,
-            bucket_col=None,
         )
         dedup_invs = self._run_stage(
             "dedup_inventories",
             lambda: dedup.select_dedup_inventories(sites_with_dedup, inv_views),
             ingest_fp,
-            bucket_col=None,
         )
 
         def build_triples(buckets=None):
@@ -494,7 +485,7 @@ class KGPipeline:
             "triples",
             build_triples,
             ingest_fp,
-            partition_by="bucket",
+            partitioned=True,
             changed_buckets=changed,
         )
 
@@ -510,7 +501,6 @@ class KGPipeline:
             # per branch partition
             lambda: entity_triples_op(vocab).coalesce(1),
             vocab_fp,
-            bucket_col=None,
         )
 
         sameas = self._run_stage(
@@ -522,7 +512,6 @@ class KGPipeline:
                 )
             ),
             ingest_fp,
-            bucket_col=None,
         )
 
         with open(os.path.join(self.workdir, "metrics.json"), "w") as f:

@@ -1075,25 +1075,29 @@ _KG_N = 400
 _KG_CACHE: dict = {}
 
 
-def _kg_outputs(spark):
-    """Synthetic-corpus pipeline intermediates, cached per session (the
-    driver runs every query in one session; CC is iterative and worth
-    reusing)."""
+def _kg_outputs(spark) -> dict[str, DataFrame]:
+    """The KG build's tables over the synthetic corpus: one
+    ``KGPipeline.run`` per session (the driver runs every query in one
+    session) into a temporary workdir that is removed at interpreter exit.
+    The kg_* entries are projections and invariants over these tables;
+    none of them re-chains the build's operators."""
     key = (id(spark), _KG_N)
-    if key in _KG_CACHE:
-        return _KG_CACHE[key]
+    if key not in _KG_CACHE:
+        import atexit
+        import shutil
+        import tempfile
 
-    from ..operators import canonicalize, extract
-    from ..sources import synthetic, vocab as vocab_mod
+        from ..sources import synthetic, vocab as vocab_mod
+        from .pipeline import KGPipeline
 
-    ingest = synthetic.synthesize_ingest(spark, _KG_N, partitions=8)
-    vdfs = vocab_mod.vocab_dataframes(spark)
-    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs).persist()
-    edges = synthetic.synthesize_system_edges(spark, _KG_N, partitions=8)
-    curated = synthetic.curated_edges_df(spark, _KG_N)
-    membership = canonicalize.build_membership(sites, edges, curated).persist()
-    membership.count()
-    _KG_CACHE[key] = (ingest, vdfs, sites, membership)
+        workdir = tempfile.mkdtemp(prefix="kg_queries_")
+        atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+        _KG_CACHE[key] = KGPipeline(spark, workdir, n_buckets=8).run(
+            synthetic.synthesize_ingest(spark, _KG_N, partitions=8),
+            vocab_mod.vocab_dataframes(spark),
+            synthetic.synthesize_system_edges(spark, _KG_N, partitions=8),
+            synthetic.curated_edges_df(spark, _KG_N),
+        )
     return _KG_CACHE[key]
 
 
@@ -1111,13 +1115,8 @@ def kg_dedup_sites(spark, sf_dir):
 
     Invariants checked in-engine: Σ n_sites == corpus site count (no site
     lost or duplicated by the merge) and dedup ids are unique."""
-    from ..operators import dedup
-
-    _, _, sites, membership = _kg_outputs(spark)
-    merged = dedup.merge_dedup_sites(
-        sites.drop("dedup_site_id").join(membership, "site_id")
-    )
-    out = merged.select(
+    kg = _kg_outputs(spark)
+    out = kg["dedup_sites"].select(
         "dedup_site_id",
         F.col("name.value").alias("name"),
         F.col("name.refid").alias("name_ref"),
@@ -1130,27 +1129,27 @@ def kg_dedup_sites(spark, sf_dir):
         F.count(F.lit(1)).alias("n"),
         F.count_distinct("dedup_site_id").alias("nd"),
     ).collect()[0]
-    _invariant(chk["total"] == sites.count(), "sum(n_sites) != corpus sites")
+    _invariant(
+        chk["total"] == kg["sites_rel"].count(), "sum(n_sites) != corpus sites"
+    )
     _invariant(chk["n"] == chk["nd"], "dedup_site_id not unique")
     return out
 
 
 def kg_triples(spark, sf_dir):
     """Triple extraction over the synthetic corpus: counts per predicate."""
-    from ..operators import extract
-    from ..sources import synthetic
-
-    ingest = synthetic.synthesize_ingest(spark, _KG_N, partitions=8)
-    t = extract.extract_triples(ingest)
+    kg = _kg_outputs(spark)
     out = (
-        t.groupBy("pred")
+        kg["triples"]
+        .groupBy("pred")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("pred")
     )
-    # invariant: every parsed record emits exactly one mo:source_id triple
-    parsed, _ = extract.split_violations(extract.parse_sites(ingest))
+    # invariant: every valid record emits exactly one mo:source_id triple
     n_src = out.filter(F.col("pred") == "mo:source_id").agg(F.sum("n")).collect()[0][0]
-    _invariant(n_src == parsed.count(), "mo:source_id count != parsed records")
+    _invariant(
+        n_src == kg["sites_rel"].count(), "mo:source_id count != valid records"
+    )
     return out
 
 
@@ -1164,11 +1163,7 @@ def kg_grade_tonnage(spark, sf_dir):
     kg_grade_tonnage_oracle_sql); built in a try/except — if the
     reference checkout is unavailable the entry degrades to rows-only.
     """
-    from ..operators import grade_tonnage
-    from ..sources import vocab as vocab_mod
-
-    _, vdfs, sites, _ = _kg_outputs(spark)
-    base = grade_tonnage.grade_tonnage_view(sites, vdfs)
+    base = _kg_outputs(spark)["inv_views"]
     # invariants on the UNROUNDED view: one row per (site, commodity);
     # grade = 100 × metal / tonnage (relative tolerance, fp division)
     chk = base.agg(
@@ -1237,7 +1232,8 @@ def kg_entity_linking(spark, sf_dir):
     from ..sources import vocab as vocab_mod
     from .kg_oracles import LINK_PROBES
 
-    _, vdfs, sites, _ = _kg_outputs(spark)
+    vdfs = vocab_mod.vocab_dataframes(spark)
+    sites = _kg_outputs(spark)["sites_rel"]
     mentions = linking.unlinked_mentions(sites, "deposit_type").unionByName(
         spark.createDataFrame(LINK_PROBES, ["mention_id", "text"])
     )
@@ -1429,23 +1425,13 @@ def kg_lod_closure(spark, sf_dir):
 
 def kg_sameas_triples(spark, sf_dir):
     """owl:sameAs emission from the canonicalized membership."""
-    from ..operators import canonicalize
-
-    _, _, _, membership = _kg_outputs(spark)
-    out = (
-        canonicalize.sameas_triples(
-            membership.select(
-                F.col("site_id").alias("node"),
-                F.col("dedup_site_id").alias("component"),
-            )
-        )
-        .select("subj", "pred", "obj")
-        .orderBy("subj", "obj")
-    )
+    kg = _kg_outputs(spark)
+    out = kg["sameas_triples"].select("subj", "pred", "obj").orderBy("subj", "obj")
     # invariant from the group-size histogram: a group of n emits
     # max(n - 1, 1) triples (self-link for singletons)
     hist = (
-        membership.groupBy("dedup_site_id")
+        kg["membership"]
+        .groupBy("dedup_site_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .agg(
             F.sum(F.greatest(F.col("n") - 1, F.lit(1))).alias("expect")
@@ -1474,10 +1460,10 @@ def kg_stats(spark, sf_dir):
     key set.
     """
     from ..functions.ids import MR_NS
-    from ..operators import extract
+    from ..sources import vocab as vocab_mod
 
-    ingest, vdfs, _, _ = _kg_outputs(spark)
-    t = extract.extract_triples(ingest).select("subj", "pred", "obj")
+    vdfs = vocab_mod.vocab_dataframes(spark)
+    t = _kg_outputs(spark)["triples"].select("subj", "pred", "obj")
 
     inv_nodes = t.filter(
         (F.col("pred") == "rdf:type") & (F.col("obj") == "mo:MineralInventory")
@@ -1575,24 +1561,18 @@ def kg_cdr_export(spark, sf_dir):
     format_dedup_site) over a pure-python restatement of the corpus
     traversal and the G1-G5 membership program, inlined as VALUES.
     """
-    from ..operators import dedup, grade_tonnage
     from ..plans.export import cdr_export_json_rows
     from ..sources.vocab import synthetic_vocab
 
-    _, vdfs, sites, membership = _kg_outputs(spark)
-    swd = sites.drop("dedup_site_id").join(membership, "site_id")
-    dedup_attrs = dedup.merge_dedup_sites(swd)
-    gt = grade_tonnage.grade_tonnage_view(sites, vdfs)
-    dedup_invs = dedup.select_dedup_inventories(swd, gt)
-
+    kg = _kg_outputs(spark)
     v = synthetic_vocab()
     commodity_id2name = {r["minmod_id"]: r["name"] for r in v["commodity"]}
     country_id2name = {r["minmod_id"]: r["name"] for r in v["country"]}
     province_id2name = {r["minmod_id"]: r["name"] for r in v["state_or_province"]}
 
     out = cdr_export_json_rows(
-        dedup_attrs,
-        dedup_invs,
+        kg["dedup_sites"],
+        kg["dedup_inventories"],
         commodity_id2name,
         country_id2name,
         province_id2name,
@@ -1715,17 +1695,22 @@ ORACLE_SQL["kg_sameas_triples"] = kg_sameas_triples_oracle_sql(_KG_N)
 ORACLE_SQL["kg_stats"] = kg_stats_oracle_sql(_KG_N)
 ORACLE_SQL["kg_dedup_sites"] = kg_dedup_sites_oracle_sql(_KG_N)
 ORACLE_SQL["kg_entity_linking"] = kg_entity_linking_oracle_sql(_KG_N)
+# These two oracles run the reference's own code: without its checkout
+# (module ``minmodkg``) the entries stay rows-only (invariant-guarded).
+# Any other failure building an oracle is a bug and raises.
 try:
     from .kg_oracles import kg_grade_tonnage_oracle_sql  # noqa: E402
 
     ORACLE_SQL["kg_grade_tonnage"] = kg_grade_tonnage_oracle_sql(_KG_N)
-except Exception:  # pragma: no cover — reference checkout unavailable
-    pass  # kg_grade_tonnage stays rows-only (invariant-guarded)
+except ModuleNotFoundError as e:
+    if e.name != "minmodkg":
+        raise
 try:
     from .kg_oracles import kg_cdr_export_oracle_sql  # noqa: E402
 
     ORACLE_SQL["kg_cdr_export"] = kg_cdr_export_oracle_sql(_KG_N)
-except Exception:  # pragma: no cover — reference checkout unavailable
-    pass  # kg_cdr_export stays rows-only
+except ModuleNotFoundError as e:
+    if e.name != "minmodkg":
+        raise
 # closure entry runs on its own 60-site corpus (kg_lod_closure docstring)
 ORACLE_SQL["kg_lod_closure"] = kg_lod_closure_oracle_sql(60)

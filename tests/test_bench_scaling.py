@@ -1,6 +1,7 @@
-"""Unit tests for bench.py's cross-paired scaling-median block (pure
+"""Tests for bench.py: the cross-paired scaling-median block (pure
 function — the driver's scaling record is built from it, so its clean/
-fallback basis logic is guarded here without any Spark involvement)."""
+fallback basis logic is guarded here without any Spark involvement), and
+a small in-process run of the kg phase's job."""
 
 from __future__ import annotations
 
@@ -90,3 +91,27 @@ def test_kg_parts_scales_with_data_not_cores():
     for n in (300_000, 700_000, 2_000_000):
         parts = bench._kg_parts(n)
         assert n / parts <= 2230
+
+
+def test_kg_job_times_the_pipeline_run(spark, tmp_path):
+    """The kg phase is one ``KGPipeline.run``: its counts are the stages'
+    rows, its stages are the pipeline's eight, all run, and its wall
+    covers them."""
+    bench = _load_bench()
+    r = bench.kg_job(spark, 60, str(tmp_path))
+    triples = spark.read.parquet(str(tmp_path / "kg" / "triples"))
+    assert r["n_triples"] == triples.count() > 0
+    assert sorted(r["stages"]) == sorted(
+        [
+            "sites_rel",
+            "inv_views",
+            "membership",
+            "dedup_sites",
+            "dedup_inventories",
+            "triples",
+            "entity_triples",
+            "sameas_triples",
+        ]
+    )
+    assert not any(st["skipped"] for st in r["stages"].values())
+    assert r["wall_sec"] >= sum(st["wall_ms"] for st in r["stages"].values()) / 1000
