@@ -44,8 +44,8 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-TOTAL_CPUS = os.cpu_count() or 32
+TOTAL_CPUS = os.cpu_count() or 1
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or TOTAL_CPUS)
 KG_N_SITES = int(os.environ.get("BENCH_KG_SITES", "60000"))
 # 150k sites for the scaling probes (VERDICT r03 #3): at 60k the probe's
 # scale-invariant residue (driver CC tail + per-stage scheduler cost,
@@ -135,8 +135,12 @@ def kg_job(spark, n_sites: int, workdir: str) -> dict:
         "n_gt_views": stages["inv_views"]["n_rows"],
         "n_triples": n_triples,
         "wall_sec": round(wall, 3),
+        # the document pass writes triples inside the sites_rel stage; the
+        # triples entry times only their read-back and hashing
         "triples_per_sec": round(
-            n_triples / (stages["triples"]["wall_ms"] / 1000), 1
+            n_triples
+            / ((stages["sites_rel"]["wall_ms"] + stages["triples"]["wall_ms"]) / 1000),
+            1,
         ),
         "pipeline_rows_per_sec": round(n_rows / wall, 1),
         "stages": stages,

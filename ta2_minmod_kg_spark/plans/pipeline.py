@@ -2,28 +2,37 @@
 
 Stages (each materialized as parquet under ``workdir``):
 
-  ingest → sites_rel → inv_views → membership → dedup_sites +
-  dedup_inventories → triples + sameas_triples
+  ingest → sites_rel + triples → inv_views → membership → dedup_sites +
+  dedup_inventories → entity_triples, sameas_triples
 
 Checkpoint & lineage model — the Spark analog of the reference's sqlite
 content-hash memo (`etl/mineral_site.py:400-408`):
 
 - every row carries ``bucket = pmod(xxhash64(repo, path), n_buckets)`` —
   the unit of incremental recompute and the output partition key;
-- the per-document kernels (``sites_rel``, ``triples``) read their input
-  hash-clustered on ``bucket`` (``cluster_by_bucket``), so each bucket's
-  rows meet in one task and every bucket-partitioned table (``sites_rel``,
-  ``violations``, ``vocab_violations``, ``triples``) holds one file per
-  bucket, not one per (task, bucket);
+- ONE document pass (``extract.doc_pass``) parses each document once and
+  writes ``sites_rel``, ``violations``, ``vocab_violations`` and
+  ``triples`` with pyarrow.  Its input is hash-clustered on ``bucket``
+  (``cluster_by_bucket``) and sorted by it within each task, so each
+  bucket's rows meet in one task and every one of those tables holds one
+  file (one row group) per bucket;
+- the pass commits by manifest: its tasks write into a per-run staging
+  directory and report each file they wrote; Spark returns results only
+  from successful task attempts, so the driver moves exactly the reported
+  files into ``<table>/bucket=<b>/`` (``KGPipeline._commit``), then
+  writes ``_SUCCESS``.  A failed attempt's files never reach a table;
 - after each stage we record one lineage row **per bucket**:
   (stage, bucket, content_hash, n_rows, wall_ms, code_version, run_id) —
-  the per-partition lineage + metrics the north rule requires;
+  the per-partition lineage + metrics the north rule requires.  The pass
+  records two stages, ``sites_rel`` and ``triples``; it is skipped only
+  when both match, and otherwise rewrites all four tables;
 - a stage is **skipped on resume** when its ``_LINEAGE`` fingerprint
   (hash over per-bucket hashes + code version) matches the current input —
   kill the job at any point and re-submit: completed stages are read back
   from parquet instead of recomputed;
-- per-bucket hashes make a finer-grained diff possible (dynamic partition
-  overwrite of only the changed buckets) — exposed via ``changed_buckets``.
+- per-bucket hashes give the incremental path its work list
+  (``changed_buckets``): the pass then re-reads only the dirty buckets'
+  documents and replaces only their partitions.
 
 Run it under spark-submit (via the root-level ``run_pipeline.py`` shim —
 spark-submit takes a file path, and this module's relative imports need
@@ -62,26 +71,31 @@ def _jvm_jit_gc_ms(spark: SparkSession) -> tuple[int, int]:
     its executor work too."""
     mf = spark._jvm.java.lang.management.ManagementFactory
     jit = mf.getCompilationMXBean().getTotalCompilationTime()
-    gc = sum(b.getCollectionTime() for b in mf.getGarbageCollectorMXBeans())
+    # indexed, not iterated: py4j ends every iteration of a Java list with
+    # a NoSuchElementException that pyspark's exception converter then
+    # handles, ~40 ms a call against ~1 ms for size()/get(i)
+    beans = mf.getGarbageCollectorMXBeans()
+    gc = sum(beans.get(i).getCollectionTime() for i in range(beans.size()))
     return jit, gc
+
+
+def _delete(spark: SparkSession, path: str) -> None:
+    """Recursively delete ``path``, if it exists.  Routed through the
+    Hadoop FileSystem API so it works on ANY workdir scheme (HDFS, object
+    stores) — a local shutil.rmtree would silently no-op there and
+    resurrect the stale data the callers exist to remove."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
 
 
 def _clear_partitions(
     spark: SparkSession, out_path: str, buckets: list[int]
 ) -> None:
-    """Delete ``bucket=<b>`` partition directories ahead of a dynamic
-    partition overwrite, so dirty buckets that emit no rows don't leave
-    stale data behind.  Routed through the Hadoop FileSystem API so it
-    works on ANY workdir scheme (HDFS, object stores) — a local
-    shutil.rmtree would silently no-op there and resurrect the stale
-    partitions this helper exists to remove."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
+    """Delete the dirty buckets' ``bucket=<b>`` partition directories
+    before an incremental rebuild's files move in, so a dirty bucket that
+    now emits no rows doesn't keep its stale partition."""
     for b in buckets:
-        p = jvm.org.apache.hadoop.fs.Path(os.path.join(out_path, f"bucket={b}"))
-        fs = p.getFileSystem(hconf)
-        if fs.exists(p):
-            fs.delete(p, True)
+        _delete(spark, os.path.join(out_path, f"bucket={b}"))
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -92,9 +106,9 @@ def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 
 def cluster_by_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     """Hash-repartition ``df`` on ``bucket`` so every bucket's rows reach
-    exactly one task: a partitioned write after it then leaves one file
-    per bucket.  Called on a kernel's input, it moves the documents, not
-    the kernel's many times larger output.
+    exactly one task: the document pass after it then writes one file per
+    (table, bucket).  Called on the pass's input, it moves the documents,
+    not the pass's many times larger output.
 
     The partition count is explicit, ``min(n_buckets,
     defaultParallelism)``: a by-column ``repartition("bucket")`` is one
@@ -111,36 +125,6 @@ def bucket_hashes(df: DataFrame) -> DataFrame:
         F.sum(row_hash.cast("decimal(38,0)")).cast("string").alias("content_hash"),
         F.count(F.lit(1)).alias("n_rows"),
     )
-
-
-def split_site_rows(rows: DataFrame) -> dict[str, DataFrame]:
-    """The ``sites_rel`` stage's three tables as filters and projections
-    of one ``extract.site_rows`` frame (with ``bucket``):
-
-    - ``violations``: the rejected documents and their reason;
-    - ``vocab_violations``: one ``(field, uri)`` row per out-of-vocabulary
-      mention or unsupported CRS of a valid record;
-    - ``sites_rel``: the valid rows, ``repo, path, <rest of SITE_REL>,
-      bucket`` — the column order the per-bucket lineage hashes see.
-    """
-    from ..operators.extract import SITE_REL_COLS
-
-    bad = F.col("violation_reason").isNotNull()
-    ok = rows.filter(~bad)
-    return {
-        "violations": rows.filter(bad).select(
-            "repo", "path", "commit", "content_sha256", "violation_reason", "bucket"
-        ),
-        "vocab_violations": ok.select(
-            "repo", "path", "bucket", F.explode("vocab_violations").alias("v")
-        ).select("repo", "path", "bucket", "v.field", "v.uri"),
-        "sites_rel": ok.select(
-            "repo",
-            "path",
-            *[c for c in SITE_REL_COLS if c not in ("repo", "path")],
-            "bucket",
-        ),
-    }
 
 
 @dataclass
@@ -284,8 +268,26 @@ class KGPipeline:
         )
         os.makedirs(workdir, exist_ok=True)
         self.metrics: dict[str, dict] = {}
+        # every recorded stage's output, read back from the workdir
+        self.tables: dict[str, DataFrame] = {}
 
     # -- stage runner ---------------------------------------------------------
+
+    def _incremental_ok(self, stage: str) -> bool:
+        """Whether ``stage``'s table on disk may be patched bucket by
+        bucket: a complete previous run of the same code version and the
+        SAME output-affecting config.  Otherwise only content-dirty buckets
+        would be rebuilt under the new config while clean buckets keep
+        old-config rows, and the recorded fingerprint would claim the
+        whole table matches the new config — a permanently mixed-config
+        table."""
+        old_meta = self.lineage.read_meta(stage)
+        return (
+            old_meta is not None
+            and old_meta.get("code_version") == CODE_VERSION
+            and old_meta.get("config") == self.lineage.config
+            and os.path.exists(os.path.join(self.lineage.path(stage), "_SUCCESS"))
+        )
 
     def _run_stage(
         self,
@@ -294,81 +296,118 @@ class KGPipeline:
         input_fingerprint: str | None,
         partitioned: bool = False,
         changed_buckets: list[int] | None = None,
+        writes: tuple[str, ...] = (),
     ) -> DataFrame:
-        """Run, skip, or *incrementally* recompute a stage.
+        """Run, skip, or *incrementally* recompute a stage; return its
+        output read back from the workdir.
 
-        A ``partitioned`` stage's ``build(buckets)`` takes the bucket work
-        list (``None`` = all), its output is written ``partitionBy
-        ("bucket")`` and its lineage is hashed per bucket; any other
-        stage's ``build()`` takes no argument and is hashed as one table.
+        An unpartitioned stage's ``build()`` returns the frame written to
+        ``<workdir>/<stage>``, hashed as one table.  A ``partitioned``
+        stage's ``build(buckets)`` writes its own bucket-partitioned
+        tables for the bucket work list (``None`` = all): ``stage``'s,
+        those of the further recorded stages named in ``writes``, and any
+        unrecorded side tables.  The recorded stages are reused only
+        together, when every one's lineage matches; when the build runs,
+        each is hashed per bucket and recorded.  Every recorded stage's
+        read-back frame lands in ``self.tables``.
 
         Incremental path (the Spark analog of the reference's per-file
-        sqlite memo): when the stage is partitioned, a previous run
-        exists, and the caller passes the ``changed_buckets`` diff of the
-        ingest lineage, only those buckets are rebuilt — ``build(buckets)``
-        receives the work list and the writer dynamically overwrites just
-        the dirty partitions.
+        sqlite memo): when the stage is partitioned, every recorded stage
+        passes ``_incremental_ok``, and the caller passes a non-empty
+        ``changed_buckets`` diff of the ingest lineage, only those buckets
+        are rebuilt — ``build(changed_buckets)`` replaces just the dirty
+        partitions.
         """
-        out_path = self.lineage.path(stage)
-        if self.lineage.is_done(stage, input_fingerprint):
-            meta = self.lineage.read_meta(stage)
-            self.metrics[stage] = {"skipped": True, **{k: meta[k] for k in ("n_rows", "wall_ms")}}
-            return self.spark.read.parquet(out_path)
+        names = (stage, *writes)
+        if all(self.lineage.is_done(s, input_fingerprint) for s in names):
+            for s in names:
+                meta = self.lineage.read_meta(s)
+                self.metrics[s] = {
+                    "skipped": True,
+                    **{k: meta[k] for k in ("n_rows", "wall_ms")},
+                }
+                self.tables[s] = self.spark.read.parquet(self.lineage.path(s))
+            return self.tables[stage]
 
-        old_meta = self.lineage.read_meta(stage)
         incremental = (
             partitioned
-            and changed_buckets is not None
-            and old_meta is not None
-            and old_meta.get("code_version") == CODE_VERSION
-            # the previous run must have used the SAME output-affecting
-            # config: otherwise only content-dirty buckets would be rebuilt
-            # under the new config while clean buckets keep old-config rows,
-            # and the recorded fingerprint would claim the whole table
-            # matches the new config — a permanently mixed-config table
-            and old_meta.get("config") == self.lineage.config
-            and os.path.exists(os.path.join(out_path, "_SUCCESS"))
-            and 0 < len(changed_buckets)
+            and bool(changed_buckets)
+            and all(self._incremental_ok(s) for s in names)
         )
         t0 = time.time()
         jit0, gc0 = _jvm_jit_gc_ms(self.spark)
-        if incremental:
-            df = build(changed_buckets)
-            # dynamic overwrite only touches partitions the new DataFrame
-            # emits — a changed bucket that now produces ZERO rows (all its
-            # files deleted) would keep its stale partition. Clear every
-            # dirty partition first; the write rebuilds the non-empty ones.
-            _clear_partitions(self.spark, out_path, changed_buckets)
-            (
-                df.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(out_path)
-            )
-        elif partitioned:
-            build(None).write.mode("overwrite").partitionBy("bucket").parquet(
-                out_path
-            )
+        if partitioned:
+            build(changed_buckets if incremental else None)
         else:
-            build().write.mode("overwrite").parquet(out_path)
-        out = self.spark.read.parquet(out_path)
-        # an unpartitioned stage is one logical bucket: a whole-table hash
-        hashed = out if partitioned else out.withColumn("bucket", F.lit(0))
-        pb = [r.asDict() for r in bucket_hashes(hashed).collect()]
-        wall_ms = (time.time() - t0) * 1000
-        jit1, gc1 = _jvm_jit_gc_ms(self.spark)
-        self.lineage.record(stage, pb, wall_ms, input_fingerprint)
-        self.metrics[stage] = {
-            "skipped": False,
-            "incremental_buckets": len(changed_buckets) if incremental else None,
-            "n_rows": sum(r["n_rows"] for r in pb),
-            "wall_ms": wall_ms,
-            "jit_ms": jit1 - jit0,
-            "gc_ms": gc1 - gc0,
-            # the layout on disk, from the driver's file listing (no job)
-            "n_files": len(out.inputFiles()),
-        }
-        return out
+            build().write.mode("overwrite").parquet(self.lineage.path(stage))
+        # the build's time is its stage's; each further recorded stage's
+        # entry covers only its own read-back and hashing
+        for s in names:
+            out = self.spark.read.parquet(self.lineage.path(s))
+            # an unpartitioned stage is one logical bucket: a whole-table hash
+            hashed = out if partitioned else out.withColumn("bucket", F.lit(0))
+            pb = [r.asDict() for r in bucket_hashes(hashed).collect()]
+            t1 = time.time()
+            jit1, gc1 = _jvm_jit_gc_ms(self.spark)
+            self.lineage.record(s, pb, (t1 - t0) * 1000, input_fingerprint)
+            self.metrics[s] = {
+                "skipped": False,
+                "incremental_buckets": len(changed_buckets) if incremental else None,
+                "n_rows": sum(r["n_rows"] for r in pb),
+                "wall_ms": (t1 - t0) * 1000,
+                "jit_ms": jit1 - jit0,
+                "gc_ms": gc1 - gc0,
+                # the layout on disk, from the driver's file listing (no job)
+                "n_files": len(out.inputFiles()),
+            }
+            self.tables[s] = out
+            t0, jit0, gc0 = t1, jit1, gc1
+        return self.tables[stage]
+
+    def _commit(
+        self, staging: str, manifest: list[tuple], buckets: list[int] | None
+    ) -> None:
+        """Move the document pass's files from ``staging`` into their
+        tables (``extract.DOC_TABLES``), through the Hadoop FileSystem API
+        like ``_clear_partitions``.
+
+        First the target partitions are cleared: the whole table on a
+        full run, the dirty buckets on an incremental one (a dirty bucket
+        that now emits no rows must not keep its stale partition).  Then
+        exactly the manifest's files move to ``<table>/bucket=<b>/``; a
+        failed or superseded task attempt's files are not in the manifest
+        and stay behind, for the caller to delete with the staging
+        directory.  Then ``_SUCCESS``."""
+        from ..operators.extract import DOC_TABLES
+
+        Path = self.spark._jvm.org.apache.hadoop.fs.Path
+        fs = Path(staging).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        for table in DOC_TABLES:
+            if buckets is None:
+                _delete(self.spark, self.lineage.path(table))
+            else:
+                _clear_partitions(self.spark, self.lineage.path(table), buckets)
+        made: set[str] = set()
+        for table, bucket, path, _ in manifest:
+            src = Path(path)
+            dst_dir = os.path.join(self.lineage.path(table), f"bucket={bucket}")
+            if dst_dir not in made:
+                fs.mkdirs(Path(dst_dir))
+                made.add(dst_dir)
+            if not fs.rename(src, Path(dst_dir, src.getName())):
+                raise OSError(f"cannot move {path} into {dst_dir}")
+        for table in DOC_TABLES:
+            fs.create(Path(self.lineage.path(table), "_SUCCESS"), True).close()
+
+    def _read_side(self, table: str, schema) -> DataFrame:
+        """A quarantine table read with its declared schema plus
+        ``bucket``: a clean corpus writes no file there, and Spark cannot
+        infer a schema from ``_SUCCESS`` alone."""
+        from pyspark.sql.types import IntegerType, StructField, StructType
+
+        return self.spark.read.schema(
+            StructType(schema.fields + [StructField("bucket", IntegerType())])
+        ).parquet(self.lineage.path(table))
 
     # -- full run ---------------------------------------------------------------
 
@@ -379,7 +418,11 @@ class KGPipeline:
         system_edges: DataFrame | None = None,
         curated_edges: DataFrame | None = None,
     ) -> dict[str, DataFrame]:
+        """Build (or resume) every stage; return each recorded stage's
+        table and the two quarantine tables, ``violations`` and
+        ``vocab_violations``."""
         from ..operators import canonicalize, dedup, extract, grade_tonnage
+        from ..schemas import VIOLATION, VOCAB_VIOLATION
 
         ingest = with_bucket(ingest, self.n_buckets)
         ingest_pb = [r.asDict() for r in bucket_hashes(ingest).collect()]
@@ -388,56 +431,45 @@ class KGPipeline:
         changed = self.lineage.changed_buckets("ingest", ingest_pb)
         self.lineage.record("ingest", ingest_pb, 0.0, None)
 
-        cached: list[DataFrame] = []
-
-        def build_sites(buckets=None):
+        def build_docs(buckets=None):
             src = (
                 ingest.filter(F.col("bucket").isin(buckets))
                 if buckets is not None
                 else ingest
             )
-            # one kernel pass per document, materialized once; the three
-            # tables are filters and projections of the cached rows, so
-            # they inherit its one-task-per-bucket clustering
-            rows = extract.site_rows(
-                extract.with_lineage(cluster_by_bucket(src, self.n_buckets)), vocab
-            ).persist()
-            cached.append(rows)
-            tables = split_site_rows(rows)
-
-            # violations are bucket-partitioned like every other per-record
-            # output: an incremental run rewrites only the dirty buckets'
-            # violation partitions instead of clobbering the whole table
-            def write_side(df, name):
-                p = os.path.join(self.workdir, name)
-                if buckets is None:
-                    df.write.mode("overwrite").partitionBy("bucket").parquet(p)
-                else:
-                    _clear_partitions(self.spark, p, buckets)
-                    (
-                        df.write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("bucket")
-                        .parquet(p)
-                    )
-
-            write_side(tables["violations"], "violations")
-            # P7 out-of-vocabulary URIs (validators.py:354-419) + P3
-            # locations with a CRS the engine cannot reproject
-            write_side(tables["vocab_violations"], "vocab_violations")
-            return tables["sites_rel"]
-
-        try:
-            sites = self._run_stage(
-                "sites_rel",
-                build_sites,
-                ingest_fp,
-                partitioned=True,
-                changed_buckets=changed,
+            # ONE pass per document writes sites_rel, violations,
+            # vocab_violations and triples; its input meets one task per
+            # bucket, in bucket order, so the pass holds one bucket's
+            # output at a time and writes one file per (table, bucket).
+            # Triples are bucketed like their ingest rows, so a dirty
+            # ingest bucket maps 1:1 to a dirty partition of every table.
+            docs = extract.with_lineage(
+                cluster_by_bucket(src, self.n_buckets).sortWithinPartitions("bucket")
             )
-        finally:
-            for df in cached:
-                df.unpersist()
+            staging = os.path.join(
+                os.path.abspath(self.workdir), f"_staging_{self.lineage.run_id}"
+            )
+            try:
+                manifest = extract.write_doc_tables(
+                    docs, vocab, staging, include_extra=self.include_extra
+                )
+                self._commit(staging, manifest, buckets)
+            finally:
+                # failed attempts' files, or a failed pass's
+                _delete(self.spark, staging)
+
+        sites = self._run_stage(
+            "sites_rel",
+            build_docs,
+            ingest_fp,
+            partitioned=True,
+            changed_buckets=changed,
+            writes=("triples",),
+        )
+        # P5/P6 rejects and P7 out-of-vocabulary URIs (validators.py:
+        # 354-419) + P3 locations with a CRS the engine cannot reproject
+        violations = self._read_side("violations", VIOLATION)
+        vocab_violations = self._read_side("vocab_violations", VOCAB_VIOLATION)
 
         inv_views = self._run_stage(
             "inv_views",
@@ -455,38 +487,15 @@ class KGPipeline:
             membership, "site_id", "left"
         )
 
-        dedup_sites = self._run_stage(
+        self._run_stage(
             "dedup_sites",
             lambda: dedup.merge_dedup_sites(sites_with_dedup),
             ingest_fp,
         )
-        dedup_invs = self._run_stage(
+        self._run_stage(
             "dedup_inventories",
             lambda: dedup.select_dedup_inventories(sites_with_dedup, inv_views),
             ingest_fp,
-        )
-
-        def build_triples(buckets=None):
-            src = (
-                ingest.filter(F.col("bucket").isin(buckets))
-                if buckets is not None
-                else ingest
-            )
-            # triples are bucketed like their ingest rows, so a dirty
-            # ingest bucket maps 1:1 to a dirty triples partition
-            return extract.extract_triples(
-                cluster_by_bucket(
-                    src.select("repo", "path", "bucket", "content"), self.n_buckets
-                ),
-                include_extra=self.include_extra,
-            )
-
-        triples = self._run_stage(
-            "triples",
-            build_triples,
-            ingest_fp,
-            partitioned=True,
-            changed_buckets=changed,
         )
 
         # entity-vocabulary triples (ref etl/kgrel_entity.py:105-126) —
@@ -495,7 +504,7 @@ class KGPipeline:
 
         from ..operators.entity_triples import entity_triples as entity_triples_op
 
-        entity_t = self._run_stage(
+        self._run_stage(
             "entity_triples",
             # a few hundred rows from 12 union branches: one file, not one
             # per branch partition
@@ -503,7 +512,7 @@ class KGPipeline:
             vocab_fp,
         )
 
-        sameas = self._run_stage(
+        self._run_stage(
             "sameas_triples",
             lambda: canonicalize.sameas_triples(
                 membership.select(
@@ -518,14 +527,9 @@ class KGPipeline:
             json.dump(self.metrics, f, indent=2)
 
         return {
-            "sites_rel": sites,
-            "inv_views": inv_views,
-            "membership": membership,
-            "dedup_sites": dedup_sites,
-            "dedup_inventories": dedup_invs,
-            "triples": triples,
-            "entity_triples": entity_t,
-            "sameas_triples": sameas,
+            **self.tables,
+            "violations": violations,
+            "vocab_violations": vocab_violations,
         }
 
 

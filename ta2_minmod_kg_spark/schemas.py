@@ -189,6 +189,26 @@ SITE_REL = StructType(
     ]
 )
 
+# -- the sites_rel stage's quarantine tables (``bucket`` is their hive
+#    directory): rejected documents, and out-of-vocabulary URIs of valid ones
+VIOLATION = StructType(
+    [
+        _s("repo", StringType()),
+        _s("path", StringType()),
+        _s("commit", StringType()),
+        _s("content_sha256", StringType()),
+        _s("violation_reason", StringType()),  # constrained field path | 'structural'
+    ]
+)
+VOCAB_VIOLATION = StructType(
+    [
+        _s("repo", StringType()),
+        _s("path", StringType()),
+        _s("field", StringType()),
+        _s("uri", StringType()),
+    ]
+)
+
 # -- inventory views (ref: kgrel/views/mineral_inventory_view.py) ------------
 INV_VIEW = StructType(
     [

@@ -6,6 +6,9 @@ Local tests run on ``local[N]`` but every config choice is made for a
 - AQE on (runtime coalescing + skew-join splitting) — the same-as/dedup
   group keys and mega-repo partitions are skewed by construction.
 - Arrow enabled for all pandas UDF exchange.
+- the default master is ``SPARK_GRAFT_MASTER``, else ``local[N]`` with N
+  = ``SPARK_GRAFT_CPUS``, else the host's core count (``os.cpu_count()``):
+  more task threads than cores only adds contention.
 - shuffle partitions default to ``SPARK_GRAFT_CPUS`` when it is set, and
   otherwise to the built session's ``defaultParallelism`` (N for a
   ``local[N]`` master), not a fixed count; on a cluster pass
@@ -42,7 +45,8 @@ def get_spark(
     extra_conf: dict | None = None,
 ) -> SparkSession:
     master = master or os.environ.get(
-        "SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+        "SPARK_GRAFT_MASTER",
+        f"local[{os.environ.get('SPARK_GRAFT_CPUS') or os.cpu_count() or 1}]",
     )
     nshuffle = shuffle_partitions or os.environ.get("SPARK_GRAFT_CPUS")
     b = (

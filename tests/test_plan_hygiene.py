@@ -63,38 +63,47 @@ def test_sites_rel_and_gt_view_plan_shape(spark, tmp_path):
     assert "Exchange" not in gt_plan, gt_plan
 
 
-_PYTHON_NODES = ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython")
-
-
-def test_sites_rel_stage_parses_once_and_splits_the_cache(spark, tmp_path):
-    """The sites_rel stage's persisted frame is one kernel pass straight
-    off the ingest scan — one MapInPandas, no from_json lex, one FileScan,
-    no re-join — and its three write plans only filter and project the
-    cached rows (no Python node above the InMemoryRelation)."""
+def _doc_pass_plan(spark, tmp_path, monkeypatch, n_buckets: int):
+    """Run the pipeline over a parquet ingest (the synthetic generator is
+    itself a mapInPandas) and return a twin of the document pass's
+    manifest frame, built from the pipeline's own arguments but not yet
+    executed (an executed adaptive plan prints its initial plan too)."""
     from ta2_minmod_kg_spark.operators import extract
-    from ta2_minmod_kg_spark.plans.pipeline import split_site_rows, with_bucket
+    from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
     from ta2_minmod_kg_spark.sources import synthetic, vocab
 
-    synthetic.synthesize_ingest(spark, 20, partitions=2).write.parquet(
+    captured = []
+    real = extract.doc_pass
+
+    def capture(*args, **kwargs):
+        captured.append(real(*args, **kwargs))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(extract, "doc_pass", capture)
+    synthetic.synthesize_ingest(spark, 40, partitions=2).write.parquet(
         str(tmp_path / "ingest")
     )
-    ingest = with_bucket(extract.read_ingest(spark, str(tmp_path / "ingest")), 8)
-    rows = extract.site_rows(
-        extract.with_lineage(ingest), vocab.vocab_dataframes(spark)
-    ).persist()
-    try:
-        plan = _plan(rows)
-        assert plan.count("MapInPandas") == 1, plan
-        assert "from_json" not in plan, plan
-        assert plan.count("FileScan") == 1, plan
-        assert "Join" not in plan, plan
-        for name, df in split_site_rows(rows).items():
-            wplan = _plan(df)
-            assert "InMemoryRelation" in wplan, (name, wplan)
-            own = wplan.split("InMemoryRelation")[0]
-            assert not any(n in own for n in _PYTHON_NODES), (name, wplan)
-    finally:
-        rows.unpersist()
+    ingest = extract.read_ingest(spark, str(tmp_path / "ingest"))
+    KGPipeline(spark, str(tmp_path / "wd"), n_buckets=n_buckets).run(
+        ingest, vocab.vocab_dataframes(spark)
+    )
+    assert len(captured) == 1, "one document pass per build"
+    return captured[0]
+
+
+def test_document_pass_parses_once(spark, tmp_path, monkeypatch):
+    """sites_rel, its two side tables and triples come from ONE Python
+    pass straight off the ingest scan: one FileScan, one MapInArrow and no
+    second kernel (no MapInPandas, no Arrow UDF), no from_json lex, no
+    re-join, and nothing cached to split."""
+    plan = _plan(_doc_pass_plan(spark, tmp_path, monkeypatch, n_buckets=8))
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, (node, plan)
+    assert "from_json" not in plan, plan
+    assert "Join" not in plan, plan
+    assert "InMemoryRelation" not in plan, plan
 
 
 def test_pipeline_leaves_no_cached_frames(spark, tmp_path):
@@ -153,68 +162,46 @@ def test_pipeline_leaves_no_cached_frames(spark, tmp_path):
 
 
 def test_kernels_read_input_clustered_by_bucket(spark, tmp_path, monkeypatch):
-    """The pipeline feeds both per-document kernels (``site_rows`` for
-    sites_rel, ``extract_triples`` for triples) through ONE hash exchange
-    on ``bucket`` into ``min(n_buckets, defaultParallelism)`` partitions,
-    and the kernel's stage runs that many tasks.  A by-column
-    ``repartition("bucket")`` fails both checks: its plan takes the
-    session's shuffle partition count, and AQE coalesces it to fewer
+    """The document pass reads its input through ONE hash exchange on
+    ``bucket`` into ``min(n_buckets, defaultParallelism)`` partitions,
+    sorted by ``bucket`` within each, and its stage runs that many tasks.
+    A by-column ``repartition("bucket")`` fails both checks: its plan takes
+    the session's shuffle partition count, and AQE coalesces it to fewer
     tasks."""
     import re
-
-    from ta2_minmod_kg_spark.operators import extract
-    from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
-    from ta2_minmod_kg_spark.sources import synthetic, vocab
 
     n_buckets = 3
     want = min(n_buckets, spark.sparkContext.defaultParallelism)
     # the check can only tell the two repartitions apart when the counts differ
     assert want != int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    kernel_out = {}
-    for name in ("site_rows", "extract_triples"):
-        real = getattr(extract, name)
-
-        def capture(*args, _real=real, _name=name, **kwargs):
-            kernel_out[_name] = _real(*args, **kwargs)
-            return kernel_out[_name]
-
-        monkeypatch.setattr(extract, name, capture)
-
-    synthetic.synthesize_ingest(spark, 40, partitions=2).write.parquet(
-        str(tmp_path / "ingest")
-    )
-    ingest = extract.read_ingest(spark, str(tmp_path / "ingest"))
-    KGPipeline(spark, str(tmp_path / "wd"), n_buckets=n_buckets).run(
-        ingest, vocab.vocab_dataframes(spark)
-    )
-    assert set(kernel_out) == {"site_rows", "extract_triples"}
+    df = _doc_pass_plan(spark, tmp_path, monkeypatch, n_buckets)
+    plan = _plan(df)
+    exchanges = re.findall(r"Exchange (\w+\(.*?\)), (\w+)", plan)
+    assert len(exchanges) == 1, plan
+    partitioning, origin = exchanges[0]
+    assert origin == "REPARTITION_BY_NUM", plan
+    assert re.fullmatch(rf"hashpartitioning\(bucket#\d+, {want}\)", partitioning), plan
+    # executed plans print top-down: the kernel, then the per-task sort
+    # on bucket, then the exchange
+    assert re.search(r"Sort \[bucket#\d+ ASC NULLS FIRST\], false", plan), plan
+    assert plan.index("MapInArrow") < plan.index("Sort [") < plan.index("Exchange"), plan
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    for name, df in kernel_out.items():
-        plan = _plan(df)
-        exchanges = re.findall(r"Exchange (\w+\(.*?\)), (\w+)", plan)
-        assert len(exchanges) == 1, (name, plan)
-        partitioning, origin = exchanges[0]
-        assert origin == "REPARTITION_BY_NUM", (name, plan)
-        assert re.fullmatch(
-            rf"hashpartitioning\(bucket#\d+, {want}\)", partitioning
-        ), (name, plan)
-        kernel = "MapInPandas" if name == "site_rows" else "MapInArrow"
-        assert plan.index(kernel) < plan.index("Exchange"), (name, plan)
-
-        group = f"kernel-tasks-{name}"
-        sc.setJobGroup(group, group)
-        try:
-            df.write.format("noop").mode("overwrite").save()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        stages = [
-            s
-            for j in tracker.getJobIdsForGroup(group)
-            for s in tracker.getJobInfo(j).stageIds
-        ]
-        # the last stage runs the kernel over the exchange's output
-        info = tracker.getStageInfo(max(stages))
-        assert info.numTasks == want, (name, info)
+    group = "kernel-tasks-doc_pass"
+    sc.setJobGroup(group, group)
+    try:
+        # re-runs the pass into its (already committed, so deleted)
+        # staging directory under tmp_path
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    stages = [
+        s
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    # the last stage runs the kernel over the exchange's output
+    info = tracker.getStageInfo(max(stages))
+    assert info.numTasks == want, info

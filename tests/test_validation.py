@@ -323,3 +323,95 @@ def test_planted_violations_through_pipeline(spark, tmp_path):
         .first()
     )
     assert tuple(numeric) == (1.5, 3, 0.5, 1990)
+
+
+def _sorted_rows(df) -> list[str]:
+    return sorted(
+        json.dumps(r.asDict(recursive=True), sort_keys=True, default=str)
+        for r in df.collect()
+    )
+
+
+def test_document_pass_matches_the_frame_operators(spark, tmp_path):
+    """On the planted corpus, the four tables the pipeline's document pass
+    writes with pyarrow read back with the schemas and sorted rows of the
+    frame operators' output (``site_rows``, ``extract_triples``) written
+    by Spark's partitioned writer, and no file carries an ``ARROW:schema``
+    or ``pandas`` footer key."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from ta2_minmod_kg_spark.plans.pipeline import KGPipeline, with_bucket
+
+    ingest = _ingest(spark, _planted_corpus())
+    vdfs = vocab.vocab_dataframes(spark)
+    wd = str(tmp_path / "wd")
+    KGPipeline(spark, wd, n_buckets=4).run(ingest, vdfs)
+
+    docs = extract.with_lineage(with_bucket(ingest, 4))
+    rows = extract.site_rows(docs, vdfs)
+    ok = rows.filter(F.col("violation_reason").isNull())
+    rest = [c for c in extract.SITE_REL_COLS if c not in ("repo", "path")]
+    frames = {
+        "sites_rel": ok.select("repo", "path", *rest, "bucket"),
+        "violations": rows.filter(F.col("violation_reason").isNotNull()).select(
+            "repo", "path", "commit", "content_sha256", "violation_reason", "bucket"
+        ),
+        "vocab_violations": ok.select(
+            "repo", "path", "bucket", F.explode("vocab_violations").alias("v")
+        ).select("repo", "path", "bucket", "v.field", "v.uri"),
+        "triples": extract.extract_triples(
+            docs.select("repo", "path", "bucket", "content")
+        ),
+    }
+    for table, frame in frames.items():
+        ref = str(tmp_path / "ref" / table)
+        frame.write.partitionBy("bucket").parquet(ref)
+        want = spark.read.parquet(ref)
+        got = spark.read.parquet(os.path.join(wd, table))
+        assert want.count() > 0, table
+        assert got.schema == want.schema, (table, got.schema, want.schema)
+        assert _sorted_rows(got) == _sorted_rows(want), table
+        files = glob.glob(os.path.join(wd, table, "bucket=*", "*.parquet"))
+        assert files, table
+        for f in files:
+            keys = set(pq.read_metadata(f).metadata or {})
+            assert not keys & {b"ARROW:schema", b"pandas"}, (f, keys)
+
+
+def test_pipeline_returns_the_quarantine_tables(spark, tmp_path):
+    """``KGPipeline.run`` returns ``violations`` and ``vocab_violations``
+    with their declared columns: empty on a clean corpus (no file is
+    written there, only ``_SUCCESS``), the planted rows otherwise."""
+    from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
+
+    vdfs = vocab.vocab_dataframes(spark)
+    clean = KGPipeline(spark, str(tmp_path / "clean"), n_buckets=4).run(
+        _ingest(spark, {"data/clean.json": synthetic.make_record(23, 80)}), vdfs
+    )
+    columns = {
+        "violations": [
+            "repo", "path", "commit", "content_sha256", "violation_reason", "bucket"
+        ],
+        "vocab_violations": ["repo", "path", "field", "uri", "bucket"],
+    }
+    for table, cols in columns.items():
+        assert clean[table].columns == cols, (table, clean[table].columns)
+        assert clean[table].count() == 0, table
+
+    planted = KGPipeline(spark, str(tmp_path / "planted"), n_buckets=4).run(
+        _ingest(spark, _planted_corpus()), vdfs
+    )
+    for table, cols in columns.items():
+        assert planted[table].columns == cols, (table, planted[table].columns)
+    assert sorted(
+        tuple(r) for r in planted["violations"].select("path", "violation_reason").collect()
+    ) == [
+        ("data/constrained.json", "location_info.country[0].confidence"),
+        ("data/rejected_vocab.json", "name"),
+        ("data/structural.json", "structural"),
+    ]
+    assert planted["vocab_violations"].count() == 15
+    # the bucket column is the hive directory's
+    assert planted["vocab_violations"].filter(F.col("bucket").isNull()).count() == 0
