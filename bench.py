@@ -22,7 +22,7 @@ NOTHING recorded because everything printed only at the very end):
   (``"partial": true`` until the run completes);
 - ``BENCH_FULL.json`` is likewise rewritten incrementally;
 - the scaling loop is bounded by a WALL-CLOCK budget
-  (``$BENCH_WALL_BUDGET`` seconds, default 2400 — comfortably under the
+  (``$BENCH_WALL_BUDGET`` seconds, default 2100 — comfortably under the
   driver's timeout) and degrades to fewer probes instead of silence;
 - probes are gated on a PRE-probe calm window (poll /proc/stat steal and
   start only when the recent box-wide steal rate is low — VERDICT r04
@@ -281,6 +281,17 @@ def _run_probe(args: list[str], cores: int) -> dict:
     return r
 
 
+def _probe_priors(kg_wall_sec: float) -> dict:
+    """Expected wall plus JVM startup of one scaling probe per side, from
+    the measured kg trial's wall scaled to the probes' input: the 4N side
+    runs on as many cores as the trial (all of the box's), the N side on
+    a quarter of them, taken as 2.5x slower (the ~0.6 pipeline efficiency
+    the probes measure).  The scaling loop refines each side from its own
+    probes."""
+    hi = kg_wall_sec * SCALING_N_SITES / KG_N_SITES
+    return {"lo": 2.5 * hi + 30.0, "hi": hi + 30.0}
+
+
 def _scaling_block_cross(
     lo_probes: list[dict], hi_probes: list[dict], n_lo: int, n_hi: int
 ) -> tuple[dict, dict]:
@@ -452,7 +463,7 @@ def main():
     n_lo, n_hi = SCALING_CORES
     lo_probes: list[dict] = []
     hi_probes: list[dict] = []
-    est = {"lo": 300.0, "hi": 120.0}  # wall + JVM startup priors
+    est = _probe_priors(kg["wall_sec"])
 
     def n_clean(ps: list[dict]) -> int:
         return sum(1 for p in ps if not p.get("steal_contaminated"))

@@ -276,19 +276,16 @@ def build_membership(
         edges = edges.unionAll(
             system_edges.select(F.col("ms_1").alias("u"), F.col("ms_2").alias("v"))
         )
-    raw = edges.select(
-        F.col("u").cast("string"), F.col("v").cast("string")
-    ).localCheckpoint(eager=False)
+    edges = edges.select(F.col("u").cast("string"), F.col("v").cast("string"))
 
-    # ONE bounded job sizes the edge set, fetches it, and materializes
-    # the lazy checkpoint blocks (r06 — formerly an eager checkpoint job,
-    # a count job, then a separate full toPandas): a limit(threshold+1)
-    # Arrow read returns ALL rows iff the table fits the threshold (a
-    # limit larger than the table is the table).  Arrow-path transfers
-    # (toPandas), not row collect(): py4j row deserialization costs
-    # ~1-2 s per 100k narrow rows and is pure scale-invariant driver
-    # tail in the scaling probes.
-    edges_pdf = raw.limit(driver_finish_threshold + 1).toPandas()
+    # ONE bounded job sizes the edge set and fetches it: a
+    # limit(threshold+1) Arrow read returns ALL rows iff the table fits the
+    # threshold (a limit larger than the table is the table).  Arrow-path
+    # transfers (toPandas), not row collect(): py4j row deserialization
+    # costs ~1-2 s per 100k narrow rows and is pure scale-invariant driver
+    # tail in the scaling probes.  Nothing is checkpointed for the driver
+    # path, so it leaves no RDD registered behind it.
+    edges_pdf = edges.limit(driver_finish_threshold + 1).toPandas()
     if len(edges_pdf) <= driver_finish_threshold:
         # same bounded-read trick for the site-id list: with few edges
         # but many sites (sparse duplication at production scale) an
@@ -317,8 +314,10 @@ def build_membership(
                 pdf, schema="site_id string, dedup_site_id string"
             )
 
+    # the distributed CC iterates over the edges: materialize them once
     membership = connected_components(
-        raw, driver_finish_threshold=driver_finish_threshold
+        edges.localCheckpoint(eager=True),
+        driver_finish_threshold=driver_finish_threshold,
     )
     if curated is not None:
         gold = curated_gold_groups(curated)

@@ -26,8 +26,8 @@ Execution: ``site_record_error(path, content)`` is the whole
 record-validity rule — the filename charset and STRUCTURAL rules
 (parseable document, identity fields, exactly one site-level reference)
 and then this tree, short-circuiting on the first error like the
-reference's raise.  The ``sites_rel`` and triple kernels call it
-inside their own single parse, and ``split_violations`` runs it through
+reference's raise.  The document batch builder (``extract._doc_batches``)
+calls it inside its single parse, and ``split_violations`` runs it through
 one Arrow-batched UDF (``site_error_udf``), so a record is valid in
 every output or in none.  No ``from_json`` field access is needed — each
 access would be its own full-document lex (Catalyst prunes the parse
@@ -384,7 +384,8 @@ def site_record_error(
     path: Optional[str], content: Optional[str]
 ) -> tuple[Optional[str], Optional[dict]]:
     """The record-validity rule, the one definition every consumer shares
-    (the ``sites_rel`` kernel, the triple fan-out, ``split_violations``).
+    (the document batch builder ``extract._doc_batches``,
+    ``split_violations``).
 
     Checked in order, first failure wins: the ``path`` charset rule and
     the structural rules (parseable document, identity fields present,

@@ -3,31 +3,28 @@
 Front door: the ingest table ``(repo, path, commit, lang, content)``.
 
 - ``with_lineage``      — per-row ``sha256(content)`` (JVM ``sha2``), the
-                          invariant carried through every downstream table.
-- ``parse_sites``       — ``from_json`` with the declared schema (JVM parse,
-                          no inference).
+                          invariant carried through every downstream table
+                          (``parse_sites`` is a second name for it).
 - ``split_violations``  — the ok / violations split by the record-validity
                           rule (``constrained.site_record_error``).
-- ``site_rows``         — every document validated, normalized into its
-                          relational site row (ref
-                          `kgrel/mineral_site.py:198-244`) and
-                          vocabulary-checked in one ``mapInPandas`` parse.
-- ``normalize_sites``   — the valid rows of ``site_rows``, as SITE_REL.
-- ``extract_triples``   — ``mapInArrow`` fan-out of each valid record into
-                          its (subj, pred, obj) rows.
 - ``doc_pass`` / ``write_doc_tables`` — the pipeline's document pass: ONE
                           ``mapInArrow`` parse per document that writes
                           ``sites_rel``, ``violations``,
                           ``vocab_violations`` and ``triples`` with
                           ``pyarrow.parquet`` and reports the files it
                           wrote (the manifest the pipeline commits).
+- ``doc_rows``          — one of those tables as a frame: ONE
+                          ``mapInArrow`` that builds only that table.
+- ``normalize_sites``   — ``doc_rows``' ``sites_rel`` rows, as SITE_REL.
+- ``extract_triples``   — ``doc_rows``' ``triples`` rows.
 - ``explode_inventories`` — per-inventory rows, the input of the
                           explode→groupBy grade-tonnage parity reference.
 
-``site_rows``, ``normalize_sites`` and ``extract_triples`` are the frame
-operators of the events path, the queries and the tests; the document
-pass builds the same rows from the same per-document functions
-(``_valid_site``, ``_site_columns``, ``_triple_columns``).
+Every document goes through one batch builder, ``_doc_batches``: one
+parse and validation (``_valid_site``), then the site row and its
+vocabulary violations (``_site_columns``) and the triples
+(``_triple_columns``), as Arrow record batches of ``DOC_TABLES``.  The
+document pass buffers and writes them; ``doc_rows`` returns them to Spark.
 
 Scale notes: this module shuffles nothing; parsing/minting/fan-out are
 map-side, and each kernel's output stays partitioned like its input.  The
@@ -47,12 +44,10 @@ import math
 import re
 from datetime import datetime
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
-    ArrayType,
     IntegerType,
     LongType,
     StringType,
@@ -63,14 +58,7 @@ from pyspark.sql.types import (
 from ..functions.arrowkit import chunked_kernel
 from ..functions.ids import MR_NS, get_username, make_site_id
 from ..functions.rdf import site_to_triples
-from ..schemas import (
-    INGEST,
-    RAW_SITE,
-    SITE_REL,
-    TRIPLE,
-    VIOLATION,
-    VOCAB_VIOLATION,
-)
+from ..schemas import INGEST, SITE_REL, TRIPLE, VIOLATION, VOCAB_VIOLATION
 from .constrained import path_ok, site_error_udf, site_record_error
 from .validation import allowed_uri_sets, record_vocab_violations
 
@@ -87,13 +75,8 @@ def with_lineage(ingest: DataFrame) -> DataFrame:
     return ingest.withColumn("content_sha256", F.sha2(F.col("content"), 256))
 
 
-def parse_sites(ingest: DataFrame) -> DataFrame:
-    """Schema-on-read JSON parse (S1).  Malformed/ill-typed documents yield
-    NULL required fields; split them into a violations side-table with
-    ``split_violations``."""
-    return with_lineage(ingest).withColumn(
-        "site", F.from_json(F.col("content"), RAW_SITE)
-    )
+# the name perfbench's update batch and the tests call the lineage step by
+parse_sites = with_lineage
 
 
 def split_violations(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -107,7 +90,6 @@ def split_violations(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     measures — oracle-tested against the reference's executed
     deserializer) — in one Arrow UDF parse.  The bad side carries a
     ``violation_reason`` column: the failing field path, or 'structural'.
-    No ``site.*`` access, so Catalyst prunes ``from_json`` out of the plan.
     """
     tagged = parsed.withColumn(
         "violation_reason", site_error_udf(F.col("path"), F.col("content"))
@@ -181,24 +163,18 @@ def _wkt_centroid(wkt: str | None, crs_name: str | None) -> tuple[float | None, 
 SITE_REL_COLS = [f.name for f in SITE_REL.fields]
 
 
-# the ingest columns every ``site_rows`` row carries through unchanged
-SITE_ROW_KEYS = ["repo", "path", "commit", "content_sha256"]
-_SITE_VALUE_COLS = [c for c in SITE_REL_COLS if c not in SITE_ROW_KEYS]
-
-_VOCAB_VIOLATIONS = ArrayType(
-    StructType([StructField("field", StringType()), StructField("uri", StringType())])
-)
-
-
-def _site_rows_schema(carry_bucket: bool) -> StructType:
-    rel = {f.name: f.dataType for f in SITE_REL.fields}
-    return StructType(
-        [StructField(c, StringType()) for c in SITE_ROW_KEYS]
-        + ([StructField("bucket", IntegerType())] if carry_bucket else [])
-        + [StructField("violation_reason", StringType())]
-        + [StructField(c, rel[c]) for c in _SITE_VALUE_COLS]
-        + [StructField("vocab_violations", _VOCAB_VIOLATIONS)]
-    )
+# the input columns each of the document tables carries through unchanged;
+# every table's builder also reads ``path`` (the filename rule) and
+# ``content``
+_DOC_INPUTS = {
+    "sites_rel": ("repo", "path", "content_sha256"),
+    "violations": ("repo", "path", "commit", "content_sha256"),
+    "vocab_violations": ("repo", "path"),
+    "triples": ("path",),
+}
+_SITE_VALUE_COLS = [c for c in SITE_REL_COLS if c not in _DOC_INPUTS["sites_rel"]]
+# the tables built from a valid record's site row
+_SITE_TABLES = ("sites_rel", "vocab_violations")
 
 
 def _coerce_numbers(site: dict) -> None:
@@ -206,7 +182,7 @@ def _coerce_numbers(site: dict) -> None:
     strings (float-parseable measure values and bounding-box coordinates,
     int strings / integral floats for pages) become the numbers the
     reference's deserializer makes of them (deserializer.py:59-70,
-    92-100).  Every kernel applies it to a valid record (``_valid_site``):
+    92-100).  ``_valid_site`` applies it to every valid record:
     Arrow does not convert a str inside a struct, and the reference-URI
     encoding formats pages and boxes as numbers, so without it such a
     record would fail the whole task.  (The top-level ``discovered_year``
@@ -237,7 +213,7 @@ def _valid_site(path: str | None, content: str | None) -> tuple[str | None, dict
     """``constrained.site_record_error`` — the one record-validity rule and
     the document's one ``json.loads`` — with a valid record's numbers
     coerced (``_coerce_numbers``): ``(reason, site)``, reason None when
-    valid.  The per-document entry of every kernel in this module."""
+    valid.  The per-document entry of ``_doc_batches``."""
     err, site = site_record_error(path, content)
     if err is None:
         _coerce_numbers(site)
@@ -265,9 +241,8 @@ def _site_columns(crs_names: dict, source_scores: dict, allowed: dict):
     """``(cols, add)``: empty per-column lists of the SITE_REL values
     (``_SITE_VALUE_COLS``), and ``add(site)``, which appends one valid
     record's row (ref `kgrel/mineral_site.py:198-244`) and returns its
-    ``validation.record_vocab_violations`` rows.  The per-document half of
-    the ``sites_rel`` kernel, shared by ``site_rows`` and the document pass
-    (``doc_pass``).
+    ``validation.record_vocab_violations`` rows.  The ``sites_rel`` and
+    ``vocab_violations`` half of ``_doc_batches``.
 
     The crs-name, source-score and vocabulary-membership lookups ride
     along as tiny closure dicts — the reference's own broadcast-dict
@@ -345,8 +320,7 @@ def _site_columns(crs_names: dict, source_scores: dict, allowed: dict):
 def _triple_columns(include_extra: bool):
     """``(cols, add)``: empty ``(subj, pred, obj, site_id)`` column lists,
     and ``add(site)``, which appends one valid record's triples
-    (``rdf.site_to_triples``).  Shared by ``extract_triples`` and the
-    document pass (``doc_pass``)."""
+    (``rdf.site_to_triples``).  The ``triples`` half of ``_doc_batches``."""
     subjs: list = []
     preds: list = []
     objs: list = []
@@ -377,84 +351,6 @@ def _vocab_dicts(vocab: dict[str, DataFrame]) -> tuple[dict, dict, dict]:
     return crs_names, source_scores, allowed_uri_sets(vocab)
 
 
-def _site_rows_fn(
-    crs_names: dict, source_scores: dict, allowed: dict, carry_bucket: bool
-):
-    """The ``site_rows`` kernel: validate, normalize and vocab-check each
-    document from ONE ``json.loads`` (inside ``site_record_error``).
-
-    Every input row gives exactly one output row: the key columns carried
-    through, ``violation_reason`` (None when valid), the SITE_REL columns
-    (null on rejects) and ``vocab_violations`` (the
-    ``validation.record_vocab_violations`` rows of a valid record).  A
-    column-expression formulation would pay N partial JSON parses per row
-    (Catalyst inlines ``from_json`` into each projected field — 9 parses
-    in the measured plan, ~2 ms/row); this kernel is one parse.
-    """
-    keys = SITE_ROW_KEYS + (["bucket"] if carry_bucket else [])
-    out_cols = [f.name for f in _site_rows_schema(carry_bucket).fields]
-
-    def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols, add = _site_columns(crs_names, source_scores, allowed)
-        reject_aps = [c.append for c in cols.values()]
-        reasons: list = []
-        vocab_vio: list = []
-        for path, content in zip(pdf["path"], pdf["content"]):
-            err, site = _valid_site(path, content)
-            reasons.append(err)
-            if err is not None:
-                for ap in reject_aps:
-                    ap(None)
-                vocab_vio.append(None)
-            else:
-                vocab_vio.append(add(site))
-        # one output row per input row: the keys pass straight through
-        out = {k: pdf[k].to_numpy() for k in keys}
-        out["violation_reason"] = reasons
-        out.update(cols)
-        out["vocab_violations"] = vocab_vio
-        return pd.DataFrame(out, columns=out_cols)
-
-    # bounded chunks + paused cyclic GC: whole-batch dict construction is
-    # superlinear in task size (functions/arrowkit.py docstring has the
-    # measurements — 5.5x wall at one task-size doubling)
-    return chunked_kernel(per_chunk)
-
-
-def site_rows(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame:
-    """P2+P3+P5-P7 in ONE Arrow pass: one row per document of ``parsed``
-    (a ``with_lineage`` / ``parse_sites`` frame) with its keys (``repo,
-    path, commit, content_sha256`` and ``bucket`` when present),
-    ``violation_reason``, the SITE_REL columns (null on rejects) and
-    ``vocab_violations array<struct<field, uri>>``.
-
-    One python pass and one ``json.loads`` per document (guide §4: cross
-    the boundary once, do everything per batch); no ``content`` column
-    leaves the kernel.  The frame operator of the events path, the
-    queries and the tests; the pipeline writes the same rows, from the
-    same per-document functions, in its document pass (``doc_pass``).
-    """
-    carry = "bucket" in parsed.columns
-    keys = SITE_ROW_KEYS + (["bucket"] if carry else [])
-    return parsed.select(*keys, "content").mapInPandas(
-        _site_rows_fn(*_vocab_dicts(vocab), carry),
-        schema=_site_rows_schema(carry),
-    )
-
-
-def normalize_sites(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame:
-    """P2+P3: the relational site row (SITE_REL schema) of every valid
-    record in ``parsed`` — the valid rows of ``site_rows``, projected."""
-    return (
-        site_rows(parsed, vocab)
-        .filter(F.col("violation_reason").isNull())
-        .select(*SITE_REL_COLS)
-    )
-
-
-# -- triple fan-out -----------------------------------------------------------
-
-
 def _site_structurally_valid(site, path: str | None) -> bool:
     """The structural half of ``constrained.site_record_error`` over an
     already-parsed record (no constrained-type walk) — the input filter of
@@ -470,80 +366,16 @@ def _site_structurally_valid(site, path: str | None) -> bool:
     return path_ok(path)
 
 
-def _triples_batch(include_extra: bool, carry_bucket: bool, out_schema):
-    """Arrow-native fan-out kernel (``mapInArrow``).
-
-    The output is 4-5 FLAT columns of python strings/ints, so the record
-    batch is built directly with ``pa.array`` — the mapInPandas path's
-    pandas-frame construction + per-column ``Array.from_pandas`` was pure
-    conversion overhead on ~130 emitted strings per input row (measured
-    58.6 → 29.9 µs/input row, guide §4.2: the batch IS the wire format).
-
-    Records ``site_record_error`` rejects — the rows ``split_violations``
-    routes to the violations table — emit no triples.
-    """
-    import pyarrow as pa
-
-    def per_chunk(rb) -> "pa.RecordBatch | None":
-        (subjs, preds, objs, sids), add = _triple_columns(include_extra)
-        buckets: list = []
-        names = rb.schema.names
-        bucket_col = rb.column("bucket").to_pylist() if carry_bucket else None
-        path_col = rb.column("path").to_pylist() if "path" in names else None
-        for i, content in enumerate(rb.column("content").to_pylist()):
-            err, site = _valid_site(
-                path_col[i] if path_col is not None else None, content
-            )
-            if err is not None:
-                continue
-            n0 = len(subjs)
-            add(site)
-            if carry_bucket:
-                buckets.extend([int(bucket_col[i])] * (len(subjs) - n0))
-        cols = [subjs, preds, objs, sids] + ([buckets] if carry_bucket else [])
-        return pa.RecordBatch.from_arrays(
-            [pa.array(v, type=f.type) for v, f in zip(cols, out_schema)],
-            schema=out_schema,
-        )
-
-    # ~127 triples per site: 512 input rows ≈ 65k output strings per
-    # chunk keeps the alive set (and Arrow batch) bounded — see
-    # functions/arrowkit.py
-    return chunked_kernel(per_chunk, max_rows=512)
-
-
-def extract_triples(ingest: DataFrame, include_extra: bool = False) -> DataFrame:
-    """P9: one record → N (subj, pred, obj) rows.  Arrow-batched fan-out;
-    no shuffle (output stays partitioned like the scan).
-
-    When the input carries a ``bucket`` column it is propagated onto every
-    emitted triple.  The frame operator of the events path and the
-    queries; the pipeline writes the same rows, from the same
-    per-document functions, in its document pass (``doc_pass``).
-    """
-    carry = "bucket" in ingest.columns
-    cols = ["content", "bucket"] if carry else ["content"]
-    if "path" in ingest.columns:
-        cols.append("path")  # enables the filename-charset validity rule
-    schema = StructType(
-        TRIPLE.fields + ([StructField("bucket", IntegerType())] if carry else [])
-    )
-    return ingest.select(*cols).mapInArrow(
-        _triples_batch(include_extra, carry, to_arrow_schema(schema)),
-        schema=schema,
-    )
-
-
-# -- the document pass: sites_rel, its side tables and triples -----------------
+# -- the document tables: sites_rel, its side tables and triples ---------------
 
 # the tables the pipeline's document pass writes, each ``<table>/bucket=<b>/``
 DOC_TABLES = ("sites_rel", "violations", "vocab_violations", "triples")
 
 # their file schemas (``bucket`` is the hive directory, not a column):
 # ``sites_rel`` is ``repo, path, <rest of SITE_REL>``, every column
-# nullable, as the Spark writer stored the ``site_rows`` projection.  The
-# pass writes their Arrow twins from pyspark's own ``to_arrow_schema``,
-# the converter behind the kernels' batches, so the two cannot drift
+# nullable, as the Spark writer stored the site-row projection.  Their
+# Arrow twins come from pyspark's own ``to_arrow_schema``, the converter
+# behind its Arrow kernels, so the two cannot drift
 DOC_FILE_SCHEMAS = {
     "sites_rel": StructType(
         [
@@ -556,6 +388,8 @@ DOC_FILE_SCHEMAS = {
     "vocab_violations": VOCAB_VIOLATION,
     "triples": TRIPLE,
 }
+DOC_ARROW_SCHEMAS = {t: to_arrow_schema(s) for t, s in DOC_FILE_SCHEMAS.items()}
+_SITE_TYPES = [DOC_ARROW_SCHEMAS["sites_rel"].field(c).type for c in _SITE_VALUE_COLS]
 
 # one row per file the pass wrote
 MANIFEST = StructType(
@@ -567,20 +401,139 @@ MANIFEST = StructType(
     ]
 )
 
+# ~127 triples per site: 512-document chunks keep a chunk's alive set (and
+# Arrow batch) bounded — see functions/arrowkit.py
+_DOC_CHUNK_ROWS = 512
 
-def _doc_pass_kernel(
-    crs_names: dict,
-    source_scores: dict,
-    allowed: dict,
-    include_extra: bool,
-    staging: str,
-):
+
+def _doc_batches(rb, tables, dicts, include_extra: bool) -> dict:
+    """The per-document code of this module's kernels: parse and validate
+    each document of the record batch ``rb`` once (``_valid_site``), then
+    build a valid record's site row and vocabulary violations
+    (``_site_columns``) and its triples (``_triple_columns``).
+
+    Returns ``{table: pyarrow.RecordBatch}`` (``DOC_ARROW_SCHEMAS``) for
+    those of ``tables`` that got rows; work no requested table needs is
+    skipped.  ``rb`` holds ``content``, ``path`` and the requested tables'
+    ``_DOC_INPUTS``; ``dicts`` is ``_vocab_dicts``' output, None when no
+    ``_SITE_TABLES`` table is requested:
+
+    - ``sites_rel``: the SITE_REL row of each valid record;
+    - ``violations``: each rejected document and its reason;
+    - ``vocab_violations``: one ``(field, uri)`` row per out-of-vocabulary
+      mention or unsupported CRS of a valid record (P7 validators.py:
+      354-419, P3);
+    - ``triples``: each valid record's triples (P9)."""
+    import pyarrow as pa
+
+    want_site = any(t in tables for t in _SITE_TABLES)
+    want_triples = "triples" in tables
+    if want_site:
+        cols, add_site = _site_columns(*dicts)
+    tcols, add_triples = _triple_columns(include_extra)
+    ok: list = []
+    bad: list = []
+    reasons: list = []
+    vv_rows: list = []
+    vv_field: list = []
+    vv_uri: list = []
+    paths = rb.column("path").to_pylist()
+    for i, content in enumerate(rb.column("content").to_pylist()):
+        err, site = _valid_site(paths[i], content)
+        if err is not None:
+            bad.append(i)
+            reasons.append(err)
+            continue
+        ok.append(i)
+        if want_site:
+            for v in add_site(site):
+                vv_rows.append(i)
+                vv_field.append(v["field"])
+                vv_uri.append(v["uri"])
+        if want_triples:
+            add_triples(site)
+
+    def keys(rows, names):
+        idx = pa.array(rows, pa.int32())
+        return [rb.column(n).take(idx) for n in names]
+
+    out = {}
+    if ok and "sites_rel" in tables:
+        out["sites_rel"] = pa.RecordBatch.from_arrays(
+            keys(ok, ("repo", "path"))
+            + [
+                # from_pandas: NaN → null, as pyspark's pandas-to-Arrow
+                # conversion makes of it
+                pa.array(cols[c], type=t, from_pandas=True)
+                for c, t in zip(_SITE_VALUE_COLS, _SITE_TYPES)
+            ]
+            + keys(ok, ("content_sha256",)),
+            schema=DOC_ARROW_SCHEMAS["sites_rel"],
+        )
+    if ok and want_triples:
+        out["triples"] = pa.RecordBatch.from_arrays(
+            [pa.array(v, pa.string()) for v in tcols],
+            schema=DOC_ARROW_SCHEMAS["triples"],
+        )
+    if bad and "violations" in tables:
+        out["violations"] = pa.RecordBatch.from_arrays(
+            keys(bad, _DOC_INPUTS["violations"]) + [pa.array(reasons, pa.string())],
+            schema=DOC_ARROW_SCHEMAS["violations"],
+        )
+    if vv_rows and "vocab_violations" in tables:
+        out["vocab_violations"] = pa.RecordBatch.from_arrays(
+            keys(vv_rows, ("repo", "path"))
+            + [pa.array(vv_field, pa.string()), pa.array(vv_uri, pa.string())],
+            schema=DOC_ARROW_SCHEMAS["vocab_violations"],
+        )
+    return out
+
+
+def doc_rows(
+    docs: DataFrame,
+    vocab: dict[str, DataFrame] | None,
+    table: str,
+    include_extra: bool = False,
+) -> DataFrame:
+    """The rows the document pass writes to ``table`` (one of
+    ``DOC_TABLES``, with its ``DOC_FILE_SCHEMAS`` schema, no ``bucket``)
+    for the documents of ``docs``: ONE ``mapInArrow`` running
+    ``_doc_batches`` for that table alone.  ``docs`` carries ``content``,
+    ``path`` and the table's ``_DOC_INPUTS`` (a ``with_lineage`` frame has
+    them all); ``vocab`` is needed only by ``_SITE_TABLES``.  No
+    shuffle: the output stays partitioned like ``docs``."""
+    dicts = _vocab_dicts(vocab) if table in _SITE_TABLES else None
+
+    def per_chunk(rb):
+        return _doc_batches(rb, (table,), dicts, include_extra).get(table)
+
+    return docs.select(*_DOC_INPUTS[table], "content").mapInArrow(
+        chunked_kernel(per_chunk, max_rows=_DOC_CHUNK_ROWS),
+        schema=DOC_FILE_SCHEMAS[table],
+    )
+
+
+def normalize_sites(parsed: DataFrame, vocab: dict[str, DataFrame]) -> DataFrame:
+    """P2+P3: the relational site row (SITE_REL schema) of every valid
+    record in ``parsed`` (a ``with_lineage`` frame) — ``doc_rows``'
+    ``sites_rel`` rows, in SITE_REL's column order."""
+    return doc_rows(parsed, vocab, "sites_rel").select(*SITE_REL_COLS)
+
+
+def extract_triples(ingest: DataFrame, include_extra: bool = False) -> DataFrame:
+    """P9: one record → N (subj, pred, obj, site_id) rows, none for a
+    record ``site_record_error`` rejects — ``doc_rows``' ``triples`` rows.
+    ``ingest`` needs only ``path`` and ``content``."""
+    return doc_rows(ingest, None, "triples", include_extra)
+
+
+def _doc_pass_kernel(dicts: tuple, include_extra: bool, staging: str):
     """The ``doc_pass`` kernel (``mapInArrow``).  Its input is sorted by
     ``bucket`` within the task, so it buffers one bucket at a time: the
-    bucket's rows of each table as Arrow record batches, written as one
-    file (one row group) per table when the next bucket starts.  Peak
-    Python memory is one bucket's output, and no Python object outlives
-    its chunk: each chunk's column lists become Arrow arrays at once.
+    bucket's ``_doc_batches`` of each table, written as one file (one row
+    group) per table when the next bucket starts.  Peak Python memory is
+    one bucket's output, and no Python object outlives its chunk: each
+    chunk's column lists become Arrow arrays at once.
 
     Files land under ``<staging>/<table>/bucket=<b>/`` with the task
     attempt in their name, so a retried task never overwrites (or gets
@@ -591,8 +544,6 @@ def _doc_pass_kernel(
     from pyarrow import fs as pafs
     from pyspark import TaskContext
 
-    schemas = {t: to_arrow_schema(s) for t, s in DOC_FILE_SCHEMAS.items()}
-    site_types = [schemas["sites_rel"].field(c).type for c in _SITE_VALUE_COLS]
     manifest_schema = to_arrow_schema(MANIFEST)
 
     def kernel(batches):
@@ -607,7 +558,7 @@ def _doc_pass_kernel(
             for t in DOC_TABLES:
                 if not pending[t]:
                     continue
-                table = pa.Table.from_batches(pending[t], schemas[t])
+                table = pa.Table.from_batches(pending[t], DOC_ARROW_SCHEMAS[t])
                 pending[t] = []
                 rel = f"{t}/bucket={b}/part-{b:05d}-{attempt}.parquet"
                 filesystem.create_dir(f"{root}/{t}/bucket={b}")
@@ -630,71 +581,6 @@ def _doc_pass_kernel(
                     }
                 )
 
-        def one_bucket(rb) -> None:
-            """Parse one bucket's slice of documents once; append its rows
-            of the four tables to ``pending``."""
-            cols, add_site = _site_columns(crs_names, source_scores, allowed)
-            tcols, add_triples = _triple_columns(include_extra)
-            ok: list = []
-            bad: list = []
-            reasons: list = []
-            vv_rows: list = []
-            vv_field: list = []
-            vv_uri: list = []
-            paths = rb.column("path").to_pylist()
-            for i, content in enumerate(rb.column("content").to_pylist()):
-                err, site = _valid_site(paths[i], content)
-                if err is not None:
-                    bad.append(i)
-                    reasons.append(err)
-                    continue
-                ok.append(i)
-                for v in add_site(site):
-                    vv_rows.append(i)
-                    vv_field.append(v["field"])
-                    vv_uri.append(v["uri"])
-                add_triples(site)
-
-            def keys(rows, names):
-                idx = pa.array(rows, pa.int32())
-                return [rb.column(n).take(idx) for n in names]
-
-            if ok:
-                pending["sites_rel"].append(
-                    pa.RecordBatch.from_arrays(
-                        keys(ok, ("repo", "path"))
-                        + [
-                            # from_pandas: NaN → null, as the mapInPandas
-                            # conversion of ``site_rows`` does
-                            pa.array(cols[c], type=t, from_pandas=True)
-                            for c, t in zip(_SITE_VALUE_COLS, site_types)
-                        ]
-                        + keys(ok, ("content_sha256",)),
-                        schema=schemas["sites_rel"],
-                    )
-                )
-                pending["triples"].append(
-                    pa.RecordBatch.from_arrays(
-                        [pa.array(v, pa.string()) for v in tcols],
-                        schema=schemas["triples"],
-                    )
-                )
-            if bad:
-                pending["violations"].append(
-                    pa.RecordBatch.from_arrays(
-                        keys(bad, SITE_ROW_KEYS) + [pa.array(reasons, pa.string())],
-                        schema=schemas["violations"],
-                    )
-                )
-            if vv_rows:
-                pending["vocab_violations"].append(
-                    pa.RecordBatch.from_arrays(
-                        keys(vv_rows, ("repo", "path"))
-                        + [pa.array(vv_field, pa.string()), pa.array(vv_uri, pa.string())],
-                        schema=schemas["vocab_violations"],
-                    )
-                )
-
         def per_chunk(rb) -> None:
             nonlocal current
             buckets = rb.column("bucket").to_pylist()
@@ -705,11 +591,12 @@ def _doc_pass_kernel(
                 if buckets[start] != current:
                     flush()
                     current = buckets[start]
-                one_bucket(rb.slice(start, end - start))
+                one = rb.slice(start, end - start)
+                for t, batch in _doc_batches(one, DOC_TABLES, dicts, include_extra).items():
+                    pending[t].append(batch)
                 start = end
 
-        # ~127 triples per site: 512-document chunks, as extract_triples
-        yield from chunked_kernel(per_chunk, max_rows=512)(batches)
+        yield from chunked_kernel(per_chunk, max_rows=_DOC_CHUNK_ROWS)(batches)
         flush()
         yield pa.RecordBatch.from_pylist(manifest, schema=manifest_schema)
 
@@ -726,22 +613,10 @@ def doc_pass(
     ``mapInArrow`` over ``docs`` (a ``with_lineage`` frame with
     ``bucket``, clustered by bucket and sorted by it within each
     partition) that parses each document once and writes its rows of
-    ``DOC_TABLES`` with ``pyarrow.parquet`` under ``staging``:
-
-    - ``sites_rel``: the SITE_REL row of each valid record (``site_rows``'
-      valid rows);
-    - ``violations``: each rejected document and its reason;
-    - ``vocab_violations``: one ``(field, uri)`` row per out-of-vocabulary
-      mention or unsupported CRS of a valid record (P7 validators.py:
-      354-419, P3);
-    - ``triples``: each valid record's triples (``extract_triples``).
-
-    The rows are those of the frame operators, built by the same
-    per-document functions (``_valid_site``, ``_site_columns``,
-    ``_triple_columns``)."""
-    crs_names, source_scores, allowed = _vocab_dicts(vocab)
-    return docs.select(*SITE_ROW_KEYS, "bucket", "content").mapInArrow(
-        _doc_pass_kernel(crs_names, source_scores, allowed, include_extra, staging),
+    ``DOC_TABLES`` (``_doc_batches``) with ``pyarrow.parquet`` under
+    ``staging``."""
+    return docs.select(*_DOC_INPUTS["violations"], "bucket", "content").mapInArrow(
+        _doc_pass_kernel(_vocab_dicts(vocab), include_extra, staging),
         schema=MANIFEST,
     )
 

@@ -434,7 +434,8 @@ def grade_tonnage_view(sites_rel, vocab):
     place, so no explode→groupBy(site, commodity) round trip regroups
     inventories that already sit together in one row (guide §2.4, remove
     shuffles outright).  The material-form conversion vocabulary collapses
-    to a closure dict, like site_rows' crs/source-score dicts.
+    to a closure dict, like the document pass's crs/source-score dicts
+    (``extract._vocab_dicts``).
     """
     form_conv = {
         MR + r["minmod_id"]: (

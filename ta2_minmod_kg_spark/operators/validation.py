@@ -11,9 +11,9 @@ Execution: the vocabularies are broadcast-dim sized, so they collapse to
 driver-side ``field -> frozenset(uri)`` dicts (``allowed_uri_sets``) that
 ship in the task closure, and ``record_vocab_violations`` walks one
 already-parsed record with set lookups.  The walk runs inside the
-``sites_rel`` kernel (``extract.site_rows``), on the same ``json.loads``
-that validates and normalizes the record — no ``from_json`` lex, no
-anti-join.
+document batch builder (``extract._doc_batches``), on the same
+``json.loads`` that validates and normalizes the record — no
+``from_json`` lex, no anti-join.
 """
 
 from __future__ import annotations

@@ -511,8 +511,21 @@ def write_dedup_sites_json(out: dict[str, DataFrame], path: str) -> None:
     """K2: the merged document.  A ``.lz4`` path writes the reference's
     compressed layout (`etl/mineral_site.py:30,357-365`) via
     functions/lz4frame.py — the real lz4 package when importable, else a
-    spec-conformant stored-block frame (documented there)."""
-    doc = json.dumps(dedup_sites_json(out))
+    spec-conformant stored-block frame (documented there).
+
+    The sections' collected rows are joined as they are, without a
+    driver-side ``json.loads`` / ``json.dumps`` round trip: each row is
+    already ``json.dumps`` output with sorted keys, which a round trip
+    reproduces byte for byte, so the file holds exactly
+    ``json.dumps(dedup_sites_json(out))``."""
+    doc = (
+        "{"
+        + ", ".join(
+            f"{json.dumps(name)}: [" + ", ".join(r["json"] for r in df.collect()) + "]"
+            for name, df in dedup_sites_json_sections(out).items()
+        )
+        + "}"
+    )
     if path.endswith(".lz4"):
         from ..functions.lz4frame import compress
 

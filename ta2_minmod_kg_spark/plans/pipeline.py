@@ -326,7 +326,7 @@ class KGPipeline:
                     "skipped": True,
                     **{k: meta[k] for k in ("n_rows", "wall_ms")},
                 }
-                self.tables[s] = self.spark.read.parquet(self.lineage.path(s))
+                self.tables[s] = self._read(s)
             return self.tables[stage]
 
         incremental = (
@@ -343,7 +343,7 @@ class KGPipeline:
         # the build's time is its stage's; each further recorded stage's
         # entry covers only its own read-back and hashing
         for s in names:
-            out = self.spark.read.parquet(self.lineage.path(s))
+            out = self._read(s)
             # an unpartitioned stage is one logical bucket: a whole-table hash
             hashed = out if partitioned else out.withColumn("bucket", F.lit(0))
             pb = [r.asDict() for r in bucket_hashes(hashed).collect()]
@@ -399,15 +399,25 @@ class KGPipeline:
         for table in DOC_TABLES:
             fs.create(Path(self.lineage.path(table), "_SUCCESS"), True).close()
 
-    def _read_side(self, table: str, schema) -> DataFrame:
-        """A quarantine table read with its declared schema plus
-        ``bucket``: a clean corpus writes no file there, and Spark cannot
-        infer a schema from ``_SUCCESS`` alone."""
+    def _read(self, stage: str) -> DataFrame:
+        """A stage's table, read back from the workdir.  The document
+        pass's tables (``extract.DOC_TABLES``) are read with their declared
+        file schemas plus ``bucket``: no schema-inference job, and a
+        quarantine table of a clean corpus holds no file, only
+        ``_SUCCESS``, from which Spark could infer nothing."""
         from pyspark.sql.types import IntegerType, StructField, StructType
 
-        return self.spark.read.schema(
-            StructType(schema.fields + [StructField("bucket", IntegerType())])
-        ).parquet(self.lineage.path(table))
+        from ..operators.extract import DOC_FILE_SCHEMAS
+
+        reader = self.spark.read
+        if stage in DOC_FILE_SCHEMAS:
+            reader = reader.schema(
+                StructType(
+                    DOC_FILE_SCHEMAS[stage].fields
+                    + [StructField("bucket", IntegerType())]
+                )
+            )
+        return reader.parquet(self.lineage.path(stage))
 
     # -- full run ---------------------------------------------------------------
 
@@ -422,7 +432,6 @@ class KGPipeline:
         table and the two quarantine tables, ``violations`` and
         ``vocab_violations``."""
         from ..operators import canonicalize, dedup, extract, grade_tonnage
-        from ..schemas import VIOLATION, VOCAB_VIOLATION
 
         ingest = with_bucket(ingest, self.n_buckets)
         ingest_pb = [r.asDict() for r in bucket_hashes(ingest).collect()]
@@ -468,8 +477,8 @@ class KGPipeline:
         )
         # P5/P6 rejects and P7 out-of-vocabulary URIs (validators.py:
         # 354-419) + P3 locations with a CRS the engine cannot reproject
-        violations = self._read_side("violations", VIOLATION)
-        vocab_violations = self._read_side("vocab_violations", VOCAB_VIOLATION)
+        violations = self._read("violations")
+        vocab_violations = self._read("vocab_violations")
 
         inv_views = self._run_stage(
             "inv_views",

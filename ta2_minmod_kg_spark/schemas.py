@@ -1,9 +1,9 @@
 """StructType constants for every table in the engine (SURVEY §1.3).
 
-Schemas are declared, never inferred: ``spark.read.schema(...)`` /
-``from_json(content, RAW_SITE)`` so malformed documents become NULL structs
-(collected into a violations table) instead of poisoning inference, and so
-the parquet scans prune columns.
+Schemas are declared, never inferred: ``spark.read.schema(...)`` and the
+document kernels' output schemas, so a malformed document lands in a
+violations table instead of poisoning inference, and so the parquet scans
+prune columns.
 """
 
 from __future__ import annotations
@@ -112,35 +112,6 @@ GEOLOGY_INFO = StructType(
         _s("associated_rock", ROCK_TYPE),
         _s("structure", StringType()),
         _s("tectonic", StringType()),
-    ]
-)
-
-LOCATION_INFO = StructType(
-    [
-        _s("country", ArrayType(CANDIDATE_ENTITY)),
-        _s("state_or_province", ArrayType(CANDIDATE_ENTITY)),
-        _s("crs", CANDIDATE_ENTITY),
-        _s("location", StringType()),  # WKT
-    ]
-)
-
-RAW_SITE = StructType(
-    [
-        _s("source_id", StringType()),
-        _s("record_id", StringType()),
-        _s("name", StringType()),
-        _s("aliases", ArrayType(StringType())),
-        _s("site_rank", StringType()),
-        _s("site_type", StringType()),
-        _s("mineral_form", ArrayType(StringType())),
-        _s("geology_info", GEOLOGY_INFO),
-        _s("location_info", LOCATION_INFO),
-        _s("deposit_type_candidate", ArrayType(CANDIDATE_ENTITY)),
-        _s("mineral_inventory", ArrayType(MINERAL_INVENTORY)),
-        _s("reference", ArrayType(REFERENCE)),
-        _s("discovered_year", IntegerType()),
-        _s("created_by", StringType()),
-        _s("modified_at", StringType()),  # %Y-%m-%dT%H:%M:%S.%fZ
     ]
 )
 

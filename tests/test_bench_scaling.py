@@ -115,3 +115,17 @@ def test_kg_job_times_the_pipeline_run(spark, tmp_path):
     )
     assert not any(st["skipped"] for st in r["stages"].values())
     assert r["wall_sec"] >= sum(st["wall_ms"] for st in r["stages"].values()) / 1000
+
+
+def test_probe_priors_follow_the_measured_kg_wall(monkeypatch):
+    """The scaling loop sizes its first probes from the kg trial's wall,
+    scaled to the probes' input, not from fixed constants: a 56 s trial
+    on the probes' own input expects 86 s per 4N probe and 170 s per N
+    probe (wall + 30 s startup), where the old constants expected 120 s
+    and 300 s whatever the corpus."""
+    bench = _load_bench()
+    monkeypatch.setattr(bench, "KG_N_SITES", 2000)
+    monkeypatch.setattr(bench, "SCALING_N_SITES", 2000)
+    assert bench._probe_priors(56.0) == {"lo": 170.0, "hi": 86.0}
+    monkeypatch.setattr(bench, "SCALING_N_SITES", 4000)
+    assert bench._probe_priors(56.0) == {"lo": 310.0, "hi": 142.0}

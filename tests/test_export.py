@@ -215,6 +215,38 @@ def test_write_read_dedup_sites_json_both_layouts(exported, tmp_path, spark):
     assert open(packed, "rb").read(4) == b"\x04\x22\x4d\x18"
 
 
+def test_merged_file_is_the_dumped_document(spark, tmp_path):
+    """``write_dedup_sites_json`` joins the sections' JSON rows as
+    collected: the file's bytes (decompressed, for ``.lz4``) equal
+    ``json.dumps(dedup_sites_json(out))``, on a corpus with a non-ASCII
+    name and float measures."""
+    from ta2_minmod_kg_spark.functions.lz4frame import decompress
+    from ta2_minmod_kg_spark.plans.export import write_dedup_sites_json
+    from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
+    from ta2_minmod_kg_spark.sources import synthetic
+
+    rows = []
+    for i in range(30):
+        rec = synthetic.make_record(i, 30)
+        if i == 0:
+            rec["name"] = "Mina S\u00e3o Jo\u00e3o \u2013 \u00fc"
+        rows.append(("r", f"data/s{i}.json", "c", "json", json.dumps(rec)))
+    ingest = spark.createDataFrame(
+        rows, "repo string, path string, commit string, lang string, content string"
+    )
+    out = KGPipeline(spark, str(tmp_path / "wd"), n_buckets=4).run(
+        ingest, vocab.vocab_dataframes(spark)
+    )
+    want = json.dumps(dedup_sites_json(out)).encode("utf-8")
+    assert b"\\u00e3" in want and len(json.loads(want)["MineralSite"]) == 30
+    plain = str(tmp_path / "dedup_sites.json")
+    packed = str(tmp_path / "dedup_sites.json.lz4")
+    write_dedup_sites_json(out, plain)
+    write_dedup_sites_json(out, packed)
+    assert open(plain, "rb").read() == want
+    assert decompress(open(packed, "rb").read()) == want
+
+
 def _ref_format_dedup_site():
     """The reference's EXECUTED format_dedup_site
     (integrations/cdr/cdr.py:120-223): cdr_schemas.py is imported directly

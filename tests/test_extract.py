@@ -5,8 +5,6 @@ from __future__ import annotations
 import hashlib
 import json
 
-from pyspark.sql import functions as F
-
 from ta2_minmod_kg_spark.functions.rdf import site_to_triples, triples_to_ttl
 from ta2_minmod_kg_spark.operators import extract
 from ta2_minmod_kg_spark.sources import synthetic, vocab
@@ -81,10 +79,9 @@ def test_ingest_pipeline(spark):
 def test_extract_triples_arrow_kernel_exact(spark):
     """r06 O8: extract_triples moved from mapInPandas to an Arrow-native
     mapInArrow kernel.  Assert EXACT multiset equality with the per-row
-    single-node emitter over the full corpus — plus the bucket-carrying
-    variant and quarantine behavior (malformed JSON, a bad path charset
-    and a constrained-type reject emit nothing, valid rows are
-    unaffected)."""
+    single-node emitter over the full corpus — plus quarantine behavior
+    (malformed JSON, a bad path charset and a constrained-type reject emit
+    nothing, valid rows are unaffected)."""
     from collections import Counter
 
     ingest = synthetic.synthesize_ingest(spark, N, partitions=4)
@@ -100,15 +97,6 @@ def test_extract_triples_arrow_kernel_exact(spark):
     tp = extract.extract_triples(ingest).toPandas()
     got = Counter(map(tuple, tp[["subj", "pred", "obj", "site_id"]].values))
     assert got == expected
-
-    # bucket-carrying variant: every triple tagged with its record's bucket
-    bucketed = ingest.withColumn(
-        "bucket", (F.xxhash64("path") % 4).cast("int")
-    )
-    tb = extract.extract_triples(bucketed).toPandas()
-    assert Counter(map(tuple, tb[["subj", "pred", "obj", "site_id"]].values)) == expected
-    assert set(tb.columns) == {"subj", "pred", "obj", "site_id", "bucket"}
-    assert tb["bucket"].notna().all()
 
     # quarantine: malformed JSON, a bad path charset and a constrained
     # reject (confidence out of [0, 1] — split_violations routes it to the

@@ -42,8 +42,9 @@ def test_filters_reach_the_scan(spark, name, token):
 
 def test_sites_rel_and_gt_view_plan_shape(spark, tmp_path):
     """The fused kernels are the only path, so pin their plans: validate +
-    normalize is ONE Python pass (one MapInPandas, no separate validation
-    UDF), and the GT view regroups nothing (no Exchange)."""
+    normalize is ONE Python pass (one MapInArrow running the document
+    pass's batch builder; no MapInPandas, no separate validation UDF, no
+    JVM JSON parse), and the GT view regroups nothing (no Exchange)."""
     from ta2_minmod_kg_spark.operators import extract, grade_tonnage
     from ta2_minmod_kg_spark.sources import synthetic, vocab
 
@@ -56,8 +57,10 @@ def test_sites_rel_and_gt_view_plan_shape(spark, tmp_path):
     vdfs = vocab.vocab_dataframes(spark)
     sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs)
     plan = _plan(sites)
-    assert plan.count("MapInPandas") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan, plan
     assert "ArrowEvalPython" not in plan, plan
+    assert "from_json" not in plan, plan
 
     gt_plan = _plan(grade_tonnage.grade_tonnage_view(sites, vdfs))
     assert "Exchange" not in gt_plan, gt_plan
@@ -108,17 +111,11 @@ def test_document_pass_parses_once(spark, tmp_path, monkeypatch):
 
 def test_pipeline_leaves_no_cached_frames(spark, tmp_path):
     """KGPipeline.run releases what it persists, on the full and on the
-    incremental path: no persistent RDD it created outlives it (compared
-    with the ones earlier tests in this session left).
-
-    A persisted frame stays registered until it is unpersisted.  A
-    ``localCheckpoint`` nothing references any more (the membership
-    stage's edge checkpoint) is dropped by Spark's ContextCleaner once
-    the JVM has collected it, so the check collects garbage and gives
-    the cleaner time before it reads the registry."""
-    import gc
-    import time
-
+    incremental path: no persistent RDD it created is registered once it
+    returns (compared with the ones earlier tests in this session left).
+    Read at once, with no garbage collection or wait in between: the
+    membership stage's driver path checkpoints nothing, so nothing is left
+    for Spark's ContextCleaner to drop."""
     from pyspark.sql import functions as F
 
     from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
@@ -127,19 +124,10 @@ def test_pipeline_leaves_no_cached_frames(spark, tmp_path):
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     def leaked() -> dict:
-        deadline = time.time() + 30
-        while True:
-            gc.collect()
-            spark._jvm.System.gc()
-            time.sleep(0.5)
-            rdds = spark.sparkContext._jsc.getPersistentRDDs()
-            left = {
-                k: rdds.get(k).toDebugString()
-                for k in rdds.keySet()
-                if k not in before
-            }
-            if not left or time.time() > deadline:
-                return left
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {
+            k: rdds.get(k).toDebugString() for k in rdds.keySet() if k not in before
+        }
 
     wd = str(tmp_path / "wd")
     vdfs = vocab.vocab_dataframes(spark)

@@ -4,7 +4,8 @@
 the build's operators.  The driver queries and the bench run the pipeline
 and read its tables; a second hand-assembled chain drifts from the real
 one whenever a stage changes.  This greps the driver-facing modules for
-calls to the build operators outside the pipeline.
+calls to the build operators outside the pipeline, and ``extract.py`` for
+a second per-document kernel.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ SCANNED = [
 OWNER = ROOT / "ta2_minmod_kg_spark" / "plans" / "pipeline.py"
 BUILD_CALL = re.compile(
     r"\b(build_membership|merge_dedup_sites|select_dedup_inventories"
-    r"|grade_tonnage_view|normalize_sites|site_rows|doc_pass|write_doc_tables)\("
+    r"|grade_tonnage_view|normalize_sites|doc_rows|doc_pass|write_doc_tables)\("
 )
 
 
@@ -42,3 +43,14 @@ def test_only_the_pipeline_chains_the_build():
             if BUILD_CALL.search(line) and not line.strip().startswith("#"):
                 offenders.append(f"{path.relative_to(ROOT)}:{n}: {line.strip()}")
     assert not offenders, "\n".join(offenders)
+
+
+def test_one_per_document_kernel():
+    """Every document goes through one batch builder: ``extract.py``
+    calls ``_valid_site`` (the one parse and validation per document) in
+    one place, and runs no ``mapInPandas`` kernel over documents."""
+    text = (ROOT / "ta2_minmod_kg_spark" / "operators" / "extract.py").read_text()
+    code = [ln for ln in text.splitlines() if not ln.strip().startswith("#")]
+    calls = [ln for ln in code if re.search(r"(?<!def )\b_valid_site\(", ln)]
+    assert len(calls) == 1, calls
+    assert not [ln for ln in code if "mapInPandas" in ln]

@@ -1,6 +1,6 @@
 """P7 vocabulary-membership validation (ref validators.py:354-419) and
-the P3 unsupported-CRS guard, both emitted by the ``sites_rel`` kernel
-(``extract.site_rows``) from its single parse."""
+the P3 unsupported-CRS guard, both emitted by the document batch builder
+(``extract.doc_rows``' ``vocab_violations`` rows) from its single parse."""
 
 from __future__ import annotations
 
@@ -8,6 +8,7 @@ import copy
 import json
 import os
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ta2_minmod_kg_spark.operators import extract
@@ -27,14 +28,10 @@ def _ingest(spark, recs: dict, commit: str = "c"):
 
 
 def _vocab_violations(spark, ingest) -> list[tuple]:
-    rows = extract.site_rows(extract.parse_sites(ingest), vocab.vocab_dataframes(spark))
-    return sorted(
-        tuple(r)
-        for r in rows.filter(F.col("violation_reason").isNull())
-        .select("path", F.explode("vocab_violations").alias("v"))
-        .select("path", "v.field", "v.uri")
-        .collect()
+    rows = extract.doc_rows(
+        extract.with_lineage(ingest), vocab.vocab_dataframes(spark), "vocab_violations"
     )
+    return sorted(tuple(r) for r in rows.select("path", "field", "uri").collect())
 
 
 def _ce(uri=None, **extra):
@@ -335,37 +332,33 @@ def _sorted_rows(df) -> list[str]:
 def test_document_pass_matches_the_frame_operators(spark, tmp_path):
     """On the planted corpus, the four tables the pipeline's document pass
     writes with pyarrow read back with the schemas and sorted rows of the
-    frame operators' output (``site_rows``, ``extract_triples``) written
-    by Spark's partitioned writer, and no file carries an ``ARROW:schema``
+    frame operator's output (``doc_rows``, run per bucket) written by
+    Spark's partitioned writer, and no file carries an ``ARROW:schema``
     or ``pandas`` footer key."""
     import glob
+    from functools import reduce
 
     import pyarrow.parquet as pq
 
     from ta2_minmod_kg_spark.plans.pipeline import KGPipeline, with_bucket
 
+    n_buckets = 4
     ingest = _ingest(spark, _planted_corpus())
     vdfs = vocab.vocab_dataframes(spark)
     wd = str(tmp_path / "wd")
-    KGPipeline(spark, wd, n_buckets=4).run(ingest, vdfs)
+    KGPipeline(spark, wd, n_buckets=n_buckets).run(ingest, vdfs)
 
-    docs = extract.with_lineage(with_bucket(ingest, 4))
-    rows = extract.site_rows(docs, vdfs)
-    ok = rows.filter(F.col("violation_reason").isNull())
-    rest = [c for c in extract.SITE_REL_COLS if c not in ("repo", "path")]
-    frames = {
-        "sites_rel": ok.select("repo", "path", *rest, "bucket"),
-        "violations": rows.filter(F.col("violation_reason").isNotNull()).select(
-            "repo", "path", "commit", "content_sha256", "violation_reason", "bucket"
-        ),
-        "vocab_violations": ok.select(
-            "repo", "path", "bucket", F.explode("vocab_violations").alias("v")
-        ).select("repo", "path", "bucket", "v.field", "v.uri"),
-        "triples": extract.extract_triples(
-            docs.select("repo", "path", "bucket", "content")
-        ),
-    }
-    for table, frame in frames.items():
+    docs = extract.with_lineage(with_bucket(ingest, n_buckets))
+    for table in extract.DOC_TABLES:
+        # the pass's bucket is a directory, not a column of its rows
+        frame = reduce(
+            DataFrame.unionAll,
+            [
+                extract.doc_rows(docs.filter(F.col("bucket") == b), vdfs, table)
+                .withColumn("bucket", F.lit(b))
+                for b in range(n_buckets)
+            ],
+        )
         ref = str(tmp_path / "ref" / table)
         frame.write.partitionBy("bucket").parquet(ref)
         want = spark.read.parquet(ref)
