@@ -6,11 +6,8 @@ Clean-room reimplementation of the id scheme of the reference
 ``"dedup_" + min(site_ids)``, sameAs triples, provenance refids) inherits
 its determinism from them.
 
-Two layers:
-
-- plain-Python scalar functions (used in tests and inside Arrow batches),
-- pandas-vectorized batch functions used by ``pandas_udf`` wrappers (the
-  only way any of this runs on the cluster — never per-row Python UDFs).
+Plain-Python scalar functions, called inside the Arrow batch kernels
+(never per-row Python UDFs) and by the tests.
 """
 
 from __future__ import annotations
@@ -19,8 +16,6 @@ import functools
 import hashlib
 import re
 import unicodedata
-
-import pandas as pd
 
 MR_NS = "https://minmod.isi.edu/resource/"
 MO_NS = "https://minmod.isi.edu/ontology/"
@@ -111,13 +106,6 @@ def get_source_uri(source_id: str) -> str:
     return MR_NS + "source__" + slugify(source_id)
 
 
-def mr_id(uri: str) -> str:
-    """Internal id of a resource URI (strip the mr: namespace)."""
-    if uri.startswith(MR_NS):
-        return uri[len(MR_NS) :]
-    return uri
-
-
 def dedup_group_id(site_ids: list[str]) -> str:
     # ref: models/kgrel/mineral_site.py:331-333 — "dedup_" + min(site ids)
     return "dedup_" + min(site_ids)
@@ -199,29 +187,3 @@ def doc_uri_to_slug(doc_uri: str, namespace: str = MR_NS) -> str:
     elif docid.startswith("http://"):
         docid = docid[7:]
     return slugify(docid)
-
-
-# -- pandas-vectorized batch forms (for pandas_udf wrappers) -----------------
-
-
-def slugify_series(s: pd.Series) -> pd.Series:
-    return s.map(lambda x: slugify(x) if x is not None else None)
-
-
-def make_site_id_series(
-    created_by: pd.Series, source_id: pd.Series, record_id: pd.Series
-) -> pd.Series:
-    """Vectorized site-id minting over an Arrow batch.
-
-    The per-value work is pure string/regex/hash CPU — there is no faster
-    columnar formulation because slugify requires unicode normalization;
-    this runs inside the executor's Arrow batch, not per-row over py4j.
-    """
-    out = []
-    for cb, sid, rid in zip(created_by, source_id, record_id):
-        out.append(make_site_id(get_username(cb), sid, rid))
-    return pd.Series(out, dtype="object")
-
-
-def sha256_hex(text: str) -> str:
-    return hashlib.sha256(text.encode()).hexdigest()

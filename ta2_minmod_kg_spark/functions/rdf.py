@@ -104,14 +104,6 @@ def uri(u: str) -> str:
     return f"<{u}>"
 
 
-def parse_modified_at_ns(modified_at: str) -> int:
-    """ISO '%Y-%m-%dT%H:%M:%S.%fZ' → nanoseconds (ref misc/utils.py:162-171)."""
-    s = modified_at
-    if s.endswith("Z"):
-        s = s[:-1] + "+00:00"
-    return int(datetime.fromisoformat(s).timestamp() * 1e9)
-
-
 def format_nanoseconds(ns: int) -> str:
     return datetime.fromtimestamp(ns / 1e9, tz=timezone.utc).strftime(
         "%Y-%m-%dT%H:%M:%S.%fZ"

@@ -10,9 +10,10 @@ Front door: the ingest table ``(repo, path, commit, lang, content)``.
 - ``doc_pass`` / ``write_doc_tables`` — the pipeline's document pass: ONE
                           ``mapInArrow`` parse per document that writes
                           ``sites_rel``, ``violations``,
-                          ``vocab_violations`` and ``triples`` with
-                          ``pyarrow.parquet`` and reports the files it
-                          wrote (the manifest the pipeline commits).
+                          ``vocab_violations``, ``triples`` and
+                          ``inv_views`` with ``pyarrow.parquet`` and
+                          reports the files it wrote (the manifest the
+                          pipeline commits).
 - ``doc_rows``          — one of those tables as a frame: ONE
                           ``mapInArrow`` that builds only that table.
 - ``normalize_sites``   — ``doc_rows``' ``sites_rel`` rows, as SITE_REL.
@@ -22,9 +23,10 @@ Front door: the ingest table ``(repo, path, commit, lang, content)``.
 
 Every document goes through one batch builder, ``_doc_batches``: one
 parse and validation (``_valid_site``), then the site row and its
-vocabulary violations (``_site_columns``) and the triples
-(``_triple_columns``), as Arrow record batches of ``DOC_TABLES``.  The
-document pass buffers and writes them; ``doc_rows`` returns them to Spark.
+vocabulary violations (``_site_columns``), its grade-tonnage view rows
+(``grade_tonnage.site_view_rows``) and its triples (``_triple_columns``),
+as Arrow record batches of ``DOC_TABLES``.  The document pass buffers and
+writes them; ``doc_rows`` returns them to Spark.
 
 Scale notes: this module shuffles nothing; parsing/minting/fan-out are
 map-side, and each kernel's output stays partitioned like its input.  The
@@ -58,8 +60,9 @@ from pyspark.sql.types import (
 from ..functions.arrowkit import chunked_kernel
 from ..functions.ids import MR_NS, get_username, make_site_id
 from ..functions.rdf import site_to_triples
-from ..schemas import INGEST, SITE_REL, TRIPLE, VIOLATION, VOCAB_VIOLATION
+from ..schemas import INGEST, INV_VIEW, SITE_REL, TRIPLE, VIOLATION, VOCAB_VIOLATION
 from .constrained import path_ok, site_error_udf, site_record_error
+from .grade_tonnage import site_view_rows
 from .validation import allowed_uri_sets, record_vocab_violations
 
 # ---------------------------------------------------------------------------
@@ -171,10 +174,12 @@ _DOC_INPUTS = {
     "violations": ("repo", "path", "commit", "content_sha256"),
     "vocab_violations": ("repo", "path"),
     "triples": ("path",),
+    "inv_views": ("path",),
 }
 _SITE_VALUE_COLS = [c for c in SITE_REL_COLS if c not in _DOC_INPUTS["sites_rel"]]
-# the tables built from a valid record's site row
-_SITE_TABLES = ("sites_rel", "vocab_violations")
+# the tables built from a valid record's site row (the view rows take
+# its ``site_id``)
+_SITE_TABLES = ("sites_rel", "vocab_violations", "inv_views")
 
 
 def _coerce_numbers(site: dict) -> None:
@@ -241,8 +246,8 @@ def _site_columns(crs_names: dict, source_scores: dict, allowed: dict):
     """``(cols, add)``: empty per-column lists of the SITE_REL values
     (``_SITE_VALUE_COLS``), and ``add(site)``, which appends one valid
     record's row (ref `kgrel/mineral_site.py:198-244`) and returns its
-    ``validation.record_vocab_violations`` rows.  The ``sites_rel`` and
-    ``vocab_violations`` half of ``_doc_batches``.
+    ``site_id`` and its ``validation.record_vocab_violations`` rows.  The
+    ``sites_rel`` and ``vocab_violations`` half of ``_doc_batches``.
 
     The crs-name, source-score and vocabulary-membership lookups ride
     along as tiny closure dicts — the reference's own broadcast-dict
@@ -312,7 +317,7 @@ def _site_columns(crs_names: dict, source_scores: dict, allowed: dict):
         ap_discovered(None if year is None else int(year))
         ap_created_by(site["created_by"])
         ap_modified(_parse_ns(site["modified_at"]))
-        return record_vocab_violations(site, allowed, crs_names)
+        return site_id, record_vocab_violations(site, allowed, crs_names)
 
     return cols, add
 
@@ -337,10 +342,11 @@ def _triple_columns(include_extra: bool):
     return (subjs, preds, objs, sids), add
 
 
-def _vocab_dicts(vocab: dict[str, DataFrame]) -> tuple[dict, dict, dict]:
+def _vocab_dicts(vocab: dict[str, DataFrame]) -> tuple[dict, dict, dict, dict]:
     """The crs-name, data-source-score and vocabulary-membership lookups a
-    site row needs, collapsed to driver dicts (they are broadcast-dim
-    sized by definition) that ship in the task closure."""
+    site row needs, and the material-form conversion factors its
+    grade-tonnage view needs, collapsed to driver dicts (they are
+    broadcast-dim sized by definition) that ship in the task closure."""
     crs_names = {
         MR_NS + r["minmod_id"]: r["name"] for r in vocab["crs"].collect()
     }
@@ -348,7 +354,13 @@ def _vocab_dicts(vocab: dict[str, DataFrame]) -> tuple[dict, dict, dict]:
         r["uri"]: (float(r["score"]) if r["score"] is not None else None)
         for r in vocab["data_source"].collect()
     }
-    return crs_names, source_scores, allowed_uri_sets(vocab)
+    form_conv = {
+        MR_NS + r["minmod_id"]: (
+            float(r["conversion"]) if r["conversion"] is not None else None
+        )
+        for r in vocab["commodity_form"].collect()
+    }
+    return crs_names, source_scores, allowed_uri_sets(vocab), form_conv
 
 
 def _site_structurally_valid(site, path: str | None) -> bool:
@@ -369,7 +381,7 @@ def _site_structurally_valid(site, path: str | None) -> bool:
 # -- the document tables: sites_rel, its side tables and triples ---------------
 
 # the tables the pipeline's document pass writes, each ``<table>/bucket=<b>/``
-DOC_TABLES = ("sites_rel", "violations", "vocab_violations", "triples")
+DOC_TABLES = ("sites_rel", "violations", "vocab_violations", "triples", "inv_views")
 
 # their file schemas (``bucket`` is the hive directory, not a column):
 # ``sites_rel`` is ``repo, path, <rest of SITE_REL>``, every column
@@ -387,6 +399,7 @@ DOC_FILE_SCHEMAS = {
     "violations": VIOLATION,
     "vocab_violations": VOCAB_VIOLATION,
     "triples": TRIPLE,
+    "inv_views": INV_VIEW,
 }
 DOC_ARROW_SCHEMAS = {t: to_arrow_schema(s) for t, s in DOC_FILE_SCHEMAS.items()}
 _SITE_TYPES = [DOC_ARROW_SCHEMAS["sites_rel"].field(c).type for c in _SITE_VALUE_COLS]
@@ -410,7 +423,9 @@ def _doc_batches(rb, tables, dicts, include_extra: bool) -> dict:
     """The per-document code of this module's kernels: parse and validate
     each document of the record batch ``rb`` once (``_valid_site``), then
     build a valid record's site row and vocabulary violations
-    (``_site_columns``) and its triples (``_triple_columns``).
+    (``_site_columns``), its grade-tonnage view rows
+    (``grade_tonnage.site_view_rows``) and its triples
+    (``_triple_columns``).
 
     Returns ``{table: pyarrow.RecordBatch}`` (``DOC_ARROW_SCHEMAS``) for
     those of ``tables`` that got rows; work no requested table needs is
@@ -423,14 +438,19 @@ def _doc_batches(rb, tables, dicts, include_extra: bool) -> dict:
     - ``vocab_violations``: one ``(field, uri)`` row per out-of-vocabulary
       mention or unsupported CRS of a valid record (P7 validators.py:
       354-419, P3);
-    - ``triples``: each valid record's triples (P9)."""
+    - ``triples``: each valid record's triples (P9);
+    - ``inv_views``: one MineralInventoryView row per normalized commodity
+      of a valid record (A1/A2)."""
     import pyarrow as pa
 
     want_site = any(t in tables for t in _SITE_TABLES)
     want_triples = "triples" in tables
+    want_views = "inv_views" in tables
     if want_site:
-        cols, add_site = _site_columns(*dicts)
+        *site_dicts, form_conv = dicts
+        cols, add_site = _site_columns(*site_dicts)
     tcols, add_triples = _triple_columns(include_extra)
+    views: list = []
     ok: list = []
     bad: list = []
     reasons: list = []
@@ -446,10 +466,15 @@ def _doc_batches(rb, tables, dicts, include_extra: bool) -> dict:
             continue
         ok.append(i)
         if want_site:
-            for v in add_site(site):
+            site_id, vvs = add_site(site)
+            for v in vvs:
                 vv_rows.append(i)
                 vv_field.append(v["field"])
                 vv_uri.append(v["uri"])
+            if want_views:
+                views += site_view_rows(
+                    site_id, site.get("mineral_inventory") or [], form_conv
+                )
         if want_triples:
             add_triples(site)
 
@@ -474,6 +499,18 @@ def _doc_batches(rb, tables, dicts, include_extra: bool) -> dict:
         out["triples"] = pa.RecordBatch.from_arrays(
             [pa.array(v, pa.string()) for v in tcols],
             schema=DOC_ARROW_SCHEMAS["triples"],
+        )
+    if views:
+        schema = DOC_ARROW_SCHEMAS["inv_views"]
+        out["inv_views"] = pa.RecordBatch.from_arrays(
+            # from_pandas: a NaN the model computes (an infinite ore value
+            # at zero grade) is stored as null, as the parity reference's
+            # mapInPandas stores it
+            [
+                pa.array([r[f.name] for r in views], type=f.type, from_pandas=True)
+                for f in schema
+            ],
+            schema=schema,
         )
     if bad and "violations" in tables:
         out["violations"] = pa.RecordBatch.from_arrays(
@@ -643,7 +680,7 @@ def explode_inventories(sites_rel: DataFrame, vocab: dict[str, DataFrame]) -> Da
     the validity flag for the grade-tonnage model
     (ref kgrel/mineral_site.py:71-116).  The input of
     ``grade_tonnage.grade_tonnage_view_exploded``, the parity reference
-    for the in-row ``grade_tonnage_view``.
+    for the document pass's ``inv_views`` rows.
 
     Commodity id + material-form conversion resolve via broadcast joins —
     never dict lookups in Python.

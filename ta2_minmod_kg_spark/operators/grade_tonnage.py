@@ -25,10 +25,12 @@ Clean-room reimplementation of
 `/root/reference/minmodkg/grade_tonnage_model.py:225-459` (semantics only;
 the inner algebra is a per-group closure that no SQL aggregate expresses).
 
-Spark execution: ``grade_tonnage_view(sites_rel, vocab)`` runs this model
-in one ``mapInPandas`` pass over sites_rel with no shuffle — every
-inventory of a site sits in that site's one row, so the per-``(site_id,
-commodity)`` grouping is done in the row.  The heavy key for skew is the
+Spark execution: the pipeline's document pass (``extract._doc_batches``)
+runs this model on each valid record it parses, through
+``site_view_rows``, and writes the rows to its bucketed ``inv_views``
+table.  Every inventory of a site sits in that site's one record, so the
+per-``(site_id, commodity)`` grouping is done in the record: the view has
+no stage, read or shuffle of its own.  The heavy key for skew is the
 *dedup group*, handled in operators/dedup.py.
 """
 
@@ -46,6 +48,7 @@ from ..functions.units import (
     UnconvertibleUnitError,
     unit_conversion,
 )
+from ..schemas import INV_VIEW
 
 MR = "https://minmod.isi.edu/resource/"
 
@@ -271,13 +274,11 @@ def total_grade_pct(total: Optional[Est]) -> Optional[float]:
 
 
 # ---------------------------------------------------------------------------
-# Spark surface
+# The view rows
 # ---------------------------------------------------------------------------
 
-GT_VIEW_SCHEMA = (
-    "site_id string, commodity string, contained_metal double, "
-    "tonnage double, grade double, date string"
-)
+_GT_OUT_COLS = INV_VIEW.fieldNames()
+
 
 def _gt_output_row(site_id, commodity, invs: list[dict]) -> dict:
     """One (site, commodity) → one view row.  Invalid-only commodities
@@ -322,6 +323,73 @@ def _gt_output_row(site_id, commodity, invs: list[dict]) -> dict:
     }
 
 
+def _measure_value(measure: dict) -> Optional[float]:
+    """A measure's value as ``sites_rel`` stores it: a double, so an int
+    or a bool becomes a float and NaN becomes null (the Arrow conversion
+    of the site row; the constrained tree accepts all three).  A raw NaN
+    would otherwise count as a value and reach the model."""
+    v = measure.get("value")
+    if v is None:
+        return None
+    v = float(v)
+    return None if math.isnan(v) else v
+
+
+def site_view_rows(
+    site_id: str, inventories: list[dict], form_conv: dict
+) -> list[dict]:
+    """The MineralInventoryView rows of one valid record (ref
+    kgrel/mineral_site.py:71-150): one ``_gt_output_row`` per normalized
+    commodity of ``inventories`` (the record's ``mineral_inventory``
+    dicts).  ``form_conv`` maps a material-form URI to its conversion
+    factor.
+
+    Every inventory of a site is in its one record, so the per-(site,
+    commodity) grouping is done here, in document order (the model's
+    later-wins tie-break is order-sensitive), with
+    ``extract.explode_inventories``' field semantics: the view of
+    ``grade_tonnage_view_exploded`` over it (tests/test_grade_tonnage.py)."""
+    comm2invs: dict[str, list[dict]] = {}
+    for inv in inventories:
+        nu = inv["commodity"].get("normalized_uri")
+        if nu is None:
+            continue
+        cat_raw = inv.get("category") or []
+        ore = inv.get("ore") or {}
+        grade = inv.get("grade") or {}
+        ore_value = _measure_value(ore)
+        ore_unit = (ore.get("unit") or {}).get("normalized_uri")
+        grade_value = _measure_value(grade)
+        grade_unit = (grade.get("unit") or {}).get("normalized_uri")
+        form_uri = (inv.get("material_form") or {}).get("normalized_uri")
+        comm2invs.setdefault(nu.replace(MR, ""), []).append(
+            {
+                "date": inv.get("date"),
+                "zone": inv.get("zone"),
+                "category": [
+                    c["normalized_uri"]
+                    for c in cat_raw
+                    if c.get("normalized_uri") is not None
+                ],
+                "material_form_conversion": form_conv.get(form_uri),
+                "ore_value": ore_value,
+                "ore_unit": ore_unit,
+                "grade_value": grade_value,
+                "grade_unit": grade_unit,
+                # valid_gt checks the RAW category list (unlinked
+                # entries count), matching explode_inventories
+                "valid_gt": (
+                    ore_value is not None
+                    and ore_unit is not None
+                    and grade_value is not None
+                    and grade_unit is not None
+                    and len(cat_raw) > 0
+                ),
+            }
+        )
+    return [_gt_output_row(site_id, c, invs) for c, invs in comm2invs.items()]
+
+
 def _gt_batch_fn(batches):
     """mapInPandas kernel over pre-grouped rows (one row = one group) —
     the kernel of the ``grade_tonnage_view_exploded`` parity reference."""
@@ -340,120 +408,12 @@ def _gt_batch_fn(batches):
     yield from chunked_kernel(per_chunk)(batches)
 
 
-_GT_OUT_COLS = [
-    "site_id",
-    "commodity",
-    "contained_metal",
-    "tonnage",
-    "grade",
-    "date",
-]
-
-_MR_NS = MR  # commodity normalized_uri prefix (== functions.ids.MR_NS)
-
-
-def _gt_fused_batch_fn(form_conv: dict):
-    """Zero-shuffle GT kernel over sites_rel rows (r06).
-
-    Every inventory of a site lives in that site's single ``inventories``
-    array, so the per-(site, commodity) grouping the model needs is free:
-    bucket within the row (dict preserves doc order — the model's
-    later-wins tie-break is order-sensitive), restate explode_inventories'
-    field semantics, run the model.  Byte-equivalent to
-    ``grade_tonnage_view_exploded`` (tests/test_grade_tonnage.py)."""
-
-    def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        cols: dict[str, list] = {c: [] for c in _GT_OUT_COLS}
-        for site_id, inventories in zip(pdf["site_id"], pdf["inventories"]):
-            if inventories is None or len(inventories) == 0:
-                continue
-            comm2invs: dict[str, list[dict]] = {}
-            for inv in inventories:
-                if inv is None:
-                    continue
-                ce = inv.get("commodity")
-                nu = ce.get("normalized_uri") if ce is not None else None
-                if nu is None:
-                    continue
-                commodity = nu.replace(_MR_NS, "")
-                cat_raw = inv.get("category")
-                has_cat = cat_raw is not None and len(cat_raw) > 0
-                cats = [
-                    c["normalized_uri"]
-                    for c in (cat_raw if has_cat else [])
-                    if c is not None and c.get("normalized_uri") is not None
-                ]
-                ore = inv.get("ore") or {}
-                grade = inv.get("grade") or {}
-                ore_value = ore.get("value")
-                ore_unit = (ore.get("unit") or {}).get("normalized_uri")
-                grade_value = grade.get("value")
-                grade_unit = (grade.get("unit") or {}).get("normalized_uri")
-                mf = inv.get("material_form")
-                form_uri = mf.get("normalized_uri") if mf is not None else None
-                comm2invs.setdefault(commodity, []).append(
-                    {
-                        "date": inv.get("date"),
-                        "zone": inv.get("zone"),
-                        "category": cats,
-                        "material_form_conversion": (
-                            form_conv.get(form_uri)
-                            if form_uri is not None
-                            else None
-                        ),
-                        "ore_value": ore_value,
-                        "ore_unit": ore_unit,
-                        "grade_value": grade_value,
-                        "grade_unit": grade_unit,
-                        # valid_gt checks the RAW category list (unlinked
-                        # entries count), matching explode_inventories
-                        "valid_gt": (
-                            ore_value is not None
-                            and ore_unit is not None
-                            and grade_value is not None
-                            and grade_unit is not None
-                            and has_cat
-                        ),
-                    }
-                )
-            for commodity, invs in comm2invs.items():
-                row = _gt_output_row(site_id, commodity, invs)
-                for c in _GT_OUT_COLS:
-                    cols[c].append(row[c])
-        return pd.DataFrame(cols, columns=_GT_OUT_COLS)
-
-    return chunked_kernel(per_chunk)
-
-
-def grade_tonnage_view(sites_rel, vocab):
-    """The MineralInventoryView of ``sites_rel``: one row per (site,
-    commodity) with a normalized commodity; invalid-only commodities yield
-    null views.
-
-    Zero-shuffle: ``_gt_fused_batch_fn`` reads each site's inventories in
-    place, so no explode→groupBy(site, commodity) round trip regroups
-    inventories that already sit together in one row (guide §2.4, remove
-    shuffles outright).  The material-form conversion vocabulary collapses
-    to a closure dict, like the document pass's crs/source-score dicts
-    (``extract._vocab_dicts``).
-    """
-    form_conv = {
-        MR + r["minmod_id"]: (
-            float(r["conversion"]) if r["conversion"] is not None else None
-        )
-        for r in vocab["commodity_form"].collect()
-    }
-    return sites_rel.select("site_id", "inventories").mapInPandas(
-        _gt_fused_batch_fn(form_conv), schema=GT_VIEW_SCHEMA
-    )
-
-
 def grade_tonnage_view_exploded(inv_rows):
-    """Parity reference for ``grade_tonnage_view`` over
-    ``extract.explode_inventories`` rows (one row per inventory whose
-    commodity is normalized; ``valid_gt`` marks rows with complete
-    ore/grade/category data).  No production caller: the tests pin the
-    in-row kernel against it.
+    """Parity reference for the document pass's ``inv_views`` rows
+    (``site_view_rows``) over ``extract.explode_inventories`` rows (one
+    row per inventory whose commodity is normalized; ``valid_gt`` marks
+    rows with complete ore/grade/category data).  No production caller:
+    the tests pin the pass's rows against it.
 
     One shuffle on (site_id, commodity) via a JVM ``collect_list``
     aggregate (map-side partials), then an Arrow batch kernel.
@@ -483,4 +443,4 @@ def grade_tonnage_view_exploded(inv_rows):
             )
         ).alias("invs")
     )
-    return grouped.mapInPandas(_gt_batch_fn, schema=GT_VIEW_SCHEMA)
+    return grouped.mapInPandas(_gt_batch_fn, schema=INV_VIEW)

@@ -2,7 +2,7 @@
 
 Stages (each materialized as parquet under ``workdir``):
 
-  ingest → sites_rel + triples → inv_views → membership → dedup_sites +
+  ingest → sites_rel + triples + inv_views → membership → dedup_sites +
   dedup_inventories → entity_triples, sameas_triples
 
 Checkpoint & lineage model — the Spark analog of the reference's sqlite
@@ -11,11 +11,11 @@ content-hash memo (`etl/mineral_site.py:400-408`):
 - every row carries ``bucket = pmod(xxhash64(repo, path), n_buckets)`` —
   the unit of incremental recompute and the output partition key;
 - ONE document pass (``extract.doc_pass``) parses each document once and
-  writes ``sites_rel``, ``violations``, ``vocab_violations`` and
-  ``triples`` with pyarrow.  Its input is hash-clustered on ``bucket``
-  (``cluster_by_bucket``) and sorted by it within each task, so each
-  bucket's rows meet in one task and every one of those tables holds one
-  file (one row group) per bucket;
+  writes ``sites_rel``, ``violations``, ``vocab_violations``, ``triples``
+  and the grade-tonnage view ``inv_views`` with pyarrow.  Its input is
+  hash-clustered on ``bucket`` (``cluster_by_bucket``) and sorted by it
+  within each task, so each bucket's rows meet in one task and every one
+  of those tables holds one file (one row group) per bucket;
 - the pass commits by manifest: its tasks write into a per-run staging
   directory and report each file they wrote; Spark returns results only
   from successful task attempts, so the driver moves exactly the reported
@@ -24,8 +24,10 @@ content-hash memo (`etl/mineral_site.py:400-408`):
 - after each stage we record one lineage row **per bucket**:
   (stage, bucket, content_hash, n_rows, wall_ms, code_version, run_id) —
   the per-partition lineage + metrics the north rule requires.  The pass
-  records two stages, ``sites_rel`` and ``triples``; it is skipped only
-  when both match, and otherwise rewrites all four tables;
+  records three stages, ``sites_rel``, ``triples`` and ``inv_views``; it
+  is skipped only when all three match, and otherwise rewrites all five
+  tables.  Every lineage file also records its table's schema, so a
+  skipped stage is read back without a schema-inference job;
 - a stage is **skipped on resume** when its ``_LINEAGE`` fingerprint
   (hash over per-bucket hashes + code version) matches the current input —
   kill the job at any point and re-submit: completed stages are read back
@@ -56,11 +58,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-# v5: sites_rel carries bucket from its own ingest row — a path ingested
-# at two commits no longer multiplies through a (repo, path) re-join, so a
-# resumed workdir must not reuse v4 outputs
-CODE_VERSION = "v5"
+# v6: inv_views is written by the document pass, one bucket directory per
+# bucket, where v5 wrote one unpartitioned table — an incremental run
+# over a v5 workdir would patch bucket directories into that table.  v6
+# lineage files also record each table's schema, which the skip path reads
+CODE_VERSION = "v6"
 N_BUCKETS_DEFAULT = 256
 
 
@@ -201,6 +205,7 @@ class Lineage:
         per_bucket: list[dict],
         wall_ms: float,
         input_fingerprint: str | None,
+        schema: StructType,
     ) -> None:
         meta = {
             "stage": stage,
@@ -213,6 +218,7 @@ class Lineage:
             "n_rows": sum(r["n_rows"] for r in per_bucket),
             "n_buckets": len(per_bucket),
             "per_bucket": per_bucket,
+            "schema": schema.jsonValue(),
         }
         with open(self._meta_path(stage), "w") as f:
             json.dump(meta, f)
@@ -336,20 +342,25 @@ class KGPipeline:
         )
         t0 = time.time()
         jit0, gc0 = _jvm_jit_gc_ms(self.spark)
+        written = None
         if partitioned:
             build(changed_buckets if incremental else None)
         else:
-            build().write.mode("overwrite").parquet(self.lineage.path(stage))
+            df = build()
+            df.write.mode("overwrite").parquet(self.lineage.path(stage))
+            written = df.schema
         # the build's time is its stage's; each further recorded stage's
         # entry covers only its own read-back and hashing
         for s in names:
-            out = self._read(s)
+            out = self._read(s, written)
             # an unpartitioned stage is one logical bucket: a whole-table hash
             hashed = out if partitioned else out.withColumn("bucket", F.lit(0))
             pb = [r.asDict() for r in bucket_hashes(hashed).collect()]
             t1 = time.time()
             jit1, gc1 = _jvm_jit_gc_ms(self.spark)
-            self.lineage.record(s, pb, (t1 - t0) * 1000, input_fingerprint)
+            self.lineage.record(
+                s, pb, (t1 - t0) * 1000, input_fingerprint, out.schema
+            )
             self.metrics[s] = {
                 "skipped": False,
                 "incremental_buckets": len(changed_buckets) if incremental else None,
@@ -399,25 +410,26 @@ class KGPipeline:
         for table in DOC_TABLES:
             fs.create(Path(self.lineage.path(table), "_SUCCESS"), True).close()
 
-    def _read(self, stage: str) -> DataFrame:
-        """A stage's table, read back from the workdir.  The document
-        pass's tables (``extract.DOC_TABLES``) are read with their declared
-        file schemas plus ``bucket``: no schema-inference job, and a
-        quarantine table of a clean corpus holds no file, only
-        ``_SUCCESS``, from which Spark could infer nothing."""
-        from pyspark.sql.types import IntegerType, StructField, StructType
-
+    def _read(self, stage: str, schema: StructType | None = None) -> DataFrame:
+        """A stage's table, read back from the workdir with a known schema,
+        so no schema-inference job runs: ``schema`` when given (the frame
+        an unpartitioned stage just wrote), else the document pass's
+        declared file schema plus ``bucket`` for its tables
+        (``extract.DOC_TABLES`` — a quarantine table of a clean corpus
+        holds no file, only ``_SUCCESS``, from which Spark could infer
+        nothing), else the schema the stage's lineage recorded."""
         from ..operators.extract import DOC_FILE_SCHEMAS
 
-        reader = self.spark.read
-        if stage in DOC_FILE_SCHEMAS:
-            reader = reader.schema(
+        if schema is None:
+            schema = (
                 StructType(
                     DOC_FILE_SCHEMAS[stage].fields
                     + [StructField("bucket", IntegerType())]
                 )
+                if stage in DOC_FILE_SCHEMAS
+                else StructType.fromJson(self.lineage.read_meta(stage)["schema"])
             )
-        return reader.parquet(self.lineage.path(stage))
+        return self.spark.read.schema(schema).parquet(self.lineage.path(stage))
 
     # -- full run ---------------------------------------------------------------
 
@@ -431,14 +443,14 @@ class KGPipeline:
         """Build (or resume) every stage; return each recorded stage's
         table and the two quarantine tables, ``violations`` and
         ``vocab_violations``."""
-        from ..operators import canonicalize, dedup, extract, grade_tonnage
+        from ..operators import canonicalize, dedup, extract
 
         ingest = with_bucket(ingest, self.n_buckets)
         ingest_pb = [r.asDict() for r in bucket_hashes(ingest).collect()]
         ingest_fp = self.lineage.fingerprint(ingest_pb)
         # diff against the previous run BEFORE overwriting the ingest lineage
         changed = self.lineage.changed_buckets("ingest", ingest_pb)
-        self.lineage.record("ingest", ingest_pb, 0.0, None)
+        self.lineage.record("ingest", ingest_pb, 0.0, None, ingest.schema)
 
         def build_docs(buckets=None):
             src = (
@@ -447,11 +459,11 @@ class KGPipeline:
                 else ingest
             )
             # ONE pass per document writes sites_rel, violations,
-            # vocab_violations and triples; its input meets one task per
-            # bucket, in bucket order, so the pass holds one bucket's
-            # output at a time and writes one file per (table, bucket).
-            # Triples are bucketed like their ingest rows, so a dirty
-            # ingest bucket maps 1:1 to a dirty partition of every table.
+            # vocab_violations, triples and inv_views; its input meets one
+            # task per bucket, in bucket order, so the pass holds one
+            # bucket's output at a time and writes one file per (table,
+            # bucket).  Every table is bucketed like its ingest rows, so a
+            # dirty ingest bucket maps 1:1 to a dirty partition of each.
             docs = extract.with_lineage(
                 cluster_by_bucket(src, self.n_buckets).sortWithinPartitions("bucket")
             )
@@ -473,18 +485,14 @@ class KGPipeline:
             ingest_fp,
             partitioned=True,
             changed_buckets=changed,
-            writes=("triples",),
+            writes=("triples", "inv_views"),
         )
         # P5/P6 rejects and P7 out-of-vocabulary URIs (validators.py:
         # 354-419) + P3 locations with a CRS the engine cannot reproject
         violations = self._read("violations")
         vocab_violations = self._read("vocab_violations")
 
-        inv_views = self._run_stage(
-            "inv_views",
-            lambda: grade_tonnage.grade_tonnage_view(sites, vocab),
-            ingest_fp,
-        )
+        inv_views = self.tables["inv_views"]
 
         membership = self._run_stage(
             "membership",

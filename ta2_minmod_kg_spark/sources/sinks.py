@@ -5,10 +5,6 @@
                        ``"s p o . "`` line format, etl/mineral_site.py:479-486).
                        Distributed by construction: each task writes its
                        own shard; no driver collect.
-- ``write_tables``   — the relational outputs as partitioned parquet
-                       (the Iceberg-shaped serving copy; parquet here since
-                       the sandbox has no catalog — partition layout and
-                       dynamic-overwrite semantics are identical).
 """
 
 from __future__ import annotations
@@ -38,14 +34,6 @@ def write_ttl(triples: DataFrame, path: str, header: bool = True) -> None:
 
         with open(os.path.join(path, "_prefixes.ttl"), "w") as f:
             f.write(PREFIX_PART)
-
-
-def write_tables(outputs: dict[str, DataFrame], base: str) -> None:
-    for name, df in outputs.items():
-        writer = df.write.mode("overwrite")
-        if "bucket" in df.columns:
-            writer = writer.partitionBy("bucket")
-        writer.parquet(f"{base}/{name}")
 
 
 def write_bucketed(

@@ -22,7 +22,7 @@ import pandas as pd
 import pytest
 
 from ta2_minmod_kg_spark.functions.ids import get_username, make_site_id
-from ta2_minmod_kg_spark.operators import canonicalize, dedup, extract, grade_tonnage
+from ta2_minmod_kg_spark.operators import canonicalize, dedup, extract
 from ta2_minmod_kg_spark.plans.export import (
     SECTIONS,
     _inventory,
@@ -65,16 +65,16 @@ def exported(spark):
     ]
     ingest = spark.createDataFrame(pd.DataFrame(rows))
     vdfs = vocab.vocab_dataframes(spark)
-    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs).persist()
+    docs = extract.parse_sites(ingest)
+    sites = extract.normalize_sites(docs, vdfs).persist()
     membership = canonicalize.build_membership(sites, None, None)
     swd = sites.drop("dedup_site_id").join(membership, "site_id").persist()
+    gt = extract.doc_rows(docs, vdfs, "inv_views")
     out = {
         "sites_rel": swd,
         "dedup_sites": dedup.merge_dedup_sites(swd),
-        "inv_views": grade_tonnage.grade_tonnage_view(sites, vdfs),
-        "dedup_inventories": dedup.select_dedup_inventories(
-            swd, grade_tonnage.grade_tonnage_view(sites, vdfs)
-        ),
+        "inv_views": gt,
+        "dedup_inventories": dedup.select_dedup_inventories(swd, gt),
     }
     doc = dedup_sites_json(out)
     return recs, doc, out
@@ -181,12 +181,7 @@ def test_lz4_frame_codec_roundtrip():
 
 def test_write_read_dedup_sites_json_both_layouts(exported, tmp_path, spark):
     """write .json and .json.lz4; read back both; identical documents."""
-    from ta2_minmod_kg_spark.operators import (
-        canonicalize,
-        dedup,
-        extract,
-        grade_tonnage,
-    )
+    from ta2_minmod_kg_spark.operators import canonicalize, dedup, extract
     from ta2_minmod_kg_spark.plans.export import (
         read_dedup_sites_json,
         write_dedup_sites_json,
@@ -195,10 +190,11 @@ def test_write_read_dedup_sites_json_both_layouts(exported, tmp_path, spark):
 
     ingest = synthetic.synthesize_ingest(spark, 30, partitions=2)
     vdfs = vocab.vocab_dataframes(spark)
-    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs).persist()
+    docs = extract.parse_sites(ingest)
+    sites = extract.normalize_sites(docs, vdfs).persist()
     membership = canonicalize.build_membership(sites, None, None)
     swd = sites.drop("dedup_site_id").join(membership, "site_id").persist()
-    gt = grade_tonnage.grade_tonnage_view(sites, vdfs)
+    gt = extract.doc_rows(docs, vdfs, "inv_views")
     out = {
         "sites_rel": swd,
         "dedup_sites": dedup.merge_dedup_sites(swd),

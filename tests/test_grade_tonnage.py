@@ -217,32 +217,131 @@ def test_view_doc_order_tiebreak(spark):
         assert out["contained_metal"].iloc[0] == 0.1
 
 
+def _planted_view_records() -> list[dict]:
+    """Valid records whose inventories exercise the view's input mapping.
+    Values the site row's Arrow conversion changes: NaN (null), ``true``
+    (1.0), ints and numeric strings.  A NaN inventory is listed FIRST in
+    its category, so a NaN fed to the model wins the best-estimate scan
+    and nulls the site's view.  Also: unlinked and empty categories, an
+    inventory without a commodity ``normalized_uri``, a material form,
+    several dates and zones per commodity, an invalid-only commodity and
+    an infinite ore value at zero grade (a NaN the model computes)."""
+    from ta2_minmod_kg_spark.sources import synthetic
+    from ta2_minmod_kg_spark.sources.vocab import material_form_qid
+
+    def ce(uri=None, observed=None):
+        out = {"source": "planted", "confidence": 1.0}
+        if observed is not None:
+            out["observed_name"] = observed
+        if uri is not None:
+            out["normalized_uri"] = MR + uri
+        return out
+
+    def inv(ore, grade, cats=("Indicated",), commodity="Q1001", date="2020-01",
+            zone=None, ore_unit="Q202", grade_unit="Q201", form=None):
+        out = {
+            "commodity": ce(commodity, "Lithium" if commodity else "Unobtainium"),
+            "reference": {"document": {"uri": "https://repository.example.org/docs/p"}},
+            "category": [ce(c) if c else ce(None, "unlinked") for c in cats],
+            "ore": {"value": ore, "unit": ce(ore_unit)},
+            "grade": {"value": grade, "unit": ce(grade_unit)},
+        }
+        if date is not None:
+            out["date"] = date
+        if zone is not None:
+            out["zone"] = zone
+        if form is not None:
+            out["material_form"] = ce(form)
+        return out
+
+    nan = float("nan")
+    inventories = [
+        [inv(nan, 1.0), inv(10.0, 1.0)],
+        [inv(10.0, nan), inv(10.0, 1.0)],
+        [inv("NaN", 1.0), inv(10.0, 1.0)],
+        [
+            inv(nan, 2.0, cats=("Inferred",)),
+            inv(5.0, 1.0),
+            inv(3.0, 1.0, cats=("Measured",)),
+        ],
+        [inv(True, 2), inv(7, True, cats=("Proven",))],
+        [inv("12.5", "0.75"), inv("3", "1e1", cats=("Probable",))],
+        [inv(4, 1, ore_unit="Q200", grade_unit="Q203")],
+        [inv(10.0, 1.0, cats=(None,)), inv(10.0, 1.0, cats=(None, "Inferred"))],
+        [inv(10.0, 1.0, cats=()), inv(2.0, 1.0)],
+        [inv(10.0, 1.0, commodity=None), inv(2.0, 1.0, commodity="Q1002")],
+        [inv(10.0, 1.0, form=material_form_qid(0)), inv(10.0, 1.0, form="Q1699")],
+        [inv(nan, 1.0, commodity="Q1003"), inv(1.0, 1.0, cats=())],
+        [inv(float("inf"), 0.0)],
+        [
+            inv(10.0, 1.0, date=None),
+            inv(20.0, 1.0, date="2019", zone="A"),
+            inv(30.0, 1.0, date="2019", zone="B"),
+            inv(nan, 1.0, date="2019", zone="B"),
+            inv(5.0, 2.0, date="2021-05", zone="A"),
+            inv(1.0, 1.0, cats=("Extracted",), date="2018"),
+            inv(2.0, 1.0, cats=("CumulativeExtracted",), date="2017",
+                commodity="Q1002"),
+            inv(9.0, 1.0, cats=("OriginalResource",), date="2021-05", zone="A"),
+        ],
+    ]
+    out = []
+    for k, invs in enumerate(inventories):
+        rec = synthetic.make_record(k, 40)
+        rec["record_id"] = f"planted-view-{k}"
+        rec["mineral_inventory"] = invs
+        out.append(rec)
+    return out
+
+
 def test_fused_gt_view_matches_exploded_path(spark):
-    """grade_tonnage_view computes zero-shuffle from sites_rel.  The in-row
-    kernel must be value-identical (incl. NULL rows for invalid-only
-    commodities) to the explode→groupBy parity reference on the full
-    synthetic corpus."""
-    import pandas as pd
+    """The document pass's ``inv_views`` rows (``site_view_rows`` on each
+    parsed record) equal the explode→groupBy parity reference over
+    ``sites_rel``, whose Arrow conversion made every measure value a
+    double (NaN a null), incl. NULL rows for invalid-only commodities and
+    null (not NaN) for a NaN the model computes: on the synthetic corpus
+    plus the planted records."""
+    import json
+
+    from pyspark.sql import functions as F
 
     from ta2_minmod_kg_spark.operators import extract
     from ta2_minmod_kg_spark.operators.grade_tonnage import (
-        grade_tonnage_view,
         grade_tonnage_view_exploded,
     )
     from ta2_minmod_kg_spark.sources import synthetic, vocab
 
-    ingest = synthetic.synthesize_ingest(spark, 400, partitions=8)
+    planted = _planted_view_records()
+    extra = spark.createDataFrame(
+        [
+            ("planted", f"data/planted_{k}.json", "c", "json", json.dumps(rec))
+            for k, rec in enumerate(planted)
+        ],
+        "repo string, path string, commit string, lang string, content string",
+    )
+    ingest = synthetic.synthesize_ingest(spark, 400, partitions=8).unionByName(extra)
     vdfs = vocab.vocab_dataframes(spark)
-    sites = extract.normalize_sites(extract.parse_sites(ingest), vdfs).persist()
+    docs = extract.with_lineage(ingest)
+    sites = extract.normalize_sites(docs, vdfs).persist()
+    site_of = {
+        r["record_id"]: r["site_id"]
+        for r in sites.filter(F.col("repo") == "planted").collect()
+    }
+    assert len(site_of) == len(planted), "a planted record was rejected"
 
-    fused = grade_tonnage_view(sites, vdfs).toPandas()
+    def rows(collected):
+        # repr keeps null (None) and NaN apart, and compares floats exactly
+        return sorted(repr(tuple(r)) for r in collected)
+
+    fused = extract.doc_rows(docs, vdfs, "inv_views").collect()
     unfused = grade_tonnage_view_exploded(
         extract.explode_inventories(sites, vdfs)
-    ).toPandas()
-
-    key = ["site_id", "commodity"]
-    fused = fused.sort_values(key).reset_index(drop=True)
-    unfused = unfused.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(fused, unfused)
-    assert len(fused) > 0
+    ).collect()
+    assert rows(fused) == rows(unfused)
+    assert len(fused) > len(planted)
+    # the NaN-first records keep their valid inventory's figure
+    view = {(r["site_id"], r["commodity"]): r for r in fused}
+    for k in (0, 1, 2):
+        got = view[(site_of[f"planted-view-{k}"], "Q1001")]
+        assert (got["tonnage"], got["contained_metal"]) == (10.0, 0.1), got
     sites.unpersist()

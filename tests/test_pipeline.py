@@ -74,12 +74,16 @@ def test_sha256_invariant(pipeline_out, spark):
 
 
 def test_resume_skips_completed_stages(pipeline_out, spark):
-    wd, _, _, (ingest, vdfs, edges, curated) = pipeline_out
+    wd, _, out, (ingest, vdfs, edges, curated) = pipeline_out
     pipe2 = KGPipeline(spark, wd, n_buckets=8)
     out2 = pipe2.run(ingest, vdfs, edges, curated)
     assert all(m["skipped"] for m in pipe2.metrics.values()), pipe2.metrics
     _assert_jvm_times(pipe2.metrics)
     assert out2["triples"].count() > 0
+    # the skip path reads each table with the schema the run path returned
+    assert {t: df.schema for t, df in out2.items()} == {
+        t: df.schema for t, df in out.items()
+    }
 
 
 def test_changed_buckets(pipeline_out, spark):
@@ -380,7 +384,11 @@ def test_vocab_fingerprint_matches_per_table_formula(spark):
     assert lineage.vocab_fingerprint(vdfs) == vh.hexdigest()
 
 
-BUCKETED_TABLES = ("sites_rel", "violations", "vocab_violations", "triples")
+BUCKETED_TABLES = (
+    "sites_rel", "violations", "vocab_violations", "triples", "inv_views"
+)
+# the recorded stages the document pass writes
+PASS_STAGES = ("sites_rel", "triples", "inv_views")
 
 
 def _files_per_bucket(wd: str, table: str) -> dict[str, int]:
@@ -425,7 +433,7 @@ def test_one_file_per_bucket_full_and_incremental(spark, tmp_path):
             assert max(per_bucket.values()) == 1, (table, per_bucket)
         with open(os.path.join(wd, "metrics.json")) as f:
             metrics = json.load(f)
-        for stage in ("sites_rel", "triples"):
+        for stage in PASS_STAGES:
             m = metrics[stage]
             assert m["incremental_buckets"] == expect_incremental, (stage, m)
             assert 0 < m["n_files"] <= n_buckets, (stage, m)
@@ -447,6 +455,75 @@ def test_one_file_per_bucket_full_and_incremental(spark, tmp_path):
     pipe = KGPipeline(spark, wd, n_buckets=n_buckets)
     pipe.run(edited, vdfs)
     check(pipe, 1)
+
+
+def test_one_document_edit_rewrites_one_inv_views_bucket(spark, tmp_path):
+    """The grade-tonnage view is rebuilt per bucket with the document
+    pass: a one-document edit rewrites only that document's bucket of
+    ``inv_views`` (every other bucket keeps its file), the edit reaches
+    the view, and the table's rows equal a fresh full build's."""
+    n_buckets = 4
+    recs = [synthetic.make_record(i, 40) for i in range(40)]
+    schema = "repo string, path string, commit string, lang string, content string"
+
+    def ingest_of(records):
+        return spark.createDataFrame(
+            [
+                ("r", f"data/s{i}.json", "c1", "json", json.dumps(r))
+                for i, r in enumerate(records)
+            ],
+            schema,
+        ).repartition(3)
+
+    edited_recs = json.loads(json.dumps(recs))
+    inv = edited_recs[1]["mineral_inventory"][0]
+
+    def ce(qid):
+        return {
+            "source": "s",
+            "confidence": 1.0,
+            "normalized_uri": "https://minmod.isi.edu/resource/" + qid,
+        }
+
+    inv["commodity"] = ce("Q1001")
+    inv["category"] = [ce("Indicated")]
+    inv["ore"] = {"value": 12345.0, "unit": ce("Q202")}
+    inv["grade"] = {"value": 1.0, "unit": ce("Q201")}
+    edited_recs[1]["mineral_inventory"] = [inv]
+    vdfs = vocab.vocab_dataframes(spark)
+    wd = str(tmp_path / "wd_edit")
+
+    def files(table):
+        root = os.path.join(wd, table)
+        return {
+            (d, f, os.stat(os.path.join(root, d, f)).st_mtime_ns)
+            for d in os.listdir(root)
+            if d.startswith("bucket=")
+            for f in os.listdir(os.path.join(root, d))
+        }
+
+    KGPipeline(spark, wd, n_buckets=n_buckets).run(ingest_of(recs), vdfs)
+    before = files("inv_views")
+    assert len({d for d, _, _ in before}) == n_buckets
+
+    edited = ingest_of(edited_recs)
+    pipe = KGPipeline(spark, wd, n_buckets=n_buckets)
+    out = pipe.run(edited, vdfs)
+    assert pipe.metrics["inv_views"]["incremental_buckets"] == 1, pipe.metrics
+    dirty = with_bucket(edited, n_buckets).filter(F.col("path") == "data/s1.json")
+    dirty = f"bucket={dirty.first()['bucket']}"
+    after = files("inv_views")
+    assert {x for x in before if x[0] != dirty} == {x for x in after if x[0] != dirty}
+    assert {x for x in before if x[0] == dirty} != {x for x in after if x[0] == dirty}
+
+    site = out["sites_rel"].filter(F.col("path") == "data/s1.json").first()["site_id"]
+    view = out["inv_views"].filter(F.col("site_id") == site).collect()
+    assert [(r["commodity"], r["tonnage"]) for r in view] == [("Q1001", 12345.0)], view
+
+    fresh = KGPipeline(spark, str(tmp_path / "wd_fresh"), n_buckets=n_buckets).run(
+        edited, vdfs
+    )
+    assert _sorted_rows(out["inv_views"]) == _sorted_rows(fresh["inv_views"])
 
 
 def test_jvm_times_never_iterate_a_java_list(spark, monkeypatch):
@@ -570,7 +647,7 @@ def test_failed_attempt_files_never_reach_the_tables(spark, tmp_path):
         want = spark.read.parquet(os.path.join(clean, table))
         assert got.schema == want.schema, table
         assert _sorted_rows(got) == _sorted_rows(want), table
-    for stage in ("sites_rel", "triples"):
+    for stage in PASS_STAGES:
         fp = [
             json.load(open(os.path.join(wd, f"_LINEAGE_{stage}.json")))[
                 "output_fingerprint"

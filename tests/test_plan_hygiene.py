@@ -44,8 +44,9 @@ def test_sites_rel_and_gt_view_plan_shape(spark, tmp_path):
     """The fused kernels are the only path, so pin their plans: validate +
     normalize is ONE Python pass (one MapInArrow running the document
     pass's batch builder; no MapInPandas, no separate validation UDF, no
-    JVM JSON parse), and the GT view regroups nothing (no Exchange)."""
-    from ta2_minmod_kg_spark.operators import extract, grade_tonnage
+    JVM JSON parse), and so is the GT view, which regroups nothing (no
+    Exchange)."""
+    from ta2_minmod_kg_spark.operators import extract
     from ta2_minmod_kg_spark.sources import synthetic, vocab
 
     # read back from parquet, as the pipeline does: the synthetic
@@ -62,8 +63,10 @@ def test_sites_rel_and_gt_view_plan_shape(spark, tmp_path):
     assert "ArrowEvalPython" not in plan, plan
     assert "from_json" not in plan, plan
 
-    gt_plan = _plan(grade_tonnage.grade_tonnage_view(sites, vdfs))
+    gt_plan = _plan(extract.doc_rows(extract.with_lineage(ingest), vdfs, "inv_views"))
+    assert gt_plan.count("MapInArrow") == 1, gt_plan
     assert "Exchange" not in gt_plan, gt_plan
+    assert "MapInPandas" not in gt_plan, gt_plan
 
 
 def _doc_pass_plan(spark, tmp_path, monkeypatch, n_buckets: int):

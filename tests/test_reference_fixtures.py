@@ -18,7 +18,7 @@ import pytest
 
 from ta2_minmod_kg_spark.functions.ids import get_username, make_site_id
 from ta2_minmod_kg_spark.functions.rdf import site_to_triples
-from ta2_minmod_kg_spark.operators import canonicalize, dedup, extract, grade_tonnage
+from ta2_minmod_kg_spark.operators import canonicalize, dedup, extract
 from ta2_minmod_kg_spark.sources import vocab
 
 FIXTURE_DIR = Path("/root/reference/tests/resources/kgdata/mineral-sites/json")
@@ -85,7 +85,7 @@ def test_engine_end_to_end_on_fixtures(spark):
     assert (pdf["modified_at"] > 1_500_000_000 * 10**9).all()  # ns since epoch
 
     # real fixture records carry real commodity/category URIs → GT views
-    gt = grade_tonnage.grade_tonnage_view(sites, vdfs).toPandas()
+    gt = extract.doc_rows(parsed, vdfs, "inv_views").toPandas()
     assert len(gt) > 0
     with_gt = gt[gt["contained_metal"].notna()]
     assert (with_gt["contained_metal"] >= 0).all()

@@ -22,7 +22,7 @@ SCANNED = [
 OWNER = ROOT / "ta2_minmod_kg_spark" / "plans" / "pipeline.py"
 BUILD_CALL = re.compile(
     r"\b(build_membership|merge_dedup_sites|select_dedup_inventories"
-    r"|grade_tonnage_view|normalize_sites|doc_rows|doc_pass|write_doc_tables)\("
+    r"|normalize_sites|doc_rows|doc_pass|write_doc_tables)\("
 )
 
 
@@ -32,7 +32,6 @@ def test_only_the_pipeline_chains_the_build():
         "build_membership",
         "merge_dedup_sites",
         "select_dedup_inventories",
-        "grade_tonnage_view",
         "write_doc_tables",
     }
     offenders = []

@@ -330,7 +330,7 @@ def _sorted_rows(df) -> list[str]:
 
 
 def test_document_pass_matches_the_frame_operators(spark, tmp_path):
-    """On the planted corpus, the four tables the pipeline's document pass
+    """On the planted corpus, the five tables the pipeline's document pass
     writes with pyarrow read back with the schemas and sorted rows of the
     frame operator's output (``doc_rows``, run per bucket) written by
     Spark's partitioned writer, and no file carries an ``ARROW:schema``
