@@ -291,21 +291,6 @@ _OUT_COLS = [
 ]
 
 
-def _pdf_rows(pdf: pd.DataFrame) -> list[dict]:
-    rows = pdf.to_dict("records")
-    for r in rows:
-        for k, v in r.items():
-            if isinstance(v, float) and pd.isna(v):
-                r[k] = None
-    return rows
-
-
-def _dedup_attrs_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Test-facing wrapper: one group as a pandas frame."""
-    rows = _pdf_rows(pdf)
-    return pd.DataFrame([merge_group(rows[0]["dedup_site_id"], rows)])
-
-
 def _merge_per_chunk(pdf):
     # column-wise accumulation (r06): same values, no per-row-dict frame
     # inference in pandas
@@ -470,13 +455,6 @@ _INV_OUT_COLS = [
     "grade",
     "date",
 ]
-
-
-def _select_inv_fn(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Test-facing wrapper: one group as a pandas frame."""
-    rows = _pdf_rows(pdf)
-    out = select_inventories_group(rows[0]["dedup_site_id"], rows)
-    return pd.DataFrame(out, columns=_INV_OUT_COLS)
 
 
 def _select_inv_per_chunk(pdf):

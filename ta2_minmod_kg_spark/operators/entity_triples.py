@@ -8,260 +8,241 @@ category) as an RDF subject with labels/aliases to ``entities.ttl``
 and `minmodkg/models/kg/data_source.py`).  Without these, a triple-store
 user has no labels to join against.
 
-Spark-first: all nine tables are broadcast-sized dims, but emission is
-still pure column expressions (concat/explode/union) — no collect, no
-Python row loops — so the same operator handles a million-entity
-vocabulary unchanged.
+The vocabulary stays on the driver: the reference itself holds it in
+in-memory dicts, the document pass already ships it to its tasks as
+dicts (``extract._vocab_dicts``), and at a few hundred rows any Spark
+plan over it is pure fixed cost.  So emission is a Python loop over the
+build's one collected snapshot (``sources.vocab.vocab_rows``), and the
+result goes back to Spark as an Arrow ``LocalRelation``: building,
+collecting or scanning it runs no Spark job.
 
-Literal formats follow rdflib N3 semantics (plain quoted xsd:string,
+The rows are the ones the earlier Spark column emitter produced, kept
+byte for byte (tests/golden_entity_triples.json): doubles render as the
+session JVM's ``Double.toString`` (Spark's ``cast(double as string)``),
+booleans follow Spark's casts, trims strip only U+0020.  Literal formats
+follow rdflib N3 semantics (plain quoted xsd:string,
 ``"…"^^xsd:boolean`` / ``^^xsd:decimal`` otherwise), byte-checked against
 the reference's executed ``to_triples`` in tests/test_entity_triples.py.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 MR_NS = "https://minmod.isi.edu/resource/"
 
-_ESC = [("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"), ("\r", "\\r"), ("\t", "\\t")]
+ENTITY_TRIPLE_SCHEMA = StructType(
+    [StructField(c, StringType()) for c in ("subj", "pred", "obj")]
+)
+
+_ESC = str.maketrans(
+    {"\\": "\\\\", '"': '\\"', "\n": "\\n", "\r": "\\r", "\t": "\\t"}
+)
+
+# Spark's string -> boolean cast: trim bytes <= U+0020, then lower-case
+_CAST_WS = "".join(map(chr, range(0x21)))
+_TRUE = frozenset(("t", "true", "y", "yes", "1"))
+_FALSE = frozenset(("f", "false", "n", "no", "0"))
 
 
-def _lit(col):
-    """Escape + quote a string column as an N3 plain literal."""
-    for a, b in _ESC:
-        col = F.replace(col, F.lit(a), F.lit(b))
-    return F.concat(F.lit('"'), col, F.lit('"'))
+def _lit(s: str | None) -> str | None:
+    """Escape + quote a string as an N3 plain literal."""
+    return None if s is None else '"' + s.translate(_ESC) + '"'
 
 
-def _subj_mr(id_col):
-    return F.concat(F.lit("mr:"), id_col)
+def _aliases(s: str | None) -> list[str] | None:
+    """'|'-separated aliases → trimmed list; blank → empty list
+    (ref kgrel_entity.py:160-166); null stays null."""
+    if s is None:
+        return None
+    if s.strip(" ") == "":
+        return []
+    return [a.strip(" ") for a in s.split("|")]
 
 
-def _triple_rows(df: DataFrame, subj, pairs) -> DataFrame:
-    """(subj expr, [(pred, obj expr or None-able)]) → exploded triple rows."""
-    entries = F.array(
-        *[
-            F.when(
-                obj.isNotNull(), F.struct(F.lit(pred).alias("pred"), obj.alias("obj"))
-            )
-            for pred, obj in pairs
-        ]
-    )
-    return (
-        df.select(subj.alias("subj"), F.explode(entries).alias("e"))
-        .filter(F.col("e").isNotNull())
-        .select("subj", F.col("e.pred").alias("pred"), F.col("e.obj").alias("obj"))
-    )
+def _bool_lit(v) -> str:
+    """``"true"``/``"false"^^xsd:boolean`` by Spark's cast to boolean;
+    null renders false.  A string Spark cannot cast raises, as the cast
+    does under ANSI mode (Spark's default)."""
+    if isinstance(v, str):
+        t = v.strip(_CAST_WS).lower()
+        if t not in _TRUE and t not in _FALSE:
+            raise ValueError(f"cannot cast {v!r} to boolean")
+        v = t in _TRUE
+    return '"true"^^xsd:boolean' if v else '"false"^^xsd:boolean'
 
 
-def _alias_triples(df: DataFrame, subj, alias_array) -> DataFrame:
-    return df.select(
-        subj.alias("subj"),
-        F.lit("mo:aliases").alias("pred"),
-        F.explode(alias_array).alias("a"),
-    ).select("subj", "pred", _lit(F.col("a")).alias("obj"))
+def _decimal_lit(v, dtoa) -> str | None:
+    """``"…"^^xsd:decimal``; null and NaN emit nothing (the reference's
+    ``Optional[float]`` emits no literal for an absent value).  ``dtoa``
+    renders a double as Spark's ``cast(double as string)`` does."""
+    if v is None or (isinstance(v, float) and math.isnan(v)):
+        return None
+    return '"' + (dtoa(v) if isinstance(v, float) else str(v)) + '"^^xsd:decimal'
 
 
-def _split_aliases(col):
-    """'|'-separated aliases → trimmed array; empty string → empty array
-    (ref kgrel_entity.py:160-166)."""
-    return F.when(F.trim(col) == "", F.array().cast("array<string>")).otherwise(
-        F.transform(F.split(col, r"\|"), F.trim)
-    )
+def _state_rows(snapshot: dict[str, list[dict]]) -> list[dict]:
+    """State rows with ``country_id``: the CSV reader resolves it already;
+    otherwise a left join on the country name (no match → null id, a
+    duplicated name → duplicated rows)."""
+    states = snapshot["state_or_province"]
+    if not states or "country_id" in states[0]:
+        return states
+    ids: dict[str, list[str]] = {}
+    for c in snapshot["country"]:
+        if c["name"] is not None:
+            ids.setdefault(c["name"], []).append(c["minmod_id"])
+    return [
+        {**s, "country_id": cid}
+        for s in states
+        for cid in ids.get(s["country_name"]) or [None]
+    ]
 
 
-def _bool_lit(col):
-    return F.concat(
-        F.lit('"'),
-        F.when(col.cast("boolean"), F.lit("true")).otherwise(F.lit("false")),
-        F.lit('"^^xsd:boolean'),
-    )
+def entity_triple_rows(snapshot: dict[str, list[dict]], dtoa) -> list[tuple]:
+    """All nine vocabulary tables' ``(subj, pred, obj)`` N3 rows, matching
+    the reference's ``to_kg().to_triples()`` per entity exactly."""
+    out: list[tuple] = []
 
+    def emit(subj, pairs, aliases=None) -> None:
+        out.extend((subj, p, o) for p, o in pairs if o is not None)
+        if aliases is not None:
+            out.extend((subj, "mo:aliases", _lit(a)) for a in aliases)
 
-def _decimal_lit(col):
-    # NaN guard (belt-and-braces with vocab_dataframes' NULL-not-NaN
-    # construction): Spark's isNotNull() is TRUE for NaN, and the reference
-    # never emits a literal for an absent Optional[float] — so NaN must
-    # render as no-triple, exactly like NULL.
-    d = col.cast("double")
-    return F.when(
-        d.isNotNull() & ~F.isnan(d),
-        F.concat(F.lit('"'), col.cast("string"), F.lit('"^^xsd:decimal')),
-    )
+    def mr(v):
+        return None if v is None else "mr:" + v
 
+    def mr_uri(v):
+        return None if v is None else _lit(MR_NS + v)
 
-def entity_triples(vocab: dict[str, DataFrame]) -> DataFrame:
-    """All nine vocabulary tables → (subj, pred, obj) N3 rows, matching the
-    reference's ``to_kg().to_triples()`` per entity exactly."""
-    parts: list[DataFrame] = []
-
-    c = vocab["commodity"]
-    subj = _subj_mr(F.col("minmod_id"))
-    parts.append(
-        _triple_rows(
-            c,
-            subj,
+    for r in snapshot["commodity"]:
+        emit(
+            mr(r["minmod_id"]),
             [
-                ("rdf:type", F.lit("mo:Commodity")),
-                ("mo:id", _lit(F.col("minmod_id"))),
-                ("rdfs:label", _lit(F.col("name"))),
-                ("mo:parent", _lit(F.col("parent"))),
-                ("mo:is_critical", _bool_lit(F.col("is_critical_commodity"))),
+                ("rdf:type", "mo:Commodity"),
+                ("mo:id", _lit(r["minmod_id"])),
+                ("rdfs:label", _lit(r["name"])),
+                ("mo:parent", _lit(r["parent"])),
+                ("mo:is_critical", _bool_lit(r["is_critical_commodity"])),
+            ],
+            _aliases(r["aliases"]),
+        )
+    for r in snapshot["unit"]:
+        emit(
+            mr(r["minmod_id"]),
+            [
+                ("rdf:type", "mo:Unit"),
+                ("mo:id", _lit(r["minmod_id"])),
+                ("rdfs:label", _lit(r["name"])),
+            ],
+            _aliases(r["aliases"]),
+        )
+    for r in snapshot["country"]:
+        # the reference's country reader appends iso3/iso2 to the alias
+        # list (kgrel_entity.py:209-214); null aliases drop both
+        aliases = _aliases(r["aliases"])
+        if aliases is not None:
+            iso = (r["iso3"], r["iso2"])
+            aliases += [c.strip(" ") for c in iso if c is not None and c.strip(" ")]
+        emit(
+            mr(r["minmod_id"]),
+            [
+                ("rdf:type", "mo:Country"),
+                ("mo:id", _lit(r["minmod_id"])),
+                ("rdfs:label", _lit(r["name"])),
+            ],
+            aliases,
+        )
+    for r in _state_rows(snapshot):
+        emit(
+            mr(r["minmod_id"]),
+            [
+                ("rdf:type", "mo:StateOrProvince"),
+                ("mo:id", _lit(r["minmod_id"])),
+                ("rdfs:label", _lit(r["name"])),
+                ("mo:country", _lit(r["country_id"])),
             ],
         )
-    )
-    parts.append(_alias_triples(c, subj, _split_aliases(F.col("aliases"))))
-
-    u = vocab["unit"]
-    parts.append(
-        _triple_rows(
-            u,
-            subj,
+    for r in snapshot["deposit_type"]:
+        emit(
+            mr(r["minmod_id"]),
             [
-                ("rdf:type", F.lit("mo:Unit")),
-                ("mo:id", _lit(F.col("minmod_id"))),
-                ("rdfs:label", _lit(F.col("name"))),
+                ("rdf:type", "mo:DepositType"),
+                ("mo:id", _lit(r["minmod_id"])),
+                ("rdfs:label", _lit(r["deposit_type"])),
+                ("mo:environment", _lit(r["deposit_environment"])),
+                ("mo:group", _lit(r["deposit_group"])),
             ],
         )
-    )
-    parts.append(_alias_triples(u, subj, _split_aliases(F.col("aliases"))))
-
-    co = vocab["country"]
-    # the reference's country reader appends iso3/iso2 to the alias list
-    # (kgrel_entity.py:209-214)
-    co_aliases = F.concat(
-        _split_aliases(F.col("aliases")),
-        F.filter(
-            F.array(F.trim(F.col("iso3")), F.trim(F.col("iso2"))),
-            lambda x: x.isNotNull() & (x != ""),
-        ),
-    )
-    parts.append(
-        _triple_rows(
-            co,
-            subj,
+    for r in snapshot["commodity_form"]:
+        emit(
+            mr(r["minmod_id"]),
             [
-                ("rdf:type", F.lit("mo:Country")),
-                ("mo:id", _lit(F.col("minmod_id"))),
-                ("rdfs:label", _lit(F.col("name"))),
-            ],
-        )
-    )
-    parts.append(_alias_triples(co, subj, co_aliases))
-
-    sp = vocab["state_or_province"]
-    # FK by name → country id happens in the reader; here country ids may
-    # already be resolved (read_vocab_csvs) or need the broadcast join
-    if "country_id" not in sp.columns:
-        sp = sp.join(
-            F.broadcast(
-                vocab["country"].select(
-                    F.col("name").alias("country_name"),
-                    F.col("minmod_id").alias("country_id"),
-                )
-            ),
-            "country_name",
-            "left",
-        )
-    parts.append(
-        _triple_rows(
-            sp,
-            subj,
-            [
-                ("rdf:type", F.lit("mo:StateOrProvince")),
-                ("mo:id", _lit(F.col("minmod_id"))),
-                ("rdfs:label", _lit(F.col("name"))),
-                ("mo:country", _lit(F.col("country_id"))),
-            ],
-        )
-    )
-
-    dt = vocab["deposit_type"]
-    parts.append(
-        _triple_rows(
-            dt,
-            subj,
-            [
-                ("rdf:type", F.lit("mo:DepositType")),
-                ("mo:id", _lit(F.col("minmod_id"))),
-                ("rdfs:label", _lit(F.col("deposit_type"))),
-                ("mo:environment", _lit(F.col("deposit_environment"))),
-                ("mo:group", _lit(F.col("deposit_group"))),
-            ],
-        )
-    )
-
-    cf = vocab["commodity_form"]
-    parts.append(
-        _triple_rows(
-            cf,
-            subj,
-            [
-                ("rdf:type", F.lit("mo:CommodityForm")),
-                ("rdfs:label", _lit(F.col("name"))),
-                ("mo:formula", _lit(F.col("formula"))),
+                ("rdf:type", "mo:CommodityForm"),
+                ("rdfs:label", _lit(r["name"])),
+                ("mo:formula", _lit(r["formula"])),
                 # to_kg expands the commodity FK to its absolute IRI, emitted
                 # as an xsd:string dataprop (kgrel/entities/commodity_form.py:50)
-                ("mo:commodity", _lit(F.concat(F.lit(MR_NS), F.col("commodity_id")))),
-                ("mo:conversion", _decimal_lit(F.col("conversion"))),
+                ("mo:commodity", mr_uri(r["commodity_id"])),
+                ("mo:conversion", _decimal_lit(r["conversion"], dtoa)),
             ],
         )
-    )
-
-    crs = vocab["crs"]
-    parts.append(
-        _triple_rows(
-            crs,
-            subj,
+    for r in snapshot["crs"]:
+        emit(
+            mr(r["minmod_id"]),
             [
-                ("rdf:type", F.lit("mo:CoordinateReferenceSystem")),
+                ("rdf:type", "mo:CoordinateReferenceSystem"),
                 # kg CRS carries its own absolute uri as a dataprop
-                ("mo:uri", _lit(F.concat(F.lit(MR_NS), F.col("minmod_id")))),
-                ("rdfs:label", _lit(F.col("name"))),
+                ("mo:uri", mr_uri(r["minmod_id"])),
+                ("rdfs:label", _lit(r["name"])),
             ],
         )
-    )
-
-    ds = vocab["data_source"]
-    parts.append(
-        _triple_rows(
-            ds,
+    for r in snapshot["data_source"]:
+        emit(
             # DataSource subject uses the no-rel namespace → absolute <uri>
             # (models/kg/data_source.py Subject key_ns=NS_MR_NO_REL)
-            F.concat(F.lit("<"), F.col("uri"), F.lit(">")),
+            None if r["uri"] is None else f"<{r['uri']}>",
             [
-                ("rdf:type", F.lit("mo:DataSource")),
-                ("rdfs:label", _lit(F.col("name"))),
-                ("mo:type", _lit(F.col("type"))),
-                ("mo:created_by", _lit(F.col("created_by"))),
-                ("mo:description", _lit(F.col("description"))),
-                (
-                    "mo:score",
-                    F.when(
-                        F.col("score").isNotNull(), _decimal_lit(F.col("score"))
-                    ),
-                ),
-                ("mo:connection", _lit(F.col("connection"))),
+                ("rdf:type", "mo:DataSource"),
+                ("rdfs:label", _lit(r["name"])),
+                ("mo:type", _lit(r["type"])),
+                ("mo:created_by", _lit(r["created_by"])),
+                ("mo:description", _lit(r["description"])),
+                ("mo:score", _decimal_lit(r["score"], dtoa)),
+                ("mo:connection", _lit(r["connection"])),
             ],
         )
-    )
-
-    cat = vocab["category"]
-    parts.append(
-        _triple_rows(
-            cat,
-            _subj_mr(F.col("id")),
+    for r in snapshot["category"]:
+        emit(
+            mr(r["id"]),
             [
-                ("rdf:type", F.lit("mo:Category")),
-                ("mo:id", _lit(F.col("id"))),
-                ("rdfs:label", _lit(F.col("label"))),
+                ("rdf:type", "mo:Category"),
+                ("mo:id", _lit(r["id"])),
+                ("rdfs:label", _lit(r["label"])),
             ],
         )
-    )
-
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
     return out
+
+
+def entity_triples(
+    vocab: dict[str, DataFrame], snapshot: dict[str, list[dict]] | None = None
+) -> DataFrame:
+    """The vocabulary's entity triples as a ``LocalRelation`` frame.
+    ``snapshot`` is ``vocab_rows(vocab)`` when the caller already holds
+    it (``KGPipeline.run`` does); otherwise it is collected here."""
+    import pyarrow as pa
+
+    from ..sources.vocab import vocab_rows
+
+    spark = next(iter(vocab.values())).sparkSession
+    if snapshot is None:
+        snapshot = vocab_rows(vocab)
+    rows = entity_triple_rows(snapshot, spark._jvm.java.lang.Double.toString)
+    table = pa.table(
+        {c: [r[i] for r in rows] for i, c in enumerate(ENTITY_TRIPLE_SCHEMA.names)},
+        schema=pa.schema([(c, pa.string()) for c in ENTITY_TRIPLE_SCHEMA.names]),
+    )
+    return spark.createDataFrame(table, schema=ENTITY_TRIPLE_SCHEMA)

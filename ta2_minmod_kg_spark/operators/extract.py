@@ -61,6 +61,7 @@ from ..functions.arrowkit import chunked_kernel
 from ..functions.ids import MR_NS, get_username, make_site_id
 from ..functions.rdf import site_to_triples
 from ..schemas import INGEST, INV_VIEW, SITE_REL, TRIPLE, VIOLATION, VOCAB_VIOLATION
+from ..sources.vocab import vocab_rows
 from .constrained import path_ok, site_error_udf, site_record_error
 from .grade_tonnage import site_view_rows
 from .validation import allowed_uri_sets, record_vocab_violations
@@ -342,25 +343,24 @@ def _triple_columns(include_extra: bool):
     return (subjs, preds, objs, sids), add
 
 
-def _vocab_dicts(vocab: dict[str, DataFrame]) -> tuple[dict, dict, dict, dict]:
+def _vocab_dicts(snapshot: dict[str, list[dict]]) -> tuple[dict, dict, dict, dict]:
     """The crs-name, data-source-score and vocabulary-membership lookups a
     site row needs, and the material-form conversion factors its
-    grade-tonnage view needs, collapsed to driver dicts (they are
-    broadcast-dim sized by definition) that ship in the task closure."""
-    crs_names = {
-        MR_NS + r["minmod_id"]: r["name"] for r in vocab["crs"].collect()
-    }
+    grade-tonnage view needs, as driver dicts over the build's vocabulary
+    snapshot (``sources.vocab.vocab_rows``) that ship in the task
+    closure."""
+    crs_names = {MR_NS + r["minmod_id"]: r["name"] for r in snapshot["crs"]}
     source_scores = {
         r["uri"]: (float(r["score"]) if r["score"] is not None else None)
-        for r in vocab["data_source"].collect()
+        for r in snapshot["data_source"]
     }
     form_conv = {
         MR_NS + r["minmod_id"]: (
             float(r["conversion"]) if r["conversion"] is not None else None
         )
-        for r in vocab["commodity_form"].collect()
+        for r in snapshot["commodity_form"]
     }
-    return crs_names, source_scores, allowed_uri_sets(vocab), form_conv
+    return crs_names, source_scores, allowed_uri_sets(snapshot), form_conv
 
 
 def _site_structurally_valid(site, path: str | None) -> bool:
@@ -539,7 +539,7 @@ def doc_rows(
     ``path`` and the table's ``_DOC_INPUTS`` (a ``with_lineage`` frame has
     them all); ``vocab`` is needed only by ``_SITE_TABLES``.  No
     shuffle: the output stays partitioned like ``docs``."""
-    dicts = _vocab_dicts(vocab) if table in _SITE_TABLES else None
+    dicts = _vocab_dicts(vocab_rows(vocab)) if table in _SITE_TABLES else None
 
     def per_chunk(rb):
         return _doc_batches(rb, (table,), dicts, include_extra).get(table)
@@ -642,7 +642,7 @@ def _doc_pass_kernel(dicts: tuple, include_extra: bool, staging: str):
 
 def doc_pass(
     docs: DataFrame,
-    vocab: dict[str, DataFrame],
+    snapshot: dict[str, list[dict]],
     staging: str,
     include_extra: bool = False,
 ) -> DataFrame:
@@ -651,16 +651,16 @@ def doc_pass(
     ``bucket``, clustered by bucket and sorted by it within each
     partition) that parses each document once and writes its rows of
     ``DOC_TABLES`` (``_doc_batches``) with ``pyarrow.parquet`` under
-    ``staging``."""
+    ``staging``.  ``snapshot`` is the build's ``vocab_rows``."""
     return docs.select(*_DOC_INPUTS["violations"], "bucket", "content").mapInArrow(
-        _doc_pass_kernel(_vocab_dicts(vocab), include_extra, staging),
+        _doc_pass_kernel(_vocab_dicts(snapshot), include_extra, staging),
         schema=MANIFEST,
     )
 
 
 def write_doc_tables(
     docs: DataFrame,
-    vocab: dict[str, DataFrame],
+    snapshot: dict[str, list[dict]],
     staging: str,
     include_extra: bool = False,
 ) -> list[tuple[str, int, str, int]]:
@@ -669,7 +669,9 @@ def write_doc_tables(
     the attempt that succeeded, so the manifest names exactly the files
     to commit; anything else under ``staging`` is a failed or superseded
     attempt's."""
-    return [tuple(r) for r in doc_pass(docs, vocab, staging, include_extra).collect()]
+    return [
+        tuple(r) for r in doc_pass(docs, snapshot, staging, include_extra).collect()
+    ]
 
 
 # -- inventory explode for grade-tonnage --------------------------------------

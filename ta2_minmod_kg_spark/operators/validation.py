@@ -7,9 +7,10 @@ At pipeline scale a raise is the wrong shape — bad records are
 quarantined and reported as ``(field, uri)`` rows instead of killing the
 job.
 
-Execution: the vocabularies are broadcast-dim sized, so they collapse to
-driver-side ``field -> frozenset(uri)`` dicts (``allowed_uri_sets``) that
-ship in the task closure, and ``record_vocab_violations`` walks one
+Execution: the vocabularies are broadcast-dim sized, so the build's one
+driver snapshot of them (``sources.vocab.vocab_rows``) collapses to
+``field -> frozenset(uri)`` dicts (``allowed_uri_sets``) that ship in the
+task closure, and ``record_vocab_violations`` walks one
 already-parsed record with set lookups.  The walk runs inside the
 document batch builder (``extract._doc_batches``), on the same
 ``json.loads`` that validates and normalizes the record — no
@@ -17,8 +18,6 @@ document batch builder (``extract._doc_batches``), on the same
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
 
 from ..functions.geo import supported_crs_names
 
@@ -45,17 +44,15 @@ SUPPORTED_CRS = frozenset(supported_crs_names())
 CRS_UNSUPPORTED = "location_info.crs.unsupported"
 
 
-def allowed_uri_sets(vocab: dict[str, DataFrame]) -> dict[str, frozenset]:
-    """field → every URI that field may reference, collected to the
-    driver (each vocabulary table is a few dozen rows)."""
+def allowed_uri_sets(snapshot: dict[str, list[dict]]) -> dict[str, frozenset]:
+    """field → every URI that field may reference, from the vocabulary
+    snapshot (``vocab_rows``; each table is a few dozen rows)."""
     ids: dict[tuple[str, str], frozenset] = {}
     out = {}
     for field, table, id_col in _FIELD_VOCAB:
         if (table, id_col) not in ids:
             ids[table, id_col] = frozenset(
-                MR_NS + r[0]
-                for r in vocab[table].select(id_col).collect()
-                if r[0] is not None
+                MR_NS + r[id_col] for r in snapshot[table] if r[id_col] is not None
             )
         out[field] = ids[table, id_col]
     return out

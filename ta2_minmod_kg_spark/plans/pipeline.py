@@ -5,6 +5,11 @@ Stages (each materialized as parquet under ``workdir``):
   ingest → sites_rel + triples + inv_views → membership → dedup_sites +
   dedup_inventories → entity_triples, sameas_triples
 
+The vocabulary is driver-sized: ``run`` collects it once
+(``sources.vocab.vocab_rows``) and that snapshot feeds the document
+pass's lookups, the ``entity_triples`` emitter and the vocabulary
+fingerprint, none of which runs a Spark job of its own.
+
 Checkpoint & lineage model — the Spark analog of the reference's sqlite
 content-hash memo (`etl/mineral_site.py:400-408`):
 
@@ -153,40 +158,21 @@ class Lineage:
         )
         return hashlib.sha256(payload.encode()).hexdigest()
 
-    def vocab_fingerprint(self, vocab: dict[str, DataFrame]) -> str:
-        """sha256 over (name, whole-table fingerprint) of every vocabulary
-        table, in name order — the same per-table hash as
-        ``bucket_hashes`` over a single bucket, computed for all tables in
-        ONE query; a table with no rows contributes ``fingerprint([])``."""
+    def vocab_fingerprint(
+        self, vocab: dict[str, DataFrame], snapshot: dict[str, list[dict]]
+    ) -> str:
+        """sha256 over the config and, per vocabulary table in name order,
+        its name, schema string and sorted canonical-JSON rows, read from
+        the build's snapshot (``vocab_rows``): no Spark job.  JSON keeps
+        null apart from NaN and 1 apart from 1.0."""
         import hashlib
-        from functools import reduce
 
-        names = sorted(vocab)
-        hashed = reduce(
-            DataFrame.unionAll,
-            [
-                vocab[n].select(
-                    F.lit(n).alias("name"),
-                    F.xxhash64(*[F.col(c) for c in vocab[n].columns]).alias("h"),
-                )
-                for n in names
-            ],
-        )
-        content = {
-            r["name"]: r["content_hash"]
-            for r in hashed.groupBy("name")
-            .agg(
-                F.sum(F.col("h").cast("decimal(38,0)"))
-                .cast("string")
-                .alias("content_hash")
-            )
-            .collect()
-        }
         vh = hashlib.sha256(self.config.encode())
-        for n in names:
-            pb = [{"bucket": 0, "content_hash": content[n]}] if n in content else []
-            vh.update(n.encode())
-            vh.update(self.fingerprint(pb).encode())
+        for n in sorted(vocab):
+            rows = sorted(
+                json.dumps(list(r.values()), default=str) for r in snapshot[n]
+            )
+            vh.update(json.dumps([n, vocab[n].schema.simpleString(), rows]).encode())
         return vh.hexdigest()
 
     def is_done(self, stage: str, input_fingerprint: str | None) -> bool:
@@ -444,7 +430,12 @@ class KGPipeline:
         table and the two quarantine tables, ``violations`` and
         ``vocab_violations``."""
         from ..operators import canonicalize, dedup, extract
+        from ..operators.entity_triples import entity_triples
+        from ..sources.vocab import vocab_rows
 
+        # the vocabulary's one driver snapshot: the pass's lookups, the
+        # entity triples and the vocabulary fingerprint all read it
+        snapshot = vocab_rows(vocab)
         ingest = with_bucket(ingest, self.n_buckets)
         ingest_pb = [r.asDict() for r in bucket_hashes(ingest).collect()]
         ingest_fp = self.lineage.fingerprint(ingest_pb)
@@ -472,7 +463,7 @@ class KGPipeline:
             )
             try:
                 manifest = extract.write_doc_tables(
-                    docs, vocab, staging, include_extra=self.include_extra
+                    docs, snapshot, staging, include_extra=self.include_extra
                 )
                 self._commit(staging, manifest, buckets)
             finally:
@@ -517,16 +508,11 @@ class KGPipeline:
 
         # entity-vocabulary triples (ref etl/kgrel_entity.py:105-126) —
         # fingerprinted on the vocab tables' content, not the ingest
-        vocab_fp = self.lineage.vocab_fingerprint(vocab)
-
-        from ..operators.entity_triples import entity_triples as entity_triples_op
-
         self._run_stage(
             "entity_triples",
-            # a few hundred rows from 12 union branches: one file, not one
-            # per branch partition
-            lambda: entity_triples_op(vocab).coalesce(1),
-            vocab_fp,
+            # a few hundred rows: one file, not one per local partition
+            lambda: entity_triples(vocab, snapshot).coalesce(1),
+            self.lineage.vocab_fingerprint(vocab, snapshot),
         )
 
         self._run_stage(
@@ -590,7 +576,7 @@ def main(argv=None):
         write_dedup_sites_json(
             out, os.path.join(args.workdir, "kgrel", "dedup_sites.json")
         )
-    n_triples = out["triples"].count()
+    n_triples = pipe.metrics["triples"]["n_rows"]
     wall = time.time() - t0
     print(
         json.dumps(

@@ -35,19 +35,3 @@ def write_ttl(triples: DataFrame, path: str, header: bool = True) -> None:
         with open(os.path.join(path, "_prefixes.ttl"), "w") as f:
             f.write(PREFIX_PART)
 
-
-def write_bucketed(
-    df: DataFrame, table: str, key: str, n_buckets: int = 64
-) -> None:
-    """Hive-bucketed parquet table (``bucketBy`` + ``sortBy`` on the join
-    key, catalog-registered): two tables bucketed the same way join with
-    NO exchange — at 100 TB the sites⋈membership / dedup⋈inventory joins
-    are pre-co-located instead of reshuffling the fact side every run.
-    Verified shuffle-free in tests/test_bucketed_join.py."""
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .saveAsTable(table)
-    )

@@ -282,6 +282,18 @@ def vocab_dataframes(spark: SparkSession) -> dict[str, DataFrame]:
     return out
 
 
+def vocab_rows(vocab: dict[str, DataFrame]) -> dict[str, list[dict]]:
+    """Every vocabulary table collected to the driver once: ``{table:
+    [row dict in column order]}``.  A build takes this one snapshot and
+    reads it for its vocabulary fingerprint, its entity triples and the
+    document pass's lookups.  Collecting a ``vocab_dataframes`` table (a
+    ``LocalRelation``) runs no Spark job."""
+    return {
+        name: [r.asDict() for r in df.collect()]
+        for name, df in vocab.items()
+    }
+
+
 def write_vocab_csvs(outdir: str) -> None:
     """Materialize the vocabulary as the reference's 9-CSV layout
     (column layouts per `minmodkg/etl/kgrel_entity.py:128-305`)."""

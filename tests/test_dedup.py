@@ -10,12 +10,7 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
-
-from ta2_minmod_kg_spark.operators.dedup import (
-    _dedup_attrs_fn,
-    _select_inv_fn,
-)
+from ta2_minmod_kg_spark.operators.dedup import merge_group, select_inventories_group
 
 SYS = "https://minmod.isi.edu/users/s/ingestor"
 USR = "https://minmod.isi.edu/users/u/alice"
@@ -85,7 +80,7 @@ def test_expert_wins_and_first_non_null():
             modified_at=5,
         ),
     ]
-    out = _dedup_attrs_fn(pd.DataFrame(rows)).iloc[0]
+    out = merge_group(rows[0]["dedup_site_id"], rows)
     assert out["name"] == {"value": "Expert Name", "refid": "site__a"}
     # expert has no type → falls through to the system site
     assert out["type"] == {"value": "Mine", "refid": "site__b"}
@@ -100,7 +95,7 @@ def test_system_tiebreak_on_modified_at():
         _site("site__old", score=0.8, name="Old", modified_at=1),
         _site("site__new", score=0.8, name="New", modified_at=2),
     ]
-    out = _dedup_attrs_fn(pd.DataFrame(rows)).iloc[0]
+    out = merge_group(rows[0]["dedup_site_id"], rows)
     assert out["name"]["value"] == "New"
 
 
@@ -123,7 +118,7 @@ def test_geology_merge_per_subattr():
             },
         ),
     ]
-    out = _dedup_attrs_fn(pd.DataFrame(rows)).iloc[0]
+    out = merge_group(rows[0]["dedup_site_id"], rows)
     geo = json.loads(out["geology_info"])
     assert geo["alteration"] == {"value": "sericitic", "refid": "site__1"}
     assert geo["tectonic"] == {"value": "rift", "refid": "site__2"}
@@ -230,7 +225,7 @@ def test_top5_deposit_types():
             ],
         ),
     ]
-    out = _dedup_attrs_fn(pd.DataFrame(rows)).iloc[0]
+    out = merge_group(rows[0]["dedup_site_id"], rows)
     dts = out["ranked_deposit_types"]
     assert [d["id"] for d in dts] == ["Q1501", "Q1500", "Q1502"]
     # Q1500 deduped to the higher-confidence mention (0.7 from site 2)
@@ -272,10 +267,10 @@ def test_select_inventories_user_beats_system():
         # expert row with NO grade-tonnage still wins (lets users retract bad data)
         _inv_row("site__usr", "Q1000", score=1.0, is_expert=True),
     ]
-    out = _select_inv_fn(pd.DataFrame(rows))
+    out = select_inventories_group("dedup_x", rows)
     assert len(out) == 1
-    assert out.iloc[0]["site_id"] == "site__usr"
-    assert out.iloc[0]["contained_metal"] is None
+    assert out[0]["site_id"] == "site__usr"
+    assert out[0]["contained_metal"] is None
 
 
 def test_select_inventories_gt_then_date_then_metal():
@@ -286,13 +281,13 @@ def test_select_inventories_gt_then_date_then_metal():
         _inv_row("s4", "Q1001", contained_metal=2.0, score=0.6),
         _inv_row("s5", "Q1001", contained_metal=3.0, score=0.5),
     ]
-    out = _select_inv_fn(pd.DataFrame(rows)).set_index("commodity")
+    out = {r["commodity"]: r for r in select_inventories_group("dedup_x", rows)}
     # Q1000: GT beats no-GT (s2 over s1); then s3 replaces s2 via the
     # contained-metal fall-through (the newer-date check only short-circuits
     # when the challenger is newer — ref dedup_mineral_site.py:365-381)
-    assert out.loc["Q1000"]["site_id"] == "s3"
+    assert out["Q1000"]["site_id"] == "s3"
     # Q1001: no dates → higher contained metal wins
-    assert out.loc["Q1001"]["site_id"] == "s5"
+    assert out["Q1001"]["site_id"] == "s5"
 
 
 def test_select_inventories_newer_date_beats_higher_metal():
@@ -300,8 +295,8 @@ def test_select_inventories_newer_date_beats_higher_metal():
         _inv_row("s1", "Q1000", contained_metal=9.0, date="2005", score=0.9),
         _inv_row("s2", "Q1000", contained_metal=1.0, date="2010", score=0.8),
     ]
-    out = _select_inv_fn(pd.DataFrame(rows))
-    assert out.iloc[0]["site_id"] == "s2"
+    out = select_inventories_group("dedup_x", rows)
+    assert out[0]["site_id"] == "s2"
 
 
 def test_site_score_null_and_nan_source_default(spark):

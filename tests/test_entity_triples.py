@@ -1,4 +1,5 @@
-"""Entity-vocabulary triples vs the REFERENCE's executed emitters.
+"""Entity-vocabulary triples vs the REFERENCE's executed emitters, and
+vs the goldens of the earlier Spark column emitter.
 
 Oracle: construct the reference's KG entity models (minmodkg/models/kg/
 entities/*.py, data_source.py) from the same synthetic vocabulary rows the
@@ -6,21 +7,38 @@ engine consumes — replicating the kgrel readers' field mapping
 (kgrel_entity.py:151-305) and each ``to_kg()`` (kgrel/entities/*.py) — and
 run their real ``to_triples()``.  Exact set equality required (entity
 subjects are deterministic ids, no canonicalization needed).
+
+Goldens (tests/golden_entity_triples.json, made by
+tests/entity_golden_vocab.py): the Spark emitter's rows for the synthetic
+vocabulary and two planted ones full of edge values, matched as
+multisets; the Spark casts they relied on are pinned in-session.
 """
 
 from __future__ import annotations
 
+import json
 import sys
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).parent))
 
+from entity_golden_vocab import GOLDEN, golden_vocabularies, sorted_rows  # noqa: E402
 from refshim import load_reference  # noqa: E402
 
-from ta2_minmod_kg_spark.operators.entity_triples import MR_NS, entity_triples
-from ta2_minmod_kg_spark.sources.vocab import synthetic_vocab, vocab_dataframes
+from ta2_minmod_kg_spark.operators.entity_triples import (  # noqa: E402
+    ENTITY_TRIPLE_SCHEMA,
+    MR_NS,
+    _bool_lit,
+    _decimal_lit,
+    entity_triples,
+)
+from ta2_minmod_kg_spark.sources.vocab import (  # noqa: E402
+    synthetic_vocab,
+    vocab_dataframes,
+)
 
 
 @pytest.fixture(scope="module")
@@ -179,3 +197,66 @@ def test_vocab_dataframes_absent_floats_are_null_not_nan(spark):
             if isinstance(f.dataType, (DoubleType, FloatType)):
                 n = df.filter(F.isnan(F.col(f.name))).count()
                 assert n == 0, (name, f.name, n)
+
+
+def test_entity_triples_match_spark_emitter_goldens(spark):
+    with open(GOLDEN) as f:
+        golden = json.load(f)["vocabularies"]
+    vocabularies = golden_vocabularies(spark)
+    assert set(vocabularies) == set(golden)
+    for name, vdfs in vocabularies.items():
+        t = entity_triples(vdfs)
+        # the schema the Spark emitter's frame had, nullability included
+        assert t.schema == ENTITY_TRIPLE_SCHEMA
+        assert [f.nullable for f in t.schema.fields] == [True] * 3
+        got = sorted_rows(tuple(r) for r in t.collect())
+        assert got == golden[name], (
+            name,
+            [r for r in got if r not in golden[name]][:10],
+            [r for r in golden[name] if r not in got][:10],
+        )
+
+
+def test_double_literals_match_spark_cast_to_string(spark):
+    """A decimal literal renders its double exactly as Spark's
+    ``cast(double as string)`` (the JVM's ``Double.toString``), which
+    Python's ``repr`` does not: 1e-4, 2e23, 5e-324, ±inf, -0.0, ..."""
+    vals = [
+        1e-4, 2e23, 5e-324, float("inf"), -float("inf"), 1e7, 0.1, 1 / 3,
+        -0.0, 0.0, 0.5, 123456789.0, 1e21, 1e-3, 9.999e-4, 1.7976931348623157e308,
+        0.03729, 2.2250738585072014e-308,
+    ]
+    df = spark.createDataFrame([(v,) for v in vals], "d double")
+    want = [r[0] for r in df.select(F.col("d").cast("string")).collect()]
+    dtoa = spark._jvm.java.lang.Double.toString
+    assert [_decimal_lit(v, dtoa) for v in vals] == [
+        f'"{w}"^^xsd:decimal' for w in want
+    ]
+    assert _decimal_lit(None, dtoa) is None
+    assert _decimal_lit(float("nan"), dtoa) is None
+
+
+def test_boolean_literals_match_spark_cast_to_boolean(spark):
+    """``is_critical`` renders Spark's cast to boolean, null as false:
+    bigint non-zero is true; strings trim bytes <= U+0020, then take
+    t/true/y/yes/1 or f/false/n/no/0 in any case; anything else raises,
+    as the cast does under ANSI mode."""
+    ints = [None, 0, 1, 2, -1]
+    strs = [None, "0", "1", "true", " Yes ", "\tf\n", "N", "t", "\x0bTRUE\x1f", "no"]
+    for values, ddl in ((ints, "v bigint"), (strs, "v string")):
+        df = spark.createDataFrame([(v,) for v in values], ddl)
+        want = [
+            r[0]
+            for r in df.select(
+                F.when(F.col("v").cast("boolean"), "true").otherwise("false")
+            ).collect()
+        ]
+        assert [_bool_lit(v) for v in values] == [
+            f'"{w}"^^xsd:boolean' for w in want
+        ]
+    for bad in ("", "maybe", "\u00a0true"):
+        df = spark.createDataFrame([(bad,)], "v string")
+        with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+            df.select(F.col("v").cast("boolean")).collect()
+        with pytest.raises(ValueError):
+            _bool_lit(bad)

@@ -362,26 +362,100 @@ def test_duplicate_paths_one_sites_rel_row_per_valid_ingest_row(spark, tmp_path)
     assert all(r["bucket"] == want_bucket[r["path"]] for r in sites)
 
 
-def test_vocab_fingerprint_matches_per_table_formula(spark):
-    """The one-query vocabulary fingerprint equals the per-table
-    ``bucket_hashes`` formula, an empty table included."""
-    import hashlib
+def test_vocab_fingerprint_tracks_rows_not_representation(spark):
+    """The vocabulary fingerprint depends on the tables' rows and schemas
+    only: the same rows as a LocalRelation, as a Python-RDD frame or in
+    another order give one fingerprint; an edited value, a null turned
+    NaN and an added empty table each change it."""
+    import random
 
-    from ta2_minmod_kg_spark.plans.pipeline import Lineage, bucket_hashes
+    from pyspark.sql.types import StructType
 
-    vdfs = dict(vocab.vocab_dataframes(spark))
-    vdfs["zz_empty"] = vdfs["crs"].filter(F.lit(False))
+    from ta2_minmod_kg_spark.plans.pipeline import Lineage
+    from ta2_minmod_kg_spark.sources.vocab import VOCAB_SCHEMAS, vocab_rows
+
     lineage = Lineage("/nonexistent", config="n_buckets=8;include_extra=False")
 
-    vh = hashlib.sha256(lineage.config.encode())
-    for name in sorted(vdfs):
-        pb = [
-            r.asDict()
-            for r in bucket_hashes(vdfs[name].withColumn("bucket", F.lit(0))).collect()
-        ]
-        vh.update(name.encode())
-        vh.update(lineage.fingerprint(pb).encode())
-    assert lineage.vocab_fingerprint(vdfs) == vh.hexdigest()
+    def fp(vdfs):
+        return lineage.vocab_fingerprint(vdfs, vocab_rows(vdfs))
+
+    def as_rdd_frames(rows_of, shuffle=False):
+        out = {}
+        for name, ddl in VOCAB_SCHEMAS.items():
+            rows = [tuple(r.values()) for r in rows_of[name]]
+            if shuffle:
+                random.Random(7).shuffle(rows)
+            out[name] = spark.createDataFrame(rows, StructType.fromDDL(ddl))
+        return out
+
+    local = vocab.vocab_dataframes(spark)
+    want = fp(local)
+    synth = vocab.synthetic_vocab()
+    assert fp(as_rdd_frames(synth)) == want
+    assert fp(as_rdd_frames(synth, shuffle=True)) == want
+
+    edited = {k: [dict(r) for r in v] for k, v in synth.items()}
+    edited["crs"][0]["name"] = "EPSG:4269"
+    assert fp(as_rdd_frames(edited)) != want
+
+    # data source 4 has a null score (synthetic.source_score_of)
+    nan = {k: [dict(r) for r in v] for k, v in synth.items()}
+    assert nan["data_source"][4]["score"] is None
+    nan["data_source"][4]["score"] = float("nan")
+    assert fp(as_rdd_frames(nan)) != want
+
+    assert fp({**local, "zz_empty": local["crs"].filter(F.lit(False))}) != want
+
+
+def test_vocabulary_is_collected_once_per_build(spark, tmp_path, monkeypatch):
+    """A build collects each vocabulary table exactly once, and neither
+    the vocabulary fingerprint nor the entity triples run a Spark job:
+    both read that one driver snapshot."""
+    from ta2_minmod_kg_spark.operators import entity_triples as et
+    from ta2_minmod_kg_spark.plans import pipeline as pl
+
+    vdfs = vocab.vocab_dataframes(spark)
+    collects = {name: 0 for name in vdfs}
+    by_id = {id(df): name for name, df in vdfs.items()}
+    # the session's DataFrame class (pyspark's classic one overrides collect)
+    frame_cls = type(vdfs["crs"])
+    real_collect = frame_cls.collect
+
+    def counting_collect(self):
+        if id(self) in by_id:
+            collects[by_id[id(self)]] += 1
+        return real_collect(self)
+
+    sc = spark.sparkContext
+    jobs: dict[str, list[int]] = {}
+
+    def jobless(label, fn):
+        sc.setJobGroup(label, label)
+        try:
+            return fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[label] = list(sc.statusTracker().getJobIdsForGroup(label))
+
+    real_fp = pl.Lineage.vocab_fingerprint
+    real_et = et.entity_triples
+
+    def guarded_fp(self, *args):
+        return jobless("guard-vocab-fingerprint", lambda: real_fp(self, *args))
+
+    def guarded_et(*args):
+        df = real_et(*args)
+        jobless("guard-entity-triples", df.collect)
+        return df
+
+    monkeypatch.setattr(frame_cls, "collect", counting_collect)
+    monkeypatch.setattr(pl.Lineage, "vocab_fingerprint", guarded_fp)
+    monkeypatch.setattr(et, "entity_triples", guarded_et)
+    ingest = synthetic.synthesize_ingest(spark, 20, partitions=2)
+    KGPipeline(spark, str(tmp_path / "wd"), n_buckets=4).run(ingest, vdfs)
+
+    assert collects == {name: 1 for name in vdfs}, collects
+    assert jobs == {"guard-vocab-fingerprint": [], "guard-entity-triples": []}, jobs
 
 
 BUCKETED_TABLES = (
