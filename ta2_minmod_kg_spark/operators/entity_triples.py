@@ -17,7 +17,11 @@ result goes back to Spark as an Arrow ``LocalRelation``: building,
 collecting or scanning it runs no Spark job.
 
 The rows are the ones the earlier Spark column emitter produced, kept
-byte for byte (tests/golden_entity_triples.json): doubles render as the
+byte for byte (tests/golden_entity_triples.json), less that emitter's
+triples with a null subject: a vocabulary row without an id (a
+``data_source`` without ``uri``, a ``crs`` or ``category`` without an id)
+now emits nothing, where the Spark emitter wrote triples that the TTL
+sink turned into lines with no subject.  Doubles render as the
 session JVM's ``Double.toString`` (Spark's ``cast(double as string)``),
 booleans follow Spark's casts, trims strip only U+0020.  Literal formats
 follow rdflib N3 semantics (plain quoted xsd:string,
@@ -108,6 +112,9 @@ def entity_triple_rows(snapshot: dict[str, list[dict]], dtoa) -> list[tuple]:
     out: list[tuple] = []
 
     def emit(subj, pairs, aliases=None) -> None:
+        # a row without an id names no subject: a triple needs one
+        if subj is None:
+            return
         out.extend((subj, p, o) for p, o in pairs if o is not None)
         if aliases is not None:
             out.extend((subj, "mo:aliases", _lit(a)) for a in aliases)

@@ -9,19 +9,22 @@ are the kgrel models' ``to_dict`` layouts
 `custom_types/{ref_value,site_and_score,location}.py`).  Downstream loaders
 consume exactly this file.
 
-Spark-first: every section is produced as a DataFrame of JSON strings —
-``mineral_site_json_rows`` is a pure map (mapInPandas batch shaper), the
-dedup section re-joins per-site score metadata with two shuffles — so the
-same code writes partitioned JSONL at corpus scale
-(``write_dedup_sites_jsonl``) or the reference's single merged file at
-export scale (``write_dedup_sites_json``).
+``dedup_sites_json`` formats it on the driver: the four tables it reads
+(``dedup_sites``, ``sites_rel``, ``inv_views``, ``dedup_inventories``)
+are collected once each through Arrow, which runs one scan job per table
+and no Python worker, and the shapers below run over their rows.  The
+sections' per-site lookups are dicts, not Spark joins: the document is
+assembled on the driver anyway, so a Spark frame per section would only
+add a Python stage and shuffles in front of the same collect.  The
+pipeline's parquet tables stay the scalable relational output (K1).
 """
 
 from __future__ import annotations
 
 import json
 import math
-from typing import Iterator, Optional
+from operator import itemgetter
+from typing import Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -34,8 +37,8 @@ from ..operators.dedup import DEFAULT_SOURCE_SCORE, SYSTEM_PREFIX
 
 
 def _lst(v) -> list:
-    """Arrow hands array fields to mapInPandas as numpy arrays — `v or []`
-    is ambiguous there; always convert explicitly."""
+    """Arrow hands array fields to pandas as numpy arrays — `v or []` is
+    ambiguous there; always convert explicitly."""
     return [] if v is None else list(v)
 
 
@@ -158,7 +161,8 @@ def _site_score(row: dict) -> dict:
     is_expert = not row["created_by"].startswith(SYSTEM_PREFIX)
     if is_expert:
         return {"score": 1.0, "suborder": [True, row["modified_at"]]}
-    score = row.get("source_score")
+    # a null double reaches here as NaN from a pandas column
+    score = _clean(row.get("source_score"))
     if score is None or score < 0:
         score = DEFAULT_SOURCE_SCORE
     return {
@@ -189,6 +193,8 @@ def ms_to_dict(row: dict) -> dict:
         )
     )
     geo = row.get("geology_info")
+    # pandas holds a nullable int column as float64; the model's field is int
+    dy = _clean(row.get("discovered_year"))
     return _wnel(
         (
             ("site_id", row["site_id"]),
@@ -254,7 +260,7 @@ def ms_to_dict(row: dict) -> dict:
                 ),
             ),
             ("mineral_form", [str(x) for x in _lst(row.get("mineral_form"))]),
-            ("discovered_year", row.get("discovered_year")),
+            ("discovered_year", None if dy is None else int(dy)),
             ("created_by", row["created_by"]),
             ("modified_at", row["modified_at"]),
         )
@@ -362,111 +368,7 @@ def _refval_list(v: Optional[dict]):
     return {"value": [str(x) for x in _lst(v.get("value"))], "refid": v["refid"]}
 
 
-# -- DataFrame-of-JSON builders (scalable) --------------------------------------
-
-
-def _json_batches(shaper):
-    from ..functions.arrowkit import chunked_kernel
-
-    def per_chunk(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = pdf.to_dict("records")
-        return pd.DataFrame(
-            {"json": [json.dumps(shaper(r), sort_keys=True) for r in rows]}
-        )
-
-    # to_dict("records") materializes the batch as nested python dicts —
-    # bounded chunks + paused cyclic GC (functions/arrowkit.py)
-    return chunked_kernel(per_chunk, max_rows=1024)
-
-
-def mineral_site_json_rows(sites_rel: DataFrame) -> DataFrame:
-    """MineralSite section — pure map, scales with partitions."""
-    return sites_rel.mapInPandas(_json_batches(ms_to_dict), schema="json string")
-
-
-def dedup_site_json_rows(dedup_attrs: DataFrame, sites_rel: DataFrame) -> DataFrame:
-    """DedupMineralSite section: ranked-site score metadata re-joined in
-    rank order (two shuffles, partial-aggregated)."""
-    meta = sites_rel.select(
-        "site_id", "created_by", "source_id", "record_id", "modified_at",
-        "source_score",
-    )
-    ex = (
-        dedup_attrs.select(
-            "dedup_site_id", F.posexplode("ranked_sites").alias("pos", "rs")
-        )
-        .select("dedup_site_id", "pos", F.col("rs.site_id").alias("site_id"))
-        .join(meta, "site_id")
-    )
-    regrouped = ex.groupBy("dedup_site_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "pos", "site_id", "created_by", "source_id", "record_id",
-                    "modified_at", "source_score",
-                )
-            )
-        ).alias("ranked_meta")
-    )
-    full = dedup_attrs.join(regrouped, "dedup_site_id", "left")
-
-    def shaper(r):
-        return dedup_to_dict(r, _lst(r.get("ranked_meta")))
-
-    return full.mapInPandas(_json_batches(shaper), schema="json string")
-
-
-def inventory_view_json_rows(
-    inv_views: DataFrame, sites_rel: DataFrame
-) -> DataFrame:
-    """MineralInventoryView section: {"invs": [...], "site": id} — one
-    entry per SITE (the reference iterates id2site, so sites without any
-    normalized-commodity inventory still emit an empty-invs row)."""
-    grouped = sites_rel.select("site_id").join(
-        inv_views.groupBy("site_id").agg(
-            F.collect_list(
-                F.struct("commodity", "contained_metal", "tonnage", "grade", "date")
-            ).alias("invs")
-        ),
-        "site_id",
-        "left",
-    )
-
-    def shaper(r):
-        return {
-            "invs": [
-                _wn(
-                    (
-                        ("commodity", i["commodity"]),
-                        ("contained_metal", i["contained_metal"]),
-                        ("tonnage", i["tonnage"]),
-                        ("grade", i["grade"]),
-                        ("date", i["date"]),
-                    )
-                )
-                for i in _lst(r.get("invs"))
-            ],
-            "site": r["site_id"],
-        }
-
-    return grouped.mapInPandas(_json_batches(shaper), schema="json string")
-
-
-def dedup_inventory_json_rows(dedup_invs: DataFrame) -> DataFrame:
-    def shaper(r):
-        return _wn(
-            (
-                ("commodity", r["commodity"]),
-                ("contained_metal", r["contained_metal"]),
-                ("tonnage", r["tonnage"]),
-                ("grade", r["grade"]),
-                ("date", r["date"]),
-                ("site_id", r["site_id"]),
-                ("dedup_site_id", r["dedup_site_id"]),
-            )
-        )
-
-    return dedup_invs.mapInPandas(_json_batches(shaper), schema="json string")
+# -- the merged document, formatted on the driver ------------------------------
 
 
 SECTIONS = (
@@ -477,52 +379,76 @@ SECTIONS = (
 )
 
 
-def dedup_sites_json_sections(out: dict[str, DataFrame]) -> dict[str, DataFrame]:
-    """Section name → DataFrame[json string] (the scalable form)."""
-    return {
-        "DedupMineralSite": dedup_site_json_rows(
-            out["dedup_sites"], out["sites_rel"]
-        ),
-        "MineralSite": mineral_site_json_rows(out["sites_rel"]),
-        "MineralInventoryView": inventory_view_json_rows(
-            out["inv_views"], out["sites_rel"]
-        ),
-        "DedupMineralInventoryView": dedup_inventory_json_rows(
-            out["dedup_inventories"]
-        ),
-    }
+_INV_KEYS = ("commodity", "contained_metal", "tonnage", "grade", "date")
 
 
-def write_dedup_sites_jsonl(out: dict[str, DataFrame], outdir: str) -> None:
-    """Corpus-scale layout: one JSONL directory per section."""
-    for name, df in dedup_sites_json_sections(out).items():
-        df.write.mode("overwrite").text(f"{outdir}/{name}.jsonl")
+def _records(df: DataFrame) -> list[dict]:
+    """One Arrow collect (a single scan job, no Python worker)."""
+    return df.toPandas().to_dict("records")
 
 
 def dedup_sites_json(out: dict[str, DataFrame]) -> dict:
-    """The reference's single merged document (export scale — collects)."""
+    """The reference's single merged document from ``KGPipeline.run``'s
+    ``dedup_sites``, ``sites_rel``, ``inv_views`` and ``dedup_inventories``.
+
+    Each table is collected once; the per-site lookups the sections need
+    (a ranked site's score metadata, a site's inventory views, a site's
+    dedup group, taken from the DedupMineralSite rows' ``ranked_sites``)
+    are dicts.  Rows come in a fixed order: DedupMineralSite by ``id``,
+    MineralSite and MineralInventoryView by site, DedupMineralInventoryView
+    by (dedup site, commodity); a site's ``invs`` keep ``inv_views``' row
+    order, its document's commodity order."""
+    sites = sorted(_records(out["sites_rel"]), key=itemgetter("site_id"))
+    by_site = {r["site_id"]: r for r in sites}
+    invs: dict[str, list[dict]] = {}
+    for r in _records(out["inv_views"]):
+        invs.setdefault(r["site_id"], []).append(_wn((k, r[k]) for k in _INV_KEYS))
+
+    dedup_rows, group = [], {}
+    for d in sorted(_records(out["dedup_sites"]), key=itemgetter("dedup_site_id")):
+        # a ranked site missing from sites_rel has no metadata and is left
+        # out, as an inner join would
+        ranked = [
+            by_site[s["site_id"]]
+            for s in _lst(d["ranked_sites"])
+            if s["site_id"] in by_site
+        ]
+        for m in ranked:
+            group[m["site_id"]] = d["dedup_site_id"]
+        dedup_rows.append(dedup_to_dict(d, ranked))
+
+    dedup_invs = sorted(
+        _records(out["dedup_inventories"]),
+        key=itemgetter("dedup_site_id", "commodity"),
+    )
     return {
-        name: [json.loads(r["json"]) for r in df.collect()]
-        for name, df in dedup_sites_json_sections(out).items()
+        "DedupMineralSite": dedup_rows,
+        "MineralSite": [
+            ms_to_dict({**r, "dedup_site_id": group.get(r["site_id"])}) for r in sites
+        ],
+        # one entry per SITE: the reference iterates id2site, so a site
+        # without any normalized-commodity inventory has empty invs
+        "MineralInventoryView": [
+            {"invs": invs.get(r["site_id"], []), "site": r["site_id"]} for r in sites
+        ],
+        "DedupMineralInventoryView": [
+            _wn((k, r[k]) for k in (*_INV_KEYS, "site_id", "dedup_site_id"))
+            for r in dedup_invs
+        ],
     }
 
 
-def write_dedup_sites_json(out: dict[str, DataFrame], path: str) -> None:
-    """K2: the merged document.  A ``.lz4`` path writes the reference's
+def dump_dedup_sites_json(doc: dict, path: str) -> None:
+    """Write a merged document: its sections in ``SECTIONS`` order, each
+    row with sorted keys.  A ``.lz4`` path writes the reference's
     compressed layout (`etl/mineral_site.py:30,357-365`) via
     functions/lz4frame.py — the real lz4 package when importable, else a
-    spec-conformant stored-block frame (documented there).
-
-    The sections' collected rows are joined as they are, without a
-    driver-side ``json.loads`` / ``json.dumps`` round trip: each row is
-    already ``json.dumps`` output with sorted keys, which a round trip
-    reproduces byte for byte, so the file holds exactly
-    ``json.dumps(dedup_sites_json(out))``."""
-    doc = (
+    spec-conformant stored-block frame (documented there)."""
+    text = (
         "{"
         + ", ".join(
-            f"{json.dumps(name)}: [" + ", ".join(r["json"] for r in df.collect()) + "]"
-            for name, df in dedup_sites_json_sections(out).items()
+            f"{json.dumps(name)}: {json.dumps(doc[name], sort_keys=True)}"
+            for name in SECTIONS
         )
         + "}"
     )
@@ -530,10 +456,15 @@ def write_dedup_sites_json(out: dict[str, DataFrame], path: str) -> None:
         from ..functions.lz4frame import compress
 
         with open(path, "wb") as f:
-            f.write(compress(doc.encode("utf-8")))
+            f.write(compress(text.encode("utf-8")))
     else:
         with open(path, "w") as f:
-            f.write(doc)
+            f.write(text)
+
+
+def write_dedup_sites_json(out: dict[str, DataFrame], path: str) -> None:
+    """K2: the merged document of ``out`` written to ``path``."""
+    dump_dedup_sites_json(dedup_sites_json(out), path)
 
 
 def read_dedup_sites_json(path: str) -> dict:

@@ -564,18 +564,15 @@ def main(argv=None):
     pipe = KGPipeline(spark, args.workdir, n_buckets=args.n_buckets)
     out = pipe.run(ingest, vdfs, edges, curated)
     if args.export_kgrel:
-        from .export import write_dedup_sites_json, write_dedup_sites_jsonl
+        from .export import dedup_sites_json, dump_dedup_sites_json
 
-        os.makedirs(os.path.join(args.workdir, "kgrel"), exist_ok=True)
-        write_dedup_sites_jsonl(out, os.path.join(args.workdir, "kgrel"))
+        kgrel = os.path.join(args.workdir, "kgrel")
+        os.makedirs(kgrel, exist_ok=True)
+        doc = dedup_sites_json(out)
         # the reference ships the compressed layout by default
         # (etl/mineral_site.py:30: COMPRESSION = ".lz4")
-        write_dedup_sites_json(
-            out, os.path.join(args.workdir, "kgrel", "dedup_sites.json.lz4")
-        )
-        write_dedup_sites_json(
-            out, os.path.join(args.workdir, "kgrel", "dedup_sites.json")
-        )
+        for name in ("dedup_sites.json.lz4", "dedup_sites.json"):
+            dump_dedup_sites_json(doc, os.path.join(kgrel, name))
     n_triples = pipe.metrics["triples"]["n_rows"]
     wall = time.time() - t0
     print(

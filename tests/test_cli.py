@@ -6,6 +6,8 @@ import json
 import subprocess
 import sys
 
+from ta2_minmod_kg_spark.plans.export import read_dedup_sites_json
+
 
 def test_pipeline_cli(tmp_path):
     out = subprocess.run(
@@ -21,6 +23,7 @@ def test_pipeline_cli(tmp_path):
             "local[4]",
             "--n-buckets",
             "4",
+            "--export-kgrel",
         ],
         capture_output=True,
         text=True,
@@ -31,3 +34,9 @@ def test_pipeline_cli(tmp_path):
     payload = json.loads(line)
     assert payload["n_triples"] > 1000
     assert payload["stages"]["triples"]["n_rows"] == payload["n_triples"]
+    # --export-kgrel writes one document in both of the reference's layouts
+    kgrel = tmp_path / "wd" / "kgrel"
+    doc = read_dedup_sites_json(str(kgrel / "dedup_sites.json"))
+    assert read_dedup_sites_json(str(kgrel / "dedup_sites.json.lz4")) == doc
+    n_dedup = payload["stages"]["dedup_sites"]["n_rows"]
+    assert len(doc["DedupMineralSite"]) == n_dedup > 0

@@ -217,6 +217,18 @@ def test_entity_triples_match_spark_emitter_goldens(spark):
         )
 
 
+def test_row_without_an_id_emits_no_triple(spark):
+    """A ``data_source`` without ``uri`` and a ``crs``/``category`` without
+    an id name no subject, so they emit nothing: no triple with a null
+    subject, none of their labels.  The planted vocabularies hold one of
+    each."""
+    for name in ("planted", "planted_csv"):
+        rows = entity_triples(golden_vocabularies(spark)[name]).collect()
+        assert rows and all(r["subj"] is not None for r in rows), name
+        labels = {r["obj"] for r in rows if r["pred"] == "rdfs:label"}
+        assert not labels & {'"no uri"', '"no id"'}, name
+
+
 def test_double_literals_match_spark_cast_to_string(spark):
     """A decimal literal renders its double exactly as Spark's
     ``cast(double as string)`` (the JVM's ``Double.toString``), which

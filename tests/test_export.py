@@ -9,6 +9,11 @@ Checks on the reference's own fixture corpus:
 - ranked_sites are in score-descending order with the reference's
   suborder tie-break encoding.
 
+Checks on a ``KGPipeline.run`` build of 30 synthetic records: both file
+layouts, every MineralSite row's dedup group, an int ``discovered_year``,
+a fixed row order (two builds write the same bytes), and a guard that the
+export runs one single-stage scan job per table it reads.
+
 The lz4 frame codec and none-stripping checks need no fixture and run
 everywhere; only the fixture-corpus tests skip when it is absent.
 """
@@ -179,46 +184,17 @@ def test_lz4_frame_codec_roundtrip():
     assert _decode_block(blk) == b"ab" + b"b" * 8
 
 
-def test_write_read_dedup_sites_json_both_layouts(exported, tmp_path, spark):
-    """write .json and .json.lz4; read back both; identical documents."""
-    from ta2_minmod_kg_spark.operators import canonicalize, dedup, extract
-    from ta2_minmod_kg_spark.plans.export import (
-        read_dedup_sites_json,
-        write_dedup_sites_json,
-    )
-    from ta2_minmod_kg_spark.sources import synthetic, vocab
+# -- the merged document of a pipeline build ------------------------------------
 
-    ingest = synthetic.synthesize_ingest(spark, 30, partitions=2)
-    vdfs = vocab.vocab_dataframes(spark)
-    docs = extract.parse_sites(ingest)
-    sites = extract.normalize_sites(docs, vdfs).persist()
-    membership = canonicalize.build_membership(sites, None, None)
-    swd = sites.drop("dedup_site_id").join(membership, "site_id").persist()
-    gt = extract.doc_rows(docs, vdfs, "inv_views")
-    out = {
-        "sites_rel": swd,
-        "dedup_sites": dedup.merge_dedup_sites(swd),
-        "inv_views": gt,
-        "dedup_inventories": dedup.select_dedup_inventories(swd, gt),
-    }
-    plain = str(tmp_path / "dedup_sites.json")
-    packed = str(tmp_path / "dedup_sites.json.lz4")
-    write_dedup_sites_json(out, plain)
-    write_dedup_sites_json(out, packed)
-    a, b = read_dedup_sites_json(plain), read_dedup_sites_json(packed)
-    assert a == b and set(a) == set(SECTIONS) and len(a["MineralSite"]) >= 30
-    # the lz4 file is a real frame (magic) readable by any lz4 tool
-    assert open(packed, "rb").read(4) == b"\x04\x22\x4d\x18"
+MR = "https://minmod.isi.edu/resource/"
+# a planted site whose commodities are not in sorted order, each listed
+# once: its MineralInventoryView entry must keep this order
+PLANTED_COMMODITIES = ["Q1018", "Q1013", "Q1005", "Q1003"]
 
 
-def test_merged_file_is_the_dumped_document(spark, tmp_path):
-    """``write_dedup_sites_json`` joins the sections' JSON rows as
-    collected: the file's bytes (decompressed, for ``.lz4``) equal
-    ``json.dumps(dedup_sites_json(out))``, on a corpus with a non-ASCII
-    name and float measures."""
-    from ta2_minmod_kg_spark.functions.lz4frame import decompress
-    from ta2_minmod_kg_spark.plans.export import write_dedup_sites_json
-    from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
+def _kg_ingest(spark):
+    """30 synthetic records: record 0 has a non-ASCII name and a
+    discovered year, record 1 the planted commodity order."""
     from ta2_minmod_kg_spark.sources import synthetic
 
     rows = []
@@ -226,21 +202,168 @@ def test_merged_file_is_the_dumped_document(spark, tmp_path):
         rec = synthetic.make_record(i, 30)
         if i == 0:
             rec["name"] = "Mina S\u00e3o Jo\u00e3o \u2013 \u00fc"
+            rec["discovered_year"] = 1883
+        if i == 1:
+            inv = rec["mineral_inventory"][0]
+            rec["mineral_inventory"] = [
+                {**inv, "commodity": {**inv["commodity"], "normalized_uri": MR + q}}
+                for q in PLANTED_COMMODITIES
+            ]
         rows.append(("r", f"data/s{i}.json", "c", "json", json.dumps(rec)))
-    ingest = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "repo string, path string, commit string, lang string, content string"
     )
-    out = KGPipeline(spark, str(tmp_path / "wd"), n_buckets=4).run(
-        ingest, vocab.vocab_dataframes(spark)
+
+
+def _kg_build(spark, workdir):
+    from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
+
+    return KGPipeline(spark, str(workdir), n_buckets=4).run(
+        _kg_ingest(spark), vocab.vocab_dataframes(spark)
     )
-    want = json.dumps(dedup_sites_json(out)).encode("utf-8")
-    assert b"\\u00e3" in want and len(json.loads(want)["MineralSite"]) == 30
+
+
+@pytest.fixture(scope="module")
+def kg(spark, tmp_path_factory):
+    """``KGPipeline.run``'s tables and their merged document."""
+    out = _kg_build(spark, tmp_path_factory.mktemp("kg") / "wd")
+    return out, dedup_sites_json(out)
+
+
+def test_write_read_dedup_sites_json_both_layouts(kg, tmp_path):
+    """write .json and .json.lz4 of a pipeline build; read back both;
+    identical documents, each the formatted one."""
+    from ta2_minmod_kg_spark.plans.export import (
+        read_dedup_sites_json,
+        write_dedup_sites_json,
+    )
+
+    out, doc = kg
     plain = str(tmp_path / "dedup_sites.json")
     packed = str(tmp_path / "dedup_sites.json.lz4")
     write_dedup_sites_json(out, plain)
     write_dedup_sites_json(out, packed)
-    assert open(plain, "rb").read() == want
-    assert decompress(open(packed, "rb").read()) == want
+    a, b = read_dedup_sites_json(plain), read_dedup_sites_json(packed)
+    assert a == b == doc and list(a) == list(SECTIONS)
+    assert len(a["MineralSite"]) >= 30
+    # the lz4 file is a real frame (magic) readable by any lz4 tool
+    assert open(packed, "rb").read(4) == b"\x04\x22\x4d\x18"
+
+
+def test_merged_file_is_the_dumped_document(kg, tmp_path):
+    """``dump_dedup_sites_json`` writes the document as ASCII JSON (a
+    non-ASCII name is escaped, float measures kept), its sections in
+    ``SECTIONS`` order and each row's keys sorted; the ``.lz4`` file
+    decompresses to the plain file's bytes."""
+    from ta2_minmod_kg_spark.functions.lz4frame import decompress
+    from ta2_minmod_kg_spark.plans.export import dump_dedup_sites_json
+
+    _, doc = kg
+    plain = str(tmp_path / "dedup_sites.json")
+    packed = str(tmp_path / "dedup_sites.json.lz4")
+    dump_dedup_sites_json(doc, plain)
+    dump_dedup_sites_json(doc, packed)
+    raw = open(plain, "rb").read()
+    assert decompress(open(packed, "rb").read()) == raw
+    assert raw.isascii() and b"\\u00e3" in raw
+    assert json.loads(raw) == doc and len(doc["MineralSite"]) == 30
+    pairs = json.loads(raw, object_pairs_hook=lambda kv: kv)
+    assert [k for k, _ in pairs] == list(SECTIONS)
+    for _, rows in pairs:
+        for row in rows:
+            keys = [k for k, _ in row]
+            assert keys == sorted(keys), keys
+
+
+def test_mineral_sites_carry_their_dedup_group(kg):
+    """Every MineralSite row names its dedup group: a DedupMineralSite
+    ``id``, the one ``membership`` gives the site, and the group whose
+    ``ranked_sites`` list it.  (``KGPipeline.run``'s ``sites_rel`` holds
+    no ``dedup_site_id``; the formatter takes it from the groups.)"""
+    out, doc = kg
+    membership = {
+        r["site_id"]: r["dedup_site_id"] for r in out["membership"].collect()
+    }
+    dedup_ids = {d["id"] for d in doc["DedupMineralSite"]}
+    ranked = {
+        s["site_id"]: d["id"]
+        for d in doc["DedupMineralSite"]
+        for s in d["ranked_sites"]
+    }
+    assert len(doc["MineralSite"]) == len(membership) == 30
+    for ms in doc["MineralSite"]:
+        assert ms["dedup_site_id"] in dedup_ids
+        assert ms["dedup_site_id"] == membership[ms["site_id"]]
+        assert ms["dedup_site_id"] == ranked[ms["site_id"]]
+
+
+def test_discovered_year_is_an_int(kg):
+    """The kgrel MineralSite model's ``discovered_year`` is an int; pandas
+    holds the nullable column as float64, which must not leak as 1883.0."""
+    _, doc = kg
+    years = [
+        ms["discovered_year"] for ms in doc["MineralSite"] if "discovered_year" in ms
+    ]
+    assert 1883 in years
+    assert all(type(y) is int for y in years), years
+    assert '"discovered_year": 1883,' in json.dumps(doc["MineralSite"], sort_keys=True)
+    for d in doc["DedupMineralSite"]:
+        if "discovered_year" in d:
+            assert type(d["discovered_year"]["value"]) is int
+
+
+def test_sections_in_a_fixed_order(kg, spark, tmp_path):
+    """Two builds of one corpus into two workdirs write byte-identical
+    files; the sections are sorted by their keys, and the planted site's
+    ``invs`` follow its document's commodity order."""
+    from ta2_minmod_kg_spark.plans.export import write_dedup_sites_json
+
+    out, doc = kg
+    files = []
+    for name, tables in (("a", out), ("b", _kg_build(spark, tmp_path / "wd"))):
+        path = tmp_path / f"{name}.json"
+        write_dedup_sites_json(tables, str(path))
+        files.append(path.read_bytes())
+    assert files[0] == files[1]
+
+    def keys(section, *ks):
+        return [tuple(r[k] for k in ks) for r in doc[section]]
+
+    assert keys("DedupMineralSite", "id") == sorted(keys("DedupMineralSite", "id"))
+    assert keys("MineralSite", "site_id") == sorted(keys("MineralSite", "site_id"))
+    site_order = [r["site"] for r in doc["MineralInventoryView"]]
+    assert site_order == [k for (k,) in keys("MineralSite", "site_id")]
+    dmi = keys("DedupMineralInventoryView", "dedup_site_id", "commodity")
+    assert dmi == sorted(dmi) and dmi
+    planted = [
+        [i["commodity"] for i in r["invs"]]
+        for r in doc["MineralInventoryView"]
+        if len(r["invs"]) == len(PLANTED_COMMODITIES)
+        and {i["commodity"] for i in r["invs"]} == set(PLANTED_COMMODITIES)
+    ]
+    assert planted == [PLANTED_COMMODITIES]
+
+
+def test_export_runs_one_scan_job_per_table(kg, spark, tmp_path):
+    """CI guard: the export reads its four tables with at most one Spark
+    job each, and every job is one stage — no section join, shuffle or
+    Python stage in front of the collect."""
+    from ta2_minmod_kg_spark.plans.export import write_dedup_sites_json
+
+    out, _ = kg
+    sc = spark.sparkContext
+    group = "guard-export"
+    sc.setJobGroup(group, group)
+    try:
+        write_dedup_sites_json(out, str(tmp_path / "dedup_sites.json.lz4"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup(group))
+    assert 0 < len(jobs) <= 4, jobs
+    for j in jobs:
+        assert len(tracker.getJobInfo(j).stageIds) == 1, (j, tracker.getJobInfo(j))
 
 
 def _ref_format_dedup_site():
