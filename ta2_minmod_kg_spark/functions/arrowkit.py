@@ -29,6 +29,11 @@ construction:
 GC is re-enabled between chunks (and on error), so genuinely cyclic
 garbage from third-party code still gets collected at chunk
 boundaries.
+
+The pipeline's two passes (``extract.doc_pass``, ``dedup.group_pass``)
+write their tables from their kernels: ``write_staged`` writes one Arrow
+table as one parquet file under a staging directory and returns its
+``MANIFEST`` row, the record the driver commits by.
 """
 
 from __future__ import annotations
@@ -38,6 +43,13 @@ from typing import Callable, Iterator, Union
 
 import pandas as pd
 import pyarrow as pa
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 # a pandas frame under mapInPandas, a record batch under mapInArrow
 Batch = Union[pd.DataFrame, pa.RecordBatch]
@@ -85,3 +97,43 @@ def chunked_kernel(
                     yield out
 
     return gen
+
+
+# one row per file a pass wrote; ``bucket`` is null for an unpartitioned
+# table
+MANIFEST = StructType(
+    [
+        StructField("table", StringType(), False),
+        StructField("bucket", IntegerType(), True),
+        StructField("path", StringType(), False),
+        StructField("n_rows", LongType(), False),
+    ]
+)
+
+
+def write_staged(staging: str, table: str, bucket, name: str, data) -> dict:
+    """Write the Arrow table ``data`` as one parquet file (one row group)
+    ``name`` under ``<staging>/<table>/`` (``.../bucket=<b>/`` when
+    ``bucket`` is not None) and return its ``MANIFEST`` row."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs as pafs
+
+    filesystem, root = pafs.FileSystem.from_uri(staging)
+    rel = table if bucket is None else f"{table}/bucket={bucket}"
+    filesystem.create_dir(f"{root}/{rel}")
+    # no ARROW:schema (store_schema) and no pandas footer keys: Spark
+    # reads the Parquet schema, and ARROW:schema alone adds ~8.6 KB to a
+    # 50 KB sites_rel file (+17 %)
+    pq.write_table(
+        data,
+        f"{root}/{rel}/{name}",
+        filesystem=filesystem,
+        row_group_size=max(1, data.num_rows),
+        store_schema=False,
+    )
+    return {
+        "table": table,
+        "bucket": bucket,
+        "path": f"{staging}/{rel}/{name}",
+        "n_rows": data.num_rows,
+    }

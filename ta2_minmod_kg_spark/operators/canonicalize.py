@@ -24,8 +24,11 @@ Pipeline:
                              own group; every group gets
                              ``dedup_id = "dedup_" + min(site_ids)``
                              (`kgrel/mineral_site.py:331-333`).
-7. ``sameas_triples``      — ``canon owl:sameAs member`` rows (self-link
-                             for singletons), `etl/same_as.py:324-334`.
+7. same-as triples        — ``canon owl:sameAs member`` rows (self-link
+                             for singletons), `etl/same_as.py:324-334`:
+                             written by the group pass
+                             (``dedup.group_pass``) from each group's
+                             members, with no relabel or size join here.
 
 All set algebra is semi/anti joins; the only iterative part is CC.
 """
@@ -175,23 +178,6 @@ def with_dedup_id(membership: DataFrame, already_canonical: bool = False) -> Dat
     return canon.select(
         F.col("node").alias("site_id"),
         F.concat(F.lit("dedup_"), F.col("component")).alias("dedup_site_id"),
-    )
-
-
-def sameas_triples(membership: DataFrame) -> DataFrame:
-    """G6: per group emit ``min owl:sameAs member`` (self-link when the
-    group is a singleton)."""
-    canon = relabel_min(membership)
-    sizes = canon.groupBy("component").agg(F.count(F.lit(1)).alias("n"))
-    return (
-        canon.join(sizes, "component")
-        .filter((F.col("node") != F.col("component")) | (F.col("n") == 1))
-        .select(
-            F.concat(F.lit("mr:"), F.col("component")).alias("subj"),
-            F.lit("owl:sameAs").alias("pred"),
-            F.concat(F.lit("mr:"), F.col("node")).alias("obj"),
-            F.col("component").alias("site_id"),
-        )
     )
 
 

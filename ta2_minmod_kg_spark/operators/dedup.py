@@ -20,13 +20,29 @@ and `custom_types/site_and_score.py:27-61`):
   ``select_inventories`` (`dedup_mineral_site.py:316-383`);
 - ``modified_at`` = group max.
 
-Execution: JVM ``collect_list(struct(...))`` per dedup group (map-side
-partial aggregation, one shuffle), then ``mapInPandas`` — whole Arrow
-batches of groups per Python call.  Per-group ``applyInPandas`` would pay
-a pandas-DataFrame construction per group; groups are usually 1-5 sites,
-so that overhead dominates at corpus scale.  The giant planted cluster is
-the skew case: a single mega-group lands in one task, but the kernel is
-O(group) with small constants.
+Execution: ONE grouping and ONE per-group batch builder,
+``_group_batches``.  Each group is one JVM ``collect_list(struct(...))``
+row (map-side partial aggregation, one shuffle) whose members carry their
+inventory-view rows (``invs``, collected per ``site_id``); a
+``mapInArrow`` kernel hands whole Arrow batches of groups to the builder,
+which runs ``merge_group`` (the ``dedup_sites`` row),
+``select_inventories_group`` (the ``dedup_inventories`` rows) and emits
+the group's ``owl:sameAs`` links (``sameas_triples``).  Per-group
+``applyInPandas`` would pay a pandas-DataFrame construction per group;
+groups are usually 1-5 sites, so that overhead dominates at corpus scale.
+
+- ``group_pass`` / ``write_group_tables`` — the pipeline's group pass:
+  the builder for all three tables, written with ``pyarrow.parquet``
+  under a staging directory and reported as a ``MANIFEST`` the pipeline
+  commits (as the document pass, ``extract.doc_pass``);
+- ``merge_dedup_sites`` / ``select_dedup_inventories`` — one of those
+  tables as a frame, the builder run for that table alone.
+
+Mega groups (the skew case: at or above ``BIG_GROUP_THRESHOLD``
+members) take ``_merge_big_groups_sql`` for their ``dedup_sites`` row,
+pure Catalyst partial aggregates; the builder gets only their narrow
+ranking and inventory fields, so no task assembles a mega group's
+attribute structs.
 """
 
 from __future__ import annotations
@@ -34,12 +50,13 @@ from __future__ import annotations
 import json
 from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..functions.arrowkit import chunked_kernel
+from ..functions.arrowkit import MANIFEST, chunked_kernel, write_staged
 from ..functions.ids import MR_NS
+from ..schemas import DEDUP_INVENTORY, DEDUP_SITE, SAMEAS_TRIPLE
 
 SYSTEM_PREFIX = "https://minmod.isi.edu/users/s/"
 DEFAULT_SOURCE_SCORE = 0.5  # ref minmodkg/config.py:28
@@ -92,34 +109,13 @@ def _first_non_null(ranked: list[dict], getter):
     return None
 
 
-DEDUP_ATTRS_SCHEMA = (
-    "dedup_site_id string,"
-    "name struct<value:string,refid:string>,"
-    "type struct<value:string,refid:string>,"
-    "rank struct<value:string,refid:string>,"
-    "top1_deposit_type string,"
-    "ranked_deposit_types array<struct<id:string,source:string,confidence:double,refid:string>>,"
-    "coordinates struct<lat:double,lon:double,refid:string>,"
-    "country struct<value:array<string>,refid:string>,"
-    "state_or_province struct<value:array<string>,refid:string>,"
-    "mineral_form struct<value:array<string>,refid:string>,"
-    "geology_info string,"  # JSON of per-field RefValues (sparse nested map)
-    "discovered_year struct<value:int,refid:string>,"
-    "ranked_sites array<struct<site_id:string,score:double,is_expert:boolean>>,"
-    "modified_at long"
-)
-
-_ATTR_INPUT_COLS = [
-    # NOTE: created_by deliberately absent — with_site_score folds it
-    # into is_expert/score BEFORE the groupBy, and merge_group never
-    # reads it, so carrying it in the collected struct only widened the
-    # shuffle (guide §2.3, r06)
-    "site_id",
-    "source_id",
-    "record_id",
-    "modified_at",
-    "score",
-    "is_expert",
+# the member fields that rank a group's sites (SiteScore, ``_rank_key``)
+# and the attributes ``merge_group`` merges; NOTE: created_by deliberately
+# absent — with_site_score folds it into is_expert/score BEFORE the
+# groupBy, and merge_group never reads it, so carrying it in the collected
+# struct only widened the shuffle (guide §2.3, r06)
+_RANK_COLS = ["site_id", "source_id", "record_id", "modified_at", "score", "is_expert"]
+_WIDE_COLS = [
     "name",
     "type",
     "rank",
@@ -132,7 +128,9 @@ _ATTR_INPUT_COLS = [
     "discovered_year",
     "deposit_type_candidates",
 ]
-
+_ATTR_INPUT_COLS = _RANK_COLS + _WIDE_COLS
+# a member's inventory-view rows (INV_VIEW without site_id), its ``invs``
+_INV_FIELDS = ["commodity", "contained_metal", "tonnage", "grade", "date"]
 
 def _merge_geology(ranked: list[dict]) -> Optional[dict]:
     """RefGeologyInfo.from_sites: first-non-null per sub-attribute.
@@ -273,122 +271,14 @@ def merge_group(dedup_id: str, rows: list[dict]) -> dict:
     }
 
 
-_OUT_COLS = [
-    "dedup_site_id",
-    "name",
-    "type",
-    "rank",
-    "top1_deposit_type",
-    "ranked_deposit_types",
-    "coordinates",
-    "country",
-    "state_or_province",
-    "mineral_form",
-    "geology_info",
-    "discovered_year",
-    "ranked_sites",
-    "modified_at",
-]
-
-
-def _merge_per_chunk(pdf):
-    # column-wise accumulation (r06): same values, no per-row-dict frame
-    # inference in pandas
-    cols: dict[str, list] = {c: [] for c in _OUT_COLS}
-    for dedup_id, sites in zip(pdf["dedup_site_id"], pdf["sites"]):
-        row = merge_group(dedup_id, list(sites))
-        for c in _OUT_COLS:
-            cols[c].append(row[c])
-    return pd.DataFrame(cols, columns=_OUT_COLS)
-
-
-# bounded chunks + paused cyclic GC (functions/arrowkit.py): one row here
-# is a whole collect_list group, so a full 10k-row Arrow batch holds every
-# member struct of 10k groups — far past the GC knee
-_merge_batch_fn = chunked_kernel(_merge_per_chunk, max_rows=1024)
-
-
-BIG_GROUP_THRESHOLD = 50_000
-
-
-def merge_dedup_sites(
-    sites_with_dedup: DataFrame,
-    big_group_threshold: int = BIG_GROUP_THRESHOLD,
-    ranked_sites_cap: int | None = None,
-) -> DataFrame:
-    """A3/A4: group-merge.  Input: SITE_REL columns + dedup_site_id.
-
-    Skew-safe dispatch: group sizes are counted first (map-side partial
-    count, cheap), and groups at or above ``big_group_threshold`` are
-    routed to the pure-SQL aggregate path (``_merge_big_groups_sql`` —
-    Catalyst partial aggregation, never assembles the group on one task)
-    while normal groups take the collect_list + Arrow kernel path.  The
-    two paths are byte-equivalent (tests/test_dedup_wide.py).
-
-    ``ranked_sites_cap`` (VERDICT r03 #7): the reference keeps the FULL
-    member list on every dedup site, so the default (None) preserves
-    parity — at the cost that a mega group's ranked_sites array
-    materializes on one reducer (~tens of MB at 10^6 members; documented
-    ceiling).  Beyond that scale, pass a cap to truncate each mega
-    group's ranked_sites to the top-K members by rank via salted partial
-    aggregation — no task ever holds more than ~n_salts×K structs.  All
-    other merged fields stay exact; only the member list is truncated.
-    """
-    narrow = with_site_score(sites_with_dedup)
-    # group sizes from the pruned key column only — Catalyst reads just the
-    # join keys for this pass, and the oversize-id list is tiny by nature
-    big_rows = (
-        sites_with_dedup.select("dedup_site_id")
-        .groupBy("dedup_site_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= big_group_threshold)
-        .collect()
-    )
-    if not big_rows:
-        # common case: no mega groups — single scan, pure kernel path
-        grouped = narrow.groupBy("dedup_site_id").agg(
-            F.collect_list(F.struct(*_ATTR_INPUT_COLS)).alias("sites")
-        )
-        return grouped.mapInPandas(_merge_batch_fn, schema=DEDUP_ATTRS_SCHEMA)
-
-    big_set = [r["dedup_site_id"] for r in big_rows]
-    small = narrow.filter(~F.col("dedup_site_id").isin(big_set))
-    big = narrow.filter(F.col("dedup_site_id").isin(big_set))
-
-    grouped = small.groupBy("dedup_site_id").agg(
-        F.collect_list(F.struct(*_ATTR_INPUT_COLS)).alias("sites")
-    )
-    out_small = grouped.mapInPandas(_merge_batch_fn, schema=DEDUP_ATTRS_SCHEMA)
-    return out_small.unionByName(
-        _merge_big_groups_sql(big, ranked_sites_cap=ranked_sites_cap)
-    )
-
-
 # -- inventory selection (A5) --------------------------------------------------
-
-DEDUP_INV_SCHEMA = (
-    "dedup_site_id string, commodity string, site_id string, "
-    "contained_metal double, tonnage double, grade double, date string"
-)
-
-_INV_INPUT_COLS = [
-    "site_id",
-    "source_id",
-    "record_id",
-    "modified_at",
-    "score",
-    "is_expert",
-    "commodity",
-    "contained_metal",
-    "tonnage",
-    "grade",
-    "date",
-]
 
 
 def select_inventories_group(dedup_id: str, rows: list[dict]) -> list[dict]:
     """Exact select_inventories semantics over one dedup group
-    (ref dedup_mineral_site.py:316-383)."""
+    (ref dedup_mineral_site.py:316-383).  ``rows``: one per (site,
+    inventory view), or one with a null ``commodity`` for a site without
+    views, carrying the site's ``_RANK_COLS``."""
     site_rows: dict[str, list[dict]] = {}
     site_keys: dict[str, tuple] = {}
     for row in rows:
@@ -446,51 +336,283 @@ def select_inventories_group(dedup_id: str, rows: list[dict]) -> list[dict]:
     ]
 
 
-_INV_OUT_COLS = [
-    "dedup_site_id",
-    "commodity",
-    "site_id",
-    "contained_metal",
-    "tonnage",
-    "grade",
-    "date",
-]
+# -- the group pass: one grouping, one per-group batch builder ---------------
+
+# the group pass's tables, unpartitioned (one file per non-empty task)
+GROUP_TABLES = ("dedup_sites", "dedup_inventories", "sameas_triples")
+GROUP_FILE_SCHEMAS = {
+    "dedup_sites": DEDUP_SITE,
+    "dedup_inventories": DEDUP_INVENTORY,
+    "sameas_triples": SAMEAS_TRIPLE,
+}
+GROUP_ARROW_SCHEMAS = {t: to_arrow_schema(s) for t, s in GROUP_FILE_SCHEMAS.items()}
+
+BIG_GROUP_THRESHOLD = 50_000
+
+# one row is a whole group: 1024-group chunks keep a chunk's alive set
+# bounded (functions/arrowkit.py)
+_GROUP_CHUNK_ROWS = 1024
 
 
-def _select_inv_per_chunk(pdf):
-    cols: dict[str, list] = {c: [] for c in _INV_OUT_COLS}
-    for dedup_id, rows in zip(pdf["dedup_site_id"], pdf["rows"]):
-        for row in select_inventories_group(dedup_id, list(rows)):
-            for c in _INV_OUT_COLS:
-                cols[c].append(row[c])
-    return pd.DataFrame(cols, columns=_INV_OUT_COLS)
+def _group_batches(rb, tables, big_group_threshold: int) -> dict:
+    """The per-group code of this module's kernels: for each group of the
+    record batch ``rb`` (``dedup_site_id`` and its ``sites`` struct list,
+    from ``_grouped``), the rows of those of ``GROUP_TABLES`` in
+    ``tables``:
+
+    - ``dedup_sites``: ``merge_group``'s row, for a group below
+      ``big_group_threshold`` members (a mega group's row comes from
+      ``_merge_big_groups_sql``);
+    - ``dedup_inventories``: ``select_inventories_group`` over the
+      group's (site, inventory view) rows;
+    - ``sameas_triples``: ``mr:<min member> owl:sameAs mr:<member>`` for
+      every other distinct member, or one self-link for a singleton
+      (`etl/same_as.py:324-334`).
+
+    Returns ``{table: pyarrow.RecordBatch}`` (``GROUP_ARROW_SCHEMAS``)
+    for the tables that got rows."""
+    import pyarrow as pa
+
+    want_sites = "dedup_sites" in tables
+    want_invs = "dedup_inventories" in tables
+    want_sameas = "sameas_triples" in tables
+    merged: list[dict] = []
+    invs: list[dict] = []
+    links: list[dict] = []
+    ids = rb.column("dedup_site_id").to_pylist()
+    for dedup_id, members in zip(ids, rb.column("sites").to_pylist()):
+        if want_sites and len(members) < big_group_threshold:
+            merged.append(merge_group(dedup_id, members))
+        if want_invs:
+            flat = []
+            for m in members:
+                if m["invs"]:
+                    flat += [{**m, **inv} for inv in m["invs"]]
+                else:
+                    flat.append({**m, "commodity": None})
+            invs += select_inventories_group(dedup_id, flat)
+        if want_sameas:
+            site_ids = sorted({m["site_id"] for m in members})
+            # a group of one links its site to itself
+            links += [
+                {
+                    "subj": "mr:" + site_ids[0],
+                    "pred": "owl:sameAs",
+                    "obj": "mr:" + sid,
+                    "site_id": site_ids[0],
+                }
+                for sid in site_ids[1:] or site_ids
+            ]
+
+    def batch(table, rows):
+        schema = GROUP_ARROW_SCHEMAS[table]
+        # from_pandas: NaN → null, as pyspark's pandas-to-Arrow conversion
+        # makes of it
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array([r[f.name] for r in rows], type=f.type, from_pandas=True)
+                for f in schema
+            ],
+            schema=schema,
+        )
+
+    rows = {"dedup_sites": merged, "dedup_inventories": invs, "sameas_triples": links}
+    return {t: batch(t, r) for t, r in rows.items() if r}
 
 
-_select_inv_batch_fn = chunked_kernel(_select_inv_per_chunk, max_rows=1024)
+def _grouped(
+    scored: DataFrame, cols: list, inv_views: DataFrame | None = None
+) -> DataFrame:
+    """One row per dedup group: ``dedup_site_id`` and ``sites``, the
+    ``collect_list`` of its members' ``cols`` (``with_site_score``
+    columns).  With ``inv_views``, each member also carries ``invs``:
+    its inventory-view rows (``_INV_FIELDS``), collected per ``site_id``
+    (null for a site without views)."""
+    if inv_views is not None:
+        per_site = inv_views.groupBy("site_id").agg(
+            F.collect_list(F.struct(*_INV_FIELDS)).alias("invs")
+        )
+        scored = scored.join(per_site, "site_id", "left")
+        cols = [*cols, "invs"]
+    return scored.groupBy("dedup_site_id").agg(
+        F.collect_list(F.struct(*cols)).alias("sites")
+    )
+
+
+def _group_rows(grouped: DataFrame, table: str, big_group_threshold: int) -> DataFrame:
+    """The rows the group pass writes to ``table`` for the groups of
+    ``grouped``: ONE ``mapInArrow`` running ``_group_batches`` for that
+    table alone."""
+
+    def per_chunk(rb):
+        return _group_batches(rb, (table,), big_group_threshold).get(table)
+
+    return grouped.mapInArrow(
+        chunked_kernel(per_chunk, max_rows=_GROUP_CHUNK_ROWS),
+        schema=GROUP_FILE_SCHEMAS[table],
+    )
+
+
+def _big_groups(sites_with_dedup: DataFrame, threshold: int) -> list[str]:
+    """The ids of the groups with at least ``threshold`` members — sized
+    from the pruned key column only, so Catalyst reads just the join keys,
+    and the list is tiny by nature."""
+    return [
+        r["dedup_site_id"]
+        for r in sites_with_dedup.select("dedup_site_id")
+        .groupBy("dedup_site_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= threshold)
+        .collect()
+    ]
+
+
+def merge_dedup_sites(
+    sites_with_dedup: DataFrame,
+    big_group_threshold: int | None = None,
+    ranked_sites_cap: int | None = None,
+) -> DataFrame:
+    """A3/A4: group-merge.  Input: SITE_REL columns + dedup_site_id.
+    The ``dedup_sites`` rows of the group pass, as a frame.
+
+    Skew-safe dispatch: group sizes are counted first (map-side partial
+    count, cheap), and groups at or above ``big_group_threshold``
+    (default ``BIG_GROUP_THRESHOLD``, read at call time) are routed to
+    the pure-SQL aggregate path (``_merge_big_groups_sql`` — Catalyst
+    partial aggregation, never assembles the group on one task) while
+    normal groups take the per-group batch builder.  The two paths are
+    byte-equivalent (tests/test_dedup_wide.py).
+
+    ``ranked_sites_cap`` (VERDICT r03 #7): the reference keeps the FULL
+    member list on every dedup site, so the default (None) preserves
+    parity — at the cost that a mega group's ranked_sites array
+    materializes on one reducer (~tens of MB at 10^6 members; documented
+    ceiling).  Beyond that scale, pass a cap to truncate each mega
+    group's ranked_sites to the top-K members by rank via salted partial
+    aggregation — no task ever holds more than ~n_salts×K structs.  All
+    other merged fields stay exact; only the member list is truncated.
+    """
+    if big_group_threshold is None:
+        big_group_threshold = BIG_GROUP_THRESHOLD
+    narrow = with_site_score(sites_with_dedup)
+    big = _big_groups(sites_with_dedup, big_group_threshold)
+    small = narrow.filter(~F.col("dedup_site_id").isin(big)) if big else narrow
+    out = _group_rows(
+        _grouped(small, _ATTR_INPUT_COLS), "dedup_sites", big_group_threshold
+    )
+    if not big:
+        return out
+    return out.unionByName(
+        _merge_big_groups_sql(
+            narrow.filter(F.col("dedup_site_id").isin(big)),
+            ranked_sites_cap=ranked_sites_cap,
+        )
+    )
 
 
 def select_dedup_inventories(
     sites_with_dedup: DataFrame, inv_views: DataFrame
 ) -> DataFrame:
-    """A5: per (group, commodity) pick the authoritative inventory view.
+    """A5: per (group, commodity) pick the authoritative inventory view —
+    the ``dedup_inventories`` rows of the group pass, as a frame.
 
     ``inv_views``: INV_VIEW rows (site_id, commodity, ...).  Sites without
-    inventories still participate in ranking via a left join.
+    inventories still participate in ranking.
     """
-    ranked = with_site_score(sites_with_dedup).select(
-        "site_id",
-        "dedup_site_id",
-        "source_id",
-        "record_id",
-        "modified_at",
-        "score",
-        "is_expert",
+    grouped = _grouped(with_site_score(sites_with_dedup), _RANK_COLS, inv_views)
+    return _group_rows(grouped, "dedup_inventories", BIG_GROUP_THRESHOLD)
+
+
+def _group_pass_kernel(staging: str, big_group_threshold: int):
+    """The ``group_pass`` kernel (``mapInArrow``): the task's
+    ``_group_batches`` of all three tables, buffered as Arrow record
+    batches and written at the end of the task as one file per non-empty
+    table under ``<staging>/<table>/``, the task attempt in its name; the
+    task's last batch is its manifest, one ``MANIFEST`` row per file."""
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    manifest_schema = to_arrow_schema(MANIFEST)
+
+    def kernel(batches):
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+        pending: dict[str, list] = {t: [] for t in GROUP_TABLES}
+
+        def per_chunk(rb) -> None:
+            for t, batch in _group_batches(rb, GROUP_TABLES, big_group_threshold).items():
+                pending[t].append(batch)
+
+        yield from chunked_kernel(per_chunk, max_rows=_GROUP_CHUNK_ROWS)(batches)
+        manifest = [
+            write_staged(
+                staging,
+                t,
+                None,
+                name,
+                pa.Table.from_batches(pending[t], GROUP_ARROW_SCHEMAS[t]),
+            )
+            for t in GROUP_TABLES
+            if pending[t]
+        ]
+        yield pa.RecordBatch.from_pylist(manifest, schema=manifest_schema)
+
+    return kernel
+
+
+def group_pass(
+    sites_with_dedup: DataFrame,
+    inv_views: DataFrame,
+    staging: str,
+    big_groups: list[str],
+    big_group_threshold: int,
+) -> DataFrame:
+    """The pipeline's group pass, as a lazy ``MANIFEST`` frame: ONE
+    grouping of ``sites_with_dedup`` (SITE_REL columns + dedup_site_id)
+    whose members carry their ``inv_views`` rows, and ONE ``mapInArrow``
+    over it that writes each group's rows of ``GROUP_TABLES``
+    (``_group_batches``) with ``pyarrow.parquet`` under ``staging``.
+    The members of ``big_groups`` carry only their narrow ranking and
+    inventory fields: the builder writes no ``dedup_sites`` row for them."""
+    cols = _ATTR_INPUT_COLS
+    if big_groups:
+        small = ~F.col("dedup_site_id").isin(big_groups)
+        cols = _RANK_COLS + [F.when(small, F.col(c)).alias(c) for c in _WIDE_COLS]
+    grouped = _grouped(with_site_score(sites_with_dedup), cols, inv_views)
+    return grouped.mapInArrow(
+        _group_pass_kernel(staging, big_group_threshold), schema=MANIFEST
     )
-    joined = ranked.join(inv_views, "site_id", "left")
-    grouped = joined.groupBy("dedup_site_id").agg(
-        F.collect_list(F.struct(*_INV_INPUT_COLS)).alias("rows")
-    )
-    return grouped.mapInPandas(_select_inv_batch_fn, schema=DEDUP_INV_SCHEMA)
+
+
+def write_group_tables(
+    sites_with_dedup: DataFrame, inv_views: DataFrame, staging: str
+) -> list[tuple[str, int | None, str, int]]:
+    """Run ``group_pass`` and return its manifest: ``(table, None, path,
+    n_rows)`` per written file.  Groups at or above
+    ``BIG_GROUP_THRESHOLD`` (read at call time) get their ``dedup_sites``
+    row from ``_merge_big_groups_sql``, collected as Arrow on the driver
+    and written under ``staging`` as one more file of the manifest."""
+    threshold = BIG_GROUP_THRESHOLD
+    big = _big_groups(sites_with_dedup, threshold)
+    manifest = [
+        tuple(r)
+        for r in group_pass(
+            sites_with_dedup, inv_views, staging, big, threshold
+        ).collect()
+    ]
+    if big:
+        rows = _merge_big_groups_sql(
+            with_site_score(sites_with_dedup).filter(F.col("dedup_site_id").isin(big))
+        ).toArrow()
+        row = write_staged(
+            staging,
+            "dedup_sites",
+            None,
+            "part-mega-groups.parquet",
+            rows.cast(GROUP_ARROW_SCHEMAS["dedup_sites"]),
+        )
+        manifest.append(tuple(row[f] for f in MANIFEST.names))
+    return manifest
 
 
 # -- mega-group (skew) path: SQL merge with exact kernel parity ---------------
@@ -792,7 +914,7 @@ def _merge_big_groups_sql(
             F.get(F.col("ranked_deposit_types"), 0)["id"],
         )
     )
-    # column order per DEDUP_ATTRS_SCHEMA
+    # column order per schemas.DEDUP_SITE
     return out.select(
         "dedup_site_id",
         "name",

@@ -67,14 +67,18 @@ def _aliases(s: str | None) -> list[str] | None:
     return [a.strip(" ") for a in s.split("|")]
 
 
-def _bool_lit(v) -> str:
+def _bool_lit(v, table: str | None = None, row_id: str | None = None) -> str:
     """``"true"``/``"false"^^xsd:boolean`` by Spark's cast to boolean;
     null renders false.  A string Spark cannot cast raises, as the cast
-    does under ANSI mode (Spark's default)."""
+    does under ANSI mode (Spark's default); the error names the
+    vocabulary ``table`` and ``row_id`` the value came from."""
     if isinstance(v, str):
         t = v.strip(_CAST_WS).lower()
         if t not in _TRUE and t not in _FALSE:
-            raise ValueError(f"cannot cast {v!r} to boolean")
+            raise ValueError(
+                f"vocabulary table {table!r}, row {row_id!r}: cannot cast "
+                f"{v!r} to boolean"
+            )
         v = t in _TRUE
     return '"true"^^xsd:boolean' if v else '"false"^^xsd:boolean'
 
@@ -133,7 +137,10 @@ def entity_triple_rows(snapshot: dict[str, list[dict]], dtoa) -> list[tuple]:
                 ("mo:id", _lit(r["minmod_id"])),
                 ("rdfs:label", _lit(r["name"])),
                 ("mo:parent", _lit(r["parent"])),
-                ("mo:is_critical", _bool_lit(r["is_critical_commodity"])),
+                (
+                    "mo:is_critical",
+                    _bool_lit(r["is_critical_commodity"], "commodity", r["minmod_id"]),
+                ),
             ],
             _aliases(r["aliases"]),
         )

@@ -49,15 +49,9 @@ from datetime import datetime
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StructField, StructType
 
-from ..functions.arrowkit import chunked_kernel
+from ..functions.arrowkit import MANIFEST, chunked_kernel, write_staged
 from ..functions.ids import MR_NS, get_username, make_site_id
 from ..functions.rdf import site_to_triples
 from ..schemas import INGEST, INV_VIEW, SITE_REL, TRIPLE, VIOLATION, VOCAB_VIOLATION
@@ -404,16 +398,6 @@ DOC_FILE_SCHEMAS = {
 DOC_ARROW_SCHEMAS = {t: to_arrow_schema(s) for t, s in DOC_FILE_SCHEMAS.items()}
 _SITE_TYPES = [DOC_ARROW_SCHEMAS["sites_rel"].field(c).type for c in _SITE_VALUE_COLS]
 
-# one row per file the pass wrote
-MANIFEST = StructType(
-    [
-        StructField("table", StringType(), False),
-        StructField("bucket", IntegerType(), False),
-        StructField("path", StringType(), False),
-        StructField("n_rows", LongType(), False),
-    ]
-)
-
 # ~127 triples per site: 512-document chunks keep a chunk's alive set (and
 # Arrow batch) bounded — see functions/arrowkit.py
 _DOC_CHUNK_ROWS = 512
@@ -577,14 +561,11 @@ def _doc_pass_kernel(dicts: tuple, include_extra: bool, staging: str):
     confused with) a failed attempt's files; the task's last batch is its
     manifest, one ``MANIFEST`` row per file."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyarrow import fs as pafs
     from pyspark import TaskContext
 
     manifest_schema = to_arrow_schema(MANIFEST)
 
     def kernel(batches):
-        filesystem, root = pafs.FileSystem.from_uri(staging)
         attempt = TaskContext.get().taskAttemptId()
         pending: dict[str, list] = {t: [] for t in DOC_TABLES}
         manifest: list[dict] = []
@@ -597,25 +578,8 @@ def _doc_pass_kernel(dicts: tuple, include_extra: bool, staging: str):
                     continue
                 table = pa.Table.from_batches(pending[t], DOC_ARROW_SCHEMAS[t])
                 pending[t] = []
-                rel = f"{t}/bucket={b}/part-{b:05d}-{attempt}.parquet"
-                filesystem.create_dir(f"{root}/{t}/bucket={b}")
-                # no ARROW:schema (store_schema) and no pandas footer keys:
-                # Spark reads the Parquet schema, and ARROW:schema alone
-                # adds ~8.6 KB to a 50 KB sites_rel file (+17 %)
-                pq.write_table(
-                    table,
-                    f"{root}/{rel}",
-                    filesystem=filesystem,
-                    row_group_size=max(1, table.num_rows),
-                    store_schema=False,
-                )
                 manifest.append(
-                    {
-                        "table": t,
-                        "bucket": b,
-                        "path": f"{staging}/{rel}",
-                        "n_rows": table.num_rows,
-                    }
+                    write_staged(staging, t, b, f"part-{b:05d}-{attempt}.parquet", table)
                 )
 
         def per_chunk(rb) -> None:

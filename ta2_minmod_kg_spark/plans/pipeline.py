@@ -2,13 +2,15 @@
 
 Stages (each materialized as parquet under ``workdir``):
 
-  ingest → sites_rel + triples + inv_views → membership → dedup_sites +
-  dedup_inventories → entity_triples, sameas_triples
+  entity_triples; ingest → sites_rel + triples + inv_views → membership →
+  dedup_sites + dedup_inventories + sameas_triples
 
 The vocabulary is driver-sized: ``run`` collects it once
 (``sources.vocab.vocab_rows``) and that snapshot feeds the document
 pass's lookups, the ``entity_triples`` emitter and the vocabulary
-fingerprint, none of which runs a Spark job of its own.
+fingerprint, none of which runs a Spark job of its own.  ``entity_triples``
+runs first: it reads nothing but that snapshot, so a vocabulary row it
+cannot emit fails the build before any ingest work.
 
 Checkpoint & lineage model — the Spark analog of the reference's sqlite
 content-hash memo (`etl/mineral_site.py:400-408`):
@@ -21,25 +23,33 @@ content-hash memo (`etl/mineral_site.py:400-408`):
   hash-clustered on ``bucket`` (``cluster_by_bucket``) and sorted by it
   within each task, so each bucket's rows meet in one task and every one
   of those tables holds one file (one row group) per bucket;
-- the pass commits by manifest: its tasks write into a per-run staging
-  directory and report each file they wrote; Spark returns results only
-  from successful task attempts, so the driver moves exactly the reported
-  files into ``<table>/bucket=<b>/`` (``KGPipeline._commit``), then
-  writes ``_SUCCESS``.  A failed attempt's files never reach a table;
+- ONE group pass (``dedup.group_pass``) groups the sites by same-as group
+  once, each member carrying its inventory views, and writes
+  ``dedup_sites``, ``dedup_inventories`` and ``sameas_triples`` with
+  pyarrow: unpartitioned tables, one file per non-empty task;
+- both passes commit by manifest: their tasks write into a per-run
+  staging directory and report each file they wrote; Spark returns
+  results only from successful task attempts, so the driver moves exactly
+  the reported files into their tables (``KGPipeline._commit``, through
+  ``pyarrow.fs``), then writes ``_SUCCESS``.  A failed attempt's files
+  never reach a table;
 - after each stage we record one lineage row **per bucket**:
   (stage, bucket, content_hash, n_rows, wall_ms, code_version, run_id) —
-  the per-partition lineage + metrics the north rule requires.  The pass
-  records three stages, ``sites_rel``, ``triples`` and ``inv_views``; it
-  is skipped only when all three match, and otherwise rewrites all five
-  tables.  Every lineage file also records its table's schema, so a
-  skipped stage is read back without a schema-inference job;
+  the per-partition lineage + metrics the north rule requires; an
+  unpartitioned table is one logical bucket.  The document pass records
+  three stages, ``sites_rel``, ``triples`` and ``inv_views``, the group
+  pass three, ``dedup_sites``, ``dedup_inventories`` and
+  ``sameas_triples``; a pass is skipped only when all of its stages
+  match, and otherwise rewrites all of its tables.  Every lineage file
+  also records its table's schema, so a skipped stage is read back
+  without a schema-inference job;
 - a stage is **skipped on resume** when its ``_LINEAGE`` fingerprint
   (hash over per-bucket hashes + code version) matches the current input —
   kill the job at any point and re-submit: completed stages are read back
   from parquet instead of recomputed;
 - per-bucket hashes give the incremental path its work list
-  (``changed_buckets``): the pass then re-reads only the dirty buckets'
-  documents and replaces only their partitions.
+  (``changed_buckets``): the document pass then re-reads only the dirty
+  buckets' documents and replaces only their partitions.
 
 Run it under spark-submit (via the root-level ``run_pipeline.py`` shim —
 spark-submit takes a file path, and this module's relative imports need
@@ -88,23 +98,13 @@ def _jvm_jit_gc_ms(spark: SparkSession) -> tuple[int, int]:
     return jit, gc
 
 
-def _delete(spark: SparkSession, path: str) -> None:
-    """Recursively delete ``path``, if it exists.  Routed through the
-    Hadoop FileSystem API so it works on ANY workdir scheme (HDFS, object
-    stores) — a local shutil.rmtree would silently no-op there and
-    resurrect the stale data the callers exist to remove."""
-    p = spark._jvm.org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+def _remove(filesystem, path: str) -> None:
+    """Recursively delete ``path`` on a ``pyarrow.fs`` filesystem, if it
+    exists."""
+    from pyarrow import fs as pafs
 
-
-def _clear_partitions(
-    spark: SparkSession, out_path: str, buckets: list[int]
-) -> None:
-    """Delete the dirty buckets' ``bucket=<b>`` partition directories
-    before an incremental rebuild's files move in, so a dirty bucket that
-    now emits no rows doesn't keep its stale partition."""
-    for b in buckets:
-        _delete(spark, os.path.join(out_path, f"bucket={b}"))
+    if filesystem.get_file_info(path).type != pafs.FileType.NotFound:
+        filesystem.delete_dir(path)
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -294,14 +294,15 @@ class KGPipeline:
         output read back from the workdir.
 
         An unpartitioned stage's ``build()`` returns the frame written to
-        ``<workdir>/<stage>``, hashed as one table.  A ``partitioned``
-        stage's ``build(buckets)`` writes its own bucket-partitioned
-        tables for the bucket work list (``None`` = all): ``stage``'s,
-        those of the further recorded stages named in ``writes``, and any
-        unrecorded side tables.  The recorded stages are reused only
-        together, when every one's lineage matches; when the build runs,
-        each is hashed per bucket and recorded.  Every recorded stage's
-        read-back frame lands in ``self.tables``.
+        ``<workdir>/<stage>``, or writes its tables itself and returns
+        None; each is hashed as one table.  A ``partitioned`` stage's
+        ``build(buckets)`` writes its own bucket-partitioned tables for
+        the bucket work list (``None`` = all).  Either kind of build may
+        write the tables of the further recorded stages named in
+        ``writes`` and any unrecorded side tables.  The recorded stages
+        are reused only together, when every one's lineage matches; when
+        the build runs, each is hashed per bucket and recorded.  Every
+        recorded stage's read-back frame lands in ``self.tables``.
 
         Incremental path (the Spark analog of the reference's per-file
         sqlite memo): when the stage is partitioned, every recorded stage
@@ -333,8 +334,9 @@ class KGPipeline:
             build(changed_buckets if incremental else None)
         else:
             df = build()
-            df.write.mode("overwrite").parquet(self.lineage.path(stage))
-            written = df.schema
+            if df is not None:
+                df.write.mode("overwrite").parquet(self.lineage.path(stage))
+                written = df.schema
         # the build's time is its stage's; each further recorded stage's
         # entry covers only its own read-back and hashing
         for s in names:
@@ -361,40 +363,57 @@ class KGPipeline:
             t0, jit0, gc0 = t1, jit1, gc1
         return self.tables[stage]
 
+    def _staged(self, name: str, write, tables, buckets=None) -> None:
+        """Run a pass: ``write(staging)`` writes ``tables`` under a fresh
+        staging directory and returns its manifest, which ``_commit``
+        then commits.  The staging directory is removed either way, with
+        a failed or superseded task attempt's files in it."""
+        from pyarrow import fs as pafs
+
+        staging = os.path.join(
+            os.path.abspath(self.workdir), f"_staging_{self.lineage.run_id}_{name}"
+        )
+        filesystem, _ = pafs.FileSystem.from_uri(staging)
+        try:
+            self._commit(filesystem, write(staging), tables, buckets)
+        finally:
+            _remove(filesystem, staging)
+
     def _commit(
-        self, staging: str, manifest: list[tuple], buckets: list[int] | None
+        self, filesystem, manifest: list[tuple], tables, buckets: list[int] | None
     ) -> None:
-        """Move the document pass's files from ``staging`` into their
-        tables (``extract.DOC_TABLES``), through the Hadoop FileSystem API
-        like ``_clear_partitions``.
+        """Move a pass's files into ``tables`` with the ``pyarrow.fs``
+        filesystem its tasks wrote with — no Hadoop call, which on a
+        local filesystem forks a ``chmod`` per directory and file.
 
         First the target partitions are cleared: the whole table on a
         full run, the dirty buckets on an incremental one (a dirty bucket
         that now emits no rows must not keep its stale partition).  Then
-        exactly the manifest's files move to ``<table>/bucket=<b>/``; a
-        failed or superseded task attempt's files are not in the manifest
-        and stay behind, for the caller to delete with the staging
-        directory.  Then ``_SUCCESS``."""
-        from ..operators.extract import DOC_TABLES
-
-        Path = self.spark._jvm.org.apache.hadoop.fs.Path
-        fs = Path(staging).getFileSystem(self.spark._jsc.hadoopConfiguration())
-        for table in DOC_TABLES:
+        exactly the manifest's files move to ``<table>/`` (an
+        unpartitioned table's, ``bucket`` null) or ``<table>/bucket=<b>/``;
+        a failed or superseded task attempt's files are not in the
+        manifest and stay behind in the staging directory.  Then
+        ``_SUCCESS``.  The workdir is a local path, like the lineage
+        files beside the tables."""
+        table_dir = {t: os.path.abspath(self.lineage.path(t)) for t in tables}
+        for t in tables:
             if buckets is None:
-                _delete(self.spark, self.lineage.path(table))
+                _remove(filesystem, table_dir[t])
             else:
-                _clear_partitions(self.spark, self.lineage.path(table), buckets)
+                for b in buckets:
+                    _remove(filesystem, f"{table_dir[t]}/bucket={b}")
         made: set[str] = set()
         for table, bucket, path, _ in manifest:
-            src = Path(path)
-            dst_dir = os.path.join(self.lineage.path(table), f"bucket={bucket}")
+            dst_dir = table_dir[table]
+            if bucket is not None:
+                dst_dir = f"{dst_dir}/bucket={bucket}"
             if dst_dir not in made:
-                fs.mkdirs(Path(dst_dir))
+                filesystem.create_dir(dst_dir)
                 made.add(dst_dir)
-            if not fs.rename(src, Path(dst_dir, src.getName())):
-                raise OSError(f"cannot move {path} into {dst_dir}")
-        for table in DOC_TABLES:
-            fs.create(Path(self.lineage.path(table), "_SUCCESS"), True).close()
+            filesystem.move(path, f"{dst_dir}/{os.path.basename(path)}")
+        for t in tables:
+            filesystem.create_dir(table_dir[t])
+            filesystem.open_output_stream(f"{table_dir[t]}/_SUCCESS").close()
 
     def _read(self, stage: str, schema: StructType | None = None) -> DataFrame:
         """A stage's table, read back from the workdir with a known schema,
@@ -403,18 +422,22 @@ class KGPipeline:
         declared file schema plus ``bucket`` for its tables
         (``extract.DOC_TABLES`` — a quarantine table of a clean corpus
         holds no file, only ``_SUCCESS``, from which Spark could infer
-        nothing), else the schema the stage's lineage recorded."""
+        nothing), else the group pass's declared schema for its tables
+        (``dedup.GROUP_TABLES``), else the schema the stage's lineage
+        recorded."""
+        from ..operators.dedup import GROUP_FILE_SCHEMAS
         from ..operators.extract import DOC_FILE_SCHEMAS
 
         if schema is None:
-            schema = (
-                StructType(
+            if stage in DOC_FILE_SCHEMAS:
+                schema = StructType(
                     DOC_FILE_SCHEMAS[stage].fields
                     + [StructField("bucket", IntegerType())]
                 )
-                if stage in DOC_FILE_SCHEMAS
-                else StructType.fromJson(self.lineage.read_meta(stage)["schema"])
-            )
+            elif stage in GROUP_FILE_SCHEMAS:
+                schema = GROUP_FILE_SCHEMAS[stage]
+            else:
+                schema = StructType.fromJson(self.lineage.read_meta(stage)["schema"])
         return self.spark.read.schema(schema).parquet(self.lineage.path(stage))
 
     # -- full run ---------------------------------------------------------------
@@ -436,6 +459,17 @@ class KGPipeline:
         # the vocabulary's one driver snapshot: the pass's lookups, the
         # entity triples and the vocabulary fingerprint all read it
         snapshot = vocab_rows(vocab)
+        # entity-vocabulary triples (ref etl/kgrel_entity.py:105-126) —
+        # fingerprinted on the vocab tables' content, not the ingest, and
+        # run first: a vocabulary row it cannot emit fails the build before
+        # any ingest work
+        self._run_stage(
+            "entity_triples",
+            # a few hundred rows: one file, not one per local partition
+            lambda: entity_triples(vocab, snapshot).coalesce(1),
+            self.lineage.vocab_fingerprint(vocab, snapshot),
+        )
+
         ingest = with_bucket(ingest, self.n_buckets)
         ingest_pb = [r.asDict() for r in bucket_hashes(ingest).collect()]
         ingest_fp = self.lineage.fingerprint(ingest_pb)
@@ -458,17 +492,14 @@ class KGPipeline:
             docs = extract.with_lineage(
                 cluster_by_bucket(src, self.n_buckets).sortWithinPartitions("bucket")
             )
-            staging = os.path.join(
-                os.path.abspath(self.workdir), f"_staging_{self.lineage.run_id}"
-            )
-            try:
-                manifest = extract.write_doc_tables(
+            self._staged(
+                "docs",
+                lambda staging: extract.write_doc_tables(
                     docs, snapshot, staging, include_extra=self.include_extra
-                )
-                self._commit(staging, manifest, buckets)
-            finally:
-                # failed attempts' files, or a failed pass's
-                _delete(self.spark, staging)
+                ),
+                extract.DOC_TABLES,
+                buckets,
+            )
 
         sites = self._run_stage(
             "sites_rel",
@@ -483,8 +514,6 @@ class KGPipeline:
         violations = self._read("violations")
         vocab_violations = self._read("vocab_violations")
 
-        inv_views = self.tables["inv_views"]
-
         membership = self._run_stage(
             "membership",
             lambda: canonicalize.build_membership(sites, system_edges, curated_edges),
@@ -494,36 +523,21 @@ class KGPipeline:
         sites_with_dedup = sites.drop("dedup_site_id").join(
             membership, "site_id", "left"
         )
+        inv_views = self.tables["inv_views"]
 
+        # ONE group pass writes dedup_sites, dedup_inventories and
+        # sameas_triples: one grouping by dedup_site_id, one per-group kernel
         self._run_stage(
             "dedup_sites",
-            lambda: dedup.merge_dedup_sites(sites_with_dedup),
-            ingest_fp,
-        )
-        self._run_stage(
-            "dedup_inventories",
-            lambda: dedup.select_dedup_inventories(sites_with_dedup, inv_views),
-            ingest_fp,
-        )
-
-        # entity-vocabulary triples (ref etl/kgrel_entity.py:105-126) —
-        # fingerprinted on the vocab tables' content, not the ingest
-        self._run_stage(
-            "entity_triples",
-            # a few hundred rows: one file, not one per local partition
-            lambda: entity_triples(vocab, snapshot).coalesce(1),
-            self.lineage.vocab_fingerprint(vocab, snapshot),
-        )
-
-        self._run_stage(
-            "sameas_triples",
-            lambda: canonicalize.sameas_triples(
-                membership.select(
-                    F.col("site_id").alias("node"),
-                    F.col("dedup_site_id").alias("component"),
-                )
+            lambda: self._staged(
+                "groups",
+                lambda staging: dedup.write_group_tables(
+                    sites_with_dedup, inv_views, staging
+                ),
+                dedup.GROUP_TABLES,
             ),
             ingest_fp,
+            writes=("dedup_inventories", "sameas_triples"),
         )
 
         with open(os.path.join(self.workdir, "metrics.json"), "w") as f:

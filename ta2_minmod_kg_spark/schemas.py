@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
+    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -190,6 +191,75 @@ INV_VIEW = StructType(
         _s("grade", DoubleType()),
         _s("date", StringType()),
     ]
+)
+
+# -- the group pass's tables (ref: kgrel/dedup_mineral_site.py), one row per
+#    same-as group, per (group, commodity) and per same-as link -------------
+_REF_STR = StructType([_s("value", StringType()), _s("refid", StringType())])
+_REF_LIST = StructType([_s("value", ArrayType(StringType())), _s("refid", StringType())])
+DEDUP_SITE = StructType(
+    [
+        _s("dedup_site_id", StringType()),
+        _s("name", _REF_STR),
+        _s("type", _REF_STR),
+        _s("rank", _REF_STR),
+        _s("top1_deposit_type", StringType()),
+        _s(
+            "ranked_deposit_types",
+            ArrayType(
+                StructType(
+                    [
+                        _s("id", StringType()),
+                        _s("source", StringType()),
+                        _s("confidence", DoubleType()),
+                        _s("refid", StringType()),
+                    ]
+                )
+            ),
+        ),
+        _s(
+            "coordinates",
+            StructType(
+                [_s("lat", DoubleType()), _s("lon", DoubleType()), _s("refid", StringType())]
+            ),
+        ),
+        _s("country", _REF_LIST),
+        _s("state_or_province", _REF_LIST),
+        _s("mineral_form", _REF_LIST),
+        _s("geology_info", StringType()),  # JSON of per-field RefValues (sparse)
+        _s(
+            "discovered_year",
+            StructType([_s("value", IntegerType()), _s("refid", StringType())]),
+        ),
+        _s(
+            "ranked_sites",
+            ArrayType(
+                StructType(
+                    [
+                        _s("site_id", StringType()),
+                        _s("score", DoubleType()),
+                        _s("is_expert", BooleanType()),
+                    ]
+                )
+            ),
+        ),
+        _s("modified_at", LongType()),
+    ]
+)
+DEDUP_INVENTORY = StructType(
+    [
+        _s("dedup_site_id", StringType()),
+        _s("commodity", StringType()),
+        _s("site_id", StringType()),
+        _s("contained_metal", DoubleType()),
+        _s("tonnage", DoubleType()),
+        _s("grade", DoubleType()),
+        _s("date", StringType()),
+    ]
+)
+# ``mr:<min member> owl:sameAs mr:<member>``; ``site_id`` is the min member
+SAMEAS_TRIPLE = StructType(
+    [_s(c, StringType()) for c in ("subj", "pred", "obj", "site_id")]
 )
 
 # -- same-as edges ------------------------------------------------------------

@@ -24,10 +24,14 @@ their provenance.  The vocabularies:
   string→boolean spellings), an ``alias_list`` column, the state's
   ``country_id`` already resolved, score and conversion cast to double.
 
-Regenerate (only when the emission rules change on purpose, and then
-restate the ``emitter`` note ``main`` writes into the provenance) with
+Regenerate (only when the emission rules change on purpose) with
 
     PYTHONPATH=. python tests/entity_golden_vocab.py
+
+``main`` runs today's pure-Python ``entity_triples`` and stamps the file
+with that emitter and the current commit: regenerating replaces the
+Spark-emitter provenance above, and the goldens then no longer pin the
+older emitter's rows.
 """
 
 from __future__ import annotations
@@ -219,16 +223,8 @@ def main() -> None:
         "provenance": {
             "commit": commit,
             "command": "PYTHONPATH=. python tests/entity_golden_vocab.py",
-            "emitter": "operators/entity_triples.py entity_triples (Spark "
-            "column expressions: concat/explode/union) at that commit, with "
-            "_split_aliases trimming by lambda x: F.trim(x) in place of "
-            "F.transform(..., F.trim), which trimmed each alias of its "
-            "index's digits",
-            "edit": "null-subject rows removed by hand afterwards (10 in each "
-            "planted vocabulary, none in synthetic): a vocabulary row without "
-            "an id emits no triple, since a triple without a subject is not "
-            "RDF and the TTL sink wrote it as a line with no subject; every "
-            "other row is the Spark emitter's",
+            "emitter": "operators/entity_triples.py entity_triples (the "
+            "pure-Python emitter, entity_triple_rows) at that commit",
         },
         "vocabularies": {
             name: sorted_rows(tuple(r) for r in entity_triples(v).collect())

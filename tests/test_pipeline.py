@@ -458,11 +458,72 @@ def test_vocabulary_is_collected_once_per_build(spark, tmp_path, monkeypatch):
     assert jobs == {"guard-vocab-fingerprint": [], "guard-entity-triples": []}, jobs
 
 
+def test_uncastable_vocabulary_boolean_fails_the_build_first(spark, tmp_path):
+    """A CSV-shaped ``is_critical_commodity`` that Spark cannot cast to
+    boolean fails the build in its first stage, ``entity_triples``, which
+    reads only the vocabulary snapshot: the error names the table, the
+    row id and the value, and the document pass records nothing."""
+    import re
+
+    vdfs = vocab.vocab_dataframes(spark)
+    qid = vdfs["commodity"].select("minmod_id").orderBy("minmod_id").first()[0]
+    ingest = synthetic.synthesize_ingest(spark, 10, partitions=2)
+    for bad in ("maybe", ""):
+        commodity = vdfs["commodity"].withColumn(
+            "is_critical_commodity",
+            F.when(F.col("minmod_id") == qid, F.lit(bad)).otherwise(
+                F.col("is_critical_commodity").cast("string")
+            ),
+        )
+        wd = tmp_path / f"wd_{bad}"
+        want = f"vocabulary table 'commodity', row '{qid}': cannot cast '{bad}'"
+        with pytest.raises(ValueError, match=re.escape(want)):
+            KGPipeline(spark, str(wd), n_buckets=4).run(
+                ingest, {**vdfs, "commodity": commodity}
+            )
+        assert not (wd / "_LINEAGE_sites_rel.json").exists()
+
+
+def test_mega_groups_take_the_sql_merge_in_the_group_pass(
+    spark, tmp_path, monkeypatch
+):
+    """With ``dedup.BIG_GROUP_THRESHOLD`` at 3 (read at call time), every
+    group of 3+ members gets its dedup_sites row from
+    ``_merge_big_groups_sql``, committed with the group pass's files, while
+    the pass still writes those groups' inventories and same-as links: all
+    three group tables equal a build where no group is that large."""
+    from ta2_minmod_kg_spark.operators import dedup
+
+    ingest = synthetic.synthesize_ingest(spark, N, partitions=4)
+    vdfs = vocab.vocab_dataframes(spark)
+    edges = synthetic.synthesize_system_edges(spark, N, partitions=4)
+    curated = synthetic.curated_edges_df(spark, N)
+    out = {}
+    for threshold in (3, 10**9):
+        monkeypatch.setattr(dedup, "BIG_GROUP_THRESHOLD", threshold)
+        wd = tmp_path / f"t{threshold}"
+        out[threshold] = KGPipeline(spark, str(wd), n_buckets=4).run(
+            ingest, vdfs, edges, curated
+        )
+        mega = wd / "dedup_sites" / "part-mega-groups.parquet"
+        assert mega.exists() == (threshold == 3), threshold
+    mega_rows = pd.read_parquet(
+        tmp_path / "t3" / "dedup_sites" / "part-mega-groups.parquet"
+    )
+    assert len(mega_rows) > 1
+    assert (mega_rows["ranked_sites"].map(len) >= 3).all()
+    for table in GROUP_TABLES:
+        assert out[3][table].count() > 0, table
+        assert _sorted_rows(out[3][table]) == _sorted_rows(out[10**9][table]), table
+
+
 BUCKETED_TABLES = (
     "sites_rel", "violations", "vocab_violations", "triples", "inv_views"
 )
 # the recorded stages the document pass writes
 PASS_STAGES = ("sites_rel", "triples", "inv_views")
+# the group pass's unpartitioned tables, one recorded stage each
+GROUP_TABLES = ("dedup_sites", "dedup_inventories", "sameas_triples")
 
 
 def _files_per_bucket(wd: str, table: str) -> dict[str, int]:
@@ -619,14 +680,14 @@ def test_jvm_times_never_iterate_a_java_list(spark, monkeypatch):
 
 
 # a subprocess at local[2,2] (one retry per task) whose document-pass
-# kernel writes all its files, then fails its first attempt; argv: the
-# faulted workdir, the clean workdir, the file that lists the failed
-# attempts' files
+# and group-pass kernels write all their files, then fail their first
+# attempt; argv: the faulted workdir, the clean workdir, the file that
+# lists the failed attempts' files
 FAULT_PROBE = """
 import json, os, sys
 from pyspark import TaskContext
 from ta2_minmod_kg_spark.functions.ids import MR_NS
-from ta2_minmod_kg_spark.operators import extract
+from ta2_minmod_kg_spark.operators import dedup, extract
 from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
 from ta2_minmod_kg_spark.session import get_spark
 from ta2_minmod_kg_spark.sources import synthetic, vocab
@@ -645,27 +706,30 @@ ingest = spark.createDataFrame(
     rows, "repo string, path string, commit string, lang string, content string"
 ).repartition(2)
 vdfs = vocab.vocab_dataframes(spark)
-KGPipeline(spark, clean, n_buckets=4).run(ingest, vdfs)
+edges = synthetic.synthesize_system_edges(spark, 40, partitions=2)
+KGPipeline(spark, clean, n_buckets=4).run(ingest, vdfs, edges)
 
-real = extract._doc_pass_kernel
+def failing_first_attempt(real):
+    def make(*args, **kwargs):
+        kernel = real(*args, **kwargs)
 
-def failing_first_attempt(*args, **kwargs):
-    kernel = real(*args, **kwargs)
+        def gen(batches):
+            out = list(kernel(batches))
+            if TaskContext.get().attemptNumber() == 0:
+                with open(failed_log, "a") as f:
+                    for b in out:
+                        for p in b.column("path").to_pylist():
+                            f.write(p + "\\n")
+                raise RuntimeError("injected: attempt 0 fails after writing its files")
+            yield from out
 
-    def gen(batches):
-        out = list(kernel(batches))
-        if TaskContext.get().attemptNumber() == 0:
-            with open(failed_log, "a") as f:
-                for b in out:
-                    for p in b.column("path").to_pylist():
-                        f.write(p + "\\n")
-            raise RuntimeError("injected: attempt 0 fails after writing its files")
-        yield from out
+        return gen
 
-    return gen
+    return make
 
-extract._doc_pass_kernel = failing_first_attempt
-KGPipeline(spark, faulted, n_buckets=4).run(ingest, vdfs)
+extract._doc_pass_kernel = failing_first_attempt(extract._doc_pass_kernel)
+dedup._group_pass_kernel = failing_first_attempt(dedup._group_pass_kernel)
+KGPipeline(spark, faulted, n_buckets=4).run(ingest, vdfs, edges)
 spark.stop()
 print(json.dumps("ok"))
 """
@@ -679,10 +743,11 @@ def _sorted_rows(df) -> list[str]:
 
 
 def test_failed_attempt_files_never_reach_the_tables(spark, tmp_path):
-    """Every task of the document pass writes its files and then fails on
-    its first attempt; the retry succeeds.  The four tables equal a clean
-    build's, hold one file per bucket (none of the failed attempts'), and
-    no staging directory is left behind."""
+    """Every task of the document pass and of the group pass writes its
+    files and then fails on its first attempt; the retry succeeds.  Both
+    passes' tables equal a clean build's and hold none of the failed
+    attempts' files (the document pass's one file per bucket), and no
+    staging directory is left behind."""
     import subprocess
     import sys
 
@@ -708,6 +773,15 @@ def test_failed_attempt_files_never_reach_the_tables(spark, tmp_path):
     assert not [p for p in failed_files if os.path.exists(p)], failed_files
     assert not [d for d in os.listdir(faulted) if d.startswith("_staging")]
     names = {os.path.basename(p) for p in failed_files}
+    # both passes' attempts failed after writing
+    assert {p.split(os.sep)[-2] for p in failed_files} & set(GROUP_TABLES)
+    for table in GROUP_TABLES:
+        on_disk = set(os.listdir(os.path.join(faulted, table)))
+        assert "_SUCCESS" in on_disk and not on_disk & names, (table, on_disk)
+        got = spark.read.parquet(os.path.join(faulted, table))
+        want = spark.read.parquet(os.path.join(clean, table))
+        assert got.schema == want.schema, table
+        assert _sorted_rows(got) == _sorted_rows(want), table
     for table in BUCKETED_TABLES:
         per_bucket = _files_per_bucket(faulted, table)
         assert per_bucket and max(per_bucket.values()) == 1, (table, per_bucket)
@@ -721,7 +795,7 @@ def test_failed_attempt_files_never_reach_the_tables(spark, tmp_path):
         want = spark.read.parquet(os.path.join(clean, table))
         assert got.schema == want.schema, table
         assert _sorted_rows(got) == _sorted_rows(want), table
-    for stage in PASS_STAGES:
+    for stage in PASS_STAGES + GROUP_TABLES:
         fp = [
             json.load(open(os.path.join(wd, f"_LINEAGE_{stage}.json")))[
                 "output_fingerprint"

@@ -69,23 +69,24 @@ def test_sites_rel_and_gt_view_plan_shape(spark, tmp_path):
     assert "MapInPandas" not in gt_plan, gt_plan
 
 
-def _doc_pass_plan(spark, tmp_path, monkeypatch, n_buckets: int):
+def _pass_plan(spark, tmp_path, monkeypatch, n_buckets: int, module, name: str):
     """Run the pipeline over a parquet ingest (the synthetic generator is
-    itself a mapInPandas) and return a twin of the document pass's
-    manifest frame, built from the pipeline's own arguments but not yet
-    executed (an executed adaptive plan prints its initial plan too)."""
+    itself a mapInPandas) and return a twin of the manifest frame of the
+    pass ``module.<name>``, built from the pipeline's own arguments but
+    not yet executed (an executed adaptive plan prints its initial plan
+    too)."""
     from ta2_minmod_kg_spark.operators import extract
     from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
     from ta2_minmod_kg_spark.sources import synthetic, vocab
 
     captured = []
-    real = extract.doc_pass
+    real = getattr(module, name)
 
     def capture(*args, **kwargs):
         captured.append(real(*args, **kwargs))
         return real(*args, **kwargs)
 
-    monkeypatch.setattr(extract, "doc_pass", capture)
+    monkeypatch.setattr(module, name, capture)
     synthetic.synthesize_ingest(spark, 40, partitions=2).write.parquet(
         str(tmp_path / "ingest")
     )
@@ -93,8 +94,14 @@ def _doc_pass_plan(spark, tmp_path, monkeypatch, n_buckets: int):
     KGPipeline(spark, str(tmp_path / "wd"), n_buckets=n_buckets).run(
         ingest, vocab.vocab_dataframes(spark)
     )
-    assert len(captured) == 1, "one document pass per build"
+    assert len(captured) == 1, f"one {name} per build"
     return captured[0]
+
+
+def _doc_pass_plan(spark, tmp_path, monkeypatch, n_buckets: int):
+    from ta2_minmod_kg_spark.operators import extract
+
+    return _pass_plan(spark, tmp_path, monkeypatch, n_buckets, extract, "doc_pass")
 
 
 def test_document_pass_parses_once(spark, tmp_path, monkeypatch):
@@ -110,6 +117,18 @@ def test_document_pass_parses_once(spark, tmp_path, monkeypatch):
     assert "from_json" not in plan, plan
     assert "Join" not in plan, plan
     assert "InMemoryRelation" not in plan, plan
+
+
+def test_group_pass_runs_one_kernel(spark, tmp_path, monkeypatch):
+    """dedup_sites, dedup_inventories and sameas_triples come from ONE
+    grouping and ONE Python pass over it: one MapInArrow and no second
+    kernel (no MapInPandas, no Arrow UDF)."""
+    from ta2_minmod_kg_spark.operators import dedup
+
+    plan = _plan(_pass_plan(spark, tmp_path, monkeypatch, 8, dedup, "group_pass"))
+    assert plan.count("MapInArrow") == 1, plan
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, (node, plan)
 
 
 def test_pipeline_leaves_no_cached_frames(spark, tmp_path):

@@ -4,8 +4,8 @@
 the build's operators.  The driver queries and the bench run the pipeline
 and read its tables; a second hand-assembled chain drifts from the real
 one whenever a stage changes.  This greps the driver-facing modules for
-calls to the build operators outside the pipeline, and ``extract.py`` for
-a second per-document kernel.
+calls to the build operators outside the pipeline, ``extract.py`` for a
+second per-document kernel and ``dedup.py`` for a second per-group one.
 """
 
 from __future__ import annotations
@@ -22,7 +22,8 @@ SCANNED = [
 OWNER = ROOT / "ta2_minmod_kg_spark" / "plans" / "pipeline.py"
 BUILD_CALL = re.compile(
     r"\b(build_membership|merge_dedup_sites|select_dedup_inventories"
-    r"|normalize_sites|doc_rows|doc_pass|write_doc_tables)\("
+    r"|normalize_sites|doc_rows|doc_pass|write_doc_tables"
+    r"|group_pass|write_group_tables)\("
 )
 
 
@@ -30,9 +31,8 @@ def test_only_the_pipeline_chains_the_build():
     # the guard means something only while the pipeline calls these names
     assert set(BUILD_CALL.findall(OWNER.read_text())) == {
         "build_membership",
-        "merge_dedup_sites",
-        "select_dedup_inventories",
         "write_doc_tables",
+        "write_group_tables",
     }
     offenders = []
     for path in SCANNED:
@@ -52,4 +52,17 @@ def test_one_per_document_kernel():
     code = [ln for ln in text.splitlines() if not ln.strip().startswith("#")]
     calls = [ln for ln in code if re.search(r"(?<!def )\b_valid_site\(", ln)]
     assert len(calls) == 1, calls
+    assert not [ln for ln in code if "mapInPandas" in ln]
+
+
+def test_one_per_group_kernel():
+    """Every same-as group goes through one batch builder: ``dedup.py``
+    calls ``merge_group`` (the dedup_sites row) and
+    ``select_inventories_group`` (the dedup_inventories rows) in one
+    place each, and runs no ``mapInPandas`` kernel over groups."""
+    text = (ROOT / "ta2_minmod_kg_spark" / "operators" / "dedup.py").read_text()
+    code = [ln for ln in text.splitlines() if not ln.strip().startswith("#")]
+    for fn in ("merge_group", "select_inventories_group"):
+        calls = [ln for ln in code if re.search(rf"(?<!def )\b{fn}\(", ln)]
+        assert len(calls) == 1, (fn, calls)
     assert not [ln for ln in code if "mapInPandas" in ln]

@@ -408,3 +408,101 @@ def test_pipeline_returns_the_quarantine_tables(spark, tmp_path):
     assert planted["vocab_violations"].count() == 15
     # the bucket column is the hive directory's
     assert planted["vocab_violations"].filter(F.col("bucket").isNull()).count() == 0
+
+
+def _planted_groups() -> dict:
+    """path -> record: a singleton group; a three-site group of a system
+    and an expert record sharing a commodity (the user/system cascade)
+    and an expert site without inventories; and two documents of one
+    site (one ``site_id``), whose rank keys tie."""
+    recs: dict = {}
+
+    def planted(n, record_id, created_by=None, **fields):
+        rec = synthetic.make_record(n, 80, expert=created_by is not None)
+        rec["record_id"] = record_id
+        if created_by is not None:
+            rec["created_by"] = created_by
+        rec.update(fields)
+        return rec
+
+    recs["group/singleton.json"] = planted(31, "planted-singleton")
+    system = planted(33, "planted-trio")
+    assert system.get("mineral_inventory")
+    recs["group/trio_system.json"] = system
+    recs["group/trio_expert.json"] = planted(
+        33,
+        "planted-trio",
+        synthetic.EXPERT_USER,
+        mineral_inventory=copy.deepcopy(system["mineral_inventory"]),
+    )
+    recs["group/trio_no_inventory.json"] = planted(
+        35,
+        "planted-trio",
+        "https://minmod.isi.edu/users/u/bob",
+        source_id=system["source_id"],
+        mineral_inventory=[],
+    )
+    one = planted(37, "planted-duplicate")
+    assert one.get("mineral_inventory")
+    recs["group/duplicate_a.json"] = one
+    recs["group/duplicate_b.json"] = dict(copy.deepcopy(one), name="Second document")
+    return recs
+
+
+def test_group_pass_matches_the_frame_operators(spark, tmp_path):
+    """On the synthetic corpus plus planted groups, the group pass's
+    ``dedup_sites`` and ``dedup_inventories`` read back with the schemas
+    and sorted rows of the frame operators (``merge_dedup_sites``,
+    ``select_dedup_inventories``), and its ``sameas_triples`` equal the
+    same-as rule restated over ``membership``: per group, the min member
+    (``relabel_min``) ``owl:sameAs`` every other member, or itself for a
+    group of one."""
+    from ta2_minmod_kg_spark.operators import dedup
+    from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
+
+    n = 400
+    ingest = synthetic.synthesize_ingest(spark, n, partitions=4).unionByName(
+        _ingest(spark, _planted_groups())
+    )
+    out = KGPipeline(spark, str(tmp_path / "wd"), n_buckets=4).run(
+        ingest,
+        vocab.vocab_dataframes(spark),
+        synthetic.synthesize_system_edges(spark, n, partitions=4),
+        synthetic.curated_edges_df(spark, n),
+    )
+
+    swd = out["sites_rel"].drop("dedup_site_id").join(
+        out["membership"], "site_id", "left"
+    )
+    frames = {
+        "dedup_sites": dedup.merge_dedup_sites(swd),
+        "dedup_inventories": dedup.select_dedup_inventories(swd, out["inv_views"]),
+    }
+    for table, frame in frames.items():
+        assert out[table].schema == frame.schema, table
+        assert _sorted_rows(out[table]) == _sorted_rows(frame), table
+
+    groups: dict = {}
+    for site_id, dedup_id in out["membership"].collect():
+        groups.setdefault(dedup_id, set()).add(site_id)
+    want = sorted(
+        ("mr:" + min(g), "owl:sameAs", "mr:" + m, min(g))
+        for g in groups.values()
+        for m in g
+        if m != min(g) or len(g) == 1
+    )
+    assert sorted(tuple(r) for r in out["sameas_triples"].collect()) == want
+
+    # the plants landed: one site_id from two documents, a singleton, and
+    # a three-site group with a member without inventories
+    paths = {p: sid for p, sid in out["sites_rel"].select("path", "site_id").collect()}
+    dup = paths["group/duplicate_a.json"]
+    assert paths["group/duplicate_b.json"] == dup
+    member = dict(out["membership"].collect())
+    assert len(groups[member[paths["group/singleton.json"]]]) == 1
+    trio = groups[member[paths["group/trio_system.json"]]]
+    kinds = ("system", "expert", "no_inventory")
+    assert {paths[f"group/trio_{k}.json"] for k in kinds} <= trio
+    viewed = {r[0] for r in out["inv_views"].select("site_id").collect()}
+    assert paths["group/trio_no_inventory.json"] not in viewed
+    assert dup in viewed
