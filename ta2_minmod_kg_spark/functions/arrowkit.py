@@ -30,10 +30,13 @@ GC is re-enabled between chunks (and on error), so genuinely cyclic
 garbage from third-party code still gets collected at chunk
 boundaries.
 
-The pipeline's two passes (``extract.doc_pass``, ``dedup.group_pass``)
-write their tables from their kernels: ``write_staged`` writes one Arrow
-table as one parquet file under a staging directory and returns its
-``MANIFEST`` row, the record the driver commits by.
+A batch builder is ``build(batch, tables)``, returning ``{table:
+pyarrow.RecordBatch}`` for those of ``tables`` the batch yields rows of.
+The pipeline's two builders (``extract._doc_batches`` per document,
+``dedup._group_batches`` per same-as group) run under two wrappers only:
+``staged_pass``, the pipeline's pass, which writes every table with
+``write_staged`` and yields the ``MANIFEST`` the driver commits by
+(``KGPipeline._commit``), and ``table_rows``, one table as a frame.
 """
 
 from __future__ import annotations
@@ -43,6 +46,8 @@ from typing import Callable, Iterator, Union
 
 import pandas as pd
 import pyarrow as pa
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -111,15 +116,21 @@ MANIFEST = StructType(
 )
 
 
+def partition_dir(table: str, bucket) -> str:
+    """A table's directory relative to its root: ``<table>``, or
+    ``<table>/bucket=<b>`` when ``bucket`` is not None."""
+    return table if bucket is None else f"{table}/bucket={bucket}"
+
+
 def write_staged(staging: str, table: str, bucket, name: str, data) -> dict:
     """Write the Arrow table ``data`` as one parquet file (one row group)
-    ``name`` under ``<staging>/<table>/`` (``.../bucket=<b>/`` when
-    ``bucket`` is not None) and return its ``MANIFEST`` row."""
+    ``name`` under ``<staging>/<partition_dir(table, bucket)>/`` and
+    return its ``MANIFEST`` row."""
     import pyarrow.parquet as pq
     from pyarrow import fs as pafs
 
     filesystem, root = pafs.FileSystem.from_uri(staging)
-    rel = table if bucket is None else f"{table}/bucket={bucket}"
+    rel = partition_dir(table, bucket)
     filesystem.create_dir(f"{root}/{rel}")
     # no ARROW:schema (store_schema) and no pandas footer keys: Spark
     # reads the Parquet schema, and ARROW:schema alone adds ~8.6 KB to a
@@ -137,3 +148,95 @@ def write_staged(staging: str, table: str, bucket, name: str, data) -> dict:
         "path": f"{staging}/{rel}/{name}",
         "n_rows": data.num_rows,
     }
+
+
+def _staged_kernel(build, schemas: dict, staging: str, max_rows: int):
+    """The ``staged_pass`` kernel (``mapInArrow``).  ``build``'s batches
+    are buffered per table as Arrow (no Python object outlives its
+    chunk) and written when the bucket changes — each chunk is split
+    into bucket runs — or at the end of the task, so peak memory is one
+    bucket's output.  File names carry the partition and the task
+    attempt, so a retried task never overwrites (or gets confused with)
+    a failed attempt's files; the task's last batch is its manifest, one
+    ``MANIFEST`` row per file."""
+    from pyspark import TaskContext
+
+    tables = tuple(schemas)
+    manifest_schema = to_arrow_schema(MANIFEST)
+
+    def kernel(batches):
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+        pending: dict[str, list] = {t: [] for t in tables}
+        manifest: list[dict] = []
+        current = None  # the bucket ``pending`` holds
+        seen: set = set()
+
+        def add(rb) -> None:
+            for t, batch in build(rb, tables).items():
+                pending[t].append(batch)
+
+        def flush() -> None:
+            for t in tables:
+                if pending[t]:
+                    data = pa.Table.from_batches(pending[t], schemas[t])
+                    pending[t] = []
+                    manifest.append(write_staged(staging, t, current, name, data))
+
+        def per_chunk(rb) -> None:
+            nonlocal current
+            if "bucket" not in rb.schema.names:
+                add(rb)
+                return
+            buckets = rb.column("bucket").to_pylist()
+            start = 0
+            for end in range(1, len(buckets) + 1):
+                if end < len(buckets) and buckets[end] == buckets[start]:
+                    continue
+                if buckets[start] != current:
+                    flush()
+                    current = buckets[start]
+                    if current in seen:
+                        # a second file of one name would replace the first
+                        raise ValueError(
+                            f"bucket {current} is not contiguous in its task: "
+                            "the input must be sorted by bucket"
+                        )
+                    seen.add(current)
+                add(rb.slice(start, end - start))
+                start = end
+
+        yield from chunked_kernel(per_chunk, max_rows)(batches)
+        flush()
+        yield pa.RecordBatch.from_pylist(manifest, schema=manifest_schema)
+
+    return kernel
+
+
+def staged_pass(
+    df: DataFrame, build, schemas: dict, staging: str, max_rows: int
+) -> DataFrame:
+    """A pipeline pass, as a lazy ``MANIFEST`` frame: ONE ``mapInArrow``
+    over ``df`` that runs the batch builder ``build`` for every table of
+    ``schemas`` (``{table: pyarrow.Schema}``) in chunks of at most
+    ``max_rows`` rows and writes each table's rows with
+    ``pyarrow.parquet`` under ``staging`` (``_staged_kernel``): one file
+    per (table, bucket) when ``df`` has a ``bucket`` column, sorted by it
+    within each task, else one file per non-empty table per task."""
+    return df.mapInArrow(
+        _staged_kernel(build, schemas, staging, max_rows), schema=MANIFEST
+    )
+
+
+def table_rows(
+    df: DataFrame, build, table: str, schema: StructType, max_rows: int
+) -> DataFrame:
+    """The rows a pass writes to ``table``, as a frame with ``schema``:
+    ONE ``mapInArrow`` over ``df`` that runs the batch builder ``build``
+    for that table alone, in chunks of at most ``max_rows`` rows.  No
+    shuffle: the output stays partitioned like ``df``."""
+
+    def per_chunk(rb):
+        return build(rb, (table,)).get(table)
+
+    return df.mapInArrow(chunked_kernel(per_chunk, max_rows), schema=schema)

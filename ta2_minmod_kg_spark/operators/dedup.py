@@ -23,20 +23,23 @@ and `custom_types/site_and_score.py:27-61`):
 Execution: ONE grouping and ONE per-group batch builder,
 ``_group_batches``.  Each group is one JVM ``collect_list(struct(...))``
 row (map-side partial aggregation, one shuffle) whose members carry their
-inventory-view rows (``invs``, collected per ``site_id``); a
-``mapInArrow`` kernel hands whole Arrow batches of groups to the builder,
-which runs ``merge_group`` (the ``dedup_sites`` row),
-``select_inventories_group`` (the ``dedup_inventories`` rows) and emits
-the group's ``owl:sameAs`` links (``sameas_triples``).  Per-group
-``applyInPandas`` would pay a pandas-DataFrame construction per group;
-groups are usually 1-5 sites, so that overhead dominates at corpus scale.
+inventory-view rows (``invs``, collected per ``site_id``); the builder
+takes whole Arrow batches of groups and runs ``merge_group`` (the
+``dedup_sites`` row), ``select_inventories_group`` (the
+``dedup_inventories`` rows) and emits the group's ``owl:sameAs`` links
+(``sameas_triples``).  Per-group ``applyInPandas`` would pay a
+pandas-DataFrame construction per group; groups are usually 1-5 sites,
+so that overhead dominates at corpus scale.  This module holds no
+kernel: the builder runs under the two wrappers of
+``functions/arrowkit.py``, as the document pass's does:
 
-- ``group_pass`` / ``write_group_tables`` — the pipeline's group pass:
-  the builder for all three tables, written with ``pyarrow.parquet``
-  under a staging directory and reported as a ``MANIFEST`` the pipeline
-  commits (as the document pass, ``extract.doc_pass``);
+- ``group_pass`` / ``write_group_tables`` — the pipeline's group pass,
+  ``arrowkit.staged_pass``: the builder for all three tables, written
+  with ``pyarrow.parquet`` under a staging directory and reported as a
+  ``MANIFEST`` the pipeline commits;
 - ``merge_dedup_sites`` / ``select_dedup_inventories`` — one of those
-  tables as a frame, the builder run for that table alone.
+  tables as a frame, ``arrowkit.table_rows``: the builder run for that
+  table alone.
 
 Mega groups (the skew case: at or above ``BIG_GROUP_THRESHOLD``
 members) take ``_merge_big_groups_sql`` for their ``dedup_sites`` row,
@@ -48,13 +51,14 @@ attribute structs.
 from __future__ import annotations
 
 import json
+from functools import partial
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..functions.arrowkit import MANIFEST, chunked_kernel, write_staged
+from ..functions.arrowkit import MANIFEST, staged_pass, table_rows, write_staged
 from ..functions.ids import MR_NS
 from ..schemas import DEDUP_INVENTORY, DEDUP_SITE, SAMEAS_TRIPLE
 
@@ -355,8 +359,9 @@ _GROUP_CHUNK_ROWS = 1024
 
 
 def _group_batches(rb, tables, big_group_threshold: int) -> dict:
-    """The per-group code of this module's kernels: for each group of the
-    record batch ``rb`` (``dedup_site_id`` and its ``sites`` struct list,
+    """The group pass's batch builder (``arrowkit`` builder signature,
+    ``big_group_threshold`` bound): for each group of the record batch
+    ``rb`` (``dedup_site_id`` and its ``sites`` struct list,
     from ``_grouped``), the rows of those of ``GROUP_TABLES`` in
     ``tables``:
 
@@ -439,20 +444,6 @@ def _grouped(
     )
 
 
-def _group_rows(grouped: DataFrame, table: str, big_group_threshold: int) -> DataFrame:
-    """The rows the group pass writes to ``table`` for the groups of
-    ``grouped``: ONE ``mapInArrow`` running ``_group_batches`` for that
-    table alone."""
-
-    def per_chunk(rb):
-        return _group_batches(rb, (table,), big_group_threshold).get(table)
-
-    return grouped.mapInArrow(
-        chunked_kernel(per_chunk, max_rows=_GROUP_CHUNK_ROWS),
-        schema=GROUP_FILE_SCHEMAS[table],
-    )
-
-
 def _big_groups(sites_with_dedup: DataFrame, threshold: int) -> list[str]:
     """The ids of the groups with at least ``threshold`` members — sized
     from the pruned key column only, so Catalyst reads just the join keys,
@@ -468,12 +459,11 @@ def _big_groups(sites_with_dedup: DataFrame, threshold: int) -> list[str]:
 
 
 def merge_dedup_sites(
-    sites_with_dedup: DataFrame,
-    big_group_threshold: int | None = None,
-    ranked_sites_cap: int | None = None,
+    sites_with_dedup: DataFrame, big_group_threshold: int | None = None
 ) -> DataFrame:
     """A3/A4: group-merge.  Input: SITE_REL columns + dedup_site_id.
-    The ``dedup_sites`` rows of the group pass, as a frame.
+    The ``dedup_sites`` rows of the group pass, as a frame
+    (``arrowkit.table_rows`` running ``_group_batches``).
 
     Skew-safe dispatch: group sizes are counted first (map-side partial
     count, cheap), and groups at or above ``big_group_threshold``
@@ -482,31 +472,23 @@ def merge_dedup_sites(
     partial aggregation, never assembles the group on one task) while
     normal groups take the per-group batch builder.  The two paths are
     byte-equivalent (tests/test_dedup_wide.py).
-
-    ``ranked_sites_cap`` (VERDICT r03 #7): the reference keeps the FULL
-    member list on every dedup site, so the default (None) preserves
-    parity — at the cost that a mega group's ranked_sites array
-    materializes on one reducer (~tens of MB at 10^6 members; documented
-    ceiling).  Beyond that scale, pass a cap to truncate each mega
-    group's ranked_sites to the top-K members by rank via salted partial
-    aggregation — no task ever holds more than ~n_salts×K structs.  All
-    other merged fields stay exact; only the member list is truncated.
     """
     if big_group_threshold is None:
         big_group_threshold = BIG_GROUP_THRESHOLD
     narrow = with_site_score(sites_with_dedup)
     big = _big_groups(sites_with_dedup, big_group_threshold)
     small = narrow.filter(~F.col("dedup_site_id").isin(big)) if big else narrow
-    out = _group_rows(
-        _grouped(small, _ATTR_INPUT_COLS), "dedup_sites", big_group_threshold
+    out = table_rows(
+        _grouped(small, _ATTR_INPUT_COLS),
+        partial(_group_batches, big_group_threshold=big_group_threshold),
+        "dedup_sites",
+        DEDUP_SITE,
+        _GROUP_CHUNK_ROWS,
     )
     if not big:
         return out
     return out.unionByName(
-        _merge_big_groups_sql(
-            narrow.filter(F.col("dedup_site_id").isin(big)),
-            ranked_sites_cap=ranked_sites_cap,
-        )
+        _merge_big_groups_sql(narrow.filter(F.col("dedup_site_id").isin(big)))
     )
 
 
@@ -519,45 +501,13 @@ def select_dedup_inventories(
     ``inv_views``: INV_VIEW rows (site_id, commodity, ...).  Sites without
     inventories still participate in ranking.
     """
-    grouped = _grouped(with_site_score(sites_with_dedup), _RANK_COLS, inv_views)
-    return _group_rows(grouped, "dedup_inventories", BIG_GROUP_THRESHOLD)
-
-
-def _group_pass_kernel(staging: str, big_group_threshold: int):
-    """The ``group_pass`` kernel (``mapInArrow``): the task's
-    ``_group_batches`` of all three tables, buffered as Arrow record
-    batches and written at the end of the task as one file per non-empty
-    table under ``<staging>/<table>/``, the task attempt in its name; the
-    task's last batch is its manifest, one ``MANIFEST`` row per file."""
-    import pyarrow as pa
-    from pyspark import TaskContext
-
-    manifest_schema = to_arrow_schema(MANIFEST)
-
-    def kernel(batches):
-        ctx = TaskContext.get()
-        name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
-        pending: dict[str, list] = {t: [] for t in GROUP_TABLES}
-
-        def per_chunk(rb) -> None:
-            for t, batch in _group_batches(rb, GROUP_TABLES, big_group_threshold).items():
-                pending[t].append(batch)
-
-        yield from chunked_kernel(per_chunk, max_rows=_GROUP_CHUNK_ROWS)(batches)
-        manifest = [
-            write_staged(
-                staging,
-                t,
-                None,
-                name,
-                pa.Table.from_batches(pending[t], GROUP_ARROW_SCHEMAS[t]),
-            )
-            for t in GROUP_TABLES
-            if pending[t]
-        ]
-        yield pa.RecordBatch.from_pylist(manifest, schema=manifest_schema)
-
-    return kernel
+    return table_rows(
+        _grouped(with_site_score(sites_with_dedup), _RANK_COLS, inv_views),
+        partial(_group_batches, big_group_threshold=BIG_GROUP_THRESHOLD),
+        "dedup_inventories",
+        DEDUP_INVENTORY,
+        _GROUP_CHUNK_ROWS,
+    )
 
 
 def group_pass(
@@ -569,31 +519,38 @@ def group_pass(
 ) -> DataFrame:
     """The pipeline's group pass, as a lazy ``MANIFEST`` frame: ONE
     grouping of ``sites_with_dedup`` (SITE_REL columns + dedup_site_id)
-    whose members carry their ``inv_views`` rows, and ONE ``mapInArrow``
-    over it that writes each group's rows of ``GROUP_TABLES``
-    (``_group_batches``) with ``pyarrow.parquet`` under ``staging``.
-    The members of ``big_groups`` carry only their narrow ranking and
-    inventory fields: the builder writes no ``dedup_sites`` row for them."""
+    whose members carry their ``inv_views`` rows, and
+    ``arrowkit.staged_pass`` over it, which writes each group's rows of
+    ``GROUP_TABLES`` (``_group_batches``) under ``staging``, one file per
+    non-empty table per task.  The members of ``big_groups`` carry only
+    their narrow ranking and inventory fields: the builder writes no
+    ``dedup_sites`` row for them."""
     cols = _ATTR_INPUT_COLS
     if big_groups:
         small = ~F.col("dedup_site_id").isin(big_groups)
         cols = _RANK_COLS + [F.when(small, F.col(c)).alias(c) for c in _WIDE_COLS]
-    grouped = _grouped(with_site_score(sites_with_dedup), cols, inv_views)
-    return grouped.mapInArrow(
-        _group_pass_kernel(staging, big_group_threshold), schema=MANIFEST
+    return staged_pass(
+        _grouped(with_site_score(sites_with_dedup), cols, inv_views),
+        partial(_group_batches, big_group_threshold=big_group_threshold),
+        GROUP_ARROW_SCHEMAS,
+        staging,
+        _GROUP_CHUNK_ROWS,
     )
 
 
 def write_group_tables(
-    sites_with_dedup: DataFrame, inv_views: DataFrame, staging: str
+    sites_with_dedup: DataFrame, inv_views: DataFrame, staging: str, n_sites: int
 ) -> list[tuple[str, int | None, str, int]]:
     """Run ``group_pass`` and return its manifest: ``(table, None, path,
-    n_rows)`` per written file.  Groups at or above
-    ``BIG_GROUP_THRESHOLD`` (read at call time) get their ``dedup_sites``
-    row from ``_merge_big_groups_sql``, collected as Arrow on the driver
-    and written under ``staging`` as one more file of the manifest."""
+    n_rows)`` per written file.  ``n_sites`` is the row count of
+    ``sites_with_dedup``: only when it reaches ``BIG_GROUP_THRESHOLD``
+    (read at call time) can a group be that large, so only then are the
+    groups sized (``_big_groups``, a Spark job).  Those groups get their
+    ``dedup_sites`` row from ``_merge_big_groups_sql``, collected as Arrow
+    on the driver and written under ``staging`` as one more file of the
+    manifest."""
     threshold = BIG_GROUP_THRESHOLD
-    big = _big_groups(sites_with_dedup, threshold)
+    big = _big_groups(sites_with_dedup, threshold) if n_sites >= threshold else []
     manifest = [
         tuple(r)
         for r in group_pass(
@@ -640,45 +597,7 @@ _GEO_SCALARS = (
 )
 
 
-def _ranked_desc(col):
-    """Sort an array of (rk, …) structs by rk DESC (== rank ascending)."""
-    return F.array_sort(
-        col,
-        lambda a, b: F.when(a["rk"] > b["rk"], -1)
-        .when(a["rk"] < b["rk"], 1)
-        .otherwise(0),
-    )
-
-
-def _capped_ranked_sites(df: DataFrame, cap: int, n_salts: int = 64) -> DataFrame:
-    """Top-``cap`` members by rk per dedup group WITHOUT assembling the
-    full group anywhere: salt → per-(group, salt) collect+sort+truncate
-    (each task holds ≤ its salt shard, sorted arrays ≤ cap) → merge the
-    ≤ n_salts truncated lists and truncate again.  Exact top-K because
-    every global top-K member survives its own shard's cut."""
-    s = F.struct("rk", "site_id", "score", "is_expert")
-    shard = (
-        df.withColumn("_salt", F.pmod(F.xxhash64("site_id"), F.lit(n_salts)))
-        .groupBy("dedup_site_id", "_salt")
-        .agg(F.collect_list(s).alias("l"))
-        .select(
-            "dedup_site_id",
-            F.slice(_ranked_desc(F.col("l")), 1, cap).alias("l"),
-        )
-    )
-    return (
-        shard.groupBy("dedup_site_id")
-        .agg(F.flatten(F.collect_list("l")).alias("l"))
-        .select(
-            "dedup_site_id",
-            F.slice(_ranked_desc(F.col("l")), 1, cap).alias("_ranked_raw"),
-        )
-    )
-
-
-def _merge_big_groups_sql(
-    narrow: DataFrame, ranked_sites_cap: int | None = None
-) -> DataFrame:
+def _merge_big_groups_sql(narrow: DataFrame) -> DataFrame:
     """A3/A4 for groups too large for a single collect_list task, as pure
     Catalyst aggregates (map-side partials, no giant row assembly).
 
@@ -745,24 +664,21 @@ def _merge_big_groups_sql(
             for sub in ("type", "unit")
         ],
         F.max_by(F.col("site_id"), F.col("rk")).alias("_top_site"),
-        *(
-            []
-            if ranked_sites_cap is not None
-            else [
-                F.collect_list(
-                    F.struct("rk", "site_id", "score", "is_expert")
-                ).alias("_ranked_raw")
-            ]
+        F.collect_list(F.struct("rk", "site_id", "score", "is_expert")).alias(
+            "_ranked_raw"
         ),
         F.max("modified_at").alias("modified_at"),
     )
-    if ranked_sites_cap is not None:
-        agg = agg.join(
-            _capped_ranked_sites(df, ranked_sites_cap), "dedup_site_id"
-        )
-    else:
-        # sort the collected narrow structs by rk DESC (== rank ascending)
-        agg = agg.withColumn("_ranked_raw", _ranked_desc(F.col("_ranked_raw")))
+    # sort the collected narrow structs by rk DESC (== rank ascending)
+    agg = agg.withColumn(
+        "_ranked_raw",
+        F.array_sort(
+            F.col("_ranked_raw"),
+            lambda a, b: F.when(a["rk"] > b["rk"], -1)
+            .when(a["rk"] < b["rk"], 1)
+            .otherwise(0),
+        ),
+    )
 
     def rock_struct(rock):
         t, u = F.col(f"g_{rock}_type"), F.col(f"g_{rock}_unit")

@@ -7,15 +7,16 @@ Front door: the ingest table ``(repo, path, commit, lang, content)``.
                           (``parse_sites`` is a second name for it).
 - ``split_violations``  — the ok / violations split by the record-validity
                           rule (``constrained.site_record_error``).
-- ``doc_pass`` / ``write_doc_tables`` — the pipeline's document pass: ONE
-                          ``mapInArrow`` parse per document that writes
-                          ``sites_rel``, ``violations``,
-                          ``vocab_violations``, ``triples`` and
-                          ``inv_views`` with ``pyarrow.parquet`` and
-                          reports the files it wrote (the manifest the
-                          pipeline commits).
-- ``doc_rows``          — one of those tables as a frame: ONE
-                          ``mapInArrow`` that builds only that table.
+- ``doc_pass`` / ``write_doc_tables`` — the pipeline's document pass:
+                          ``arrowkit.staged_pass``, ONE ``mapInArrow``
+                          parse per document that writes ``sites_rel``,
+                          ``violations``, ``vocab_violations``,
+                          ``triples`` and ``inv_views`` with
+                          ``pyarrow.parquet`` and reports the files it
+                          wrote (the manifest the pipeline commits).
+- ``doc_rows``          — one of those tables as a frame:
+                          ``arrowkit.table_rows``, ONE ``mapInArrow`` that
+                          builds only that table.
 - ``normalize_sites``   — ``doc_rows``' ``sites_rel`` rows, as SITE_REL.
 - ``extract_triples``   — ``doc_rows``' ``triples`` rows.
 - ``explode_inventories`` — per-inventory rows, the input of the
@@ -25,8 +26,9 @@ Every document goes through one batch builder, ``_doc_batches``: one
 parse and validation (``_valid_site``), then the site row and its
 vocabulary violations (``_site_columns``), its grade-tonnage view rows
 (``grade_tonnage.site_view_rows``) and its triples (``_triple_columns``),
-as Arrow record batches of ``DOC_TABLES``.  The document pass buffers and
-writes them; ``doc_rows`` returns them to Spark.
+as Arrow record batches of ``DOC_TABLES``.  This module holds no kernel:
+the two wrappers of ``functions/arrowkit.py`` run the builder, the one
+that the group pass (``dedup._group_batches``) runs under too.
 
 Scale notes: this module shuffles nothing; parsing/minting/fan-out are
 map-side, and each kernel's output stays partitioned like its input.  The
@@ -45,13 +47,14 @@ from __future__ import annotations
 import math
 import re
 from datetime import datetime
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
-from ..functions.arrowkit import MANIFEST, chunked_kernel, write_staged
+from ..functions.arrowkit import staged_pass, table_rows
 from ..functions.ids import MR_NS, get_username, make_site_id
 from ..functions.rdf import site_to_triples
 from ..schemas import INGEST, INV_VIEW, SITE_REL, TRIPLE, VIOLATION, VOCAB_VIOLATION
@@ -404,7 +407,8 @@ _DOC_CHUNK_ROWS = 512
 
 
 def _doc_batches(rb, tables, dicts, include_extra: bool) -> dict:
-    """The per-document code of this module's kernels: parse and validate
+    """The document pass's batch builder (``arrowkit`` builder signature,
+    ``dicts`` and ``include_extra`` bound): parse and validate
     each document of the record batch ``rb`` once (``_valid_site``), then
     build a valid record's site row and vocabulary violations
     (``_site_columns``), its grade-tonnage view rows
@@ -518,19 +522,17 @@ def doc_rows(
 ) -> DataFrame:
     """The rows the document pass writes to ``table`` (one of
     ``DOC_TABLES``, with its ``DOC_FILE_SCHEMAS`` schema, no ``bucket``)
-    for the documents of ``docs``: ONE ``mapInArrow`` running
+    for the documents of ``docs``: ``arrowkit.table_rows`` running
     ``_doc_batches`` for that table alone.  ``docs`` carries ``content``,
     ``path`` and the table's ``_DOC_INPUTS`` (a ``with_lineage`` frame has
-    them all); ``vocab`` is needed only by ``_SITE_TABLES``.  No
-    shuffle: the output stays partitioned like ``docs``."""
+    them all); ``vocab`` is needed only by ``_SITE_TABLES``."""
     dicts = _vocab_dicts(vocab_rows(vocab)) if table in _SITE_TABLES else None
-
-    def per_chunk(rb):
-        return _doc_batches(rb, (table,), dicts, include_extra).get(table)
-
-    return docs.select(*_DOC_INPUTS[table], "content").mapInArrow(
-        chunked_kernel(per_chunk, max_rows=_DOC_CHUNK_ROWS),
-        schema=DOC_FILE_SCHEMAS[table],
+    return table_rows(
+        docs.select(*_DOC_INPUTS[table], "content"),
+        partial(_doc_batches, dicts=dicts, include_extra=include_extra),
+        table,
+        DOC_FILE_SCHEMAS[table],
+        _DOC_CHUNK_ROWS,
     )
 
 
@@ -548,77 +550,26 @@ def extract_triples(ingest: DataFrame, include_extra: bool = False) -> DataFrame
     return doc_rows(ingest, None, "triples", include_extra)
 
 
-def _doc_pass_kernel(dicts: tuple, include_extra: bool, staging: str):
-    """The ``doc_pass`` kernel (``mapInArrow``).  Its input is sorted by
-    ``bucket`` within the task, so it buffers one bucket at a time: the
-    bucket's ``_doc_batches`` of each table, written as one file (one row
-    group) per table when the next bucket starts.  Peak Python memory is
-    one bucket's output, and no Python object outlives its chunk: each
-    chunk's column lists become Arrow arrays at once.
-
-    Files land under ``<staging>/<table>/bucket=<b>/`` with the task
-    attempt in their name, so a retried task never overwrites (or gets
-    confused with) a failed attempt's files; the task's last batch is its
-    manifest, one ``MANIFEST`` row per file."""
-    import pyarrow as pa
-    from pyspark import TaskContext
-
-    manifest_schema = to_arrow_schema(MANIFEST)
-
-    def kernel(batches):
-        attempt = TaskContext.get().taskAttemptId()
-        pending: dict[str, list] = {t: [] for t in DOC_TABLES}
-        manifest: list[dict] = []
-        current = None  # the bucket ``pending`` holds
-
-        def flush() -> None:
-            b = current
-            for t in DOC_TABLES:
-                if not pending[t]:
-                    continue
-                table = pa.Table.from_batches(pending[t], DOC_ARROW_SCHEMAS[t])
-                pending[t] = []
-                manifest.append(
-                    write_staged(staging, t, b, f"part-{b:05d}-{attempt}.parquet", table)
-                )
-
-        def per_chunk(rb) -> None:
-            nonlocal current
-            buckets = rb.column("bucket").to_pylist()
-            start = 0
-            for end in range(1, len(buckets) + 1):
-                if end < len(buckets) and buckets[end] == buckets[start]:
-                    continue
-                if buckets[start] != current:
-                    flush()
-                    current = buckets[start]
-                one = rb.slice(start, end - start)
-                for t, batch in _doc_batches(one, DOC_TABLES, dicts, include_extra).items():
-                    pending[t].append(batch)
-                start = end
-
-        yield from chunked_kernel(per_chunk, max_rows=_DOC_CHUNK_ROWS)(batches)
-        flush()
-        yield pa.RecordBatch.from_pylist(manifest, schema=manifest_schema)
-
-    return kernel
-
-
 def doc_pass(
     docs: DataFrame,
     snapshot: dict[str, list[dict]],
     staging: str,
     include_extra: bool = False,
 ) -> DataFrame:
-    """The pipeline's document pass, as a lazy ``MANIFEST`` frame: ONE
-    ``mapInArrow`` over ``docs`` (a ``with_lineage`` frame with
+    """The pipeline's document pass, as a lazy ``MANIFEST`` frame:
+    ``arrowkit.staged_pass`` over ``docs`` (a ``with_lineage`` frame with
     ``bucket``, clustered by bucket and sorted by it within each
-    partition) that parses each document once and writes its rows of
-    ``DOC_TABLES`` (``_doc_batches``) with ``pyarrow.parquet`` under
-    ``staging``.  ``snapshot`` is the build's ``vocab_rows``."""
-    return docs.select(*_DOC_INPUTS["violations"], "bucket", "content").mapInArrow(
-        _doc_pass_kernel(_vocab_dicts(snapshot), include_extra, staging),
-        schema=MANIFEST,
+    partition), which parses each document once and writes its rows of
+    ``DOC_TABLES`` (``_doc_batches``) under ``staging``, one file per
+    (table, bucket).  ``snapshot`` is the build's ``vocab_rows``."""
+    return staged_pass(
+        docs.select(*_DOC_INPUTS["violations"], "bucket", "content"),
+        partial(
+            _doc_batches, dicts=_vocab_dicts(snapshot), include_extra=include_extra
+        ),
+        DOC_ARROW_SCHEMAS,
+        staging,
+        _DOC_CHUNK_ROWS,
     )
 
 

@@ -49,14 +49,6 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
     )
 
 
-def _seeded_hash(i: int):
-    """Closure factory: a `lambda s, i=i:` would be introspected by PySpark
-    as a TWO-parameter transform lambda, making `i` the element INDEX
-    instead of the seed — every 'hash function' collapses to one
-    position-sensitive hash and LSH recall silently craters."""
-    return lambda s: F.xxhash64(F.lit(i), s)
-
-
 def minhash_signatures(
     documents: DataFrame, num_hashes: int = 32, shingle_k: int = 3
 ) -> DataFrame:

@@ -8,9 +8,12 @@ Stages (each materialized as parquet under ``workdir``):
 The vocabulary is driver-sized: ``run`` collects it once
 (``sources.vocab.vocab_rows``) and that snapshot feeds the document
 pass's lookups, the ``entity_triples`` emitter and the vocabulary
-fingerprint, none of which runs a Spark job of its own.  ``entity_triples``
-runs first: it reads nothing but that snapshot, so a vocabulary row it
-cannot emit fails the build before any ingest work.
+fingerprint, none of which runs a Spark job of its own.  The ingest's
+per-bucket hashes come first, so the session's first-job warm-up is
+charged to them (their wall is in ``_LINEAGE_ingest.json``), then
+``entity_triples``: it reads nothing but that snapshot, so a vocabulary
+row it cannot emit fails the build before the document pass writes
+anything.
 
 Checkpoint & lineage model — the Spark analog of the reference's sqlite
 content-hash memo (`etl/mineral_site.py:400-408`):
@@ -26,13 +29,17 @@ content-hash memo (`etl/mineral_site.py:400-408`):
 - ONE group pass (``dedup.group_pass``) groups the sites by same-as group
   once, each member carrying its inventory views, and writes
   ``dedup_sites``, ``dedup_inventories`` and ``sameas_triples`` with
-  pyarrow: unpartitioned tables, one file per non-empty task;
-- both passes commit by manifest: their tasks write into a per-run
-  staging directory and report each file they wrote; Spark returns
-  results only from successful task attempts, so the driver moves exactly
-  the reported files into their tables (``KGPipeline._commit``, through
-  ``pyarrow.fs``), then writes ``_SUCCESS``.  A failed attempt's files
-  never reach a table;
+  pyarrow: unpartitioned tables, one file per non-empty task.  Its
+  groups are sized for the mega-group path only when ``sites_rel`` holds
+  at least ``dedup.BIG_GROUP_THRESHOLD`` rows;
+- both passes are ``functions.arrowkit.staged_pass``, one kernel that
+  writes one file per (table, bucket) when its input has a ``bucket``
+  column and one per (table, task) otherwise.  Both commit by manifest:
+  their tasks write into a per-run staging directory and report each
+  file they wrote; Spark returns results only from successful task
+  attempts, so the driver moves exactly the reported files into their
+  tables (``KGPipeline._commit``, through ``pyarrow.fs``), then writes
+  ``_SUCCESS``.  A failed attempt's files never reach a table;
 - after each stage we record one lineage row **per bucket**:
   (stage, bucket, content_hash, n_rows, wall_ms, code_version, run_id) —
   the per-partition lineage + metrics the north rule requires; an
@@ -74,6 +81,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
+
+from ..functions.arrowkit import partition_dir
 
 # v6: inv_views is written by the document pass, one bucket directory per
 # bucket, where v5 wrote one unpartitioned table — an incremental run
@@ -389,31 +398,26 @@ class KGPipeline:
         First the target partitions are cleared: the whole table on a
         full run, the dirty buckets on an incremental one (a dirty bucket
         that now emits no rows must not keep its stale partition).  Then
-        exactly the manifest's files move to ``<table>/`` (an
-        unpartitioned table's, ``bucket`` null) or ``<table>/bucket=<b>/``;
+        exactly the manifest's files move to their ``partition_dir``,
+        ``<table>/`` (``bucket`` null) or ``<table>/bucket=<b>/``;
         a failed or superseded task attempt's files are not in the
         manifest and stay behind in the staging directory.  Then
         ``_SUCCESS``.  The workdir is a local path, like the lineage
         files beside the tables."""
-        table_dir = {t: os.path.abspath(self.lineage.path(t)) for t in tables}
+        root = os.path.abspath(self.workdir)
         for t in tables:
-            if buckets is None:
-                _remove(filesystem, table_dir[t])
-            else:
-                for b in buckets:
-                    _remove(filesystem, f"{table_dir[t]}/bucket={b}")
+            for b in [None] if buckets is None else buckets:
+                _remove(filesystem, f"{root}/{partition_dir(t, b)}")
         made: set[str] = set()
         for table, bucket, path, _ in manifest:
-            dst_dir = table_dir[table]
-            if bucket is not None:
-                dst_dir = f"{dst_dir}/bucket={bucket}"
+            dst_dir = f"{root}/{partition_dir(table, bucket)}"
             if dst_dir not in made:
                 filesystem.create_dir(dst_dir)
                 made.add(dst_dir)
             filesystem.move(path, f"{dst_dir}/{os.path.basename(path)}")
         for t in tables:
-            filesystem.create_dir(table_dir[t])
-            filesystem.open_output_stream(f"{table_dir[t]}/_SUCCESS").close()
+            filesystem.create_dir(f"{root}/{t}")
+            filesystem.open_output_stream(f"{root}/{t}/_SUCCESS").close()
 
     def _read(self, stage: str, schema: StructType | None = None) -> DataFrame:
         """A stage's table, read back from the workdir with a known schema,
@@ -459,23 +463,27 @@ class KGPipeline:
         # the vocabulary's one driver snapshot: the pass's lookups, the
         # entity triples and the vocabulary fingerprint all read it
         snapshot = vocab_rows(vocab)
+
+        t0 = time.time()
+        ingest = with_bucket(ingest, self.n_buckets)
+        ingest_pb = [r.asDict() for r in bucket_hashes(ingest).collect()]
+        ingest_ms = (time.time() - t0) * 1000
+        ingest_fp = self.lineage.fingerprint(ingest_pb)
+        # diff against the previous run BEFORE overwriting the ingest lineage
+        changed = self.lineage.changed_buckets("ingest", ingest_pb)
+
         # entity-vocabulary triples (ref etl/kgrel_entity.py:105-126) —
         # fingerprinted on the vocab tables' content, not the ingest, and
-        # run first: a vocabulary row it cannot emit fails the build before
-        # any ingest work
+        # run before the ingest lineage is overwritten and the document
+        # pass writes: a vocabulary row it cannot emit fails the build
+        # with neither
         self._run_stage(
             "entity_triples",
             # a few hundred rows: one file, not one per local partition
             lambda: entity_triples(vocab, snapshot).coalesce(1),
             self.lineage.vocab_fingerprint(vocab, snapshot),
         )
-
-        ingest = with_bucket(ingest, self.n_buckets)
-        ingest_pb = [r.asDict() for r in bucket_hashes(ingest).collect()]
-        ingest_fp = self.lineage.fingerprint(ingest_pb)
-        # diff against the previous run BEFORE overwriting the ingest lineage
-        changed = self.lineage.changed_buckets("ingest", ingest_pb)
-        self.lineage.record("ingest", ingest_pb, 0.0, None, ingest.schema)
+        self.lineage.record("ingest", ingest_pb, ingest_ms, None, ingest.schema)
 
         def build_docs(buckets=None):
             src = (
@@ -527,12 +535,13 @@ class KGPipeline:
 
         # ONE group pass writes dedup_sites, dedup_inventories and
         # sameas_triples: one grouping by dedup_site_id, one per-group kernel
+        n_sites = self.metrics["sites_rel"]["n_rows"]
         self._run_stage(
             "dedup_sites",
             lambda: self._staged(
                 "groups",
                 lambda staging: dedup.write_group_tables(
-                    sites_with_dedup, inv_views, staging
+                    sites_with_dedup, inv_views, staging, n_sites
                 ),
                 dedup.GROUP_TABLES,
             ),

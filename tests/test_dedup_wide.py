@@ -68,40 +68,3 @@ def test_dispatch_routes_giant_group(spark):
     )
     assert big.count() >= 1
     swd.unpersist()
-
-
-def test_ranked_sites_cap_truncates_exactly(spark):
-    """VERDICT r03 #7: with ranked_sites_cap set, a group over the cap
-    returns EXACTLY the top-K prefix of the uncapped ranked_sites (same
-    order, same structs) while every other merged field is unchanged;
-    groups under the cap are byte-identical to the uncapped run.  Default
-    (None) preserves full-list reference parity."""
-    swd = _swd(spark, 200)
-    thr = synthetic.giant_size(200)
-    cap = max(2, thr // 2)  # below the giant group's size → truncation real
-
-    full = dedup.merge_dedup_sites(swd, big_group_threshold=thr)
-    capped = dedup.merge_dedup_sites(
-        swd, big_group_threshold=thr, ranked_sites_cap=cap
-    )
-    f = {r["dedup_site_id"]: r for r in full.collect()}
-    c = {r["dedup_site_id"]: r for r in capped.collect()}
-    assert set(f) == set(c)
-    truncated = 0
-    for gid in f:
-        fr, cr = f[gid], c[gid]
-        want = fr["ranked_sites"][:cap] if len(fr["ranked_sites"]) > cap and gid in {
-            g for g in f if len(f[g]["ranked_sites"]) >= thr
-        } else fr["ranked_sites"]
-        # mega groups truncate to the top-cap prefix; small groups (kernel
-        # path) keep the full list
-        if len(fr["ranked_sites"]) >= thr:
-            assert cr["ranked_sites"] == fr["ranked_sites"][:cap], gid
-            truncated += 1
-        else:
-            assert cr["ranked_sites"] == fr["ranked_sites"], gid
-        for field in ("name", "type", "rank", "coordinates", "geology_info",
-                      "country", "modified_at", "top1_deposit_type"):
-            assert cr[field] == fr[field], (gid, field)
-    assert truncated >= 1  # the planted giant group actually got capped
-    swd.unpersist()

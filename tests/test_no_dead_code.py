@@ -1,9 +1,9 @@
-"""CI guard: every public top-level function of the package has a caller.
+"""CI guard: every top-level function of the package has a caller.
 
-A public ``def`` that nothing references is code no run and no test
-reaches: it drifts from the code beside it while looking maintained.  This
-parses the package, ``perfbench/``, the root scripts and ``tests/`` and
-fails on a public top-level function of ``ta2_minmod_kg_spark/`` whose
+A ``def`` that nothing references is code no run and no test reaches: it
+drifts from the code beside it while looking maintained.  This parses the
+package, ``perfbench/``, the root scripts and ``tests/`` and fails on a
+top-level function of ``ta2_minmod_kg_spark/``, public or private, whose
 name occurs nowhere outside its own definition — as a name, an attribute,
 an imported name or an identifier string (``__all__``, ``getattr``).
 """
@@ -23,7 +23,7 @@ SEARCHED = [
     ROOT / "run_pipeline.py",
     ROOT / "__spark_entry__.py",
 ]
-# public functions kept without a reference: name -> reason
+# functions kept without a reference: name -> reason
 EXCEPTIONS: dict[str, str] = {}
 
 
@@ -49,7 +49,6 @@ def test_every_public_function_is_referenced():
                 (path, node)
                 for node in tree.body
                 if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-                and not node.name.startswith("_")
             ]
         for node in ast.walk(tree):
             name = _referenced_name(node)

@@ -53,6 +53,8 @@ def test_outputs_and_lineage(pipeline_out):
     assert meta["n_buckets"] >= 1
     assert all("content_hash" in r and "n_rows" in r for r in meta["per_bucket"])
     assert meta["wall_ms"] > 0
+    # the ingest hash records its own wall
+    assert json.load(open(os.path.join(wd, "_LINEAGE_ingest.json")))["wall_ms"] > 0
     with open(os.path.join(wd, "metrics.json")) as f:
         metrics = json.load(f)
     # every returned table is a recorded stage, but the two quarantine
@@ -517,6 +519,40 @@ def test_mega_groups_take_the_sql_merge_in_the_group_pass(
         assert _sorted_rows(out[3][table]) == _sorted_rows(out[10**9][table]), table
 
 
+def test_group_stage_sizes_groups_only_when_one_can_qualify(
+    spark, tmp_path, monkeypatch
+):
+    """The mega-group sizing query (``dedup._big_groups``, a Spark job)
+    runs only when sites_rel holds at least ``BIG_GROUP_THRESHOLD`` rows:
+    a 40-site build's group stage runs no sizing job, and the same build
+    with the threshold at 3 runs one."""
+    from ta2_minmod_kg_spark.operators import dedup
+
+    sc = spark.sparkContext
+    real = dedup._big_groups
+    label = None
+
+    def tagged(*args):
+        sc.setJobGroup(label, label)
+        try:
+            return real(*args)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(dedup, "_big_groups", tagged)
+    ingest = synthetic.synthesize_ingest(spark, 40, partitions=2)
+    vdfs = vocab.vocab_dataframes(spark)
+    jobs = {}
+    for threshold in (dedup.BIG_GROUP_THRESHOLD, 3):
+        monkeypatch.setattr(dedup, "BIG_GROUP_THRESHOLD", threshold)
+        label = f"group-sizing-{threshold}"
+        pipe = KGPipeline(spark, str(tmp_path / f"t{threshold}"), n_buckets=4)
+        pipe.run(ingest, vdfs)
+        assert 3 <= pipe.metrics["sites_rel"]["n_rows"] < 50_000
+        jobs[threshold] = list(sc.statusTracker().getJobIdsForGroup(label))
+    assert jobs[50_000] == [] and jobs[3], jobs
+
+
 BUCKETED_TABLES = (
     "sites_rel", "violations", "vocab_violations", "triples", "inv_views"
 )
@@ -679,15 +715,16 @@ def test_jvm_times_never_iterate_a_java_list(spark, monkeypatch):
     assert type(gc) is int and gc >= 0, gc
 
 
-# a subprocess at local[2,2] (one retry per task) whose document-pass
-# and group-pass kernels write all their files, then fail their first
-# attempt; argv: the faulted workdir, the clean workdir, the file that
-# lists the failed attempts' files
+# a subprocess at local[2,2] (one retry per task) whose staged-pass
+# kernel, the one both the document pass and the group pass run, writes
+# all its files, then fails its first attempt; argv: the faulted
+# workdir, the clean workdir, the file that lists the failed attempts'
+# files
 FAULT_PROBE = """
 import json, os, sys
 from pyspark import TaskContext
 from ta2_minmod_kg_spark.functions.ids import MR_NS
-from ta2_minmod_kg_spark.operators import dedup, extract
+from ta2_minmod_kg_spark.functions import arrowkit
 from ta2_minmod_kg_spark.plans.pipeline import KGPipeline
 from ta2_minmod_kg_spark.session import get_spark
 from ta2_minmod_kg_spark.sources import synthetic, vocab
@@ -727,8 +764,7 @@ def failing_first_attempt(real):
 
     return make
 
-extract._doc_pass_kernel = failing_first_attempt(extract._doc_pass_kernel)
-dedup._group_pass_kernel = failing_first_attempt(dedup._group_pass_kernel)
+arrowkit._staged_kernel = failing_first_attempt(arrowkit._staged_kernel)
 KGPipeline(spark, faulted, n_buckets=4).run(ingest, vdfs, edges)
 spark.stop()
 print(json.dumps("ok"))
@@ -743,8 +779,9 @@ def _sorted_rows(df) -> list[str]:
 
 
 def test_failed_attempt_files_never_reach_the_tables(spark, tmp_path):
-    """Every task of the document pass and of the group pass writes its
-    files and then fails on its first attempt; the retry succeeds.  Both
+    """Every task of the one staged-pass kernel, in the document pass and
+    in the group pass, writes its files and then fails on its first
+    attempt; the retry succeeds.  Both
     passes' tables equal a clean build's and hold none of the failed
     attempts' files (the document pass's one file per bucket), and no
     staging directory is left behind."""
@@ -775,6 +812,7 @@ def test_failed_attempt_files_never_reach_the_tables(spark, tmp_path):
     names = {os.path.basename(p) for p in failed_files}
     # both passes' attempts failed after writing
     assert {p.split(os.sep)[-2] for p in failed_files} & set(GROUP_TABLES)
+    assert {p.split(os.sep)[-3] for p in failed_files} & set(BUCKETED_TABLES)
     for table in GROUP_TABLES:
         on_disk = set(os.listdir(os.path.join(faulted, table)))
         assert "_SUCCESS" in on_disk and not on_disk & names, (table, on_disk)

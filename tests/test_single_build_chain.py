@@ -5,7 +5,8 @@ the build's operators.  The driver queries and the bench run the pipeline
 and read its tables; a second hand-assembled chain drifts from the real
 one whenever a stage changes.  This greps the driver-facing modules for
 calls to the build operators outside the pipeline, ``extract.py`` for a
-second per-document kernel and ``dedup.py`` for a second per-group one.
+second per-document kernel, ``dedup.py`` for a second per-group one, and
+the package for a second staged-pass kernel.
 """
 
 from __future__ import annotations
@@ -66,3 +67,16 @@ def test_one_per_group_kernel():
         calls = [ln for ln in code if re.search(rf"(?<!def )\b{fn}\(", ln)]
         assert len(calls) == 1, (fn, calls)
     assert not [ln for ln in code if "mapInPandas" in ln]
+
+
+def test_one_staged_pass_kernel():
+    """Both passes run ``arrowkit.staged_pass``: ``TaskContext``, which a
+    kernel needs to name its files by task attempt, occurs in one package
+    module, ``functions/arrowkit.py``."""
+    package = ROOT / "ta2_minmod_kg_spark"
+    users = sorted(
+        str(p.relative_to(package))
+        for p in package.rglob("*.py")
+        if "TaskContext" in p.read_text()
+    )
+    assert users == ["functions/arrowkit.py"], users
